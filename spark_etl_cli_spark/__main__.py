@@ -55,19 +55,12 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(master=args.master, extra_confs=registry.registered_spark_confs())
     pipe = Pipeline.from_uris(args.source, args.transform, args.sink)
-    if args.explain:
-        for s in pipe.sources:
-            s.run(spark)
-        for tr in pipe.transforms:
-            tr.run(spark)
-        for snk in pipe.sinks:
-            print(f"=== plan for sink view {snk.view!r} ===")
-            spark.table(snk.view).explain("formatted")
     results = pipe.run(
         spark,
         fail_fast=not args.lenient,
         await_termination=args.await_termination or False,
         observe=args.observe,
+        explain=args.explain,
     )
     ok = all(results.values()) if results else True
     for key, success in results.items():

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_etl_cli_spark.functions.text import tokens
+from spark_etl_cli_spark.session import local_frame
 
 
 def vocab_encode(
@@ -313,4 +314,4 @@ def bpe_train(
         "merge_rank int, left string, right string, merged string, "
         "pair_count bigint"
     )
-    return spark.createDataFrame(merges, schema)
+    return local_frame(spark, merges, schema)

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from spark_etl_cli_spark.session import local_frame
+
 
 def merge_changelog(
     base: DataFrame,
@@ -200,7 +202,7 @@ def expectations(
         results.append(orphans)
 
     if not results:
-        return spark.createDataFrame([], "check string, violations bigint")
+        return local_frame(spark, [], "check string, violations bigint")
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)

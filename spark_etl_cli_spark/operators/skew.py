@@ -85,8 +85,8 @@ def salted_join(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(buckets)]))
     )
     # Pin a shuffle-hash join built from the SMALL side. Left to stats,
-    # Spark will happily broadcast the *big* side when the small side
-    # comes from createDataFrame (unknown size) and the big side's scan
+    # Spark will happily broadcast the *big* side when the small side's
+    # size is unknown (e.g. a Python RDD) and the big side's scan
     # estimate is under the broadcast threshold — observed BuildLeft on
     # the fact table, which inverts at real scale (broadcasting the big
     # side = driver OOM). A salted join exists precisely because the

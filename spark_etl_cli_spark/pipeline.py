@@ -96,6 +96,25 @@ def _observed_metrics(obs) -> dict | None:
         return None
 
 
+def _await_all(queries: list, await_termination: float | bool) -> None:
+    """Wait until every query has stopped, or ``await_termination``
+    seconds in all (``True``: no limit). A query that failed raises."""
+    import time
+
+    deadline = (
+        None if await_termination is True
+        else time.monotonic() + float(await_termination)
+    )
+    for q in queries:
+        if deadline is None:
+            q.awaitTermination()
+            continue
+        left = deadline - time.monotonic()
+        # awaitTermination takes whole milliseconds, at least one
+        if left <= 0 or not q.awaitTermination(max(left, 0.001)):
+            return
+
+
 @dataclass
 class Pipeline:
     sources: list[SourceStep] = field(default_factory=list)
@@ -139,21 +158,37 @@ class Pipeline:
         fail_fast: bool = True,
         await_termination: float | bool = False,
         observe: bool = False,
+        explain: bool = False,
     ) -> dict[str, bool]:
         """Interpret the pipeline. Returns per-sink success map.
+
+        Each source and transform runs once; a source with side effects
+        (the ``rep+*`` row-op and maintenance sources) applies them once.
+        ``explain=True`` prints each sink view's physical plan after the
+        transforms and before the sinks write.
 
         ``observe=True`` attaches a Spark ``Observation`` (row count)
         to every batch sink's frame — metrics ride the write job
         itself, zero extra passes — and stores the per-sink results in
         ``self.metrics`` (None for sinks whose write runs no full
         action, e.g. ``memory://``).
+
+        The streaming queries the sinks start are kept in
+        ``self.queries``; ``await_termination`` (seconds, or True for no
+        limit) waits until each of them has stopped, so a stream that
+        ended earlier in the session does not end the wait.
         """
         for s in self.sources:
             s.run(spark)
         for t in self.transforms:
             t.run(spark)
+        if explain:
+            for snk in self.sinks:
+                print(f"=== plan for sink view {snk.view!r} ===")
+                spark.table(snk.view).explain("formatted")
         results: dict[str, bool] = {}
         self.metrics: dict[str, dict | None] = {}
+        self.queries: list = []
         for i, snk in enumerate(self.sinks):
             key = f"{i}:{snk.uri.raw if snk.uri else snk.view}"
             obs = None
@@ -164,23 +199,27 @@ class Pipeline:
 
                 obs = Observation()
                 df = df.observe(obs, F.count(F.lit(1)).alias("rows_written"))
+            # only a streaming frame's sink starts a query
+            before = (
+                {q.id for q in spark.streams.active}
+                if df.isStreaming else None
+            )
             try:
                 ok = snk.run(spark, df)
             except Exception:
                 if fail_fast:
                     raise
                 ok = False
+            if before is not None:
+                self.queries += [
+                    q for q in spark.streams.active if q.id not in before
+                ]
             results[key] = bool(ok)
             if observe:
                 self.metrics[key] = _observed_metrics(obs) if obs else None
-        if await_termination and spark.streams.active:
-            timeout = None if await_termination is True else float(await_termination)
-            if timeout is None:
-                spark.streams.awaitAnyTermination()
-            else:
-                spark.streams.awaitAnyTermination(int(timeout * 1000))
+        if await_termination:
+            _await_all(self.queries, await_termination)
         return results
-
 
 def run_pipeline(
     spark: SparkSession,

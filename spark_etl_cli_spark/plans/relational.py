@@ -36,6 +36,7 @@ from spark_etl_cli_spark.plans.registry import (
     t,
     xsum,
 )
+from spark_etl_cli_spark.session import local_frame
 
 DEC = T.DecimalType(18, 4)
 
@@ -918,8 +919,8 @@ def q29_salted_join(spark, sf_dir):
     from spark_etl_cli_spark.operators.skew import salted_join
 
     o = t(spark, sf_dir, "orders")
-    dim = spark.createDataFrame(
-        [("O", "open"), ("F", "finished"), ("P", "pending")],
+    dim = local_frame(
+        spark, [("O", "open"), ("F", "finished"), ("P", "pending")],
         "o_orderstatus string, label string",
     )
     joined = salted_join(

@@ -640,6 +640,8 @@ def read_avro_lite(spark, path: str):
     then per-file decode inside ``mapInPandas`` (Arrow-batched)."""
     import glob as _glob
 
+    from spark_etl_cli_spark.session import local_frame
+
     if os.path.isdir(path):
         files = sorted(
             _glob.glob(os.path.join(path, "**", "*.avro"), recursive=True)
@@ -653,7 +655,7 @@ def read_avro_lite(spark, path: str):
     schema, _ = read_container(head[: _header_span(head)])
     spark_schema = avro_to_spark_type(schema)
 
-    paths_df = spark.createDataFrame([(p,) for p in files], "path string")
+    paths_df = local_frame(spark, [(p,) for p in files], "path string")
 
     def decode_files(batches):
         import pandas as pd

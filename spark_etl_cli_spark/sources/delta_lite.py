@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spark_etl_cli_spark.session import local_frame
+
 
 def _log_dir(table_path: str) -> str:
     return os.path.join(table_path, "_delta_log")
@@ -185,9 +187,12 @@ def _adds_df_from_dicts(spark: SparkSession, dicts: list[dict]) -> DataFrame:
                 )
                 if dv
                 else None,
+                a.get("stats"),
+                a.get("baseRowId"),
+                a.get("defaultRowCommitVersion"),
             )
         )
-    return spark.createDataFrame(rows, _ADD_SCHEMA)
+    return local_frame(spark, rows, _ADD_SCHEMA)
 
 
 def _head_action(df: DataFrame, action: str, key: str) -> dict | None:
@@ -406,8 +411,8 @@ def _replay(
         # checkpoint side. The exclusion set is tail-sized.
         excluded = removed | set(tail_active)
         if excluded:
-            excl_df = spark.createDataFrame(
-                ((p,) for p in excluded), "path string"
+            excl_df = local_frame(
+                spark, ((p,) for p in excluded), "path string"
             )
             how = "left_anti"
             if len(excluded) <= 100_000:
@@ -499,8 +504,8 @@ def _prune_add_list(
         tuple((a.get("partitionValues") or {}).get(k) for k in part_keys)
         for a in adds
     }
-    tup_df = spark.createDataFrame(
-        [(list(t),) for t in tuples], "pv array<string>"
+    tup_df = local_frame(
+        spark, [(list(t),) for t in tuples], "pv array<string>"
     ).select(
         F.map_from_arrays(
             F.array(*[F.lit(k) for k in part_keys]), "pv"
@@ -676,7 +681,7 @@ def read_delta_lite(
         ]
     )
     if not adds:
-        empty = spark.createDataFrame([], full_schema)
+        empty = local_frame(spark, [], full_schema)
         if with_row_id:
             empty = empty.withColumn("_row_id", F.lit(None).cast("long"))
         if with_row_commit_version:
@@ -900,8 +905,8 @@ def _apply_deletion_vector(
     if len(deleted) <= 1000:
         kept = df.filter(~F.col("__ridx").isin(deleted))
     else:
-        del_df = spark.createDataFrame(
-            ((int(i),) for i in deleted), "__ridx bigint"
+        del_df = local_frame(
+            spark, ((int(i),) for i in deleted), "__ridx bigint"
         )
         kept = df.join(F.broadcast(del_df), "__ridx", "left_anti")
     if want_row_id:
@@ -2256,7 +2261,7 @@ def write_checkpoint(spark: SparkSession, table_path: str) -> int:
                 },
             }
         )
-    cp_df = spark.createDataFrame(rows, _checkpoint_schema())
+    cp_df = local_frame(spark, rows, _checkpoint_schema())
     import shutil
     import tempfile
 
@@ -2750,8 +2755,8 @@ def _snapshot_scan(
             if len(deleted) <= 1000:
                 df = df.filter(~F.col("__ridx").isin([int(i) for i in deleted]))
             else:
-                del_df = spark.createDataFrame(
-                    ((int(i),) for i in deleted), "__ridx bigint"
+                del_df = local_frame(
+                    spark, ((int(i),) for i in deleted), "__ridx bigint"
                 )
                 df = df.join(F.broadcast(del_df), "__ridx", "left_anti")
             parts.append(df if with_pos else df.drop("__ridx"))
@@ -2769,7 +2774,7 @@ def _snapshot_scan(
                 else []
             )
         )
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -2985,7 +2990,7 @@ def read_delta_changes(
                 T.StructField("_commit_timestamp", T.TimestampType()),
             ]
         )
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)

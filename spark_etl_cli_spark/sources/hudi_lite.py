@@ -29,6 +29,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from spark_etl_cli_spark.session import local_frame
+
 
 # Hudi's first bookkeeping meta column; stamped on COW base-file rows
 # so incremental queries can filter "changed since instant T"
@@ -110,7 +112,7 @@ def _prune_partitions(
     ]
     schema = "__hudi_part string, " + ", ".join(f"`{c}` string" for c in cols)
     try:
-        kept_df = spark.createDataFrame(rows, schema).filter(F.expr(where))
+        kept_df = local_frame(spark, rows, schema).filter(F.expr(where))
         kept_df.columns  # force analysis
         return {r["__hudi_part"] for r in kept_df.collect()}
     except Exception:
@@ -290,7 +292,7 @@ def _mor_snapshot_df(
         table_schema = avro_to_spark_type(
             json.loads(data_blk["header"][SCHEMA])
         )
-        base_df = spark.createDataFrame([], table_schema).withColumn(
+        base_df = local_frame(spark, [], table_schema).withColumn(
             "__fid", F.lit(None).cast("string")
         )
     cols = table_schema.names
@@ -316,8 +318,8 @@ def _mor_snapshot_df(
         ]
     )
     out_names = [f.name for f in out_schema.fields]
-    paths_df = spark.createDataFrame(
-        logs, "path string, fid string, ford int"
+    paths_df = local_frame(
+        spark, logs, "path string, fid string, ford int"
     )
 
     def decode(batches):
@@ -672,7 +674,7 @@ def _read_hudi_incremental_mor(
     logs = sorted(log_set)
     key_pieces = []
     if logs:
-        paths_df = spark.createDataFrame(logs, "path string, fid string")
+        paths_df = local_frame(spark, logs, "path string, fid string")
 
         def decode_keys(batches):
             import pandas as pd
@@ -728,8 +730,8 @@ def _read_hudi_incremental_mor(
         and created[(part, fid)][1] == "deltacommit"
     }
     if new_fids:
-        fid_ts = spark.createDataFrame(
-            sorted(new_fids.items()), "__fid string, __instant string"
+        fid_ts = local_frame(
+            spark, sorted(new_fids.items()), "__fid string, __instant string"
         )
         key_pieces.append(
             snapshot.join(F.broadcast(fid_ts), "__fid")
@@ -861,7 +863,7 @@ def _upsert_rewrites(
             else:
                 # every row of this group was upserted away: the new
                 # slice is an EMPTY base file (schema-only parquet)
-                spark.createDataFrame([], df.schema).coalesce(1).write.mode(
+                local_frame(spark, [], df.schema).coalesce(1).write.mode(
                     "overwrite"
                 ).parquet(fid_dir + "_empty")
                 empty = next(
@@ -1623,8 +1625,8 @@ def compact_hudi_mor_lite(spark: SparkSession, table_path: str) -> dict:
             else:
                 # every row of the group was deleted via log blocks:
                 # the compacted slice is an empty (schema-only) base
-                spark.createDataFrame(
-                    [], merged.select(*cols).schema
+                local_frame(
+                    spark, [], merged.select(*cols).schema
                 ).coalesce(1).write.mode("overwrite").parquet(
                     fid_dir + "_empty"
                 )

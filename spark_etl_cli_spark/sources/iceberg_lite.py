@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spark_etl_cli_spark.session import local_frame
+
 # spec v3 reserved field ids for the MATERIALIZED row-lineage columns
 # rewritten data files carry (name-mapping entries under these ids name
 # the physical columns; fresh files derive first_row_id + position
@@ -701,7 +703,7 @@ def _prune_file_entries(
             [T.StructField(src, dt, True) for _, src, dt in fields]
         )
         try:
-            tdf = spark.createDataFrame(list(tuples), schema)
+            tdf = local_frame(spark, list(tuples), schema)
             kept_df = tdf.filter(F.expr(where))
             kept_df.columns  # force analysis: does `where` bind here?
             kept = {tuple(r) for r in kept_df.collect()}
@@ -983,7 +985,7 @@ def read_iceberg_lite(
             "with_last_updated_seq needs a format-version 3 table"
         )
     if not entries:
-        empty = spark.createDataFrame([], spark_schema)
+        empty = local_frame(spark, [], spark_schema)
         if with_row_id:
             empty = empty.withColumn("_row_id", F.lit(None).cast("long"))
         if with_last_updated_seq:
@@ -1248,8 +1250,8 @@ def read_iceberg_lite(
         # Deletes are SEQUENCE-SCOPED per the v2 spec — a file re-added
         # AFTER a delete has a higher data seq and must survive it.
         seq_df = F.broadcast(
-            spark.createDataFrame(
-                [(os.path.abspath(p), s) for p, _pv, s in entries],
+            local_frame(
+                spark, [(os.path.abspath(p), s) for p, _pv, s in entries],
                 "__dfile string, __dseq long",
             )
         )
@@ -1273,7 +1275,8 @@ def read_iceberg_lite(
                 )
                 .join(
                     F.broadcast(
-                        spark.createDataFrame(
+                        local_frame(
+                            spark,
                             [(os.path.abspath(p), s) for p, s in pos_deletes],
                             "__delfile string, __delseq long",
                         )
@@ -1295,8 +1298,10 @@ def read_iceberg_lite(
                 for pos in read_dv(ppath, off, size)
             ]
             del_parts.append(
-                spark.createDataFrame(
-                    dv_rows, "__pdfile string, __pdpos long, __delseq long"
+                local_frame(
+                    spark,
+                    dv_rows,
+                    "__pdfile string, __pdpos long, __delseq long",
                 )
             )
         dels = del_parts[0]
@@ -1346,8 +1351,8 @@ def read_iceberg_lite(
                 "re-append the data or read without row ids"
             )
         frid_df = F.broadcast(
-            spark.createDataFrame(
-                [(p, int(frid_of[p])) for p in sorted(scanned)],
+            local_frame(
+                spark, [(p, int(frid_of[p])) for p in sorted(scanned)],
                 "__dfile string, __frid long",
             )
         )
@@ -3446,7 +3451,7 @@ def read_iceberg_changes(
         ]
     )
     if not in_range:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     def entryify(pairs: list[tuple[str, dict]]) -> list[dict]:
         return [
@@ -3553,8 +3558,8 @@ def read_iceberg_changes(
                     .select("*", *del_stamps)
                 )
             if new_dv_pairs:
-                dv_pairs_df = spark.createDataFrame(
-                    new_dv_pairs, "__dfile string, __dpos long"
+                dv_pairs_df = local_frame(
+                    spark, new_dv_pairs, "__dfile string, __dpos long"
                 )
                 pieces.append(
                     prior.join(
@@ -3574,7 +3579,7 @@ def read_iceberg_changes(
             sid, cur_data, cur_pos, cur_eq, cur_dv,
         )
     if not pieces:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)

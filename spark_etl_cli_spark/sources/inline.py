@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from spark_etl_cli_spark.registry import register_sink, register_source
+from spark_etl_cli_spark.session import local_frame
 from spark_etl_cli_spark.uri import ParsedUri
 
 _TYPES: dict[str, T.DataType] = {
@@ -81,7 +82,7 @@ class ValuesSource:
                         for c, f in zip(cells, schema.fields, strict=True)
                     )
                 )
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
 
 @dataclass
@@ -110,7 +111,7 @@ class EmptySource:
     uri: ParsedUri
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame([], T.StructType([]))
+        return local_frame(spark, [], T.StructType([]))
 
 
 @register_source("console")

@@ -28,6 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from spark_etl_cli_spark.registry import register_source
+from spark_etl_cli_spark.session import local_frame
 from spark_etl_cli_spark.uri import ParsedUri
 
 
@@ -59,8 +60,8 @@ class DeltaOptimizeSource:
             min_files=int(self.uri.params.get("min-files", 2)),
             zorder_by=zorder or None,
         )
-        return spark.createDataFrame(
-            [(self.uri.path, stats["partitions_compacted"],
+        return local_frame(
+            spark, [(self.uri.path, stats["partitions_compacted"],
               stats["files_removed"], stats["files_added"])],
             "table string, partitions_compacted int, files_removed int, "
             "files_added int",
@@ -82,8 +83,8 @@ class DeltaVacuumSource:
             dry_run=dry,
         )
         rows = [(self.uri.path, p, dry) for p in paths]
-        return spark.createDataFrame(
-            rows, "table string, path string, dry_run boolean"
+        return local_frame(
+            spark, rows, "table string, path string, dry_run boolean"
         )
 
 
@@ -105,8 +106,8 @@ class DeltaDeleteSource:
         stats = delete_delta_lite(
             spark, self.uri.path, where, deletion_vectors=dv
         )
-        return spark.createDataFrame(
-            [(
+        return local_frame(
+            spark, [(
                 self.uri.path,
                 stats.get("files_rewritten", stats.get("files_dv", 0)),
                 stats["files_added"],
@@ -140,8 +141,8 @@ class DeltaUpdateSource:
         if not set_exprs:
             raise ValueError("delta-update:// needs ≥1 ?set.<col>=<expr>")
         stats = update_delta_lite(spark, self.uri.path, where, set_exprs)
-        return spark.createDataFrame(
-            [(
+        return local_frame(
+            spark, [(
                 self.uri.path,
                 stats["files_rewritten"],
                 stats["files_added"],
@@ -167,7 +168,8 @@ class IcebergCompactSource:
             ),
             min_files=int(self.uri.params.get("min-files", 2)),
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(self.uri.path, stats["files_removed"], stats["files_added"])],
             "table string, files_removed int, files_added int",
         )
@@ -201,8 +203,8 @@ class IcebergDeleteSource:
             mode=self.uri.params.get("mode", "copy-on-write"),
             equality_columns=eq_cols or None,
         )
-        return spark.createDataFrame(
-            [(
+        return local_frame(
+            spark, [(
                 self.uri.path,
                 stats["files_rewritten"],
                 stats["files_added"],
@@ -227,8 +229,8 @@ class HudiDeleteSource:
         if not where:
             raise ValueError("hudi-delete:// needs ?where=<predicate>")
         stats = delete_hudi_lite(spark, self.uri.path, where)
-        return spark.createDataFrame(
-            [(
+        return local_frame(
+            spark, [(
                 self.uri.path,
                 stats["files_rewritten"],
                 stats["files_added"],
@@ -253,8 +255,8 @@ class IcebergExpireSource:
             keep_last=int(self.uri.params.get("keep-last", 1)),
             delete_orphaned_files=_flag(self.uri, "delete-orphans"),
         )
-        return spark.createDataFrame(
-            [(self.uri.path, stats["expired"], stats["files_deleted"])],
+        return local_frame(
+            spark, [(self.uri.path, stats["expired"], stats["files_deleted"])],
             "table string, snapshots_expired int, files_deleted int",
         )
 
@@ -281,8 +283,8 @@ class DeltaRestoreSource:
             version_as_of=int(v) if v is not None else None,
             timestamp_as_of=ts,
         )
-        return spark.createDataFrame(
-            [(
+        return local_frame(
+            spark, [(
                 self.uri.path,
                 stats["version"],
                 stats["files_removed"],
@@ -336,8 +338,8 @@ class DeltaAlterSource:
             rename=rename or None, drop=drop or None, add=add or None,
             add_check=add_check or None, drop_check=drop_check or None,
         )
-        return spark.createDataFrame(
-            [(self.uri.path, stats["renamed"], stats["dropped"],
+        return local_frame(
+            spark, [(self.uri.path, stats["renamed"], stats["dropped"],
               stats["added"], stats["checks_added"],
               stats["checks_dropped"])],
             "table string, renamed int, dropped int, added int, "
@@ -371,8 +373,8 @@ class DeltaCloneSource:
             version_as_of=int(v) if v is not None else None,
             timestamp_as_of=self.uri.params.get("timestamp"),
         )
-        return spark.createDataFrame(
-            [(self.uri.path, src, stats["files_referenced"])],
+        return local_frame(
+            spark, [(self.uri.path, src, stats["files_referenced"])],
             "target string, source string, files_referenced int",
         )
 
@@ -403,8 +405,8 @@ class IcebergTagSource:
             snapshot_id=int(sid) if sid is not None else None,
             ref_type=self.uri.params.get("type", "tag"),
         )
-        return spark.createDataFrame(
-            [(self.uri.path, name, pinned)],
+        return local_frame(
+            spark, [(self.uri.path, name, pinned)],
             "table string, ref string, snapshot_id long",
         )
 
@@ -434,8 +436,8 @@ class IcebergPublishSource:
             raise ValueError("iceberg-publish:// needs ?branch=<name>")
         to = self.uri.params.get("to", "main")
         sid = fast_forward_iceberg_ref(self.uri.path, branch, to=to)
-        return spark.createDataFrame(
-            [(self.uri.path, branch, to, sid)],
+        return local_frame(
+            spark, [(self.uri.path, branch, to, sid)],
             "table string, branch string, published_to string, snapshot_id long",
         )
 
@@ -463,8 +465,8 @@ class IcebergRollbackSource:
         if not sid:
             raise ValueError("iceberg-rollback:// needs ?snapshot-id=N")
         out = rollback_iceberg_lite(self.uri.path, int(sid))
-        return spark.createDataFrame(
-            [(self.uri.path, out)], "table string, snapshot_id long"
+        return local_frame(
+            spark, [(self.uri.path, out)], "table string, snapshot_id long"
         )
 
 
@@ -488,8 +490,8 @@ class DeltaUniformSource:
         )
 
         sid = export_delta_as_iceberg(spark, self.uri.path)
-        return spark.createDataFrame(
-            [(self.uri.path, sid)],
+        return local_frame(
+            spark, [(self.uri.path, sid)],
             "table string, iceberg_snapshot_id long",
         )
 
@@ -513,8 +515,8 @@ class IcebergUniformSource:
         )
 
         v = export_iceberg_as_delta(spark, self.uri.path)
-        return spark.createDataFrame(
-            [(self.uri.path, v)],
+        return local_frame(
+            spark, [(self.uri.path, v)],
             "table string, delta_version long",
         )
 
@@ -552,8 +554,8 @@ class HudiUniformSource:
             )
         if not rows:
             raise ValueError("hudi-uniform ?as= must be delta|iceberg|both")
-        return spark.createDataFrame(
-            rows, "table string, format string, version long"
+        return local_frame(
+            spark, rows, "table string, format string, version long"
         )
 
 
@@ -611,8 +613,8 @@ class IcebergUpgradeSource:
             self.uri.path,
             to_version=int(self.uri.params.get("format-version", 3)),
         )
-        return spark.createDataFrame(
-            [(
+        return local_frame(
+            spark, [(
                 self.uri.path,
                 stats["upgraded"],
                 stats["dvs_written"],
@@ -648,8 +650,8 @@ class IcebergEvolveSource:
             f for f in self.uri.params.get("fields", "").split(",") if f
         ]
         stats = evolve_iceberg_spec(self.uri.path, fields)
-        return spark.createDataFrame(
-            [(self.uri.path, stats["spec_id"], stats["fields"])],
+        return local_frame(
+            spark, [(self.uri.path, stats["spec_id"], stats["fields"])],
             "table string, spec_id int, n_fields int",
         )
 
@@ -675,8 +677,8 @@ class HudiCleanSource:
             self.uri.path,
             retain_commits=int(self.uri.params.get("retain-commits", 1)),
         )
-        return spark.createDataFrame(
-            [(
+        return local_frame(
+            spark, [(
                 self.uri.path,
                 stats["files_deleted"],
                 ",".join(stats["retained_instants"]),
@@ -707,8 +709,8 @@ class HudiRestoreSource:
         if not instant:
             raise ValueError("hudi-restore:// needs ?instant=<timeline ts>")
         stats = restore_hudi_lite(self.uri.path, instant)
-        return spark.createDataFrame(
-            [(
+        return local_frame(
+            spark, [(
                 self.uri.path,
                 stats["restored_to"],
                 stats["instants_rolled_back"],
@@ -741,8 +743,8 @@ class HudiSavepointSource:
             instant=self.uri.params.get("instant"),
             name=self.uri.params.get("name"),
         )
-        return spark.createDataFrame(
-            [(self.uri.path, stats["savepointed"], stats["name"])],
+        return local_frame(
+            spark, [(self.uri.path, stats["savepointed"], stats["name"])],
             "table string, savepointed string, name string",
         )
 
@@ -767,8 +769,8 @@ class HudiCompactSource:
         )
 
         stats = compact_hudi_mor_lite(spark, self.uri.path)
-        return spark.createDataFrame(
-            [(
+        return local_frame(
+            spark, [(
                 self.uri.path,
                 stats["groups_compacted"],
                 stats["files_added"],

@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from spark_etl_cli_spark.session import local_frame
+
 ICEBERG_META_KINDS = ("snapshots", "files", "refs", "history")
 DELTA_META_KINDS = ("history", "files")
 
@@ -43,8 +45,8 @@ def iceberg_meta_df(spark: SparkSession, table_path: str, kind: str) -> DataFram
             )
             for s in meta.get("snapshots") or []
         ]
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "snapshot_id long, parent_id long, sequence_number long, "
             "committed_at_ms long, operation string, manifest_list string",
         )
@@ -57,8 +59,8 @@ def iceberg_meta_df(spark: SparkSession, table_path: str, kind: str) -> DataFram
             (name, r.get("type"), int(r["snapshot-id"]))
             for name, r in sorted(refs.items())
         ]
-        return spark.createDataFrame(
-            rows, "name string, type string, snapshot_id long"
+        return local_frame(
+            spark, rows, "name string, type string, snapshot_id long"
         )
     if kind == "history":
         cur = meta.get("current-snapshot-id")
@@ -81,8 +83,8 @@ def iceberg_meta_df(spark: SparkSession, table_path: str, kind: str) -> DataFram
             )
             for s in meta.get("snapshots") or []
         ]
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "made_current_at_ms long, snapshot_id long, parent_id long, "
             "is_current_ancestor boolean",
         )
@@ -103,8 +105,8 @@ def iceberg_meta_df(spark: SparkSession, table_path: str, kind: str) -> DataFram
                     int(d.get("file_size_in_bytes") or 0),
                 )
             )
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "file_path string, content int, file_format string, "
             "partition string, record_count long, file_size_in_bytes long",
         )
@@ -142,8 +144,8 @@ def delta_meta_df(spark: SparkSession, table_path: str, kind: str) -> DataFrame:
                     elif "remove" in a:
                         n_remove += 1
             rows.append((version, ts, op, params, n_add, n_remove))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "version long, timestamp_ms long, operation string, "
             "operation_parameters string, num_added_files long, "
             "num_removed_files long",
@@ -160,8 +162,8 @@ def delta_meta_df(spark: SparkSession, table_path: str, kind: str) -> DataFrame:
             )
             for a in adds
         ]
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "path string, partition_values string, size long, "
             "base_row_id long, has_deletion_vector boolean",
         )
@@ -195,8 +197,8 @@ def hudi_meta_df(spark: SparkSession, table_path: str, kind: str) -> DataFrame:
                 ).values()
             )
             rows.append((ts, action, n_files, n_replaced))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "instant string, action string, num_files_written long, "
             "num_file_groups_replaced long",
         )
@@ -216,8 +218,8 @@ def hudi_meta_df(spark: SparkSession, table_path: str, kind: str) -> DataFrame:
                     len(ent["logs"]),
                 )
             )
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "partition string, file_id string, base_file string, "
             "base_instant string, num_log_files long",
         )

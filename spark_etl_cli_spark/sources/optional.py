@@ -29,6 +29,7 @@ from spark_etl_cli_spark.registry import (
     register_source,
 )
 from spark_etl_cli_spark.sources.base import FileSink, FileSource, reader_options
+from spark_etl_cli_spark.session import local_frame
 from spark_etl_cli_spark.uri import ParsedUri
 
 
@@ -468,7 +469,7 @@ class DeltaSink:
             # Pre-create the table so downstream readers see a schema
             # immediately (reference trick, DeltaUriParser.scala:29-34).
             try:
-                empty = df.sparkSession.createDataFrame([], df.schema)
+                empty = local_frame(df.sparkSession, [], df.schema)
                 empty.write.format("delta").mode("ignore").save(self.uri.path)
             except Exception:
                 pass
@@ -538,7 +539,7 @@ class ExcelSource:
             types = ["string"] * len(header)
             rows = [[None if v is None else str(v) for v in r] for r in rows]
         schema = ", ".join(f"`{h}` {t}" for h, t in zip(header, types))
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
 
 @dataclass

@@ -34,6 +34,8 @@ import re
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from spark_etl_cli_spark.session import local_frame
+
 
 def _delta_pv_str(v) -> str | None:
     """Typed manifest partition value → delta's string partitionValues
@@ -1068,8 +1070,8 @@ def export_delta_as_iceberg(spark: SparkSession, table_path: str) -> int:
             pd_dir = os.path.join(
                 table_path, "data", f"uniform-pos-del-{commit_uuid}"
             )
-            spark.createDataFrame(
-                pd_rows, "file_path string, pos long"
+            local_frame(
+                spark, pd_rows, "file_path string, pos long"
             ).coalesce(1).sortWithinPartitions(
                 "file_path", "pos"
             ).write.parquet(pd_dir)

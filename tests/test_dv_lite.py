@@ -235,3 +235,48 @@ def test_delta_lite_v2_checkpoint_with_sidecars(spark, tmp_path):
     ])
     out = read_delta_lite(spark, table)
     assert sorted(r.id for r in out.collect()) == [5, 6, 7, 8]
+
+
+def test_delta_lite_v2_json_checkpoint_with_inline_adds(spark, tmp_path):
+    # A V2 JSON checkpoint may carry its add actions inline instead of
+    # delegating them to sidecars; each add becomes a full _ADD_SCHEMA
+    # row (row-tracking fields included).
+    from spark_etl_cli_spark.sources.delta_lite import read_delta_lite
+
+    table = str(tmp_path / "v2cp_inline")
+    log_dir = os.path.join(table, "_delta_log")
+    os.makedirs(log_dir)
+    adds = []
+    for lo, hi in [(0, 5), (5, 9)]:
+        sub = f"d{lo}"
+        spark.range(lo, hi).coalesce(1).write.parquet(
+            os.path.join(table, sub)
+        )
+        name = next(
+            f for f in os.listdir(os.path.join(table, sub))
+            if f.endswith(".parquet")
+        )
+        adds.append({"add": {
+            "path": f"{sub}/{name}", "partitionValues": {}, "size": 1,
+            "modificationTime": 0, "dataChange": True,
+            "stats": json.dumps({"numRecords": hi - lo}), "baseRowId": lo,
+        }})
+    schema = {"type": "struct", "fields": [
+        {"name": "id", "type": "long", "nullable": True, "metadata": {}}]}
+    cp_name = f"{1:020d}.checkpoint.inline01.json"
+    with open(os.path.join(log_dir, cp_name), "w") as fh:
+        fh.write("\n".join(json.dumps(a) for a in [
+            {"checkpointMetadata": {"version": 1}},
+            {"metaData": {"id": "t",
+                          "format": {"provider": "parquet", "options": {}},
+                          "schemaString": json.dumps(schema),
+                          "partitionColumns": [], "configuration": {}}},
+            {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
+                          "readerFeatures": ["v2Checkpoint"],
+                          "writerFeatures": ["v2Checkpoint"]}},
+            *adds,
+        ]))
+    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
+        json.dump({"version": 1, "size": 5, "path": cp_name}, fh)
+    out = read_delta_lite(spark, table)
+    assert sorted(r.id for r in out.collect()) == list(range(9))

@@ -171,3 +171,82 @@ def test_console_source_is_empty_frame(spark):
     _, src = resolve_source("console://")
     df = src.read(spark)
     assert df.count() == 0
+
+
+def test_explain_runs_each_source_and_transform_once(
+    spark, monkeypatch, capsys
+):
+    # a rep+* source applies a row op when it is read: --explain must
+    # print the plans of the same run that writes, not read twice
+    from pyspark.sql import Row
+
+    from spark_etl_cli_spark import registry, session
+    from spark_etl_cli_spark.__main__ import main
+    from spark_etl_cli_spark.session import local_frame
+
+    calls = {"read": 0, "transform": 0}
+
+    class CountingSource:
+        def __init__(self, uri):
+            self.uri = uri
+
+        def read(self, spark_):
+            calls["read"] += 1
+            return local_frame(spark_, [(calls["read"],)], "n int")
+
+    def counting_transform(_uri):
+        def fn(_spark, df):
+            calls["transform"] += 1
+            return df
+
+        return fn
+
+    monkeypatch.setitem(registry._SOURCES, "test-counting", CountingSource)
+    monkeypatch.setitem(
+        registry._TRANSFORMS, "test-counting", counting_transform
+    )
+    monkeypatch.setattr(session, "get_spark", lambda **_kw: spark)
+    rc = main([
+        "--source", "cnt+test-counting://",
+        "--transform", "cnt+out+test-counting://",
+        "--sink", "out+memory://explain_once_out",
+        "--explain",
+    ])
+    assert rc == 0
+    assert calls == {"read": 1, "transform": 1}
+    assert "=== plan for sink view 'out' ===" in capsys.readouterr().out
+    assert spark.table("explain_once_out").collect() == [Row(n=1)]
+
+
+def test_await_termination_waits_for_its_own_stream(spark, tmp_path):
+    # a stream that ended earlier in the session must not end the wait
+    # of a later run: each run waits for the queries it started
+    from spark_etl_cli_spark.pipeline import Pipeline
+    from spark_etl_cli_spark.session import local_frame
+
+    def stream_pipeline(name, files):
+        src = tmp_path / f"{name}_src"
+        for i in range(files):
+            local_frame(
+                spark, [(i * 10 + j,) for j in range(10)], "k bigint"
+            ).coalesce(1).write.parquet(str(src / f"f{i}"))
+        out = tmp_path / f"{name}_out"
+        return out, Pipeline.from_uris(
+            [f"s+parquet-stream://{src}/*?schema=k BIGINT"
+             "&maxFilesPerTrigger=1"],
+            [],
+            [f"s+parquet-stream://{out}?checkpointLocation={out}_ckpt"
+             "&trigger-interval=availableNow"],
+        )
+
+    _, first = stream_pipeline("first", 1)
+    first.run(spark, await_termination=True)
+    assert len(first.queries) == 1 and not first.queries[0].isActive
+    before = {q.id for q in spark.streams.active}
+    out, second = stream_pipeline("second", 4)
+    second.run(spark, await_termination=120)
+    assert len(second.queries) == 1
+    assert not second.queries[0].isActive
+    assert [q for q in spark.streams.active if q.id not in before] == []
+    assert second.queries[0].lastProgress["batchId"] >= 3
+    assert spark.read.parquet(str(out)).count() == 40
