@@ -30,7 +30,11 @@ def main(argv: list[str] | None = None) -> int:
         default=0,
         help="seconds to await streaming queries (0 = don't wait)",
     )
-    ap.add_argument("--list-schemes", action="store_true")
+    ap.add_argument(
+        "--list-schemes",
+        action="store_true",
+        help="list every scheme; sources and sinks with their parameters",
+    )
     ap.add_argument("--lenient", action="store_true", help="don't fail fast on sink errors")
     ap.add_argument(
         "--explain",
@@ -49,12 +53,12 @@ def main(argv: list[str] | None = None) -> int:
     from spark_etl_cli_spark.session import get_spark
 
     if args.list_schemes:
-        for kind, schemes in registry.known_schemes().items():
-            print(f"{kind}: {', '.join(schemes)}")
+        print(registry.describe_schemes())
         return 0
 
-    spark = get_spark(master=args.master, extra_confs=registry.registered_spark_confs())
+    # resolve first: a bad URI fails before a SparkSession starts
     pipe = Pipeline.from_uris(args.source, args.transform, args.sink)
+    spark = get_spark(master=args.master, extra_confs=registry.registered_spark_confs())
     results = pipe.run(
         spark,
         fail_fast=not args.lenient,

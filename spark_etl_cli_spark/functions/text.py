@@ -44,27 +44,6 @@ def tokens(text: Column) -> Column:
     return F.split(F.lower(normalize_ws(text)), " ")
 
 
-def char_ngrams(text: Column, n: int) -> Column:
-    """Array of character n-grams (for shingle-based dedup).
-
-    The normalized string is let-bound (transform over a one-element
-    array) so the regex normalization runs once, not once per offset.
-    """
-    norm = F.lower(normalize_ws(text))
-    return F.element_at(
-        F.transform(
-            F.array(norm),
-            lambda s: F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length(s) - F.lit(n - 1), F.lit(0))
-                ),
-                lambda i: F.substring(s, i, n),
-            ),
-        ),
-        1,
-    )
-
-
 def _sql(col: Column) -> str:
     # Column → SQL text usable inside F.expr (internal helper).
     return col._jc.toString()  # noqa: SLF001
@@ -138,15 +117,6 @@ def quality_score(text: Column) -> Column:
         + F.lit(0.3) * (F.lit(1.0) - punct_ratio(text))
         + F.lit(0.3) * sw_presence
     )
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Marker-token hit count per candidate language."""
-    toks = tokens(text)
-    return {
-        lang: F.size(F.filter(toks, lambda t: t.isin(markers)))
-        for lang, markers in LANG_MARKERS.items()
-    }
 
 
 def lang_id(text: Column) -> Column:

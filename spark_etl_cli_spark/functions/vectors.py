@@ -83,8 +83,3 @@ def unit(v: Column) -> Column:
         ),
         1,
     )
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    diffs = F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))

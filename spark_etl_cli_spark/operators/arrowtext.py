@@ -193,65 +193,6 @@ def with_shingle_md5_longs(
     return pre.mapInArrow(_batches, out_schema)
 
 
-def with_shingle_md5_hexes(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 3,
-    *,
-    hex_chars: int = 16,
-    distinct: bool = True,
-    out_col: str = "hs",
-    keep: list[str | Column] | None = None,
-) -> DataFrame:
-    """Shingle + md5-hex-prefix fused in ONE Arrow stage: ``out_col``
-    is ``array<string>`` with ``md5(shingle)[:hex_chars]`` per shingle
-    — byte-identical to
-    ``transform(word_shingles(text, k), s -> substring(md5(s), 1, n))``
-    (Spark's md5() returns the lowercase hex digest, as hashlib does).
-    The decontamination path (q111) keys on 16-hex-char prefixes: the
-    fused stage returns 16 bytes per 8-word gram instead of the gram
-    text, and hashes in OpenSSL instead of one codegen'd md5+substring
-    per exploded row."""
-    if keep is None:
-        keep = [c for c in df.columns if c != text_col]
-    norm = F.lower(normalize_ws(F.col(text_col)))
-    pre = df.select(*keep, norm.alias("__norm"))
-    keep_names = pre.columns[:-1]
-    keep_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in pre.schema[:-1]
-    )
-    out_schema = (
-        f"{keep_schema}, `{out_col}` array<string>"
-        if keep_names
-        else f"`{out_col}` array<string>"
-    )
-    n_keep = len(keep_names)
-    names = list(keep_names) + [out_col]
-
-    def _batches(it):
-        from hashlib import md5
-
-        import pyarrow as pa
-
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            norms = batch.column(n_keep).to_pylist()
-            out = [
-                [
-                    md5(s.encode("utf-8")).hexdigest()[:hex_chars]
-                    for s in _py_shingles(norm_s, k, distinct)
-                ]
-                for norm_s in norms
-            ]
-            arr = pa.array(out, type=pa.list_(pa.string()))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(n_keep)] + [arr], names
-            )
-
-    return pre.mapInArrow(_batches, out_schema)
-
-
 def with_tagged_ngrams(
     df: DataFrame,
     text_col: str = "text",

@@ -57,7 +57,8 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from spark_etl_cli_spark.registry import register_sink, register_source
-from spark_etl_cli_spark.uri import ParsedUri
+from spark_etl_cli_spark.sources.base import WATERMARK, apply_watermark
+from spark_etl_cli_spark.uri import Param, ParsedUri
 
 _FORMAT_NAME = "arrowipc"
 _GLOB_EXTS = ("*.arrow", "*.feather", "*.ipc")
@@ -337,17 +338,15 @@ class ArrowIPCSource:
     uri: ParsedUri
 
     def read(self, spark: SparkSession) -> DataFrame:
-        from spark_etl_cli_spark.sources.base import apply_watermark
-
         _ensure_registered(spark)
         reader = (
             spark.readStream if self.uri.is_stream else spark.read
         ).format(_FORMAT_NAME)
-        for k, v in self.uri.params.items():
-            if k not in ("watermark", "schema"):
-                reader = reader.option(k, v)
-        df = reader.load(self.uri.path)
-        return apply_watermark(df, self.uri.params.get("watermark"))
+        a = self.uri.args
+        df = reader.option("batches-per-task", a["batches-per-task"]).load(
+            self.uri.path
+        )
+        return apply_watermark(df, a["watermark"])
 
 
 @dataclass
@@ -358,16 +357,22 @@ class ArrowIPCSink:
 
     def write(self, df: DataFrame) -> bool:
         _ensure_registered(df.sparkSession)
-        mode = self.uri.params.get("mode", "overwrite")
-        df.write.format(_FORMAT_NAME).mode(mode).save(self.uri.path)
+        df.write.format(_FORMAT_NAME).mode(self.uri.args["mode"]).save(
+            self.uri.path
+        )
         return True
 
 
-@register_source("arrow", "feather", "arrow-stream", "feather-stream")
+@register_source("arrow", "feather", "arrow-stream", "feather-stream", params=(
+    Param("batches-per-task", "int", 8, "record batches per read task"),
+    WATERMARK,
+))
 def arrow_source(p: ParsedUri) -> ArrowIPCSource:
     return ArrowIPCSource(p)
 
 
-@register_sink("arrow", "feather")
+@register_sink("arrow", "feather", params=(
+    Param("mode", default="overwrite", doc="save mode"),
+))
 def arrow_sink(p: ParsedUri) -> ArrowIPCSink:
     return ArrowIPCSink(p)

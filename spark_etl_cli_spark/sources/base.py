@@ -10,6 +10,9 @@ Mirrors the capability of the reference's ``DataFrameSource`` /
 - ``schema=<url-encoded Spark DataType JSON>`` query param provides an
   explicit schema (required for file streams)
 - ``watermark=col:duration`` attaches an event-time watermark
+
+``SOURCE`` and ``STREAM_SINK`` declare those shared parameters once;
+connector specs reuse them.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ from typing import Protocol
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from spark_etl_cli_spark.uri import ParsedUri
+from spark_etl_cli_spark.uri import Args, Param, ParsedUri
 
 
 class DataFrameSource(Protocol):
@@ -67,6 +70,14 @@ def apply_trigger(writer, trigger: str | None):
     return writer.trigger(processingTime=trigger)
 
 
+def stream_writer(writer, a: Args):
+    """Apply the ``STREAM_SINK`` parameters to a ``DataStreamWriter``."""
+    if a.get("checkpointLocation"):
+        writer = writer.option("checkpointLocation", a["checkpointLocation"])
+    writer = writer.outputMode(a.get("outputMode") or "append")
+    return apply_trigger(writer, a.get("trigger-interval"))
+
+
 def stream_via_foreach_batch(
     df: DataFrame, write_batch, uri: ParsedUri, pass_epoch: bool = False
 ) -> bool:
@@ -74,9 +85,9 @@ def stream_via_foreach_batch(
 
     ``foreachBatch`` hands each micro-batch to the sink's ordinary batch
     writer — the standard Spark answer for sinks without a native
-    streaming implementation (JDBC, Excel, ...). Honors
-    ``?checkpointLocation=`` and ``?trigger-interval=`` like native
-    streaming sinks. Exactly-once depends on the downstream system;
+    streaming implementation (JDBC, Excel, ...). Honors the
+    ``STREAM_SINK`` parameters like native streaming sinks.
+    Exactly-once depends on the downstream system;
     per-batch idempotence (e.g. keyed upserts) is the sink's concern —
     sinks that implement it from the epoch id (the delta-lite txn
     path) opt into receiving it via ``pass_epoch``.
@@ -86,21 +97,47 @@ def stream_via_foreach_batch(
         if pass_epoch
         else (lambda batch_df, _epoch_id: write_batch(batch_df))
     )
-    ckpt = uri.params.get("checkpointLocation")
-    if ckpt:
-        writer = writer.option("checkpointLocation", ckpt)
-    writer = apply_trigger(writer, uri.params.get("trigger-interval"))
-    writer.start()
+    stream_writer(writer, uri.args).start()
     return True
 
 
-# query params consumed by the framework, not forwarded as reader options
-_RESERVED = {"schema", "watermark", "trigger-interval", "mode",
-             "partition-by", "sort-by", "where", "view"}
+# the parameter groups every source resp. streaming sink shares
+WATERMARK = Param("watermark", doc="event-time watermark, 'col:duration'")
+SOURCE = (
+    Param("where", doc="row predicate (SQL), applied at the scan"),
+    Param("schema", doc="explicit schema: Spark DataType JSON or DDL"),
+    WATERMARK,
+)
+STREAM_SINK = (
+    Param("checkpointLocation", doc="streaming checkpoint directory"),
+    Param("trigger-interval",
+          doc="availableNow | once | processing-time interval"),
+    Param("outputMode", default="append",
+          doc="streaming output mode: append | update | complete"),
+)
+_FRAMEWORK = {p.name for p in SOURCE + STREAM_SINK}
 
 
-def reader_options(p: ParsedUri) -> dict[str, str]:
-    return {k: v for k, v in p.params.items() if k not in _RESERVED}
+def passthrough(a: Args) -> dict[str, str]:
+    """The URI's non-framework keys as written: what a connector hands
+    the Spark data source it delegates to when that runtime (a
+    delta/iceberg/hudi/avro jar) is on the classpath."""
+    opts = {**a.given, **a.extra}
+    return {k: v for k, v in opts.items() if k not in _FRAMEWORK}
+
+
+FILE_SOURCE = SOURCE + (
+    Param("*", doc="other keys pass to Spark as reader options"),
+)
+FILE_SINK = STREAM_SINK + (
+    Param("mode", aliases=("write-mode",),
+          doc="save mode (default overwrite)"),
+    Param("partition-by", "csv", doc="hive-style partition columns"),
+    Param("sort-by", "csv", doc="sortWithinPartitions before writing"),
+    Param("single-file", "bool", False,
+          doc="coalesce(1): one output file (serializes the write)"),
+    Param("*", doc="other keys pass to Spark as writer options"),
+)
 
 
 @dataclass
@@ -115,30 +152,20 @@ class FileSource:
         # nanosAsLong for TIMESTAMP(NANOS) parquet lives in the session
         # build (session.py BASE_CONFS), not here: a per-read conf.set
         # mutated shared session state as a side effect.
-        opts = {**self.default_options, **reader_options(self.uri)}
-        path = self.uri.path
+        a = self.uri.args
+        opts = {**self.default_options, **a.extra}
+        reader = spark.readStream if self.uri.is_stream else spark.read
+        reader = reader.format(self.fmt).options(**opts)
+        if a.get("schema"):
+            reader = reader.schema(parse_schema_json(a["schema"]))
+        df = reader.load(self.uri.path)
         # ?where= is a uniform row predicate on every file source —
         # declared before any transform, so Catalyst pushes it into the
         # scan (PushedFilters) rather than filtering post-hoc; the lite
         # lakehouse readers additionally prune their FILE lists with it
-        where = self.uri.params.get("where")
-        if self.uri.is_stream:
-            reader = spark.readStream.format(self.fmt).options(**opts)
-            schema_json = self.uri.params.get("schema")
-            if schema_json:
-                reader = reader.schema(parse_schema_json(schema_json))
-            df = reader.load(path)
-            if where:
-                df = df.filter(where)
-            return apply_watermark(df, self.uri.params.get("watermark"))
-        reader = spark.read.format(self.fmt).options(**opts)
-        schema_json = self.uri.params.get("schema")
-        if schema_json:
-            reader = reader.schema(parse_schema_json(schema_json))
-        df = reader.load(path)
-        if where:
-            df = df.filter(where)
-        return apply_watermark(df, self.uri.params.get("watermark"))
+        if a.get("where"):
+            df = df.filter(a["where"])
+        return apply_watermark(df, a.get("watermark"))
 
 
 @dataclass
@@ -165,25 +192,22 @@ class FileSink:
     default_options: dict[str, str] = field(default_factory=dict)
 
     def write(self, df: DataFrame) -> bool:
-        opts = {**self.default_options, **reader_options(self.uri)}
-        single = opts.pop("single-file", "false").lower() == "true"
+        a = self.uri.args
+        opts = {**self.default_options, **a.extra}
         path = self.uri.path
-        partition_by = [
-            c for c in self.uri.params.get("partition-by", "").split(",") if c
-        ]
-        sort_by = [c for c in self.uri.params.get("sort-by", "").split(",") if c]
+        partition_by = a.get("partition-by") or []
+        sort_by = a.get("sort-by") or []
         if df.isStreaming:
             writer = df.writeStream.format(self.fmt).options(**opts)
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
-            writer = apply_trigger(writer, self.uri.params.get("trigger-interval"))
-            writer.start(path)
+            stream_writer(writer, a).start(path)
             return True
-        if single:
+        if a.get("single-file"):
             df = df.coalesce(1)
         if sort_by:
             df = df.sortWithinPartitions(*sort_by)
-        mode = self.uri.params.get("mode", self.default_mode)
+        mode = a.get("mode") or self.default_mode
         writer = df.write.mode(mode).options(**opts).format(self.fmt)
         if partition_by:
             writer = writer.partitionBy(*partition_by)

@@ -34,7 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from spark_etl_cli_spark.registry import register_sink, register_source
-from spark_etl_cli_spark.uri import ParsedUri
+from spark_etl_cli_spark.uri import Param, ParsedUri
 
 
 def _table_name(p: ParsedUri) -> str:
@@ -65,14 +65,11 @@ class TableSink:
             # table. Callers who want skip-is-ok run with
             # fail_fast=False (see test_table_sink_skips_empty_input).
             return False
-        mode = self.uri.params.get("mode", "append")
-        partition_cols = [
-            c for c in self.uri.params.get("partitionCols", "").split(",") if c
-        ]
-        bucket_by = [
-            c for c in self.uri.params.get("bucket-by", "").split(",") if c
-        ]
-        sort_by = [c for c in self.uri.params.get("sort-by", "").split(",") if c]
+        a = self.uri.args
+        mode = a["mode"]
+        partition_cols = a["partitionCols"]
+        bucket_by = a["bucket-by"]
+        sort_by = a["sort-by"]
         if spark.catalog.tableExists(name):
             target_cols = [f.name for f in spark.table(name).schema.fields]
             df = df.select(*target_cols)
@@ -80,8 +77,7 @@ class TableSink:
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         if bucket_by:
-            n_buckets = int(self.uri.params.get("buckets", "8"))
-            writer = writer.bucketBy(n_buckets, *bucket_by)
+            writer = writer.bucketBy(a["buckets"], *bucket_by)
             if sort_by:
                 writer = writer.sortBy(*sort_by)
         elif sort_by:
@@ -98,6 +94,12 @@ def table_source(p: ParsedUri) -> TableSource:
     return TableSource(p)
 
 
-@register_sink("table", "hive")
+@register_sink("table", "hive", params=(
+    Param("mode", default="append", doc="save mode"),
+    Param("partitionCols", "csv", doc="partition columns"),
+    Param("bucket-by", "csv", doc="bucket columns (bucketed table)"),
+    Param("buckets", "int", 8, "bucket count with bucket-by"),
+    Param("sort-by", "csv", doc="sort within buckets, else partitions"),
+))
 def table_sink(p: ParsedUri) -> TableSink:
     return TableSink(p)

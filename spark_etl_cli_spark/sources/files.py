@@ -23,36 +23,43 @@ from pyspark.sql import DataFrame, SparkSession
 
 from spark_etl_cli_spark.operators.schema_tools import json_encode_complex
 from spark_etl_cli_spark.registry import register_sink, register_source
-from spark_etl_cli_spark.sources.base import FileSink, FileSource, reader_options
-from spark_etl_cli_spark.uri import ParsedUri
+from spark_etl_cli_spark.sources.base import (
+    FILE_SINK,
+    FILE_SOURCE,
+    FileSink,
+    FileSource,
+    apply_watermark,
+    parse_schema_json,
+)
+from spark_etl_cli_spark.uri import Param, ParsedUri
 
 
-@register_source("parquet", "parquet-stream")
+@register_source("parquet", "parquet-stream", params=FILE_SOURCE)
 def parquet_source(p: ParsedUri) -> FileSource:
     return FileSource(p, "parquet")
 
 
-@register_sink("parquet", "parquet-stream")
+@register_sink("parquet", "parquet-stream", params=FILE_SINK)
 def parquet_sink(p: ParsedUri) -> FileSink:
     return FileSink(p, "parquet")
 
 
-@register_source("orc", "orc-stream")
+@register_source("orc", "orc-stream", params=FILE_SOURCE)
 def orc_source(p: ParsedUri) -> FileSource:
     return FileSource(p, "orc")
 
 
-@register_sink("orc", "orc-stream")
+@register_sink("orc", "orc-stream", params=FILE_SINK)
 def orc_sink(p: ParsedUri) -> FileSink:
     return FileSink(p, "orc")
 
 
-@register_source("json", "json-stream")
+@register_source("json", "json-stream", params=FILE_SOURCE)
 def json_source(p: ParsedUri) -> FileSource:
     return FileSource(p, "json")
 
 
-@register_sink("json", "json-stream")
+@register_sink("json", "json-stream", params=FILE_SINK)
 def json_sink(p: ParsedUri) -> FileSink:
     return FileSink(p, "json")
 
@@ -84,14 +91,11 @@ class AvroSource:
     def read(self, spark: SparkSession) -> DataFrame:
         if _has_spark_avro(spark):
             return FileSource(self.uri, "avro").read(spark)
+        a = self.uri.args
         if self.uri.is_stream:
             # jar-less streaming READ: Python DataSource micro-batch
             # reader with file-set offsets (sources/avrostream.py)
             from spark_etl_cli_spark.sources.avrostream import ensure_registered
-            from spark_etl_cli_spark.sources.base import (
-                apply_watermark,
-                parse_schema_json,
-            )
 
             ensure_registered(spark)
             reader = spark.readStream.format("avrolite").option(
@@ -101,14 +105,16 @@ class AvroSource:
             # schema() hook runs in a session-less Python worker and
             # can only infer from an existing file's header); with an
             # explicit schema the stream can start on an empty dir
-            explicit = self.uri.params.get("schema")
-            if explicit:
-                reader = reader.schema(parse_schema_json(explicit))
+            if a["schema"]:
+                reader = reader.schema(parse_schema_json(a["schema"]))
             df = reader.load()
-            return apply_watermark(df, self.uri.params.get("watermark"))
-        from spark_etl_cli_spark.sources.avro_lite import read_avro_lite
+        else:
+            from spark_etl_cli_spark.sources.avro_lite import read_avro_lite
 
-        return read_avro_lite(spark, self.uri.path)
+            df = read_avro_lite(spark, self.uri.path)
+        if a["where"]:
+            df = df.filter(a["where"])
+        return apply_watermark(df, a["watermark"])
 
 
 @dataclass
@@ -135,45 +141,34 @@ class AvroSink:
                 lambda batch: write_avro_lite(batch, self.uri.path, mode="append"),
                 self.uri,
             )
-        mode = self.uri.params.get(
-            "mode", self.uri.params.get("write-mode", "overwrite")
-        )
         write_avro_lite(
-            df, self.uri.path, mode=mode,
-            # ?codec=null|deflate|snappy|zstandard (spec block codecs)
-            codec=self.uri.params.get("codec", "deflate"),
+            df, self.uri.path, mode=self.uri.args["mode"] or "overwrite",
+            codec=self.uri.args["codec"],
         )
         return True
 
 
-@register_source("avro", "avro-stream")
+@register_source("avro", "avro-stream", params=FILE_SOURCE)
 def avro_source(p: ParsedUri) -> AvroSource:
     return AvroSource(p)
 
 
-@register_sink("avro", "avro-stream")
+@register_sink("avro", "avro-stream", params=FILE_SINK + (
+    Param("codec", "enum", "deflate",
+          "block codec without the spark-avro jar",
+          choices=("null", "deflate", "snappy", "zstandard")),
+))
 def avro_sink(p: ParsedUri) -> AvroSink:
     return AvroSink(p)
 
 
-def _text_delimiter(path: str, params: dict[str, str]) -> str:
-    if "delimiter" in params:
-        return params["delimiter"]
-    if path.endswith(".tsv"):
-        return "\t"
-    return ","
-
-
-@dataclass
-class TextSource:
-    uri: ParsedUri
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        opts = reader_options(self.uri)
-        opts.setdefault("header", "true")
-        opts["delimiter"] = _text_delimiter(self.uri.path, opts)
-        inner = FileSource(self.uri, "csv", default_options=opts)
-        return inner.read(spark)
+def _text_options(p: ParsedUri) -> dict[str, str]:
+    """CSV defaults: a header row, and the delimiter from the file
+    extension (tab for ``.tsv``) unless ``?delimiter=`` is given."""
+    return {
+        "header": "true",
+        "delimiter": "\t" if p.path.endswith(".tsv") else ",",
+    }
 
 
 @dataclass
@@ -181,25 +176,22 @@ class TextSink:
     uri: ParsedUri
 
     def write(self, df: DataFrame) -> bool:
-        opts = reader_options(self.uri)
-        opts.setdefault("header", "true")
-        opts["delimiter"] = _text_delimiter(self.uri.path, opts)
         flat = df if df.isStreaming else json_encode_complex(df)
-        inner = FileSink(self.uri, "csv", default_options=opts)
+        inner = FileSink(self.uri, "csv", default_options=_text_options(self.uri))
         return inner.write(flat)
 
 
-@register_source("text", "csv", "text-stream", "csv-stream")
-def text_source(p: ParsedUri) -> TextSource:
-    return TextSource(p)
+@register_source("text", "csv", "text-stream", "csv-stream", params=FILE_SOURCE)
+def text_source(p: ParsedUri) -> FileSource:
+    return FileSource(p, "csv", default_options=_text_options(p))
 
 
-@register_sink("text", "csv", "text-stream", "csv-stream")
+@register_sink("text", "csv", "text-stream", "csv-stream", params=FILE_SINK)
 def text_sink(p: ParsedUri) -> TextSink:
     return TextSink(p)
 
 
-@register_source("xml", "xml-stream")
+@register_source("xml", "xml-stream", params=FILE_SOURCE)
 def xml_source(p: ParsedUri) -> FileSource:
     """``xml://path?rowTag=row`` — Spark 4's built-in XML source
     (spark-xml was folded into core). ``rowTag`` defaults to ``row``;
@@ -207,12 +199,12 @@ def xml_source(p: ParsedUri) -> FileSource:
     return FileSource(p, "xml", default_options={"rowTag": "row"})
 
 
-@register_sink("xml", "xml-stream")
+@register_sink("xml", "xml-stream", params=FILE_SINK)
 def xml_sink(p: ParsedUri) -> FileSink:
     return FileSink(p, "xml", default_options={"rowTag": "row"})
 
 
-@register_source("binaryfile")
+@register_source("binaryfile", params=FILE_SOURCE)
 def binaryfile_source(p: ParsedUri) -> FileSource:
     """``binaryfile://dir?pathGlobFilter=*.png`` — Spark's binaryFile
     source: one row per file as (path, modificationTime, length,
@@ -223,7 +215,7 @@ def binaryfile_source(p: ParsedUri) -> FileSource:
     return FileSource(p, "binaryFile")
 
 
-@register_source("lines", "lines-stream")
+@register_source("lines", "lines-stream", params=FILE_SOURCE)
 def lines_source(p: ParsedUri) -> FileSource:
     """``lines://path`` — Spark's ``text`` source: one row per line in
     a single ``value`` string column (the raw-corpus front door;
@@ -231,6 +223,6 @@ def lines_source(p: ParsedUri) -> FileSource:
     return FileSource(p, "text")
 
 
-@register_sink("lines", "lines-stream")
+@register_sink("lines", "lines-stream", params=FILE_SINK)
 def lines_sink(p: ParsedUri) -> FileSink:
     return FileSink(p, "text")

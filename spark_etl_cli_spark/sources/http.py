@@ -16,8 +16,8 @@ Source — one GET, distributed parse:
   top-level array or an envelope object — ``data-key=`` plucks the
   array out of the envelope (dotted paths supported);
 - params prefixed ``q-`` are forwarded to the remote URL's query
-  string; ``header-*`` become request headers; everything else is
-  consumed locally;
+  string; ``header-*`` become request headers; any other key must be
+  one of the connector's own (``--list-schemes``);
 - ``max-bytes`` fail-fast cap (default 256 MB) — a driver-side fetch
   is the right shape for API-sized payloads, not bulk data; paging
   protocols get dedicated sources (see the Solr cursorMark source).
@@ -35,29 +35,21 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from spark_etl_cli_spark.registry import register_sink, register_source
-from spark_etl_cli_spark.uri import ParsedUri
+from spark_etl_cli_spark.sources.base import STREAM_SINK
+from spark_etl_cli_spark.uri import Param, ParsedUri
 
-_LOCAL_PARAMS = {"format", "data-key", "max-bytes", "batch-size", "method"}
+_REMOTE = (
+    Param("q-*", doc="q-<k>=v is passed as k=v in the remote query string"),
+    Param("header-*", doc="header-<H>=v is sent as request header H"),
+)
 
 
 def _remote_url(uri: ParsedUri) -> str:
     from urllib.parse import urlencode
 
     base = f"{uri.base_scheme}://{uri.authority}{uri.raw_path}"
-    fwd = {
-        k[2:]: v
-        for k, v in uri.params.items()
-        if k.startswith("q-")
-    }
+    fwd = uri.args["q-*"]
     return f"{base}?{urlencode(fwd)}" if fwd else base
-
-
-def _headers(uri: ParsedUri) -> dict[str, str]:
-    return {
-        k[len("header-"):]: v
-        for k, v in uri.params.items()
-        if k.startswith("header-")
-    }
 
 
 def _pluck(obj, dotted: str):
@@ -79,10 +71,10 @@ class HttpSource:
         import tempfile
         import urllib.request
 
-        fmt = self.uri.params.get("format", "json")
-        max_bytes = int(self.uri.params.get("max-bytes", str(256 * 1024 * 1024)))
+        fmt = self.uri.args["format"]
+        max_bytes = self.uri.args["max-bytes"]
         req = urllib.request.Request(
-            _remote_url(self.uri), headers=_headers(self.uri)
+            _remote_url(self.uri), headers=self.uri.args["header-*"]
         )
         suffix = ".jsonl" if fmt in ("json", "jsonl") else ".csv"
         tmp = tempfile.NamedTemporaryFile(
@@ -100,7 +92,7 @@ class HttpSource:
                             f"http:// response exceeded max-bytes={max_bytes}"
                         )
                     data = _json.loads(body)
-                    key = self.uri.params.get("data-key")
+                    key = self.uri.args["data-key"]
                     if key:
                         data = _pluck(data, key)
                     if isinstance(data, dict):
@@ -149,8 +141,10 @@ class HttpSink:
         from spark_etl_cli_spark.operators.schema_tools import json_encode_complex
 
         url = _remote_url(self.uri)
-        headers = {"Content-Type": "application/json", **_headers(self.uri)}
-        batch_size = int(self.uri.params.get("batch-size", "1000"))
+        headers = {
+            "Content-Type": "application/json", **self.uri.args["header-*"]
+        }
+        batch_size = self.uri.args["batch-size"]
         flat = json_encode_complex(df)
 
         def send_partition(rows):
@@ -175,11 +169,18 @@ class HttpSink:
         return True
 
 
-@register_source("http", "https")
+@register_source("http", "https", params=_REMOTE + (
+    Param("format", "enum", "json", "response body format",
+          choices=("json", "jsonl", "csv")),
+    Param("data-key", doc="dotted path to the record array in a JSON envelope"),
+    Param("max-bytes", "int", 256 * 1024 * 1024, "fail-fast body size cap"),
+))
 def http_source(p: ParsedUri) -> HttpSource:
     return HttpSource(p)
 
 
-@register_sink("http", "https")
+@register_sink("http", "https", params=STREAM_SINK + _REMOTE + (
+    Param("batch-size", "int", 1000, "rows per POST"),
+))
 def http_sink(p: ParsedUri) -> HttpSink:
     return HttpSink(p)

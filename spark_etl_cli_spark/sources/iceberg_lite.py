@@ -77,6 +77,29 @@ def _load_metadata(table_path: str) -> dict:
         return json.load(fh)
 
 
+def _commit_iceberg_metadata(meta_dir: str, meta: dict) -> int:
+    """Claim the next ``vN.metadata.json`` under ``meta_dir`` with
+    ``O_CREAT|O_EXCL`` (a concurrent committer that took N first makes
+    this raise ``FileExistsError``), write ``meta`` to it and point
+    ``version-hint.text`` at N. Returns N (1 for a new table)."""
+    version = 1 + max(
+        (
+            int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
+            for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
+        ),
+        default=0,
+    )
+    fd = os.open(
+        os.path.join(meta_dir, f"v{version}.metadata.json"),
+        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+    )
+    with os.fdopen(fd, "w") as fh:
+        json.dump(meta, fh)
+    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
+        fh.write(str(version))
+    return version
+
+
 def _localize(path: str, table_path: str) -> str:
     """Manifest/data paths are absolute URIs as written by the original
     engine; strip the scheme and, if the absolute path does not exist
@@ -416,16 +439,7 @@ def set_iceberg_ref(
     new_meta["refs"] = refs
     new_meta["last-updated-ms"] = int(_time.time() * 1000)
     meta_dir = os.path.join(table_path, "metadata")
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_iceberg_metadata(meta_dir, new_meta)
     return snap["snapshot-id"]
 
 
@@ -448,16 +462,7 @@ def rollback_iceberg_lite(table_path: str, snapshot_id: int) -> int:
         new_meta["refs"] = refs
     new_meta["last-updated-ms"] = int(_time.time() * 1000)
     meta_dir = os.path.join(table_path, "metadata")
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_iceberg_metadata(meta_dir, new_meta)
     return snapshot_id
 
 
@@ -520,16 +525,7 @@ def fast_forward_iceberg_ref(
     new_meta["refs"] = refs
     new_meta["last-updated-ms"] = int(_time.time() * 1000)
     meta_dir = os.path.join(table_path, "metadata")
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_iceberg_metadata(meta_dir, new_meta)
     return head
 
 
@@ -2265,19 +2261,7 @@ def write_iceberg_lite(
         refs[branch] = {"snapshot-id": snapshot_id, "type": "branch"}
         meta["refs"] = refs
         meta["current-snapshot-id"] = prior.get("current-snapshot-id")
-    version = 1
-    versions = [
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    ]
-    if versions:
-        version = max(versions) + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_iceberg_metadata(meta_dir, meta)
     return snapshot_id
 
 
@@ -4321,16 +4305,7 @@ def _commit_rewrite_snapshot(
             else {}
         ),
     }]
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_iceberg_metadata(meta_dir, new_meta)
 
 
 def expire_iceberg_snapshots(
@@ -4391,16 +4366,7 @@ def expire_iceberg_snapshots(
     meta_dir = os.path.join(table_path, "metadata")
     new_meta = dict(meta)
     new_meta["snapshots"] = kept
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_iceberg_metadata(meta_dir, new_meta)
     return {"expired": len(expired), "files_deleted": deleted}
 
 
@@ -4481,16 +4447,7 @@ def evolve_iceberg_spec(table_path: str, fields: list[str]) -> dict:
 
     new_meta["last-updated-ms"] = int(_time.time() * 1000)
     meta_dir = os.path.join(table_path, "metadata")
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_iceberg_metadata(meta_dir, new_meta)
     return {"spec_id": spec_id, "fields": len(new_fields)}
 
 
@@ -4670,16 +4627,7 @@ def upgrade_iceberg_format(
         "summary": {"operation": "replace"},
         "schema-id": 0,
     }]
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_iceberg_metadata(meta_dir, new_meta)
     return {
         "upgraded": True,
         "dvs_written": n_dvs,
@@ -4989,16 +4937,7 @@ def _delete_iceberg_mor_dv(
         "schema-id": 0,
         "first-row-id": int(meta.get("next-row-id") or 0),
     }]
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_iceberg_metadata(meta_dir, new_meta)
     return {
         "files_rewritten": 0,
         "files_added": 1,
@@ -5229,16 +5168,7 @@ def _delete_iceberg_mor(
         "summary": {"operation": "delete"},
         "schema-id": 0,
     }]
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_iceberg_metadata(meta_dir, new_meta)
     return {
         "files_rewritten": 0,
         "files_added": len(del_files),

@@ -19,8 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from spark_etl_cli_spark.registry import register_sink, register_source
+from spark_etl_cli_spark.sources.base import STREAM_SINK, stream_writer
 from spark_etl_cli_spark.session import local_frame
-from spark_etl_cli_spark.uri import ParsedUri
+from spark_etl_cli_spark.uri import Param, ParsedUri
 
 _TYPES: dict[str, T.DataType] = {
     "int": T.IntegerType(),
@@ -67,11 +68,8 @@ class ValuesSource:
     uri: ParsedUri
 
     def read(self, spark: SparkSession) -> DataFrame:
-        header = self.uri.params.get("header", "")
-        if not header:
-            raise ValueError("values:// requires ?header=name:type,...")
-        schema = parse_header(header)
-        values = self.uri.params.get("values", "")
+        schema = parse_header(self.uri.args["header"])
+        values = self.uri.args["values"]
         rows = []
         if values:
             for row in values.split(";"):
@@ -87,23 +85,21 @@ class ValuesSource:
 
 @dataclass
 class ShowSink:
-    """Print up to `limit` rows; works for batch and streaming frames."""
+    """Print up to ``?limit=`` rows; works for batch and streaming frames."""
 
     uri: ParsedUri
-    limit: int = 10000
 
     def write(self, df: DataFrame) -> bool:
         if df.isStreaming:
-            writer = df.writeStream.outputMode(
-                self.uri.params.get("outputMode", "append")
-            ).format("console")
-            from spark_etl_cli_spark.sources.base import apply_trigger
-
-            writer = apply_trigger(writer, self.uri.params.get("trigger-interval"))
-            writer.start()
+            stream_writer(df.writeStream.format("console"), self.uri.args).start()
             return True
-        df.show(int(self.uri.params.get("limit", self.limit)), truncate=False)
+        df.show(self.uri.args["limit"], truncate=False)
         return True
+
+
+_SHOW = STREAM_SINK + (
+    Param("limit", "int", 10000, "rows printed for a batch frame"),
+)
 
 
 @dataclass
@@ -119,17 +115,20 @@ def console_source(p: ParsedUri) -> EmptySource:
     return EmptySource(p)
 
 
-@register_sink("console", "console-stream")
+@register_sink("console", "console-stream", params=_SHOW)
 def console_sink(p: ParsedUri) -> ShowSink:
     return ShowSink(p)
 
 
-@register_source("values")
+@register_source("values", params=(
+    Param("header", doc="columns, 'name[:type],...'", required=True),
+    Param("values", default="", doc="rows split on ';', cells on ','"),
+))
 def values_source(p: ParsedUri) -> ValuesSource:
     return ValuesSource(p)
 
 
-@register_sink("values")
+@register_sink("values", params=_SHOW)
 def values_sink(p: ParsedUri) -> ShowSink:
     # The reference's values sink just prints (ValuesSource.scala:27-30).
     return ShowSink(p)
@@ -146,17 +145,16 @@ class RangeSource:
     uri: ParsedUri
 
     def read(self, spark: SparkSession) -> DataFrame:
-        p = self.uri.params
-        start = int(p.get("start", "0"))
-        end = int(p.get("end", p.get("n", "1000")))
-        step = int(p.get("step", "1"))
-        parts = p.get("partitions")
-        if parts is not None:
-            return spark.range(start, end, step, int(parts))
-        return spark.range(start, end, step)
+        a = self.uri.args
+        return spark.range(a["start"], a["end"], a["step"], a["partitions"])
 
 
-@register_source("range")
+@register_source("range", params=(
+    Param("start", "int", 0, "first id"),
+    Param("end", "int", 1000, "end id (exclusive)", aliases=("n",)),
+    Param("step", "int", 1, "id increment"),
+    Param("partitions", "int", doc="number of partitions"),
+))
 def range_source(p: ParsedUri) -> RangeSource:
     return RangeSource(p)
 
@@ -179,12 +177,11 @@ class RateSource:
             if self.uri.scheme == "rate-micro-batch"
             else "rate"
         )
-        reader = spark.readStream.format(fmt)
-        for k, v in self.uri.params.items():
-            reader = reader.option(k, v)
-        return reader.load()
+        return spark.readStream.format(fmt).options(**self.uri.args.extra).load()
 
 
-@register_source("rate", "rate-micro-batch")
+@register_source("rate", "rate-micro-batch", params=(
+    Param("*", doc="keys pass to Spark's rate source as options"),
+))
 def rate_source(p: ParsedUri) -> RateSource:
     return RateSource(p)

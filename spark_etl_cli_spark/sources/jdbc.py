@@ -7,8 +7,9 @@ database" — no reference-code analogue to cite). URI form:
     jdbc:///TABLE?url=<jdbc-url>&user=...&password=...
     jdbc://?url=...&query=SELECT ...           (ad-hoc query source)
 
-All query params are forwarded verbatim as Spark JDBC options; the URI
-path (if given) becomes ``dbtable``. The bundled Derby driver makes the
+``url`` is required; every other query param (the sink's ``mode`` and
+streaming params aside) is forwarded verbatim as a Spark JDBC option;
+the URI path (if given) becomes ``dbtable``. The bundled Derby driver makes the
 connector testable without external services (embedded
 ``jdbc:derby:/path;create=true`` URLs).
 
@@ -28,17 +29,18 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from spark_etl_cli_spark.registry import register_sink, register_source
-from spark_etl_cli_spark.sources.base import reader_options
-from spark_etl_cli_spark.uri import ParsedUri
+from spark_etl_cli_spark.sources.base import STREAM_SINK
+from spark_etl_cli_spark.uri import Param, ParsedUri
+
+_URL = Param("url", doc="JDBC connection URL", required=True)
+_OPTIONS = Param("*", doc="other keys pass to Spark as JDBC options")
 
 
 def _jdbc_options(p: ParsedUri) -> dict[str, str]:
-    opts = reader_options(p)
+    opts = {"url": p.args["url"], **p.args.extra}
     table = p.path.strip("/")
     if table and "dbtable" not in opts and "query" not in opts:
         opts["dbtable"] = table
-    if "url" not in opts:
-        raise ValueError("jdbc:// requires a ?url=<jdbc-url> parameter")
     return opts
 
 
@@ -67,19 +69,20 @@ class JdbcSink:
         return self._write_batch(df, default_mode="overwrite")
 
     def _write_batch(self, df: DataFrame, default_mode: str) -> bool:
-        opts = _jdbc_options(self.uri)
-        mode = self.uri.params.get("mode", default_mode)
-        for k in ("mode", "checkpointLocation", "trigger-interval"):
-            opts.pop(k, None)
-        df.write.format("jdbc").options(**opts).mode(mode).save()
+        mode = self.uri.args["mode"] or default_mode
+        df.write.format("jdbc").options(**_jdbc_options(self.uri)).mode(mode).save()
         return True
 
 
-@register_source("jdbc")
+@register_source("jdbc", params=(_URL, _OPTIONS))
 def jdbc_source(p: ParsedUri) -> JdbcSource:
     return JdbcSource(p)
 
 
-@register_sink("jdbc")
+@register_sink("jdbc", params=STREAM_SINK + (
+    _URL,
+    Param("mode", doc="save mode (default overwrite; append when streaming)"),
+    _OPTIONS,
+))
 def jdbc_sink(p: ParsedUri) -> JdbcSink:
     return JdbcSink(p)

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spark_etl_cli_spark.sources.base import apply_watermark, reader_options
+from spark_etl_cli_spark.sources.base import apply_watermark
 from spark_etl_cli_spark.uri import ParsedUri
 
 # the kafka source's fixed record schema (KafkaSourceProvider's output
@@ -79,34 +79,28 @@ class KafkaLiteSource:
         from spark_etl_cli_spark.streaming.serde import deserialize_values
 
         path, topic = _topic_dir(self.uri)
-        opts = reader_options(self.uri)
-        serde = opts.pop("serde", "json")
-        include_key = opts.pop("include-key", None)
-        compacted = opts.pop("compacted", "").lower() in ("1", "true", "yes")
+        a = self.uri.args
+        compacted = a["compacted"]
         if self.uri.is_stream:
             if compacted:
                 raise ValueError(
                     "kafka-lite ?compacted= is a batch read (log compaction "
                     "is a whole-log view; streams see the raw log)"
                 )
-            raw = (
-                spark.readStream.schema(KAFKA_RECORD_SCHEMA)
-                .options(**opts)
-                .parquet(path)
-            )
+            raw = spark.readStream.schema(KAFKA_RECORD_SCHEMA).parquet(path)
         else:
             if not os.path.isdir(path):
                 raise FileNotFoundError(
                     f"kafka-lite topic dir {path!r} does not exist — "
                     "produce to it first"
                 )
-            raw = spark.read.schema(KAFKA_RECORD_SCHEMA).options(**opts).parquet(path)
+            raw = spark.read.schema(KAFKA_RECORD_SCHEMA).parquet(path)
         if compacted:
             raw = _compacted_view(raw)
         df = deserialize_values(
-            spark, raw, serde, topic=topic, include_key=include_key
+            spark, raw, a["serde"], topic=topic, include_key=a["include-key"]
         )
-        return apply_watermark(df, self.uri.params.get("watermark"))
+        return apply_watermark(df, a["watermark"])
 
 
 @dataclass
@@ -117,9 +111,8 @@ class KafkaLiteSink:
         from spark_etl_cli_spark.streaming.serde import serialize_values
 
         path, topic = _topic_dir(self.uri)
-        opts = reader_options(self.uri)
-        serde = opts.pop("serde", "json")
-        key_col = opts.pop("key-column", None)
+        a = self.uri.args
+        serde, key_col = a["serde"], a["key-column"]
         if df.isStreaming:
             # foreachBatch so each micro-batch is a PRODUCE: it claims
             # the next topic epoch (segment-count) exactly like a batch
@@ -132,9 +125,8 @@ class KafkaLiteSink:
                 stream_via_foreach_batch,
             )
 
-            self.uri.params.setdefault(
-                "checkpointLocation", os.path.join(path, "_ckpt")
-            )
+            if not a["checkpointLocation"]:
+                a["checkpointLocation"] = os.path.join(path, "_ckpt")
 
             def produce(batch_df: DataFrame) -> None:
                 out = serialize_values(
@@ -147,7 +139,7 @@ class KafkaLiteSink:
             return stream_via_foreach_batch(df, produce, self.uri)
         out = serialize_values(df, serde, topic=topic, key_col=key_col)
         framed = _frame_records(out, topic, _next_epoch(path))
-        framed.write.mode("append").options(**opts).parquet(path)
+        framed.write.mode("append").parquet(path)
         return True
 
 

@@ -13,6 +13,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from spark_etl_cli_spark.registry import register_sink, register_source
+from spark_etl_cli_spark.sources.base import STREAM_SINK, stream_writer
 from spark_etl_cli_spark.uri import ParsedUri
 
 
@@ -33,15 +34,8 @@ class MemorySink:
         if not df.isStreaming:
             df.createOrReplaceTempView(name)
             return True
-        writer = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(self.uri.params.get("outputMode", "append"))
-        )
-        from spark_etl_cli_spark.sources.base import apply_trigger
-
-        writer = apply_trigger(writer, self.uri.params.get("trigger-interval"))
-        writer.start()
+        writer = df.writeStream.format("memory").queryName(name)
+        stream_writer(writer, self.uri.args).start()
         return True
 
 
@@ -50,6 +44,6 @@ def view_source(p: ParsedUri) -> ViewSource:
     return ViewSource(p)
 
 
-@register_sink("memory", "memory-stream", "view")
+@register_sink("memory", "memory-stream", "view", params=STREAM_SINK)
 def memory_sink(p: ParsedUri) -> MemorySink:
     return MemorySink(p)

@@ -18,6 +18,7 @@ Reference parity targets:
 
 from __future__ import annotations
 
+import hashlib
 import os
 from dataclasses import dataclass
 
@@ -28,9 +29,19 @@ from spark_etl_cli_spark.registry import (
     register_sink,
     register_source,
 )
-from spark_etl_cli_spark.sources.base import FileSink, FileSource, reader_options
+from spark_etl_cli_spark.sources.base import (
+    SOURCE,
+    STREAM_SINK,
+    WATERMARK,
+    FileSink,
+    FileSource,
+    apply_watermark,
+    passthrough,
+    stream_via_foreach_batch,
+    stream_writer,
+)
 from spark_etl_cli_spark.session import local_frame
-from spark_etl_cli_spark.uri import ParsedUri
+from spark_etl_cli_spark.uri import Param, ParsedUri
 
 
 class MissingDependencyError(RuntimeError):
@@ -74,131 +85,140 @@ except ImportError:
     pass
 
 
+def _lite_stream(
+    spark: SparkSession, uri: ParsedUri, fmt: str, options: dict
+) -> DataFrame:
+    """A lite table's change stream through its registered Python
+    DataSource ``fmt``, with the batch read's ``?where=`` contract and
+    the source ``?watermark=``. ``None`` options are left unset."""
+    reader = spark.readStream.format(fmt).option("path", uri.path)
+    for k, v in options.items():
+        if v is not None:
+            reader = reader.option(k, v)
+    df = reader.load()
+    if uri.args["where"]:
+        df = df.filter(uri.args["where"])
+    return apply_watermark(df, uri.args["watermark"])
+
+
+_MAX_COMMITS = Param(
+    "max-commits-per-batch", "int", 0,
+    "stream: at most N commits per micro-batch while tailing (0 = all)",
+)
+_META = Param("meta", doc="metadata table to read instead of the rows")
+_WITH_ROW_ID = Param("with-row-id", "bool", False, "append the _row_id column")
+# mode=cdc / mode=merge key and ordering, shared by the lakehouse sinks
+_ON = Param("on", doc="key column(s) for mode=merge|cdc")
+_SEQUENCE = Param("sequence", doc="mode=cdc: column ordering changes per key")
+_PARTITION_COLS = Param("partitionCols", "csv", doc="partition columns")
+_MERGE_SCHEMA = Param("mergeSchema", "bool", False,
+                      "add new columns to the table schema")
+
+
 @dataclass
 class DeltaSource:
     uri: ParsedUri
 
     def read(self, spark: SparkSession) -> DataFrame:
-        if not _has_delta(spark):
-            # engine-free fallbacks: batch = transaction-log replay
-            # (sources/delta_lite.py); streaming = commit-version-offset
-            # micro-batch reader (sources/deltastream.py)
+        if _has_delta(spark):
+            return FileSource(
+                self.uri, "delta", default_options=passthrough(self.uri.args)
+            ).read(spark)
+        # engine-free fallbacks: batch = transaction-log replay
+        # (sources/delta_lite.py); streaming = commit-version-offset
+        # micro-batch reader (sources/deltastream.py)
+        from spark_etl_cli_spark.sources.delta_lite import (
+            is_delta_table,
+            read_delta_lite,
+        )
+
+        a = self.uri.args
+        if not is_delta_table(self.uri.path):
+            raise MissingDependencyError(
+                "delta", "delta-spark jars on the classpath"
+            )
+        if self.uri.is_stream:
+            if a["readChangeFeed"]:
+                # Change Data Feed STREAM: change records per commit
+                # (table schema + _change_type / _commit_version /
+                # _commit_timestamp)
+                from spark_etl_cli_spark.sources.cdfstream import (
+                    ensure_registered as _reg_cdf,
+                )
+
+                _reg_cdf(spark)
+                return _lite_stream(spark, self.uri, "deltalite-cdf-stream", {
+                    "max-commits-per-batch": a["max-commits-per-batch"],
+                    "startingVersion": a["startingVersion"],
+                })
+            from spark_etl_cli_spark.sources.deltastream import (
+                ensure_registered,
+            )
+
+            ensure_registered(spark)
+            return _lite_stream(spark, self.uri, "deltalite-stream", {
+                "skipChangeCommits": a["skipChangeCommits"],
+                "max-commits-per-batch": a["max-commits-per-batch"],
+            })
+        if a["meta"]:
+            # metadata tables: DESCRIBE HISTORY / file inventory
+            from spark_etl_cli_spark.sources.meta_tables import delta_meta_df
+
+            return delta_meta_df(spark, self.uri.path, a["meta"])
+        if a["readChangeFeed"]:
+            # Change Data Feed batch read: table schema +
+            # _change_type/_commit_version/_commit_timestamp
             from spark_etl_cli_spark.sources.delta_lite import (
-                is_delta_table,
-                read_delta_lite,
+                read_delta_changes,
             )
 
-            if not is_delta_table(self.uri.path):
-                raise MissingDependencyError(
-                    "delta", "delta-spark jars on the classpath"
-                )
-            if self.uri.is_stream:
-                from spark_etl_cli_spark.sources.base import apply_watermark
-
-                if self.uri.params.get("readChangeFeed", "").lower() in (
-                    "1", "true", "yes",
-                ):
-                    # Change Data Feed STREAM: change records per
-                    # commit (table schema + _change_type /
-                    # _commit_version / _commit_timestamp)
-                    from spark_etl_cli_spark.sources.cdfstream import (
-                        ensure_registered as _reg_cdf,
-                    )
-
-                    _reg_cdf(spark)
-                    reader = (
-                        spark.readStream.format("deltalite-cdf-stream")
-                        .option("path", self.uri.path)
-                        .option(
-                            "max-commits-per-batch",
-                            self.uri.params.get(
-                                "max-commits-per-batch", "0"
-                            ),
-                        )
-                    )
-                    sv = self.uri.params.get("startingVersion")
-                    if sv is not None:
-                        reader = reader.option("startingVersion", sv)
-                    df = reader.load()
-                    w = self.uri.params.get("where")
-                    if w:
-                        df = df.filter(w)
-                    return apply_watermark(
-                        df, self.uri.params.get("watermark")
-                    )
-                from spark_etl_cli_spark.sources.deltastream import (
-                    ensure_registered,
-                )
-
-                ensure_registered(spark)
-                df = (
-                    spark.readStream.format("deltalite-stream")
-                    .option("path", self.uri.path)
-                    .option(
-                        "skipChangeCommits",
-                        self.uri.params.get("skipChangeCommits", ""),
-                    )
-                    .option(
-                        "max-commits-per-batch",
-                        self.uri.params.get("max-commits-per-batch", "0"),
-                    )
-                    .load()
-                )
-                w = self.uri.params.get("where")
-                if w:
-                    df = df.filter(w)  # same ?where= contract as batch
-                return apply_watermark(df, self.uri.params.get("watermark"))
-            mk = self.uri.params.get("meta")
-            if mk:
-                # metadata tables: DESCRIBE HISTORY / file inventory
-                from spark_etl_cli_spark.sources.meta_tables import (
-                    delta_meta_df,
-                )
-
-                return delta_meta_df(spark, self.uri.path, mk)
-            if self.uri.params.get("readChangeFeed", "").lower() in (
-                "1", "true", "yes",
-            ):
-                # Change Data Feed batch read: table schema +
-                # _change_type/_commit_version/_commit_timestamp
-                from spark_etl_cli_spark.sources.delta_lite import (
-                    read_delta_changes,
-                )
-
-                sv = self.uri.params.get("startingVersion")
-                if sv is None:
-                    raise ValueError(
-                        "readChangeFeed=true needs ?startingVersion=N"
-                    )
-                ev = self.uri.params.get("endingVersion")
-                return read_delta_changes(
-                    spark, self.uri.path,
-                    starting_version=int(sv),
-                    ending_version=int(ev) if ev is not None else None,
-                )
-            v = self.uri.params.get("versionAsOf")
-            return read_delta_lite(
+            if a["startingVersion"] is None:
+                raise ValueError("readChangeFeed=true needs ?startingVersion=N")
+            return read_delta_changes(
                 spark, self.uri.path,
-                version_as_of=int(v) if v is not None else None,
-                # partition-predicate FILE pruning at the log level
-                where=self.uri.params.get("where"),
-                # time travel by commit time (epoch ms or ISO string)
-                timestamp_as_of=self.uri.params.get("timestampAsOf"),
-                # row tracking: ?with-row-id=true appends _row_id,
-                # ?with-row-commit-version=true the last-modified
-                # commit version
-                with_row_id=self.uri.params.get("with-row-id", "")
-                .lower() == "true",
-                with_row_commit_version=self.uri.params.get(
-                    "with-row-commit-version", ""
-                ).lower() == "true",
-                # ?strict-row-id=true: error (not warn) when a file
-                # lacking baseRowId would serve _row_id from the
-                # materialized column alone
-                strict_row_id=self.uri.params.get("strict-row-id", "")
-                .lower() == "true",
+                starting_version=a["startingVersion"],
+                ending_version=a["endingVersion"],
             )
-        return FileSource(self.uri, "delta").read(spark)
+        return read_delta_lite(
+            spark, self.uri.path,
+            version_as_of=a["versionAsOf"],
+            # partition-predicate FILE pruning at the log level
+            where=a["where"],
+            timestamp_as_of=a["timestampAsOf"],
+            with_row_id=a["with-row-id"],
+            with_row_commit_version=a["with-row-commit-version"],
+            strict_row_id=a["strict-row-id"],
+        )
+
+
+def _parse_generated(raw: str | None) -> dict[str, str] | None:
+    """``?generated=col:expr;col2:expr`` → ``{col: expr}``."""
+    if not raw:
+        return None
+    gen = {}
+    for seg in raw.split(";"):
+        if seg:
+            c, _, e = seg.partition(":")
+            gen[c.strip()] = e
+    return gen
+
+
+def _parse_identity(raw: str | None) -> dict[str, tuple[int, int]] | None:
+    """``?identity=col:start:step[;...]`` → ``{col: (start, step)}``."""
+    if not raw:
+        return None
+    idy = {}
+    for seg in raw.split(";"):
+        if seg:
+            parts_ = seg.split(":")
+            if len(parts_) > 3 or not parts_[0].strip():
+                raise ValueError(
+                    "?identity= expects col[:start[:step]] "
+                    f"segments; got {seg!r}"
+                )
+            c, start, step = (parts_ + ["1", "1"])[:3]
+            idy[c.strip()] = (int(start or 1), int(step or 1))
+    return idy
 
 
 @dataclass
@@ -206,282 +226,167 @@ class DeltaSink:
     uri: ParsedUri
 
     def write(self, df: DataFrame) -> bool:
-        if not _has_delta(df.sparkSession):
-            # no delta-spark: writes go through the engine-free protocol
-            # writer (sources/delta_lite.py) — parquet data files + a
-            # JSON commit. Streaming appends bridge via foreachBatch
-            # with the protocol's txn (SetTransaction) action keyed on
-            # (checkpoint identity, epoch id): a replayed micro-batch
-            # after a crash is an idempotent no-op, the same
-            # exactly-once contract the jar'd sink gets from its
-            # LogStore + txn bookkeeping.
-            from spark_etl_cli_spark.sources.delta_lite import (
-                write_delta_lite,
-            )
-
-            mode = self.uri.params.get(
-                "mode", self.uri.params.get("write-mode", "append")
-            )
-            parts = [
-                c
-                for c in self.uri.params.get("partitionCols", "").split(",")
-                if c
-            ]
+        a = self.uri.args
+        if _has_delta(df.sparkSession):
             if df.isStreaming:
-                import hashlib
-
-                from spark_etl_cli_spark.sources.base import (
-                    stream_via_foreach_batch,
-                )
-
-                # stable across restarts: the checkpoint location IS
-                # the query's identity. Checkpoint-LESS runs get no
-                # txn dedupe at all — their epoch ids restart at 0
-                # every run, so txn keyed on the table path would
-                # silently skip later runs' batches as "already
-                # committed" (and collide distinct queries writing the
-                # same table). Without a checkpoint there is no
-                # exactly-once to preserve anyway.
-                ckpt = self.uri.params.get("checkpointLocation")
-                app_id = (
-                    "deltalite-"
-                    + hashlib.md5(ckpt.encode()).hexdigest()[:16]
-                    if ckpt
-                    else None
-                )
-                if mode == "cdc":
-                    # CDC replication: each micro-batch of change
-                    # records (table cols + _change_type
-                    # [+ _commit_version]) is applied latest-per-key —
-                    # deletes delete, updates update, inserts insert.
-                    # Pairs with ?readChangeFeed=true on the source to
-                    # replicate a table end-to-end, exactly-once.
-                    from spark_etl_cli_spark.sources.delta_lite import (
-                        apply_changes_delta_lite,
+                # Pre-create the table so downstream readers see a
+                # schema immediately (reference trick,
+                # DeltaUriParser.scala:29-34).
+                try:
+                    empty = local_frame(df.sparkSession, [], df.schema)
+                    empty.write.format("delta").mode("ignore").save(
+                        self.uri.path
                     )
+                except Exception:
+                    pass
+            return FileSink(
+                self.uri, "delta", default_options=passthrough(a)
+            ).write(df)
+        # no delta-spark: writes go through the engine-free protocol
+        # writer (sources/delta_lite.py) — parquet data files + a JSON
+        # commit.
+        from spark_etl_cli_spark.sources import delta_lite as dl
 
-                    on = self.uri.params.get("on")
-                    if not on:
-                        raise ValueError("delta mode=cdc needs ?on=<key>")
-                    return stream_via_foreach_batch(
-                        df,
-                        lambda b, epoch: apply_changes_delta_lite(
-                            b, self.uri.path, on=on,
-                            txn_app_id=app_id,
-                            txn_version=epoch if app_id else None,
-                            sequence_col=self.uri.params.get("sequence"),
-                        ),
-                        self.uri,
-                        pass_epoch=True,
-                    )
-                if mode == "merge":
-                    # streaming CDC merge: each micro-batch is one
-                    # conditional MERGE; the per-epoch txn makes a
-                    # replayed batch an idempotent no-op
-                    from spark_etl_cli_spark.sources.delta_lite import (
-                        merge_delta_lite,
-                    )
-
-                    on = self.uri.params.get("on")
-                    if not on:
-                        raise ValueError("delta mode=merge needs ?on=<key>")
-                    update_set = {
-                        k[len("set."):]: v
-                        for k, v in self.uri.params.items()
-                        if k.startswith("set.")
-                    }
-                    return stream_via_foreach_batch(
-                        df,
-                        lambda b, epoch: merge_delta_lite(
-                            b, self.uri.path, on=on,
-                            update_set=update_set or None,
-                            matched_condition=self.uri.params.get(
-                                "matched-condition"
-                            ),
-                            delete_condition=self.uri.params.get(
-                                "delete-condition"
-                            ),
-                            insert_condition=self.uri.params.get(
-                                "insert-condition"
-                            ),
-                            insert=self.uri.params.get(
-                                "insert", "true"
-                            ).lower() not in ("0", "false", "no"),
-                            not_matched_by_source=self.uri.params.get(
-                                "not-matched-by-source"
-                            ),
-                            not_matched_by_source_condition=(
-                                self.uri.params.get(
-                                    "not-matched-by-source-condition"
-                                )
-                            ),
-                            not_matched_by_source_set={
-                                k[len("nmbs-set."):]: v
-                                for k, v in self.uri.params.items()
-                                if k.startswith("nmbs-set.")
-                            } or None,
-                            txn_app_id=app_id,
-                            txn_version=epoch if app_id else None,
-                        ),
-                        self.uri,
-                        pass_epoch=True,
-                    )
-                stream_mode = (
-                    "upsert" if mode == "upsert" else "append"
+        path, mode = self.uri.path, a["mode"] or "append"
+        if mode in ("cdc", "merge") and not a["on"]:
+            raise ValueError(f"delta mode={mode} needs ?on=<key>")
+        if mode == "cdc":
+            # CDC replication: change records (table cols +
+            # _change_type [+ _commit_version]) are applied
+            # latest-per-key as one conditional MERGE — deletes delete,
+            # updates update, inserts insert. Pairs with
+            # ?readChangeFeed=true on the source to replicate a table
+            # end-to-end, exactly-once.
+            def commit(b: DataFrame, **txn) -> None:
+                dl.apply_changes_delta_lite(
+                    b, path, on=a["on"], sequence_col=a["sequence"], **txn
                 )
-                return stream_via_foreach_batch(
-                    df,
-                    lambda b, epoch: write_delta_lite(
-                        b, self.uri.path, mode=stream_mode,
-                        partition_by=parts or None,
-                        merge_key=self.uri.params.get("merge-key"),
-                        txn_app_id=app_id,
-                        txn_version=epoch if app_id else None,
-                    ),
-                    self.uri,
-                    pass_epoch=True,
-                )
-            if mode == "cdc":
-                # batch CDC apply: change records → latest-per-key →
-                # one conditional MERGE (deletes included)
-                from spark_etl_cli_spark.sources.delta_lite import (
-                    apply_changes_delta_lite,
-                )
-
-                on = self.uri.params.get("on")
-                if not on:
-                    raise ValueError("delta mode=cdc needs ?on=<key>")
-                apply_changes_delta_lite(
-                    df, self.uri.path, on=on,
-                    sequence_col=self.uri.params.get("sequence"),
-                )
-                return True
-            if mode == "merge":
-                # conditional MERGE: ?mode=merge&on=<key> with per-
-                # column SET expressions as set.<col>=<expr> params
-                # (exprs may qualify source./target.), an optional
-                # matched-condition=<pred>, delete-condition=<pred>
-                # (WHEN MATCHED AND pred THEN DELETE, checked first),
-                # insert-condition=<pred>, insert=false to turn
-                # off WHEN NOT MATCHED THEN INSERT *, and the full-sync
-                # clause: not-matched-by-source=delete|update with
-                # not-matched-by-source-condition=<pred> and
-                # nmbs-set.<col>=<expr> params
-                from spark_etl_cli_spark.sources.delta_lite import (
-                    merge_delta_lite,
-                )
-
-                on = self.uri.params.get("on")
-                if not on:
-                    raise ValueError("delta mode=merge needs ?on=<key>")
-                update_set = {
-                    k[len("set."):]: v
-                    for k, v in self.uri.params.items()
-                    if k.startswith("set.")
-                }
-                merge_delta_lite(
-                    df, self.uri.path, on=on,
-                    update_set=update_set or None,
-                    matched_condition=self.uri.params.get(
-                        "matched-condition"
-                    ),
-                    delete_condition=self.uri.params.get(
-                        "delete-condition"
-                    ),
-                    insert_condition=self.uri.params.get(
-                        "insert-condition"
-                    ),
-                    insert=self.uri.params.get("insert", "true").lower()
-                    not in ("0", "false", "no"),
-                    not_matched_by_source=self.uri.params.get(
-                        "not-matched-by-source"
-                    ),
-                    not_matched_by_source_condition=self.uri.params.get(
+        elif mode == "merge":
+            # conditional MERGE on ?on=<key>: per-column SET expressions
+            # as set.<col>=<expr> (exprs may qualify source./target.),
+            # matched-condition, delete-condition (WHEN MATCHED AND pred
+            # THEN DELETE, checked first), insert-condition, insert=false
+            # to turn off WHEN NOT MATCHED THEN INSERT *, and the
+            # full-sync clause: not-matched-by-source=delete|update with
+            # its condition and nmbs-set.<col>=<expr> params
+            def commit(b: DataFrame, **txn) -> None:
+                dl.merge_delta_lite(
+                    b, path, on=a["on"],
+                    update_set=a["set.*"] or None,
+                    matched_condition=a["matched-condition"],
+                    delete_condition=a["delete-condition"],
+                    insert_condition=a["insert-condition"],
+                    insert=a["insert"],
+                    not_matched_by_source=a["not-matched-by-source"],
+                    not_matched_by_source_condition=a[
                         "not-matched-by-source-condition"
-                    ),
-                    not_matched_by_source_set={
-                        k[len("nmbs-set."):]: v
-                        for k, v in self.uri.params.items()
-                        if k.startswith("nmbs-set.")
-                    } or None,
+                    ],
+                    not_matched_by_source_set=a["nmbs-set.*"] or None,
+                    **txn,
                 )
-                return True
-            # table properties at creation: property.<name>=<value>
-            # params, plus the enableChangeDataFeed shorthand
-            props = {
-                k[len("property."):]: v
-                for k, v in self.uri.params.items()
-                if k.startswith("property.")
-            }
-            if self.uri.params.get(
-                "enableChangeDataFeed", ""
-            ).lower() in ("1", "true", "yes"):
+        elif df.isStreaming:
+            def commit(b: DataFrame, **txn) -> None:
+                dl.write_delta_lite(
+                    b, path, mode="upsert" if mode == "upsert" else "append",
+                    partition_by=a["partitionCols"] or None,
+                    merge_key=a["merge-key"], **txn,
+                )
+        else:
+            # table properties at creation: property.<name>=<value>,
+            # the enableChangeDataFeed / enableRowTracking shorthands,
+            # and CHECK constraints as check.<name>=<expr> (every
+            # writer path enforces them before committing)
+            props = dict(a["property.*"])
+            if a["enableChangeDataFeed"]:
                 props["delta.enableChangeDataFeed"] = "true"
-            if self.uri.params.get(
-                "enableRowTracking", ""
-            ).lower() in ("1", "true", "yes"):
+            if a["enableRowTracking"]:
                 props["delta.enableRowTracking"] = "true"
-            # CHECK constraints: ?check.<name>=<expr> at creation;
-            # every writer path enforces them before committing
-            for k, v in self.uri.params.items():
-                if k.startswith("check."):
-                    props[f"delta.constraints.{k[len('check.'):]}"] = v
-            # generated columns: ?generated=col:expr;col2:expr at
-            # creation/overwrite (exprs URL-encoded); appends compute/
-            # validate against the table's recorded expressions
-            gen_raw = self.uri.params.get("generated")
-            gen = None
-            if gen_raw:
-                gen = {}
-                for seg in gen_raw.split(";"):
-                    if seg:
-                        c, _, e = seg.partition(":")
-                        gen[c.strip()] = e
-            # identity columns: ?identity=col:start:step[;...] at
-            # creation; appends auto-assign from the high-water mark
-            idy_raw = self.uri.params.get("identity")
-            idy = None
-            if idy_raw:
-                idy = {}
-                for seg in idy_raw.split(";"):
-                    if seg:
-                        parts_ = seg.split(":")
-                        if len(parts_) > 3 or not parts_[0].strip():
-                            raise ValueError(
-                                "?identity= expects col[:start[:step]] "
-                                f"segments; got {seg!r}"
-                            )
-                        c, start, step = (parts_ + ["1", "1"])[:3]
-                        idy[c.strip()] = (int(start or 1), int(step or 1))
-            write_delta_lite(
-                df, self.uri.path, mode=mode, partition_by=parts or None,
-                merge_schema=self.uri.params.get("mergeSchema", "").lower()
-                in ("1", "true", "yes"),
+            for name, expr in a["check.*"].items():
+                props[f"delta.constraints.{name}"] = expr
+            dl.write_delta_lite(
+                df, path, mode=mode, partition_by=a["partitionCols"] or None,
+                merge_schema=a["mergeSchema"],
                 # mode=upsert: key-matched MERGE (replace-by-key +
                 # insert-new), same URI shape as hudi's upsert
-                merge_key=self.uri.params.get("merge-key"),
+                merge_key=a["merge-key"],
                 properties=props or None,
-                generated=gen,
-                identity=idy,
+                generated=_parse_generated(a["generated"]),
+                identity=_parse_identity(a["identity"]),
             )
             return True
-        if df.isStreaming:
-            # Pre-create the table so downstream readers see a schema
-            # immediately (reference trick, DeltaUriParser.scala:29-34).
-            try:
-                empty = local_frame(df.sparkSession, [], df.schema)
-                empty.write.format("delta").mode("ignore").save(self.uri.path)
-            except Exception:
-                pass
-        return FileSink(self.uri, "delta").write(df)
+        if not df.isStreaming:
+            commit(df)
+            return True
+        # Streaming commits bridge via foreachBatch with the protocol's
+        # txn (SetTransaction) action keyed on (checkpoint identity,
+        # epoch id): a replayed micro-batch after a crash is an
+        # idempotent no-op, the same exactly-once contract the jar'd
+        # sink gets from its LogStore + txn bookkeeping. The checkpoint
+        # location IS the query's identity; checkpoint-LESS runs get no
+        # txn dedupe at all — their epoch ids restart at 0 every run,
+        # so a txn keyed on the table path would silently skip later
+        # runs' batches as "already committed". Without a checkpoint
+        # there is no exactly-once to preserve anyway.
+        ckpt = a["checkpointLocation"]
+        app_id = (
+            "deltalite-" + hashlib.md5(ckpt.encode()).hexdigest()[:16]
+            if ckpt else None
+        )
+        return stream_via_foreach_batch(
+            df,
+            lambda b, epoch: commit(
+                b, txn_app_id=app_id, txn_version=epoch if app_id else None
+            ),
+            self.uri,
+            pass_epoch=True,
+        )
 
 
-@register_source("delta", "delta-stream")
+@register_source("delta", "delta-stream", params=SOURCE + (
+    _META,
+    Param("versionAsOf", "int", doc="time travel to a commit version"),
+    Param("timestampAsOf", doc="time travel by commit time (epoch ms | ISO)"),
+    Param("readChangeFeed", "bool", False, "read the Change Data Feed"),
+    Param("startingVersion", "int", doc="change feed: first version"),
+    Param("endingVersion", "int", doc="change feed: last version (batch)"),
+    Param("skipChangeCommits", "bool", False,
+          "stream: skip commits that rewrite rows"),
+    _MAX_COMMITS,
+    _WITH_ROW_ID,
+    Param("with-row-commit-version", "bool", False,
+          "append the row's last-modified commit version"),
+    Param("strict-row-id", "bool", False,
+          "error (not warn) when a file lacks baseRowId"),
+))
 def delta_source(p: ParsedUri) -> DeltaSource:
     return DeltaSource(p)
 
 
-@register_sink("delta", "delta-stream")
+@register_sink("delta", "delta-stream", params=STREAM_SINK + (
+    Param("mode", aliases=("write-mode",),
+          doc="append (default) | overwrite | upsert | merge | cdc"),
+    _PARTITION_COLS,
+    Param("merge-key", doc="mode=upsert: key column"),
+    _ON,
+    _SEQUENCE,
+    Param("set.*", doc="mode=merge: set.<col>=<expr> SET clauses"),
+    Param("matched-condition", doc="mode=merge: WHEN MATCHED AND <pred>"),
+    Param("delete-condition", doc="mode=merge: WHEN MATCHED AND <pred> DELETE"),
+    Param("insert-condition", doc="mode=merge: WHEN NOT MATCHED AND <pred>"),
+    Param("insert", "bool", True, "mode=merge: insert unmatched rows"),
+    Param("not-matched-by-source", "enum", doc="mode=merge: full-sync action",
+          choices=("delete", "update")),
+    Param("not-matched-by-source-condition",
+          doc="mode=merge: condition of the full-sync clause"),
+    Param("nmbs-set.*", doc="mode=merge: SET clauses of the full-sync update"),
+    Param("property.*", doc="table property at creation"),
+    Param("enableChangeDataFeed", "bool", False, "record the change feed"),
+    Param("enableRowTracking", "bool", False, "assign stable row ids"),
+    Param("check.*", doc="check.<name>=<expr> CHECK constraint"),
+    Param("generated", doc="generated columns 'col:expr;...'"),
+    Param("identity", doc="identity columns 'col[:start[:step]];...'"),
+    _MERGE_SCHEMA,
+))
 def delta_sink(p: ParsedUri) -> DeltaSink:
     return DeltaSink(p)
 
@@ -521,8 +426,7 @@ class ExcelSource:
         from spark_etl_cli_spark.sources.xlsx_lite import read_xlsx
 
         header, rows = read_xlsx(self.uri.path)
-        infer = self.uri.params.get("inferSchema", "true").lower() == "true"
-        if infer:
+        if self.uri.args["inferSchema"]:
             types = [
                 _infer_column([r[i] for r in rows]) for i in range(len(header))
             ]
@@ -557,8 +461,6 @@ class ExcelSink:
 
     def write(self, df: DataFrame) -> bool:
         if df.isStreaming:
-            from spark_etl_cli_spark.sources.base import stream_via_foreach_batch
-
             # Each micro-batch APPENDS (the batch writer rewrites the
             # whole file, so per-batch write() would keep only the last
             # batch's rows — last-write-wins data loss on any stream
@@ -601,12 +503,15 @@ class ExcelSink:
         return True
 
 
-@register_source("excel", "xlsx")
+@register_source("excel", "xlsx", params=(
+    Param("inferSchema", "bool", True,
+          "stdlib reader: long/double/boolean columns, else all strings"),
+))
 def excel_source(p: ParsedUri) -> ExcelSource:
     return ExcelSource(p)
 
 
-@register_sink("excel", "xlsx")
+@register_sink("excel", "xlsx", params=STREAM_SINK)
 def excel_sink(p: ParsedUri) -> ExcelSink:
     return ExcelSink(p)
 
@@ -623,36 +528,27 @@ def kafka_reader_contract(uri: ParsedUri) -> tuple[str, dict[str, str]]:
     This is the option contract the broker path depends on — parity
     with ``KafkaUriParser.scala:12-19`` / ``ETLTest.scala:174``:
     bootstrap servers from the URI authority, ``subscribe`` from the
-    first path segment, every other query param (``startingOffsets``,
-    ``kafka.*`` tuning, ...) passed through verbatim. Pinned by
-    ``tests/test_serde.py`` so the plumbing is verified even though the
-    sandbox has no broker to execute against.
+    first path segment, every undeclared query param
+    (``startingOffsets``, ``kafka.*`` tuning, ...) passed through
+    verbatim. Pinned by ``tests/test_kafka_lite.py`` so the plumbing is
+    verified without a broker to execute against.
     """
-    topic = uri.first_path_part()
-    opts = reader_options(uri)
-    serde = opts.pop("serde", "json")
-    opts.pop("watermark", None)
-    opts.pop("include-key", None)  # serde-layer concern, not a reader option
-    return serde, {
+    return uri.args["serde"], {
         "kafka.bootstrap.servers": uri.authority,
-        "subscribe": topic,
-        **opts,
+        "subscribe": uri.first_path_part(),
+        **uri.args.extra,
     }
 
 
 def kafka_writer_contract(uri: ParsedUri) -> tuple[str, dict[str, str]]:
     """(serde, writer options) EXACTLY as handed to ``format("kafka")``
     on the write side: bootstrap from authority, ``topic`` from the
-    first path segment, extra params passed through."""
-    topic = uri.first_path_part()
-    opts = reader_options(uri)
-    serde = opts.pop("serde", "json")
-    opts.pop("watermark", None)
-    opts.pop("key-column", None)  # serde-layer concern, not a writer option
-    return serde, {
+    first path segment, undeclared params (``checkpointLocation``
+    among them) passed through."""
+    return uri.args["serde"], {
         "kafka.bootstrap.servers": uri.authority,
-        "topic": topic,
-        **opts,
+        "topic": uri.first_path_part(),
+        **uri.args.extra,
     }
 
 
@@ -677,11 +573,9 @@ class KafkaSource:
         raw = reader.load()
         df = deserialize_values(
             spark, raw, serde, topic=topic,
-            include_key=self.uri.params.get("include-key"),
+            include_key=self.uri.args["include-key"],
         )
-        from spark_etl_cli_spark.sources.base import apply_watermark
-
-        return apply_watermark(df, self.uri.params.get("watermark"))
+        return apply_watermark(df, self.uri.args["watermark"])
 
 
 @dataclass
@@ -696,34 +590,55 @@ class KafkaSink:
         topic = self.uri.first_path_part()
         serde, options = kafka_writer_contract(self.uri)
         out = serialize_values(
-            df, serde, topic=topic,
-            key_col=self.uri.params.get("key-column"),
+            df, serde, topic=topic, key_col=self.uri.args["key-column"]
         )
         if df.isStreaming:
-            out.writeStream.format("kafka").options(**options).start()
+            writer = out.writeStream.format("kafka").options(**options)
+            stream_writer(writer, self.uri.args).start()
             return True
         out.write.format("kafka").options(**options).save()
         return True
 
 
-@register_source("kafka", "kafka-stream")
+_SERDE = Param("serde", default="json",
+               doc="value codec: json[:schema] | avro:<schema> | none | ...")
+_INCLUDE_KEY = Param("include-key", "enum", doc="add the message key column",
+                     choices=("binary", "string"))
+_KEY_COLUMN = Param("key-column", doc="column written as the message key")
+
+
+@register_source("kafka", "kafka-stream", params=(
+    _SERDE, _INCLUDE_KEY, WATERMARK,
+    Param("*", doc="other keys pass to Spark's kafka source as options"),
+))
 def kafka_source(p: ParsedUri) -> KafkaSource:
     return KafkaSource(p)
 
 
-@register_sink("kafka", "kafka-stream")
+# checkpointLocation stays a forwarded option: the writer contract
+# hands it to format("kafka") as written
+@register_sink("kafka", "kafka-stream", params=STREAM_SINK[1:] + (
+    _SERDE, _KEY_COLUMN,
+    Param("*", doc="other keys pass to Spark's kafka sink as options"),
+))
 def kafka_sink(p: ParsedUri) -> KafkaSink:
     return KafkaSink(p)
 
 
-@register_source("kafka-lite", "kafka-lite-stream")
+@register_source("kafka-lite", "kafka-lite-stream", params=(
+    _SERDE, _INCLUDE_KEY, WATERMARK,
+    Param("compacted", "bool", False,
+          "batch: latest record per key, tombstones delete"),
+))
 def kafka_lite_source(p: ParsedUri):
     from spark_etl_cli_spark.sources.kafka_lite import KafkaLiteSource
 
     return KafkaLiteSource(p)
 
 
-@register_sink("kafka-lite", "kafka-lite-stream")
+@register_sink("kafka-lite", "kafka-lite-stream", params=STREAM_SINK + (
+    _SERDE, _KEY_COLUMN,
+))
 def kafka_lite_sink(p: ParsedUri):
     from spark_etl_cli_spark.sources.kafka_lite import KafkaLiteSink
 
@@ -745,16 +660,14 @@ class SolrSink:
 
     def write(self, df: DataFrame) -> bool:
         if df.isStreaming:
-            from spark_etl_cli_spark.sources.base import stream_via_foreach_batch
-
             return stream_via_foreach_batch(df, self.write, self.uri)
-        endpoint = self.uri.params.get("endpoint")
+        endpoint = self.uri.args["endpoint"]
         if not endpoint:
             raise MissingDependencyError("solr", "a live Solr endpoint (?endpoint=)")
         # solr://collection puts the collection in the netloc;
         # solr://host/collection forms land it in the path
         collection = self.uri.first_path_part() or self.uri.authority
-        batch_size = int(self.uri.params.get("batchSize", "10000"))
+        batch_size = self.uri.args["batchSize"]
         from spark_etl_cli_spark.operators.schema_tools import json_encode_complex
 
         flat = json_encode_complex(df)
@@ -782,7 +695,12 @@ class SolrSink:
         return True
 
 
-@register_sink("solr")
+_ENDPOINT = Param("endpoint", doc="Solr base URL, e.g. http://host:8983/solr")
+
+
+@register_sink("solr", params=STREAM_SINK + (
+    _ENDPOINT, Param("batchSize", "int", 10000, "documents per POST"),
+))
 def solr_sink(p: ParsedUri) -> SolrSink:
     return SolrSink(p)
 
@@ -813,7 +731,8 @@ class SolrSource:
     uri: ParsedUri
 
     def read(self, spark: SparkSession) -> DataFrame:
-        endpoint = self.uri.params.get("endpoint")
+        a = self.uri.args
+        endpoint = a["endpoint"]
         if not endpoint:
             raise MissingDependencyError("solr", "a live Solr endpoint (?endpoint=)")
         import json as _json
@@ -822,11 +741,8 @@ class SolrSource:
         import urllib.request
 
         collection = self.uri.first_path_part() or self.uri.authority
-        q = self.uri.params.get("q", "*:*")
-        rows = int(self.uri.params.get("rows", "1000"))
-        sort = self.uri.params.get("sort", "id asc")
-        fl = self.uri.params.get("fl")
-        max_rows = int(self.uri.params.get("max-rows", "0"))  # 0 = unlimited
+        q, rows, sort, fl = a["q"], a["rows"], a["sort"], a["fl"]
+        max_rows = a["max-rows"]
         base = f"{endpoint.rstrip('/')}/{collection}/select"
 
         cursor = "*"
@@ -871,7 +787,14 @@ class SolrSource:
             raise
 
 
-@register_source("solr")
+@register_source("solr", params=(
+    _ENDPOINT,
+    Param("q", default="*:*", doc="query"),
+    Param("rows", "int", 1000, "page size"),
+    Param("sort", default="id asc", doc="sort; must include the unique key"),
+    Param("fl", doc="field list"),
+    Param("max-rows", "int", 0, "fail-fast row cap (0 = unlimited)"),
+))
 def solr_source(p: ParsedUri) -> SolrSource:
     return SolrSource(p)
 
@@ -889,111 +812,106 @@ class IcebergSource:
     uri: ParsedUri
 
     def read(self, spark: SparkSession) -> DataFrame:
+        a = self.uri.args
         if _jvm_class_exists(
             spark, "org.apache.iceberg.spark.source.IcebergSource"
         ):
-            return FileSource(self.uri, "iceberg").read(spark)
-        from spark_etl_cli_spark.sources.iceberg_lite import (
-            is_iceberg_table,
-            read_iceberg_lite,
-        )
+            return FileSource(
+                self.uri, "iceberg", default_options=passthrough(a)
+            ).read(spark)
+        from spark_etl_cli_spark.sources import iceberg_lite as il
 
-        if not is_iceberg_table(self.uri.path):
+        if not il.is_iceberg_table(self.uri.path):
             raise MissingDependencyError(
                 "iceberg", f"an Iceberg table at {self.uri.path} (no "
                 "metadata/*.metadata.json found) or the iceberg-spark jar"
             )
-        mk = self.uri.params.get("meta")
-        if mk:
+        if a["meta"]:
             # metadata tables: the engines' SELECT * FROM tbl.snapshots
             from spark_etl_cli_spark.sources.meta_tables import (
                 iceberg_meta_df,
             )
 
-            return iceberg_meta_df(spark, self.uri.path, mk)
+            return iceberg_meta_df(spark, self.uri.path, a["meta"])
         if self.uri.is_stream:
             # incremental snapshot reads via the Python DataSource
             # micro-batch reader (sources/icebergstream.py)
-            from spark_etl_cli_spark.sources.base import apply_watermark
             from spark_etl_cli_spark.sources.icebergstream import (
                 ensure_registered,
             )
 
             ensure_registered(spark)
-            df = (
-                spark.readStream.format("iceberglite-stream")
-                .option("path", self.uri.path)
-                .option(
-                    "skip-overwrite-snapshots",
-                    self.uri.params.get("skip-overwrite-snapshots", ""),
-                )
-                .option(
-                    "max-commits-per-batch",
-                    self.uri.params.get("max-commits-per-batch", "0"),
-                )
-                .load()
-            )
-            w = self.uri.params.get("where")
-            if w:
-                df = df.filter(w)  # same ?where= contract as batch
-            return apply_watermark(df, self.uri.params.get("watermark"))
-        if self.uri.params.get("changelog", "").lower() in (
-            "1", "true", "yes",
-        ):
+            return _lite_stream(spark, self.uri, "iceberglite-stream", {
+                "skip-overwrite-snapshots": a["skip-overwrite-snapshots"],
+                "max-commits-per-batch": a["max-commits-per-batch"],
+            })
+        if a["changelog"]:
             # changelog read: row-level inserts/deletes per snapshot
-            from spark_etl_cli_spark.sources.iceberg_lite import (
-                read_iceberg_changes,
-            )
-
-            fs = self.uri.params.get("from-snapshot")
-            ts2 = self.uri.params.get("to-snapshot")
-            return read_iceberg_changes(
+            return il.read_iceberg_changes(
                 spark, self.uri.path,
-                from_snapshot=int(fs) if fs is not None else None,
-                to_snapshot=int(ts2) if ts2 is not None else None,
+                from_snapshot=a["from-snapshot"],
+                to_snapshot=a["to-snapshot"],
             )
-        sid = self.uri.params.get("snapshot-id")
-        as_of_ts = self.uri.params.get("as-of-timestamp")
-        ref = self.uri.params.get("ref")
+        sid, as_of_ts, ref = a["snapshot-id"], a["as-of-timestamp"], a["ref"]
         if sum(x is not None for x in (sid, as_of_ts, ref)) > 1:
             raise ValueError(
                 "pass at most one of ?snapshot-id= / ?as-of-timestamp= "
                 "/ ?ref="
             )
         if ref is not None:
-            from spark_etl_cli_spark.sources.iceberg_lite import (
-                _load_metadata,
-                resolve_iceberg_ref,
-            )
-
-            sid = resolve_iceberg_ref(_load_metadata(self.uri.path), ref)
+            sid = il.resolve_iceberg_ref(il._load_metadata(self.uri.path), ref)
         if as_of_ts is not None:
-            from spark_etl_cli_spark.sources.iceberg_lite import (
-                _load_metadata,
-                snapshot_id_at_timestamp,
+            sid = il.snapshot_id_at_timestamp(
+                il._load_metadata(self.uri.path), as_of_ts
             )
-
-            sid = snapshot_id_at_timestamp(
-                _load_metadata(self.uri.path), as_of_ts
-            )
-        return read_iceberg_lite(
+        return il.read_iceberg_lite(
             spark, self.uri.path,
             snapshot_id=int(sid) if sid is not None else None,
             # manifest-level FILE pruning on identity partition columns
-            where=self.uri.params.get("where"),
-            # v3 row lineage: ?with-row-id=true appends _row_id,
-            # ?with-last-updated-seq=true the last-update sequence
-            with_row_id=self.uri.params.get("with-row-id", "")
-            .lower() == "true",
-            with_last_updated_seq=self.uri.params.get(
-                "with-last-updated-seq", ""
-            ).lower() == "true",
+            where=a["where"],
+            with_row_id=a["with-row-id"],
+            with_last_updated_seq=a["with-last-updated-seq"],
         )
 
 
-@register_source("iceberg", "iceberg-stream")
+@register_source("iceberg", "iceberg-stream", params=SOURCE + (
+    _META,
+    Param("snapshot-id", "int", doc="time travel to a snapshot"),
+    Param("as-of-timestamp", doc="time travel by commit time"),
+    Param("ref", doc="read a tag or branch"),
+    Param("changelog", "bool", False, "row-level changes per snapshot"),
+    Param("from-snapshot", "int", doc="changelog: first snapshot"),
+    Param("to-snapshot", "int", doc="changelog: last snapshot"),
+    Param("skip-overwrite-snapshots", "bool", False,
+          "stream: skip snapshots that rewrite rows"),
+    _MAX_COMMITS,
+    _WITH_ROW_ID,
+    Param("with-last-updated-seq", "bool", False,
+          "append the row's last-update sequence number"),
+))
 def iceberg_source(p: ParsedUri) -> IcebergSource:
     return IcebergSource(p)
+
+
+def _parse_defaults(raw: str | None) -> dict | None:
+    """``?defaults=col:<json-scalar>;...`` → ``{col: value}``: v3
+    column defaults for columns a commit introduces."""
+    if not raw:
+        return None
+    import json as _json
+
+    dflts = {}
+    for seg in raw.split(";"):
+        if not seg:
+            continue
+        c, _, v = seg.partition(":")
+        if not c or not v:
+            raise ValueError(
+                "?defaults= expects col:<json-scalar> segments; "
+                f"got {seg!r}"
+            )
+        dflts[c.strip()] = _json.loads(v)
+    return dflts
 
 
 @dataclass
@@ -1007,124 +925,59 @@ class IcebergSink:
     uri: ParsedUri
 
     def write(self, df: DataFrame) -> bool:
-        from spark_etl_cli_spark.sources.iceberg_lite import write_iceberg_lite
+        from spark_etl_cli_spark.sources import iceberg_lite as il
 
-        mode = self.uri.params.get(
-            "mode", self.uri.params.get("write-mode", "append")
-        )
-        if df.isStreaming:
-            from spark_etl_cli_spark.sources.base import stream_via_foreach_batch
-
-            if mode == "upsert":
-                from spark_etl_cli_spark.sources.iceberg_lite import (
-                    upsert_iceberg_lite,
-                )
-
-                key = self.uri.params.get("merge-key")
-                if not key:
-                    raise ValueError(
-                        "iceberg mode=upsert needs ?merge-key=<column>"
-                    )
-                return stream_via_foreach_batch(
-                    df,
-                    lambda b: upsert_iceberg_lite(b, self.uri.path, on=key),
-                    self.uri,
-                )
-            if mode == "cdc":
-                from spark_etl_cli_spark.sources.iceberg_lite import (
-                    apply_changes_iceberg_lite,
-                )
-
-                on = self.uri.params.get("on")
-                if not on:
-                    raise ValueError("iceberg mode=cdc needs ?on=<key>")
-                return stream_via_foreach_batch(
-                    df,
-                    lambda b: apply_changes_iceberg_lite(
-                        b, self.uri.path, on=on,
-                        sequence_col=self.uri.params.get("sequence"),
-                    ),
-                    self.uri,
-                )
-            return stream_via_foreach_batch(
-                df,
-                # ?branch= stages every micro-batch onto the branch
-                # (streaming WAP: audit the stage, then iceberg-publish)
-                lambda b: write_iceberg_lite(
-                    b, self.uri.path, mode="append",
-                    branch=self.uri.params.get("branch"),
-                ),
-                self.uri,
-            )
+        a, path, mode = self.uri.args, self.uri.path, self.uri.args["mode"]
         if mode == "upsert":
-            from spark_etl_cli_spark.sources.iceberg_lite import (
-                upsert_iceberg_lite,
-            )
-
-            key = self.uri.params.get("merge-key")
-            if not key:
+            if not a["merge-key"]:
                 raise ValueError(
                     "iceberg mode=upsert needs ?merge-key=<column>"
                 )
-            upsert_iceberg_lite(df, self.uri.path, on=key)
-            return True
-        if mode == "cdc":
-            from spark_etl_cli_spark.sources.iceberg_lite import (
-                apply_changes_iceberg_lite,
-            )
 
-            on = self.uri.params.get("on")
-            if not on:
+            def commit(b: DataFrame) -> None:
+                il.upsert_iceberg_lite(b, path, on=a["merge-key"])
+        elif mode == "cdc":
+            if not a["on"]:
                 raise ValueError("iceberg mode=cdc needs ?on=<key>")
-            apply_changes_iceberg_lite(
-                df, self.uri.path, on=on,
-                sequence_col=self.uri.params.get("sequence"),
+
+            def commit(b: DataFrame) -> None:
+                il.apply_changes_iceberg_lite(
+                    b, path, on=a["on"], sequence_col=a["sequence"]
+                )
+        elif df.isStreaming:
+            # ?branch= stages every micro-batch onto the branch
+            # (streaming WAP: audit the stage, then iceberg-publish)
+            def commit(b: DataFrame) -> None:
+                il.write_iceberg_lite(b, path, mode="append", branch=a["branch"])
+        else:
+            il.write_iceberg_lite(
+                df, path, mode=mode, partition_by=a["partitionCols"] or None,
+                merge_schema=a["mergeSchema"],
+                format_version=a["format-version"],
+                branch=a["branch"],
+                sort_by=a["sortBy"] or None,
+                column_defaults=_parse_defaults(a["defaults"]),
             )
             return True
-        parts = [
-            c for c in self.uri.params.get("partitionCols", "").split(",") if c
-        ]
-        fvp = self.uri.params.get("format-version")
-        # ?defaults=col:json;... — v3 column defaults for columns this
-        # commit introduces (JSON scalar values: 7, "x", true)
-        dflt_raw = self.uri.params.get("defaults")
-        dflts = None
-        if dflt_raw:
-            import json as _json
-
-            dflts = {}
-            for seg in dflt_raw.split(";"):
-                if not seg:
-                    continue
-                c, _, v = seg.partition(":")
-                if not c or not v:
-                    raise ValueError(
-                        "?defaults= expects col:<json-scalar> segments; "
-                        f"got {seg!r}"
-                    )
-                dflts[c.strip()] = _json.loads(v)
-        write_iceberg_lite(
-            df, self.uri.path, mode=mode, partition_by=parts or None,
-            merge_schema=self.uri.params.get("mergeSchema", "").lower()
-            in ("1", "true", "yes"),
-            # ?format-version=3 creates a v3 table (row lineage + DV
-            # deletes); existing tables keep their version
-            format_version=int(fvp) if fvp else None,
-            # ?branch=<name>: stage onto a named branch (WAP) — main
-            # readers see nothing until iceberg-publish://
-            branch=self.uri.params.get("branch"),
-            # ?sortBy=col[,col]: cluster rows in-file + record the
-            # spec's sort order (stats-selectivity, like delta ZORDER)
-            sort_by=[
-                c for c in self.uri.params.get("sortBy", "").split(",") if c
-            ]
-            or None,
-            column_defaults=dflts,
-        )
+        if df.isStreaming:
+            return stream_via_foreach_batch(df, commit, self.uri)
+        commit(df)
         return True
 
 
-@register_sink("iceberg")
+@register_sink("iceberg", params=STREAM_SINK + (
+    Param("mode", default="append", aliases=("write-mode",),
+          doc="append | overwrite | upsert | cdc"),
+    Param("merge-key", doc="mode=upsert: key column"),
+    _ON,
+    _SEQUENCE,
+    Param("branch", doc="stage commits onto this branch (write-audit-publish)"),
+    _PARTITION_COLS,
+    Param("format-version", "int", doc="format version of a new table"),
+    Param("sortBy", "csv", doc="cluster rows in-file and record the sort order"),
+    Param("defaults", doc="v3 column defaults 'col:<json>;...'"),
+    _MERGE_SCHEMA,
+))
 def iceberg_sink(p: ParsedUri) -> IcebergSink:
     return IcebergSink(p)
 
@@ -1142,75 +995,63 @@ class HudiSource:
     uri: ParsedUri
 
     def read(self, spark: SparkSession) -> DataFrame:
+        a = self.uri.args
         if _jvm_class_exists(spark, "org.apache.hudi.DefaultSource"):
-            return FileSource(self.uri, "hudi").read(spark)
-        from spark_etl_cli_spark.sources.hudi_lite import (
-            is_hudi_table,
-            read_hudi_lite,
-        )
+            return FileSource(
+                self.uri, "hudi", default_options=passthrough(a)
+            ).read(spark)
+        from spark_etl_cli_spark.sources import hudi_lite as hl
 
-        if not is_hudi_table(self.uri.path):
+        if not hl.is_hudi_table(self.uri.path):
             raise MissingDependencyError(
                 "hudi", f"a Hudi table at {self.uri.path} (no .hoodie/ "
                 "timeline found) or the hudi-spark bundle jar"
             )
-        mk = self.uri.params.get("meta")
-        if mk:
+        if a["meta"]:
             # metadata tables: timeline / live file-slice inventory
             from spark_etl_cli_spark.sources.meta_tables import hudi_meta_df
 
-            return hudi_meta_df(spark, self.uri.path, mk)
+            return hudi_meta_df(spark, self.uri.path, a["meta"])
         if self.uri.is_stream:
             # incremental instant reads via the Python DataSource
             # micro-batch reader (sources/hudistream.py)
-            from spark_etl_cli_spark.sources.base import apply_watermark
             from spark_etl_cli_spark.sources.hudistream import (
                 ensure_registered,
             )
 
             ensure_registered(spark)
-            df = (
-                spark.readStream.format("hudilite-stream")
-                .option("path", self.uri.path)
-                .option(
-                    "skip-change-commits",
-                    self.uri.params.get("skip-change-commits", ""),
-                )
-                .option(
-                    "max-commits-per-batch",
-                    self.uri.params.get("max-commits-per-batch", "0"),
-                )
-                .load()
-            )
-            w = self.uri.params.get("where")
-            if w:
-                df = df.filter(w)  # same ?where= contract as batch
-            return apply_watermark(df, self.uri.params.get("watermark"))
-        begin = self.uri.params.get("begin-instant")
-        if begin is not None:
+            return _lite_stream(spark, self.uri, "hudilite-stream", {
+                "skip-change-commits": a["skip-change-commits"],
+                "max-commits-per-batch": a["max-commits-per-batch"],
+            })
+        if a["begin-instant"] is not None:
             # incremental query: rows inserted/updated in
             # (begin-instant, end-instant]
-            from spark_etl_cli_spark.sources.hudi_lite import (
-                read_hudi_incremental,
+            df = hl.read_hudi_incremental(
+                spark, self.uri.path, a["begin-instant"],
+                end_instant=a["end-instant"],
             )
-
-            df = read_hudi_incremental(
-                spark, self.uri.path, begin,
-                end_instant=self.uri.params.get("end-instant"),
-            )
-            w = self.uri.params.get("where")
-            return df.filter(w) if w else df
-        return read_hudi_lite(
+            return df.filter(a["where"]) if a["where"] else df
+        return hl.read_hudi_lite(
             spark, self.uri.path,
-            as_of=self.uri.params.get("as-of"),
+            as_of=a["as-of"],
             # MOR base-file-only view needs the explicit opt-in
-            view=self.uri.params.get("view"),
+            view=a["view"],
             # hive-style partition-path FILE pruning
-            where=self.uri.params.get("where"),
+            where=a["where"],
         )
 
 
-@register_source("hudi", "hudi-stream")
+@register_source("hudi", "hudi-stream", params=SOURCE + (
+    _META,
+    Param("as-of", doc="time travel to an instant"),
+    Param("view", doc="read_optimized: base files only (MOR)"),
+    Param("begin-instant", doc="incremental query: after this instant"),
+    Param("end-instant", doc="incremental query: up to this instant"),
+    Param("skip-change-commits", "bool", False,
+          "stream: skip instants that rewrite rows"),
+    _MAX_COMMITS,
+))
 def hudi_source(p: ParsedUri) -> HudiSource:
     return HudiSource(p)
 
@@ -1224,92 +1065,53 @@ class HudiSink:
     stand-in for Hudi's bloom index); MOR upsert appends AVRO data
     blocks to the affected groups' log files instead (zero base bytes
     rewritten); overwrite = replacecommit of all live file groups.
-    table-type applies at table CREATION. Streaming appends via the
-    foreachBatch bridge."""
+    table-type applies at table CREATION. Streaming honors the same
+    mode surface through the foreachBatch bridge: append, upsert (a
+    record-key MERGE per micro-batch — COW rewrites matched slices,
+    MOR appends log blocks) or cdc."""
 
     uri: ParsedUri
 
     def write(self, df: DataFrame) -> bool:
-        from spark_etl_cli_spark.sources.hudi_lite import write_hudi_lite
+        from spark_etl_cli_spark.sources import hudi_lite as hl
 
-        if df.isStreaming:
-            from spark_etl_cli_spark.sources.base import stream_via_foreach_batch
+        a, path, mode = self.uri.args, self.uri.path, self.uri.args["mode"]
+        if mode == "cdc":
+            if not a["on"]:
+                raise ValueError("hudi mode=cdc needs ?on=<key>")
 
-            # streaming honors the same mode surface as batch: append
-            # (default) or upsert (record-key MERGE per micro-batch —
-            # the hudi streaming-CDC shape; COW rewrites matched
-            # slices, MOR appends log blocks)
-            smode = self.uri.params.get(
-                "mode", self.uri.params.get("write-mode", "append")
-            )
-            if smode == "cdc":
-                from spark_etl_cli_spark.sources.hudi_lite import (
-                    apply_changes_hudi_lite,
+            def commit(b: DataFrame) -> None:
+                hl.apply_changes_hudi_lite(
+                    b, path, on=a["on"], sequence_col=a["sequence"]
                 )
-
-                on = self.uri.params.get("on")
-                if not on:
-                    raise ValueError("hudi mode=cdc needs ?on=<key>")
-                return stream_via_foreach_batch(
-                    df,
-                    lambda b: apply_changes_hudi_lite(
-                        b, self.uri.path, on=on,
-                        sequence_col=self.uri.params.get("sequence"),
-                    ),
-                    self.uri,
-                )
-            if smode not in ("append", "upsert"):
+        else:
+            if df.isStreaming and mode not in ("append", "upsert"):
                 raise ValueError(
                     "streaming hudi sink supports mode=append|upsert|cdc, "
-                    f"got {smode!r}"
+                    f"got {mode!r}"
                 )
-            rk = self.uri.params.get(
-                "record-key", self.uri.params.get("recordKey")
-            )
-            sparts = [
-                c
-                for c in self.uri.params.get("partitionCols", "").split(",")
-                if c
-            ]
-            ttype = self.uri.params.get("table-type", "COPY_ON_WRITE")
-            return stream_via_foreach_batch(
-                df,
-                lambda b: write_hudi_lite(
-                    b, self.uri.path, mode=smode, record_key=rk,
-                    partition_by=sparts or None, table_type=ttype,
-                ),
-                self.uri,
-            )
-        mode = self.uri.params.get(
-            "mode", self.uri.params.get("write-mode", "append")
-        )
-        if mode == "cdc":
-            from spark_etl_cli_spark.sources.hudi_lite import (
-                apply_changes_hudi_lite,
-            )
 
-            on = self.uri.params.get("on")
-            if not on:
-                raise ValueError("hudi mode=cdc needs ?on=<key>")
-            apply_changes_hudi_lite(
-                df, self.uri.path, on=on,
-                sequence_col=self.uri.params.get("sequence"),
-            )
-            return True
-        parts = [
-            c for c in self.uri.params.get("partitionCols", "").split(",") if c
-        ]
-        write_hudi_lite(
-            df, self.uri.path, mode=mode,
-            record_key=self.uri.params.get(
-                "record-key", self.uri.params.get("recordKey")
-            ),
-            partition_by=parts or None,
-            table_type=self.uri.params.get("table-type", "COPY_ON_WRITE"),
-        )
+            def commit(b: DataFrame) -> None:
+                hl.write_hudi_lite(
+                    b, path, mode=mode, record_key=a["record-key"],
+                    partition_by=a["partitionCols"] or None,
+                    table_type=a["table-type"],
+                )
+        if df.isStreaming:
+            return stream_via_foreach_batch(df, commit, self.uri)
+        commit(df)
         return True
 
 
-@register_sink("hudi")
+@register_sink("hudi", params=STREAM_SINK + (
+    Param("mode", default="append", aliases=("write-mode",),
+          doc="append | overwrite | upsert | cdc"),
+    Param("record-key", aliases=("recordKey",), doc="record key column(s)"),
+    _PARTITION_COLS,
+    Param("table-type", "enum", "COPY_ON_WRITE", "applies at table creation",
+          choices=("COPY_ON_WRITE", "MERGE_ON_READ")),
+    _ON,
+    _SEQUENCE,
+))
 def hudi_sink(p: ParsedUri) -> HudiSink:
     return HudiSink(p)

@@ -553,6 +553,21 @@ def export_hudi_as_delta(spark: SparkSession, table_path: str) -> int:
     return _write_commit(spark, table_path, actions, first=first)
 
 
+def export_hudi(
+    spark: SparkSession, table_path: str, formats: str = "both"
+) -> list[tuple[str, int]]:
+    """Expose a hudi table as ``delta``, ``iceberg`` or ``both``;
+    returns ``(format, version)`` per export, delta first."""
+    exports = {"delta": export_hudi_as_delta, "iceberg": export_hudi_as_iceberg}
+    if formats not in (*exports, "both"):
+        raise ValueError(f"formats must be delta|iceberg|both, got {formats!r}")
+    return [
+        (fmt, export(spark, table_path))
+        for fmt, export in exports.items()
+        if formats in (fmt, "both")
+    ]
+
+
 def export_hudi_as_iceberg(spark: SparkSession, table_path: str) -> int:
     """Expose a (compacted) Hudi COW table as an Iceberg table — the
     hudi live file set becomes one Iceberg snapshot (declared
@@ -566,6 +581,7 @@ def export_hudi_as_iceberg(spark: SparkSession, table_path: str) -> int:
     from spark_etl_cli_spark.sources.avro_lite import write_container
     from spark_etl_cli_spark.sources.iceberg_lite import (
         _MANIFEST_LIST_SCHEMA,
+        _commit_iceberg_metadata,
         _manifest_schema_for,
         _max_field_id,
         _parquet_row_count,
@@ -692,19 +708,7 @@ def export_hudi_as_iceberg(spark: SparkSession, table_path: str) -> int:
         },
         "snapshots": snapshots,
     }
-    version = 1
-    versions = [
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in prior_versions
-    ]
-    if versions:
-        version = max(versions) + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_iceberg_metadata(meta_dir, new_meta)
     return snapshot_id
 
 
@@ -727,6 +731,7 @@ def export_delta_as_iceberg(spark: SparkSession, table_path: str) -> int:
     )
     from spark_etl_cli_spark.sources.iceberg_lite import (
         _MANIFEST_LIST_SCHEMA,
+        _commit_iceberg_metadata,
         _hive_value,
         _manifest_schema_for,
         _max_field_id,
@@ -1290,17 +1295,5 @@ def export_delta_as_iceberg(spark: SparkSession, table_path: str) -> int:
     }
     if prior and prior.get("refs"):
         new_meta["refs"] = prior["refs"]
-    version = 1
-    versions = [
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in prior_versions
-    ]
-    if versions:
-        version = max(versions) + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_iceberg_metadata(meta_dir, new_meta)
     return snapshot_id

@@ -13,12 +13,19 @@ The pipeline's addressing scheme follows the reference's URI grammar
 Streaming variants use a ``-stream`` scheme suffix (e.g.
 ``parquet-stream://``), mirroring reference
 ``core/.../DataFrameSource.scala:33-45``.
+
+Each source/sink scheme declares its query parameters once, as a tuple
+of :class:`Param` (``registry.register_source(..., params=...)``);
+:func:`parse_params` types every value against that spec and rejects
+unknown keys, bad values and missing required ones, so a misspelled
+parameter fails when the URI resolves instead of being ignored.
 """
 
 from __future__ import annotations
 
 import urllib.parse
 from dataclasses import dataclass, field
+from typing import Any
 
 
 @dataclass(frozen=True)
@@ -32,6 +39,8 @@ class ParsedUri:
     rest: str = ""       # everything after 'scheme://', percent-decoded
     params: dict[str, str] = field(default_factory=dict)
     raw: str = ""
+    # params typed by the scheme's spec; set by registry.resolve_*
+    args: Args = field(default_factory=lambda: Args())
 
     @property
     def is_stream(self) -> bool:
@@ -48,6 +57,113 @@ class ParsedUri:
 
     def first_path_part(self) -> str:
         return self.path.lstrip("/").split("/", 1)[0]
+
+
+@dataclass(frozen=True)
+class Param:
+    """One query parameter of a source/sink scheme.
+
+    ``type`` is ``str``, ``int``, ``float``, ``bool`` (1/0, true/false,
+    yes/no), ``csv`` (comma list → ``list[str]``) or ``enum`` (one of
+    ``choices``). A name ending in ``*`` is a prefix family:
+    ``set.*`` gathers every ``set.<col>=<expr>`` key into a dict
+    ``{col: expr}``. A parameter named ``*`` alone marks a forwarding
+    spec: keys it does not declare are passed on in ``Args.extra``
+    (to Spark as reader/writer options) instead of being rejected.
+    """
+
+    name: str
+    type: str = "str"
+    default: Any = None
+    doc: str = ""
+    required: bool = False
+    aliases: tuple[str, ...] = ()
+    choices: tuple[str, ...] = ()
+
+
+class Args(dict):
+    """A URI's parameters typed by its scheme's spec: every declared
+    name maps to its value, or its default when the URI omits it.
+    ``given`` keeps the declared keys as written in the URI (for a
+    connector that hands them to a Spark runtime unchanged), ``extra``
+    the undeclared keys a forwarding spec passes on."""
+
+    def __init__(self, values=()):
+        super().__init__(values)
+        self.given: dict[str, str] = {}
+        self.extra: dict[str, str] = {}
+
+
+_BOOLS = {"1": True, "true": True, "yes": True,
+          "0": False, "false": False, "no": False}
+
+
+def _typed(p: Param, raw: str):
+    if p.type == "int":
+        return int(raw)
+    if p.type == "float":
+        return float(raw)
+    if p.type == "bool":
+        return _BOOLS[raw.lower()]
+    if p.type == "csv":
+        return [c for c in raw.split(",") if c]
+    if p.type == "enum" and raw not in p.choices:
+        raise ValueError(raw)
+    return raw
+
+
+def _default(p: Param):
+    return [] if p.default is None and p.type == "csv" else p.default
+
+
+def parse_params(
+    where: str, spec: tuple[Param, ...], given: dict[str, str]
+) -> Args:
+    """Type ``given`` (a URI's raw query params) against ``spec``.
+
+    Raises ``ValueError`` naming ``where`` (e.g. ``"delta-delete
+    source"``) and listing the spec's parameters for an unknown key in
+    a closed spec, a value its type rejects, or a missing required
+    parameter. The first of a parameter's name and aliases present in
+    ``given`` wins.
+    """
+    def fail(msg: str) -> ValueError:
+        names = ", ".join(p.name for p in spec) or "none"
+        return ValueError(f"{where}: {msg}; valid parameters: {names}")
+
+    args, used = Args(), set()
+    for p in spec:
+        if p.name == "*":
+            continue
+        if p.name.endswith("*"):
+            pre = p.name[:-1]
+            hits = {k: v for k, v in given.items() if k.startswith(pre)}
+            if p.required and not hits:
+                raise fail(f"missing required parameter {p.name!r}")
+            used |= hits.keys()
+            args[p.name] = {k[len(pre):]: v for k, v in hits.items()}
+            continue
+        keys = [k for k in (p.name, *p.aliases) if k in given]
+        used.update(keys)
+        if not keys:
+            if p.required:
+                raise fail(f"missing required parameter {p.name!r}")
+            args[p.name] = _default(p)
+            continue
+        raw = given[keys[0]]
+        try:
+            args[p.name] = _typed(p, raw)
+        except (ValueError, KeyError):
+            kind = "|".join(p.choices) if p.type == "enum" else p.type
+            raise fail(
+                f"parameter {keys[0]!r} expects {kind}, got {raw!r}"
+            ) from None
+    unknown = [k for k in given if k not in used]
+    if unknown and not any(p.name == "*" for p in spec):
+        raise fail(f"unknown parameter {', '.join(map(repr, unknown))}")
+    args.given = {k: given[k] for k in used}
+    args.extra = {k: given[k] for k in unknown}
+    return args
 
 
 def normalize_view_name(name: str) -> str:

@@ -104,31 +104,6 @@ def test_arrow_shingle_md5_longs_byte_equal(spark, hex_chars):
     assert got == expected
 
 
-def test_arrow_shingle_md5_hexes_byte_equal(spark):
-    from spark_etl_cli_spark.operators.arrowtext import with_shingle_md5_hexes
-
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(NASTY)], "doc_id long, text string"
-    )
-    expected = {
-        r["doc_id"]: r["hs"]
-        for r in df.select(
-            "doc_id",
-            F.transform(
-                word_shingles(F.col("text"), 8),
-                lambda s: F.substring(F.md5(s), 1, 16),
-            ).alias("hs"),
-        ).collect()
-    }
-    got = {
-        r["doc_id"]: r["hs"]
-        for r in with_shingle_md5_hexes(
-            df, "text", 8, hex_chars=16, out_col="hs", keep=["doc_id"]
-        ).collect()
-    }
-    assert got == expected
-
-
 def test_arrow_tagged_ngrams_matches_three_passes(spark):
     from spark_etl_cli_spark.operators.arrowtext import with_tagged_ngrams
 

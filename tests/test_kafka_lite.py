@@ -15,7 +15,6 @@ import pytest
 
 from spark_etl_cli_spark.pipeline import run_pipeline
 from spark_etl_cli_spark.registry import resolve_sink, resolve_source
-from spark_etl_cli_spark.uri import parse_uri
 
 
 # ------------------------------------------------- option contract (S9)
@@ -24,7 +23,7 @@ from spark_etl_cli_spark.uri import parse_uri
 def test_kafka_reader_option_contract():
     from spark_etl_cli_spark.sources.optional import kafka_reader_contract
 
-    uri = parse_uri(
+    uri, _ = resolve_source(
         "k+kafka://broker1:9092,broker2:9092/events"
         "?serde=none&startingOffsets=earliest"
         "&kafka.security.protocol=SSL&maxOffsetsPerTrigger=500"
@@ -43,7 +42,7 @@ def test_kafka_reader_option_contract():
 def test_kafka_writer_option_contract():
     from spark_etl_cli_spark.sources.optional import kafka_writer_contract
 
-    uri = parse_uri(
+    uri, _ = resolve_sink(
         "k+kafka-stream://broker:9092/out?serde=json"
         "&checkpointLocation=/tmp/ck&kafka.acks=all"
     )
@@ -60,7 +59,7 @@ def test_kafka_writer_option_contract():
 def test_kafka_contract_default_serde_and_watermark_excluded():
     from spark_etl_cli_spark.sources.optional import kafka_reader_contract
 
-    uri = parse_uri("k+kafka-stream://b:9092/t?watermark=ts:10 seconds")
+    uri, _ = resolve_source("k+kafka-stream://b:9092/t?watermark=ts:10 seconds")
     serde, opts = kafka_reader_contract(uri)
     assert serde == "json"
     assert "watermark" not in opts

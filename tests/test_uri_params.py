@@ -1,0 +1,192 @@
+"""Per-scheme URI parameter specs: every source and sink scheme types its
+query params at resolve time and rejects keys it does not declare.
+
+No SparkSession: resolving a URI only builds the connector object.
+"""
+
+from __future__ import annotations
+
+import ast
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+from spark_etl_cli_spark import registry
+from spark_etl_cli_spark.pipeline import run_pipeline
+
+PKG = Path(__file__).resolve().parent.parent / "spark_etl_cli_spark"
+
+# Schemes whose spec passes undeclared keys on to Spark (reader/writer
+# options) instead of rejecting them. Adding a scheme here is a
+# decision; a new scheme must not become open by accident.
+FORWARDING = {
+    "source": {
+        "avro", "avro-stream", "binaryfile", "csv", "csv-stream", "jdbc",
+        "json", "json-stream", "kafka", "kafka-stream", "lines",
+        "lines-stream", "orc", "orc-stream", "parquet", "parquet-stream",
+        "rate", "rate-micro-batch", "text", "text-stream", "xml",
+        "xml-stream",
+    },
+    "sink": {
+        "avro", "avro-stream", "csv", "csv-stream", "jdbc", "json",
+        "json-stream", "kafka", "kafka-stream", "lines", "lines-stream",
+        "orc", "orc-stream", "parquet", "parquet-stream", "text",
+        "text-stream", "xml", "xml-stream",
+    },
+}
+
+
+def _registered():
+    registry._ensure_builtins()
+    return [
+        (kind, scheme)
+        for kind, factories in (("source", registry._SOURCES),
+                                ("sink", registry._SINKS))
+        for scheme in sorted(factories)
+    ]
+
+
+def _uri_with_required(kind: str, scheme: str, extra: str) -> str:
+    """``x+<scheme>:///t?<required params>&<extra>``."""
+    query = []
+    for p in registry._PARAMS[kind, scheme]:
+        if p.required:
+            key = p.name[:-1] + "x" if p.name.endswith("*") else p.name
+            query.append(f"{key}={p.choices[0] if p.choices else '1'}")
+    return f"x+{scheme}:///t?" + "&".join(query + [extra])
+
+
+@pytest.mark.parametrize("kind, scheme", _registered())
+def test_scheme_rejects_or_forwards_unknown_params(kind, scheme):
+    resolve = registry.resolve_source if kind == "source" else registry.resolve_sink
+    uri = _uri_with_required(kind, scheme, "no-such-param=1")
+    if scheme in FORWARDING[kind]:
+        p, _ = resolve(uri)
+        assert p.args.extra == {"no-such-param": "1"}
+        return
+    with pytest.raises(ValueError, match="unknown parameter 'no-such-param'") as e:
+        resolve(uri)
+    msg = str(e.value)
+    assert f"{scheme} {kind}" in msg
+    for p in registry._PARAMS[kind, scheme]:
+        assert p.name in msg
+
+
+def test_forwarding_list_matches_specs():
+    open_specs = {
+        (kind, scheme)
+        for kind, scheme in _registered()
+        if any(p.name == "*" for p in registry._PARAMS[kind, scheme])
+    }
+    listed = {(k, s) for k, schemes in FORWARDING.items() for s in schemes}
+    assert open_specs == listed
+
+
+def test_typo_stops_pipeline_before_any_source_runs(monkeypatch, tmp_path):
+    """``deletion-vector`` (singular) used to be ignored, so the delete
+    rewrote every matched file instead of writing deletion vectors."""
+    reads = []
+
+    class CountingSource:
+        def __init__(self, uri):
+            self.uri = uri
+
+        def read(self, spark):
+            reads.append(self.uri)
+
+    monkeypatch.setitem(registry._SOURCES, "test-counting", CountingSource)
+    with pytest.raises(ValueError, match="'deletion-vector'.*deletion-vectors"):
+        run_pipeline(
+            None,  # never reached: resolving fails first
+            sources=[
+                "c+test-counting://",
+                f"rep+delta-delete://{tmp_path}/t?where=id=1"
+                "&deletion-vector=true",
+            ],
+        )
+    assert reads == []
+
+
+def test_cli_typo_fails_before_spark_starts(monkeypatch):
+    from spark_etl_cli_spark import session
+    from spark_etl_cli_spark.__main__ import main
+
+    def no_spark(**_kw):
+        raise AssertionError("SparkSession started for an invalid pipeline")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    with pytest.raises(ValueError, match="iceberg-expire source.*keep-last"):
+        main(["--source", "rep+iceberg-expire:///t?keep-lats=2"])
+
+
+def test_bad_typed_value_names_the_parameter():
+    with pytest.raises(
+        ValueError,
+        match="delta-optimize source: parameter 'min-files' expects int, "
+        "got 'two'",
+    ):
+        registry.resolve_source("rep+delta-optimize:///t?min-files=two")
+
+
+def test_values_are_typed_with_defaults_and_aliases():
+    p, _ = registry.resolve_sink(
+        "h+hudi:///t?write-mode=upsert&recordKey=id&partitionCols=a,b"
+    )
+    assert p.args["mode"] == "upsert"
+    assert p.args["record-key"] == "id"
+    assert p.args["partitionCols"] == ["a", "b"]
+    assert p.args["table-type"] == "COPY_ON_WRITE"
+    p, _ = registry.resolve_sink(
+        "d+delta:///t?mode=merge&on=id&set.v=source.v&insert=no"
+    )
+    assert p.args["set.*"] == {"v": "source.v"}
+    assert p.args["insert"] is False
+    assert p.args["nmbs-set.*"] == {}
+
+
+def test_list_schemes_prints_each_spec(capsys):
+    from spark_etl_cli_spark.__main__ import main
+
+    assert main(["--list-schemes"]) == 0
+    out = capsys.readouterr().out
+    assert "  delta-optimize\n" in out
+    assert "min-files" in out and "int = 2" in out
+    assert "forwarded" in out  # the file formats, jdbc, kafka, rate
+
+
+def test_importing_sources_loads_no_lakehouse_module():
+    code = (
+        "import sys; import spark_etl_cli_spark.sources; "
+        "print([m for m in ('delta_lite', 'iceberg_lite', 'hudi_lite', "
+        "'uniform') if 'spark_etl_cli_spark.sources.' + m in sys.modules])"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=PKG.parent, check=True,
+        capture_output=True, text=True,
+    ).stdout
+    assert out.strip() == "[]"
+
+
+def _params_reads(path: Path):
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        target = (
+            node.value if isinstance(node, ast.Subscript | ast.Attribute)
+            else None
+        )
+        if not (isinstance(target, ast.Attribute) and target.attr == "params"):
+            continue
+        if isinstance(node, ast.Subscript) or node.attr in ("get", "items"):
+            yield node.lineno
+
+
+def test_sources_read_no_raw_params():
+    """Connectors read ``ParsedUri.args`` (typed by their scheme's spec);
+    a raw ``.params`` read would bypass the spec and its validation."""
+    found = [
+        f"{path.relative_to(PKG)}:{line}"
+        for path in sorted((PKG / "sources").rglob("*.py"))
+        for line in _params_reads(path)
+    ]
+    assert found == [], "raw .params read: " + ", ".join(found)
