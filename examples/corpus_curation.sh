@@ -15,10 +15,10 @@ python -m spark_etl_cli_spark \
   --transform "bench+bench_slice+sql://SELECT doc_id, text FROM bench WHERE doc_id % 97 = 0" \
   --transform "docs+train+sql://SELECT doc_id, text, source FROM docs WHERE doc_id % 97 <> 0" \
   --transform "train+deduped+dedup://?mode=exact" \
-  --transform "deduped+clean+quality-filter://?min-tokens=5&max-punct-ratio=0.4" \
+  --transform "deduped+clean+quality-filter://?min-tokens=5&max-punct=0.4" \
   --transform "clean+decont+decontaminate://bench_slice?n=8" \
   --transform "decont+mixed+mixture://?weights=src0:2.0,src1:0.5&default=1" \
-  --transform "mixed+packed+pack://?max-tokens=256&id-col=doc_id" \
+  --transform "mixed+packed+pack://?seq-tokens=256&id-col=doc_id" \
   --sink "packed+parquet://$OUT/shards?partition-by=source" \
   --sink "packed+console://" \
   --observe

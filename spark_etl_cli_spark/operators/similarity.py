@@ -776,17 +776,20 @@ def semantic_dedup(
         ram_rows = 0
         spill_f = None
         spill_rows = 0
-        buf_ids: list = []  # ascending ids of ALL buffered rows
+        # ascending ids of ALL buffered rows, buf_ids[:buf_n]; grown by
+        # doubling, so appending a segment costs O(segment) amortised
+        buf_ids = None
+        buf_n = 0
 
         def _reset():
-            nonlocal ram, ram_rows, spill_f, spill_rows, buf_ids
+            nonlocal ram, ram_rows, spill_f, spill_rows, buf_n
             ram = []
             ram_rows = 0
             if spill_f is not None:
                 spill_f.close()
             spill_f = None
             spill_rows = 0
-            buf_ids = []
+            buf_n = 0
 
         def _hits_block(blk, seg, bounds, base):
             """OR into out: hit(j, i) for buffered rows j in ``blk``
@@ -837,8 +840,8 @@ def semantic_dedup(
                 # exactly the rows with id < seg_ids[i] — equal-id rows
                 # are EXCLUDED, matching the original a.id < b.id join
                 b_buf = (
-                    np.searchsorted(np.asarray(buf_ids), seg_ids, side="left")
-                    if buf_ids
+                    np.searchsorted(buf_ids[:buf_n], seg_ids, side="left")
+                    if buf_n
                     else np.zeros(ns, dtype=np.int64)
                 )
                 b_seg = np.searchsorted(seg_ids, seg_ids, side="left")
@@ -874,7 +877,13 @@ def semantic_dedup(
                 # append the segment to the buffer; spill past the cap
                 ram.append(np.array(seg))
                 ram_rows += ns
-                buf_ids.extend(seg_ids.tolist())
+                if buf_ids is None or buf_n + ns > len(buf_ids):
+                    grown = np.empty(2 * (buf_n + ns), dtype=seg_ids.dtype)
+                    if buf_n:
+                        grown[:buf_n] = buf_ids[:buf_n]
+                    buf_ids = grown
+                buf_ids[buf_n : buf_n + ns] = seg_ids
+                buf_n += ns
                 if ram_rows > ram_rows_cap:
                     if spill_f is None:
                         spill_f = tempfile.TemporaryFile()

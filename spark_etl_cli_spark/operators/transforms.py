@@ -1,39 +1,364 @@
-"""Transform URI registrations: identity, sql, sql-file, flatten,
-flatten-explode, diff.
+"""Transform URI registrations.
 
 Transform semantics mirror the reference's transformer registry
 (``core/.../TransformerParser.scala:17-144``,
 ``diff/.../DiffTransformerParser.scala:9-62``): each scheme maps to a
 ``(spark, df) -> df`` function; the pipeline registers the input view as
 ``input`` before invoking, so ``sql://`` can reference it.
+
+Every scheme declares its parameters once (``register_transform(...,
+params=...)``), so the URI is typed into ``ParsedUri.args`` and a
+misspelled or mistyped parameter fails when it resolves. ``OPS`` holds
+the transforms that only type their parameters and call one operator
+function, one row per scheme; the transforms below it, which carry
+their own logic, stay functions. Operator modules are imported on first
+use, so importing this module stays cheap.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import functools
+import importlib
 import urllib.parse
+from collections.abc import Callable
+from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from spark_etl_cli_spark.operators.diff import apply_diff_handling, diff
-from spark_etl_cli_spark.operators.schema_tools import flatten, flatten_explode
 from spark_etl_cli_spark.pipeline import TransformFn
 from spark_etl_cli_spark.registry import register_transform
-from spark_etl_cli_spark.uri import ParsedUri
+from spark_etl_cli_spark.uri import Args, Param, ParsedUri
+
+# parameters many transforms share
+_TEXT_COL = Param("text-col", default="text", doc="text column")
+_ID_COL = Param("id-col", default="doc_id", doc="row id column")
+_USER_COL = Param("user-col", default="user_id", doc="user column")
+_TS_COL = Param("ts-col", default="ts", doc="event-time column")
+_TYPE_COL = Param("type-col", default="event_type", doc="event type column")
+_VEC_COL = Param("vec-col", default="embedding", doc="vector column")
+_ORDER = Param("order", "csv", doc="tie-break columns after the time order")
+_BY = Param("by", "csv", doc="group columns")
+
+
+def _id_col(default: str) -> Param:
+    return dataclasses.replace(_ID_COL, default=default)
+
+
+def _weights(items: list[str], conv: Callable) -> dict:
+    """``["a:2.5", "b"]`` → ``{"a": conv("2.5"), "b": conv("1")}``."""
+    return {
+        label: conv(w or "1")
+        for label, _, w in (item.partition(":") for item in items)
+    }
+
+
+@dataclass(frozen=True)
+class Op:
+    """A transform that types its parameters and calls one operator
+    function: ``call(fn, df, args)``, or ``call(fn, df, args, other)``
+    when ``view`` — the URI path names a second registered view."""
+
+    scheme: str
+    target: str  # "module:function" under spark_etl_cli_spark.operators
+    params: tuple[Param, ...]
+    call: Callable[..., DataFrame]
+    doc: str
+    view: bool = False
+
+
+def _op_transform(op: Op, p: ParsedUri) -> TransformFn:
+    if op.view and not p.path_name:
+        raise ValueError(f"{op.scheme}:// needs a view name: {op.scheme}://<view>")
+
+    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
+        module, _, name = op.target.partition(":")
+        fn = getattr(
+            importlib.import_module(f"spark_etl_cli_spark.operators.{module}"),
+            name,
+        )
+        if op.view:
+            return op.call(fn, df, p.args, spark.table(p.path_name))
+        return op.call(fn, df, p.args)
+
+    return run
+
+
+OPS = (
+    Op("flatten", "schema_tools:flatten", (), lambda f, df, a: f(df),
+       "Recursively flatten nested structs to top-level ``a_b_c`` columns."),
+    Op("flatten-explode", "schema_tools:flatten_explode", (), lambda f, df, a: f(df),
+       "Explode arrays and flatten structs until the schema is flat."),
+    Op("cdc-apply", "cdc:apply_changes_snapshot",
+       (Param("key", "csv", doc="key columns", required=True),
+        Param("sequence", "csv", doc="ordering columns", required=True),
+        dataclasses.replace(_TYPE_COL, default="_change_type",
+                            doc="change type column (used when present)"),
+        Param("delete-values", "csv", ["delete"], "change types that delete"),
+        Param("ignore-values", "csv", ["update_preimage"], "change types skipped")),
+       lambda f, df, a: f(
+           df, a["key"], a["sequence"],
+           change_type_col=a["type-col"] if a["type-col"] in df.columns else None,
+           delete_values=tuple(a["delete-values"]),
+           ignore_values=tuple(a["ignore-values"])),
+       "Materialize the current snapshot implied by a change log: the latest change\n"
+       "per key wins, keys whose latest change is a delete vanish (operators/cdc.py).\n"
+       "Pair with ``delta-stream://?readChangeFeed=true`` or any CDC-shaped frame."),
+    Op("asof", "asof:asof_join",
+       (Param("key", "csv", doc="equi-join key columns"),
+        Param("left-ts", default="ts", doc="input view's time column"),
+        Param("right-ts", default="ts", doc="other view's time column"),
+        Param("payload", "csv", doc="other view's columns to carry")),
+       lambda f, df, a, other: f(df, other, a["key"], a["left-ts"], a["right-ts"],
+                                 a["payload"] or None),
+       "``asof://rightView``: nearest-prior join of the input view against another\n"
+       "registered view (single-shuffle union+window plan, operators/asof.py).",
+       view=True),
+    Op("chunk", "chunking:chunk_documents",
+       (_TEXT_COL, _ID_COL, Param("chunk-tokens", "int", 64, "tokens per chunk"),
+        Param("stride", "int", 48, "tokens between chunk starts")),
+       lambda f, df, a: f(df, a["text-col"], a["id-col"], a["chunk-tokens"], a["stride"]),
+       "Overlapping context-window chunks (operators/chunking.py): a per-row\n"
+       "explode, no shuffle."),
+    Op("pack", "chunking:pack_sequences",
+       (_TEXT_COL, _ID_COL, Param("partition-col", default="source", doc="packing partition"),
+        Param("seq-tokens", "int", 2048, "tokens per sequence")),
+       lambda f, df, a: f(df, a["text-col"], a["id-col"], a["partition-col"],
+                          a["seq-tokens"]),
+       "Greedy sequence packing: appends (ntok, seq_id) so a downstream\n"
+       "groupBy(partition-col, seq_id) materializes training sequences."),
+    Op("merge", "maintenance:merge_changelog",
+       (Param("keys", "csv", doc="key columns"),
+        Param("seq-col", "csv", ["ts"], "ordering columns"),
+        Param("op-col", doc="operation column"),
+        Param("delete-op", default="D", doc="operation value that deletes")),
+       lambda f, df, a, other: f(df, other, a["keys"], a["seq-col"], a["op-col"],
+                                 a["delete-op"]),
+       "``base+out+merge://changesView``: SCD1 changelog MERGE into the input view;\n"
+       "per key the highest-seq change wins and tombstone ops delete\n"
+       "(operators/maintenance.py: one shuffle, union+window, no base-vs-changes join).",
+       view=True),
+    Op("gapfill", "maintenance:gap_fill",
+       (Param("keys", "csv", doc="series key columns"),
+        Param("date-col", default="day", doc="date column"),
+        Param("value-cols", "csv", doc="columns to forward-fill")),
+       lambda f, df, a: f(df, a["keys"], a["date-col"], a["value-cols"]),
+       "Densify per-key daily series (sequence+explode spine) and forward-fill\n"
+       "``<col>_filled`` values (operators/maintenance.py)."),
+    Op("bloom-prune", "joins:bloom_semi_prune",
+       (Param("key", default="id", doc="input view's key column"),
+        Param("dim-key", doc="keys view's column (default: key)"),
+        Param("fpp", "float", 0.01, "bloom filter false-positive rate"),
+        Param("expected", "int", doc="expected key count (skips the sizing count())")),
+       lambda f, df, a, other: f(df, other, a["key"], a["dim-key"] or None,
+                                 expected_items=a["expected"], fpp=a["fpp"]),
+       "``bloom-prune://keysView``: prunes the input view's rows to those whose key\n"
+       "might appear in the keys view, runtime filtering ahead of a join or\n"
+       "aggregation (operators/joins.py); no false negatives.",
+       view=True),
+    Op("range-join", "joins:range_join_binned",
+       (Param("point", default="ts", doc="input view's point column"),
+        Param("lo", default="lo", doc="interval start column"),
+        Param("hi", default="hi", doc="interval end column"),
+        Param("bin-width", "int", 3600, "bin width of the decomposition")),
+       lambda f, df, a, other: f(df, other, a["point"], a["lo"], a["hi"], a["bin-width"]),
+       "``range-join://intervalsView``: inner-joins the input view (point side) on\n"
+       "``point BETWEEN lo AND hi`` via the binned hash-join decomposition\n"
+       "(operators/joins.py), no nested loop even without an equi key.",
+       view=True),
+    Op("assign-ids", "ids:assign_sequential_ids",
+       (dataclasses.replace(_ORDER, doc="columns that order the ids"), _id_col("seq_id"),
+        Param("partitions", "int", doc="range partitions")),
+       lambda f, df, a: f(df, a["order"], a["id-col"], a["partitions"]),
+       "Dense 0-based sequential ids in ``order`` order via the two-pass\n"
+       "range-partition scheme (operators/ids.py), never a single-partition window."),
+    Op("zorder", "zorder:zorder_sort",
+       (dataclasses.replace(_BY, doc="columns to interleave"),
+        Param("bits", "int", 10, "bits per column"),
+        Param("partitions", "int", doc="range partitions")),
+       lambda f, df, a: f(df, a["by"], a["bits"], a["partitions"]),
+       "Totally orders the view by the z-value (Morton interleave) of the columns\n"
+       "(operators/zorder.py), so a following file sink writes row groups\n"
+       "clustered in every listed dimension."),
+    Op("checksum", "checksum:table_checksum",
+       (Param("cols", "csv", doc="columns to hash (default: all)"), _BY),
+       lambda f, df, a: f(df, a["cols"] or df.columns, a["by"] or None),
+       "Order-insensitive reconciliation checksum per group (operators/checksum.py):\n"
+       "run on both systems, compare the tiny results, drill in with ``diff://``."),
+    Op("profile", "profile:profile_columns",
+       (Param("cols", "csv", doc="columns to profile (default: all)"),),
+       lambda f, df, a: f(df, a["cols"] or None),
+       "One-pass column profile (operators/profile.py): long-form (column, n_rows,\n"
+       "n_nonnull, n_distinct) for discovery before declaring ``expect://`` rules."),
+    Op("encode", "encoding:vocab_encode",
+       (_TEXT_COL, _ID_COL,
+        Param("token-col", default="token", doc="vocab view's token column"),
+        Param("token-id-col", default="token_id", doc="vocab view's id column"),
+        Param("unk", "int", -1, "id of unknown tokens")),
+       lambda f, df, a, other: f(df, other, a["text-col"], a["id-col"], a["token-col"],
+                                 a["token-id-col"], a["unk"]),
+       "``encode://vocabView``: per-document token-id arrays via a broadcast vocab\n"
+       "join (operators/encoding.py).",
+       view=True),
+    Op("mixture", "mixture:epoch_upsample",
+       (Param("weights", "csv", doc="source:weight list (weight 1 if bare)"),
+        Param("default", "float", 1.0, "weight of unlisted sources"),
+        Param("source-col", default="source", doc="source column"), _ID_COL,
+        Param("epoch-col", default="epoch", doc="output epoch column")),
+       lambda f, df, a: f(df, _weights(a["weights"], float), default=a["default"],
+                          source_col=a["source-col"], id_col=a["id-col"],
+                          epoch_col=a["epoch-col"]),
+       "Epoch-weighted corpus mixing (operators/mixture.py): each row is repeated\n"
+       "floor(w) times plus a deterministic md5-bucket-gated extra copy for frac(w)\n"
+       "of rows; weight 0 drops the source."),
+    Op("kmeans", "clustering:kmeans_lloyd",
+       (Param("k", "int", 8, "clusters"), Param("iters", "int", 2, "Lloyd iterations"),
+        _id_col("vec_id"), _VEC_COL),
+       lambda f, df, a: f(df, k=a["k"], iters=a["iters"], id_col=a["id-col"],
+                          vec_col=a["vec-col"]),
+       "Deterministic fixed-iteration Lloyd k-means (operators/clustering.py):\n"
+       "per-(cluster, dim) statistics of the final update; centroids are\n"
+       "driver-resident (k x dim doubles)."),
+    Op("funnel", "events:funnel_steps",
+       (Param("steps", "csv", doc="event types in funnel order"),
+        _USER_COL, _TYPE_COL, _TS_COL),
+       lambda f, df, a: f(df, a["steps"], a["user-col"], a["type-col"], a["ts-col"]),
+       "Ordered funnel conversion over an event view (operators/events.py): one row\n"
+       "per step with user counts and conversion rate vs step 1. Step k counts a\n"
+       "user only when their earliest step-k event falls strictly after their\n"
+       "earliest qualifying step-(k-1) event."),
+    Op("retention", "events:retention_cohorts", (_USER_COL, _TS_COL),
+       lambda f, df, a: f(df, a["user-col"], a["ts-col"]),
+       "Weekly retention cohort matrix (operators/events.py): cohort = Monday of the\n"
+       "user's first-event week, one row per (cohort_week, week_offset) with\n"
+       "distinct active users."),
+    Op("transitions", "events:transition_matrix", (_USER_COL, _TYPE_COL, _TS_COL, _ORDER),
+       lambda f, df, a: f(df, a["user-col"], a["type-col"], a["ts-col"],
+                          a["order"] or None),
+       "First-order Markov transition matrix of consecutive events per user\n"
+       "(operators/events.py): (from_type, to_type, n, prob), prob row-normalized."),
+    Op("attribution", "events:last_touch_attribution",
+       (Param("conversion", default="purchase", doc="converting event type"),
+        _USER_COL, _TYPE_COL, _TS_COL,
+        Param("value-col", default="value", doc="conversion value column"), _ORDER),
+       lambda f, df, a: f(df, a["conversion"], a["user-col"], a["type-col"],
+                          a["ts-col"], a["value-col"], a["order"] or None),
+       "Last-touch conversion attribution over an event view (operators/events.py):\n"
+       "one row per touch type with conversion count and total attributed value."),
+    Op("split", "curation:dataset_split",
+       (_id_col("id"),
+        Param("weights", "csv", ["train:80", "val:10", "test:10"], "label:weight list"),
+        Param("salt", default="", doc="hash salt")),
+       lambda f, df, a: f(df, a["id-col"], _weights(a["weights"], int), a["salt"]),
+       "Deterministic hash-bucket dataset split (operators/curation.py): appends a\n"
+       "``split`` label, stable across runs, appends, and engines (md5, no rand())."),
+    Op("compact-plan", "curation:compaction_plan",
+       (Param("partition-col", default="partition", doc="partition column"),
+        Param("file-col", default="path", doc="file column"),
+        Param("size-col", default="bytes", doc="file size column"),
+        Param("target", "int", 128 * 1024 * 1024, "target bin bytes")),
+       lambda f, df, a: f(df, a["partition-col"], a["file-col"], a["size-col"],
+                          a["target"]),
+       "OPTIMIZE-style bin-packing plan (operators/curation.py): one row per\n"
+       "(partition, bin) with file count and byte total; executing the plan is a\n"
+       "separate rewrite stage."),
+    Op("pagerank", "graph:pagerank",
+       (Param("src", default="src", doc="edge source column"),
+        Param("dst", default="dst", doc="edge destination column"),
+        Param("weight", default="w", doc="edge weight column"),
+        Param("iters", "int", 3, "iterations"),
+        Param("damping", "float", 0.85, "damping factor")),
+       lambda f, df, a: f(df, a["iters"], a["damping"], a["src"], a["dst"], a["weight"]),
+       "Fixed-iteration weighted PageRank over an edge view (operators/graph.py):\n"
+       "(vertex, pagerank), deterministic under any partitioning."),
+    Op("triangles", "graph:triangle_count",
+       (Param("u", default="u", doc="lower vertex column"),
+        Param("v", default="v", doc="higher vertex column")),
+       lambda f, df, a: f(df, a["u"], a["v"]),
+       "Global (n_edges, n_wedges, n_triangles) over canonical undirected edges (one\n"
+       "row per edge, u < v) via degree orientation (operators/graph.py)."),
+    Op("tfidf-topk", "retrieval:sparse_cosine_topk",
+       (Param("k", "int", 5, "neighbours per query"),
+        Param("ngram", "int", 2, "word n-gram size"),
+        Param("df-cap-frac", "float", 0.2, "drop terms in more than this share of docs"),
+        _ID_COL, _TEXT_COL,
+        Param("query-ids", "csv", doc="query doc ids (default: all docs)")),
+       lambda f, df, a: f(
+           df, k=a["k"], df_cap_frac=a["df-cap-frac"], ngram=a["ngram"],
+           query_pred=F.col("query_id").isin([int(q) for q in a["query-ids"]])
+           if a["query-ids"] else None,
+           id_col=a["id-col"], text_col=a["text-col"]),
+       "Sparse TF-IDF cosine top-k retrieval (operators/retrieval.py)."),
+    Op("regression", "profiling:group_regression",
+       (Param("x", doc="regressor column", required=True),
+        Param("y", doc="response column", required=True), _BY),
+       lambda f, df, a: f(df, a["x"], a["y"], a["by"]),
+       "Closed-form per-group OLS of y on x (operators/profiling.py): (groups..., n,\n"
+       "slope, intercept, r2); integer-encoded x/y make it partition-order independent."),
+    Op("outliers", "profiling:zscore_outliers",
+       (Param("col", doc="value column", required=True), _BY,
+        Param("z", "float", 3.0, "z-score threshold")),
+       lambda f, df, a: f(df, a["col"], a["by"], a["z"]),
+       "Z-score outlier filter (operators/profiling.py): keeps rows with\n"
+       "|value − μ_group| > z·σ_group and appends the ``z`` column."),
+    Op("vocab-coverage", "profiling:vocab_coverage",
+       (_TEXT_COL, Param("pct", "int", 95, "share of occurrences to cover")),
+       lambda f, df, a: f(df, a["text-col"], a["pct"]),
+       "Smallest frequency-ranked vocabulary covering pct% of token occurrences\n"
+       "(operators/profiling.py): one row (vocab_size, covered_tokens, total_tokens)."),
+    Op("novelty", "profiling:ngram_novelty",
+       (_ID_COL, _TEXT_COL, Param("k", "int", 3, "shingle size")),
+       lambda f, df, a: f(df, a["id-col"], a["text-col"], a["k"]),
+       "Per-document first-occurrence k-gram novelty share (operators/profiling.py):\n"
+       "(id, n_shingles, n_novel, novelty), the corpus-audit memorization signal."),
+    Op("k-anon", "profiling:k_anonymity",
+       (dataclasses.replace(_BY, doc="quasi-identifier columns", required=True),
+        Param("k", "int", 5, "smallest allowed group")),
+       lambda f, df, a: f(df, a["by"], a["k"]),
+       "k-anonymity audit (operators/profiling.py): quasi-identifier groups with\n"
+       "fewer than k members, the pre-release privacy check."),
+    Op("payload-dedup", "multimodal:payload_dedup_groups",
+       (_id_col("media_id"),
+        Param("payload-col", default="payload", doc="binary payload column")),
+       lambda f, df, a: f(df, a["id-col"], a["payload-col"]),
+       "Content-addressable exact dedup groups over binary payloads\n"
+       "(operators/multimodal.py): (digest, keep_id, group_size, n_bytes) per group;\n"
+       "the shuffle carries digests, not payloads."),
+    Op("chunk-dedup", "multimodal:chunk_dedup_stats",
+       (Param("payload-col", default="payload", doc="binary payload column"),
+        Param("chunk-bytes", "int", 256, "chunk size")),
+       lambda f, df, a: f(df, a["payload-col"], a["chunk-bytes"]),
+       "Fixed-size chunk dedup savings estimate over binary payloads\n"
+       "(operators/multimodal.py): total/unique/dup chunks and the ratio."),
+)
+
+for _op in OPS:
+    _factory = functools.partial(_op_transform, _op)
+    _factory.__doc__ = _op.doc
+    register_transform(_op.scheme, params=_op.params)(_factory)
 
 
 @register_transform("identity")
 def identity_transform(p: ParsedUri) -> TransformFn:
+    """The input view, unchanged."""
     return lambda spark, df: df
 
 
-@register_transform("sql")
+@register_transform(
+    "sql",
+    params=(Param("query", doc="URL-encoded SQL (else the text after "
+                  "sql://, verbatim)"),),
+)
 def sql_transform(p: ParsedUri) -> TransformFn:
+    """``sql://<SQL>``: the SQL's result; the input view is also
+    registered as ``input``."""
     # URI "path" carries URL-encoded SQL (reference TransformerParser.scala:24).
     # SQL rarely survives urlparse's netloc/path split, so use the full
-    # percent-decoded text after 'sql://'; also accept ?query=.
-    sql = p.params.get("query") or p.rest
-    if not p.params.get("query") and "?query=" in sql:
-        sql = sql.split("?query=", 1)[0]
+    # percent-decoded text after 'sql://', never parsed as parameters.
+    sql = p.args["query"] or p.rest
     sql = urllib.parse.unquote(sql) if "%" in sql else sql
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -44,6 +369,7 @@ def sql_transform(p: ParsedUri) -> TransformFn:
 
 @register_transform("sql-file")
 def sql_file_transform(p: ParsedUri) -> TransformFn:
+    """``sql-file:///path.sql``: the result of the SQL in a file."""
     path = p.path
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -53,40 +379,76 @@ def sql_file_transform(p: ParsedUri) -> TransformFn:
     return run
 
 
-@register_transform("flatten")
-def flatten_transform(p: ParsedUri) -> TransformFn:
-    return lambda spark, df: flatten(df)
+_DEDUP_PARAMS = (
+    Param("mode", "enum",
+          doc="exact keeps one row per normalized text; the others emit "
+          "candidate pairs or decisions (default exact)",
+          choices=("exact", "minhash", "simhash", "jaccard", "semdedup",
+                   "incremental", "substring")),
+    Param("tier", "enum", "minhash",
+          "incremental probe; substring without mode means mode=substring",
+          choices=("minhash", "exact", "cosine", "substring")),
+    _TEXT_COL,
+    dataclasses.replace(
+        _ID_COL, default=None,
+        doc="row id column (default doc_id; vec_id for semdedup, cosine)",
+    ),
+    _VEC_COL,
+    Param("threshold", "float",
+          doc="similarity cut (default 0.5; 0.95 semdedup; 0.3 cosine)"),
+    Param("num-hashes", "int", 32, "minhash permutations"),
+    Param("bands", "int", doc="LSH bands (default 8; 4 for cosine)"),
+    Param("shingle-k", "int", 3, "incremental minhash shingle size"),
+    Param("hash-family", "enum", "fast", "incremental minhash hash family",
+          choices=("fast", "oracle")),
+    Param("clusters", "int", 16, "semdedup k-means cells"),
+    Param("planes", "int", 16, "cosine LSH hyperplanes"),
+    Param("state", doc="incremental: probe rows of earlier batches "
+          "(delta or parquet)"),
+    Param("first-batch", "bool", False, "a missing state is expected"),
+    Param("require-state", "bool", False, "a missing state is an error"),
+    Param("validate-ids", "bool", True,
+          "check every state id < every batch id"),
+    Param("k", "int", 8, "substring: window tokens"),
+    Param("key", "enum", "text", "substring: window keys",
+          choices=("text", "hash")),
+    Param("max-df", "int", doc="substring: skip windows in more docs"),
+    Param("min-span", "int", doc="substring: shortest span (default k+4)"),
+    Param("emit", "enum", "spans", "substring output",
+          choices=("spans", "decisions", "scrub")),
+)
 
 
-@register_transform("flatten-explode")
-def flatten_explode_transform(p: ParsedUri) -> TransformFn:
-    return lambda spark, df: flatten_explode(df)
-
-
-def _csv_param(p: ParsedUri, key: str, default: str = "") -> list[str]:
-    return [c for c in p.params.get(key, default).split(",") if c]
-
-
-@register_transform("dedup")
+@register_transform("dedup", params=_DEDUP_PARAMS)
 def dedup_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+dedup://?mode=exact|minhash|simhash|jaccard|semdedup|incremental|substring&text-col=text&id-col=doc_id``.
+    """Exact and near-duplicate detection (SURVEY.md §2d).
 
-    North-star operator surface (SURVEY.md §2d): ``exact`` keeps one row
-    per normalized text; the other modes emit candidate near-dup pairs.
-    ``mode=substring`` (alias ``tier=substring``) is the suffix-array-
-    style tier — cross-doc shared spans of >= ``k`` tokens
-    (operators/substring.py) — with ``emit=spans`` (default, maximal
-    shared spans), ``emit=decisions`` (per-doc dup_of vs any earlier
-    doc sharing >= ``min-span`` tokens), or ``emit=scrub`` (remove
-    exactly the duplicated ranges, earliest occurrence kept);
-    ``key=text|hash`` picks bit-exact window keys or the 8-byte-hash
-    100 TB shuffle with span-grain verification.
+    ``exact`` keeps one row per normalized text; the other modes emit
+    candidate near-dup pairs. ``mode=substring`` (alias
+    ``tier=substring``) is the suffix-array-style tier — cross-doc
+    shared spans of >= ``k`` tokens (operators/substring.py) — with
+    ``emit=spans`` (maximal shared spans), ``emit=decisions`` (per-doc
+    dup_of vs any earlier doc sharing >= ``min-span`` tokens), or
+    ``emit=scrub`` (remove exactly the duplicated ranges, earliest
+    occurrence kept); ``key=text|hash`` picks bit-exact window keys or
+    the 8-byte-hash 100 TB shuffle with span-grain verification.
     """
-    mode = p.params.get("mode", "exact")
-    if "mode" not in p.params and p.params.get("tier") == "substring":
-        mode = "substring"  # dedup://?tier=substring shorthand
-    text_col = p.params.get("text-col", "text")
-    id_col = p.params.get("id-col", "doc_id")
+    a = p.args
+    mode = a["mode"] or ("substring" if a["tier"] == "substring" else "exact")
+    if mode == "incremental" and a["tier"] == "substring":
+        raise ValueError("dedup://?mode=incremental: tier must be "
+                         "minhash|exact|cosine, got 'substring'")
+    text_col = a["text-col"]
+    cosine = mode == "incremental" and a["tier"] == "cosine"
+    id_col = a["id-col"] or (
+        "vec_id" if mode == "semdedup" or cosine else "doc_id"
+    )
+    threshold = a["threshold"]
+    if threshold is None:
+        threshold = 0.95 if mode == "semdedup" else 0.3 if cosine else 0.5
+    bands = (4 if cosine else 8) if a["bands"] is None else a["bands"]
+    k = a["k"]
+    min_span = k + 4 if a["min-span"] is None else a["min-span"]
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
         from spark_etl_cli_spark.operators import dedup as D
@@ -95,18 +457,11 @@ def dedup_transform(p: ParsedUri) -> TransformFn:
             return D.dedup_exact(df, text_col, id_col)
         if mode == "minhash":
             return D.minhash_lsh_pairs(
-                df,
-                text_col,
-                id_col,
-                num_hashes=int(p.params.get("num-hashes", "32")),
-                bands=int(p.params.get("bands", "8")),
+                df, text_col, id_col, num_hashes=a["num-hashes"], bands=bands
             )
         if mode == "jaccard":
             return D.shingle_pairs_jaccard(
-                df,
-                text_col,
-                id_col,
-                threshold=float(p.params.get("threshold", "0.5")),
+                df, text_col, id_col, threshold=threshold
             )
         if mode == "simhash":
             return D.simhash(df, text_col, id_col)
@@ -114,42 +469,24 @@ def dedup_transform(p: ParsedUri) -> TransformFn:
             from spark_etl_cli_spark.operators.similarity import semantic_dedup
 
             return semantic_dedup(
-                df,
-                threshold=float(p.params.get("threshold", "0.95")),
-                id_col=p.params.get("id-col", "vec_id"),
-                vec_col=p.params.get("vec-col", "embedding"),
-                n_clusters=int(p.params.get("clusters", "16")),
+                df, threshold=threshold, id_col=id_col, vec_col=a["vec-col"],
+                n_clusters=a["clusters"],
             )
         if mode == "incremental":
-            return _incremental_dedup_run(p, spark, df, text_col, id_col)
-        if mode == "substring":
-            from spark_etl_cli_spark.operators import substring as S
-
-            k = int(p.params.get("k", "8"))
-            key = p.params.get("key", "text")
-            max_df_s = p.params.get("max-df")
-            max_df = int(max_df_s) if max_df_s else None
-            min_span = int(p.params.get("min-span", str(k + 4)))
-            emit = p.params.get("emit", "spans")
-            if emit == "spans":
-                return S.substring_dup_spans(
-                    df, text_col, id_col, k=k, key=key, max_df=max_df
-                )
-            if emit == "decisions":
-                return S.substring_dedup(
-                    df, text_col, id_col,
-                    k=k, min_span=min_span, key=key, max_df=max_df,
-                )
-            if emit == "scrub":
-                return S.substring_scrub(
-                    df, text_col, id_col,
-                    k=k, min_span=min_span, key=key, max_df=max_df,
-                )
-            raise ValueError(
-                f"dedup substring: emit must be spans|decisions|scrub,"
-                f" got {emit!r}"
+            return _incremental_dedup_run(
+                a, spark, df, text_col, id_col, threshold, bands
             )
-        raise ValueError(f"unknown dedup mode {mode!r}")
+        from spark_etl_cli_spark.operators import substring as S
+
+        if a["emit"] == "spans":
+            return S.substring_dup_spans(
+                df, text_col, id_col, k=k, key=a["key"], max_df=a["max-df"]
+            )
+        emit = S.substring_dedup if a["emit"] == "decisions" else S.substring_scrub
+        return emit(
+            df, text_col, id_col,
+            k=k, min_span=min_span, key=a["key"], max_df=a["max-df"],
+        )
 
     return run
 
@@ -204,8 +541,8 @@ def _incremental_state(
 
 
 def _incremental_dedup_run(
-    p: ParsedUri, spark: SparkSession, df: DataFrame, text_col: str,
-    id_col: str,
+    a: Args, spark: SparkSession, df: DataFrame, text_col: str,
+    id_col: str, threshold: float, bands: int,
 ) -> DataFrame:
     """``dedup://?mode=incremental&tier=minhash|exact|cosine&state=<path>``
     — the batch-vs-persisted-corpus loop (operators/dedup.py
@@ -234,57 +571,38 @@ def _incremental_dedup_run(
     indistinguishable); ``first-batch=true`` declares it expected,
     ``require-state=true`` makes it an error.
     """
-    tier = p.params.get("tier", "minhash")
+    tier = a["tier"]
     state = _incremental_state(
-        spark,
-        p.params.get("state"),
-        first_batch=p.params.get("first-batch", "").lower() == "true",
-        require_state=p.params.get("require-state", "").lower() == "true",
+        spark, a["state"],
+        first_batch=a["first-batch"], require_state=a["require-state"],
     )
-    validate_ids = p.params.get("validate-ids", "true").lower() != "false"
-    from pyspark.sql import functions as F
-
     from spark_etl_cli_spark.operators.dedup import check_monotone_ids
 
-    if tier == "minhash":
-        from spark_etl_cli_spark.operators.dedup import (
-            incremental_minhash_dedup,
-            minhash_signatures,
+    if tier == "cosine":
+        from spark_etl_cli_spark.operators.similarity import (
+            incremental_cosine_dedup,
         )
 
-        if validate_ids:
-            check_monotone_ids(
-                df.select(F.col(id_col).alias("id")), state
-            )
-        sigs = minhash_signatures(
+        if a["validate-ids"]:
+            check_monotone_ids(df, state, id_col=id_col)
+        dec = incremental_cosine_dedup(
             df,
-            text_col,
-            id_col,
-            num_hashes=int(p.params.get("num-hashes", "32")),
-            shingle_k=int(p.params.get("shingle-k", "3")),
-            hash_family=p.params.get("hash-family", "fast"),
-        )
-        dec = incremental_minhash_dedup(
-            sigs,
             state,
-            num_hashes=int(p.params.get("num-hashes", "32")),
-            bands=int(p.params.get("bands", "8")),
-            threshold=float(p.params.get("threshold", "0.5")),
+            threshold=threshold,
+            id_col=id_col,
+            vec_col=a["vec-col"],
+            num_planes=a["planes"],
+            bands=bands,
         )
-        probe = sigs.join(dec, "id").withColumnRenamed("id", id_col)
-        # LEFT: rows with no shingles (empty text) still flow through,
-        # as trivial survivors with NULL probe columns
-        return df.join(probe, id_col, "left")
+        return df.join(dec.withColumnRenamed("id", id_col), id_col, "left")
+    if a["validate-ids"]:
+        check_monotone_ids(df.select(F.col(id_col).alias("id")), state)
     if tier == "exact":
         from spark_etl_cli_spark.functions.text import fingerprint
         from spark_etl_cli_spark.operators.dedup import (
             incremental_exact_dedup,
         )
 
-        if validate_ids:
-            check_monotone_ids(
-                df.select(F.col(id_col).alias("id")), state
-            )
         fps = df.select(
             F.col(id_col).alias("id"),
             fingerprint(F.col(text_col)).alias("fp"),
@@ -292,90 +610,107 @@ def _incremental_dedup_run(
         dec = incremental_exact_dedup(fps, state)
         probe = fps.join(dec, "id").withColumnRenamed("id", id_col)
         return df.join(probe, id_col, "left")
-    if tier == "cosine":
-        from spark_etl_cli_spark.operators.similarity import (
-            incremental_cosine_dedup,
-        )
+    from spark_etl_cli_spark.operators.dedup import (
+        incremental_minhash_dedup,
+        minhash_signatures,
+    )
 
-        vid = p.params.get("id-col", "vec_id") if id_col == "doc_id" else id_col
-        if validate_ids:
-            check_monotone_ids(df, state, id_col=vid)
-        dec = incremental_cosine_dedup(
-            df,
-            state,
-            threshold=float(p.params.get("threshold", "0.3")),
-            id_col=vid,
-            vec_col=p.params.get("vec-col", "embedding"),
-            num_planes=int(p.params.get("planes", "16")),
-            bands=int(p.params.get("bands", "4")),
-        )
-        return df.join(dec.withColumnRenamed("id", vid), vid, "left")
-    raise ValueError(f"unknown incremental dedup tier {tier!r}")
+    sigs = minhash_signatures(
+        df,
+        text_col,
+        id_col,
+        num_hashes=a["num-hashes"],
+        shingle_k=a["shingle-k"],
+        hash_family=a["hash-family"],
+    )
+    dec = incremental_minhash_dedup(
+        sigs,
+        state,
+        num_hashes=a["num-hashes"],
+        bands=bands,
+        threshold=threshold,
+    )
+    probe = sigs.join(dec, "id").withColumnRenamed("id", id_col)
+    # LEFT: rows with no shingles (empty text) still flow through,
+    # as trivial survivors with NULL probe columns
+    return df.join(probe, id_col, "left")
 
 
-@register_transform("cdc-apply")
-def cdc_apply_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+cdc-apply://?key=id&sequence=version[&type-col=_change_type
-    &delete-values=delete&ignore-values=update_preimage]``.
+@register_transform(
+    "decontaminate",
+    params=(
+        Param("n", "int", 8, "word n-gram / window size"),
+        Param("min-shared", "int", 1, "ngram: shared n-grams that drop a doc"),
+        _ID_COL, _TEXT_COL,
+        Param("pairs", "bool", False, "emit the collision report instead"),
+        Param("mode", "enum", "ngram", "contamination rule",
+              choices=("ngram", "substring")),
+        Param("action", "enum", "drop", "substring: what to do",
+              choices=("drop", "scrub", "spans")),
+        Param("key", "enum", "text", "substring: window keys",
+              choices=("text", "hash")),
+        Param("min-span", "int", doc="substring: shortest span (default n+4)"),
+    ),
+)
+def decontaminate_transform(p: ParsedUri) -> TransformFn:
+    """``decontaminate://benchView``: the train/test contamination scrub.
 
-    Materialize the current snapshot implied by a change log: latest
-    change per key wins, keys whose latest change is a delete vanish
-    (operators/cdc.py). Pair with ``delta-stream://?readChangeFeed=true``
-    or any CDC-shaped frame.
+    Drops input docs sharing >= ``min-shared`` word n-grams with any doc
+    in the benchmark view (operators/retrieval.py). With ``pairs=true``
+    it instead emits the (train_doc_id, bench_doc_id, n_shared)
+    collision report for audit.
+
+    ``mode=substring`` applies the GPT-3/PaLM-style SPAN rule instead
+    (operators/substring.py): contamination = a verbatim >= ``n``-token
+    window chain reaching ``min-span`` tokens; ``action=drop`` removes
+    contaminated docs, ``action=scrub`` deletes exactly the
+    contaminated ranges, ``action=spans`` emits the span report.
     """
-    keys = _csv_param(p, "key")
-    seq = _csv_param(p, "sequence")
-    if not keys or not seq:
-        raise ValueError("cdc-apply:// needs ?key=<cols>&sequence=<cols>")
-    type_col = p.params.get("type-col", "_change_type")
-    deletes = tuple(_csv_param(p, "delete-values", "delete"))
-    ignores = tuple(_csv_param(p, "ignore-values", "update_preimage"))
+    a = p.args
+    bench_view, n = p.path_name, a["n"]
+    id_col, text_col = a["id-col"], a["text-col"]
+    min_span = n + 4 if a["min-span"] is None else a["min-span"]
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.cdc import apply_changes_snapshot
+        bench = spark.table(bench_view)
+        if a["mode"] == "substring":
+            from spark_etl_cli_spark.operators.substring import (
+                substring_contamination_spans,
+                substring_decontaminate,
+            )
 
-        return apply_changes_snapshot(
-            df,
-            keys,
-            seq,
-            change_type_col=type_col if type_col in df.columns else None,
-            delete_values=deletes,
-            ignore_values=ignores,
+            if a["action"] == "spans" or a["pairs"]:
+                return substring_contamination_spans(
+                    df, bench, text_col, id_col, k=n, key=a["key"]
+                )
+            return substring_decontaminate(
+                df, bench, text_col, id_col,
+                k=n, min_span=min_span, key=a["key"], action=a["action"],
+            )
+        from spark_etl_cli_spark.operators.retrieval import (
+            contamination_pairs,
+            decontaminate,
+        )
+
+        if a["pairs"]:
+            return contamination_pairs(
+                df, bench, n=n, id_col=id_col, text_col=text_col
+            )
+        return decontaminate(
+            df, bench, n=n, min_shared=a["min-shared"],
+            id_col=id_col, text_col=text_col,
         )
 
     return run
 
 
-@register_transform("asof")
-def asof_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+asof://rightView?key=sym&left-ts=ts&right-ts=ts``.
-
-    Nearest-prior join of the input view against another registered view
-    (single-shuffle union+window plan, operators/asof.py).
-    """
-    other_view = p.path.lstrip("/") or p.authority
-    keys = _csv_param(p, "key")
-    left_ts = p.params.get("left-ts", "ts")
-    right_ts = p.params.get("right-ts", "ts")
-    payload = _csv_param(p, "payload") or None
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.asof import asof_join
-
-        return asof_join(df, spark.table(other_view), keys, left_ts, right_ts, payload)
-
-    return run
-
-
-@register_transform("text-metrics")
+@register_transform("text-metrics", params=(_TEXT_COL,))
 def text_metrics_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+text-metrics://?text-col=text`` — append token_count,
-    quality_score, lang_id, and fingerprint columns (all codegen'd)."""
-    text_col = p.params.get("text-col", "text")
+    """Append token_count, quality_score, lang_id, and fingerprint
+    columns (all codegen'd)."""
+    text_col = p.args["text-col"]
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         from spark_etl_cli_spark.functions import text as X
 
         c = F.col(text_col)
@@ -391,145 +726,164 @@ def text_metrics_transform(p: ParsedUri) -> TransformFn:
     return run
 
 
-@register_transform("similarity")
+@register_transform(
+    "similarity",
+    params=(
+        Param("k", "int", 10, "neighbours per query"),
+        Param("mode", "enum", "brute", "exact scan or LSH candidates",
+              choices=("brute", "lsh")),
+        _id_col("vec_id"), _VEC_COL,
+    ),
+)
 def similarity_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+similarity://queriesView?k=10&mode=brute|lsh&id-col=vec_id&vec-col=embedding``.
-
-    Top-k cosine neighbors of each row in ``queriesView`` against the
-    input view as corpus.
-    """
-    queries_view = p.path.lstrip("/") or p.authority
-    k = int(p.params.get("k", "10"))
-    mode = p.params.get("mode", "brute")
-    id_col = p.params.get("id-col", "vec_id")
-    vec_col = p.params.get("vec-col", "embedding")
+    """``similarity://queriesView``: top-k cosine neighbors of each row
+    in the queries view against the input view as corpus."""
+    queries_view, a = p.path_name, p.args
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
         from spark_etl_cli_spark.operators import similarity as S
 
-        q = spark.table(queries_view)
-        if mode == "brute":
-            return S.brute_force_topk(df, q, k, id_col, vec_col)
-        if mode == "lsh":
-            return S.lsh_topk(df, q, k, id_col, vec_col)
-        raise ValueError(f"unknown similarity mode {mode!r}")
+        topk = S.brute_force_topk if a["mode"] == "brute" else S.lsh_topk
+        return topk(
+            df, spark.table(queries_view), a["k"], a["id-col"], a["vec-col"]
+        )
 
     return run
 
 
-@register_transform("repartition")
+@register_transform(
+    "repartition",
+    params=(Param("n", "int", doc="partition count"),
+            dataclasses.replace(_BY, doc="hash-partition columns")),
+)
 def repartition_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+repartition://?n=64&by=a,b`` — explicit data-layout
-    control: hash-partition on columns (co-locates later joins/aggs on
-    the same keys) and/or set the partition count."""
-    n = p.params.get("n")
-    by = _csv_param(p, "by")
+    """Explicit data-layout control: hash-partition on columns
+    (co-locates later joins/aggs on the same keys) and/or set the
+    partition count."""
+    n = p.args["n"]
+    cols = p.args["by"]
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        cols = [F.col(c) for c in by]
-        if n and cols:
-            return df.repartition(int(n), *cols)
-        if cols:
-            return df.repartition(*cols)
+        by = [F.col(c) for c in cols]
+        if n and by:
+            return df.repartition(n, *by)
+        if by:
+            return df.repartition(*by)
         if n:
-            return df.repartition(int(n))
+            return df.repartition(n)
         return df.repartition()
 
     return run
 
 
-@register_transform("coalesce")
+@register_transform("coalesce", params=(Param("n", "int", 1, "partitions"),))
 def coalesce_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+coalesce://?n=8`` — shrink partition count without a
-    shuffle (output-file control)."""
-    n = int(p.params.get("n", "1"))
+    """Shrink the partition count without a shuffle (output-file
+    control)."""
+    n = p.args["n"]
     return lambda spark, df: df.coalesce(n)
 
 
-@register_transform("cache")
+_STORAGE_LEVELS = tuple(
+    name for name in dir(StorageLevel)
+    if isinstance(getattr(StorageLevel, name), StorageLevel)
+)
+
+
+@register_transform(
+    "cache",
+    params=(Param("storage", "enum", "MEMORY_AND_DISK", "storage level",
+                  choices=_STORAGE_LEVELS),),
+)
 def cache_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+cache://[?storage=MEMORY_AND_DISK]`` — persist a view
-    consumed by multiple later transforms/sinks so it computes once."""
-    level_name = p.params.get("storage", "MEMORY_AND_DISK")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from pyspark import StorageLevel
-
-        level = getattr(StorageLevel, level_name)
-        return df.persist(level)
-
-    return run
+    """Persist a view consumed by multiple later transforms/sinks so it
+    computes once."""
+    level = getattr(StorageLevel, p.args["storage"])
+    return lambda spark, df: df.persist(level)
 
 
-@register_transform("diff")
+@register_transform(
+    "diff",
+    params=(
+        Param("id", "csv", doc="key columns"),
+        Param("ignore", "csv", doc="columns left out of the comparison"),
+        Param("handleDifferences", "enum",
+              doc="filter: keep only differing rows; fail: raise on any",
+              choices=("", "keep", "filter", "fail")),
+    ),
+)
 def diff_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+diff://otherView?id=a,b&ignore=c&handleDifferences=filter|fail``.
-
-    Compares the input view against another registered view (right side),
-    like the reference (``DiffTransformerParser.scala:35``).
-    """
-    other_view = p.path.lstrip("/") or p.authority
-    id_cols = [c for c in p.params.get("id", "").split(",") if c]
-    ignore = [c for c in p.params.get("ignore", "").split(",") if c]
-    handle = p.params.get("handleDifferences")
+    """``diff://otherView``: compares the input view against another
+    registered view (right side), like the reference
+    (``DiffTransformerParser.scala:35``)."""
+    other_view, a = p.path_name, p.args
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
         right = spark.table(other_view)
-        return apply_diff_handling(diff(df, right, id_cols, ignore), handle)
+        return apply_diff_handling(
+            diff(df, right, a["id"], a["ignore"]), a["handleDifferences"]
+        )
 
     return run
 
 
-@register_transform("components")
+@register_transform(
+    "components",
+    params=(
+        Param("src", default="id_a", doc="edge source column"),
+        Param("dst", default="id_b", doc="edge destination column"),
+        Param("max-iter", "int", 25, "iteration cap"),
+        Param("algo", "enum", "minlabel", "propagation scheme",
+              choices=("minlabel", "star")),
+    ),
+)
 def components_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+components://?src=id_a&dst=id_b&max-iter=25&algo=minlabel|star``.
+    """Connected components over an edge-list view.
 
-    Connected components over an edge-list view (e.g. the pair output
-    of ``dedup://?mode=minhash``): emits (id, component) so dedup can
-    keep one survivor per *group*, not just per pair. ``algo=minlabel``
-    (default) converges in diameter-many 1-shuffle rounds — right for
-    shallow dup clusters; ``algo=star`` (large-star/small-star) takes
-    O(log²) heavier rounds — right for deep or unknown-diameter graphs.
+    E.g. over the pair output of ``dedup://?mode=minhash``: emits (id,
+    component) so dedup can keep one survivor per *group*, not just
+    per pair. ``algo=minlabel`` converges in diameter-many 1-shuffle
+    rounds — right for shallow dup clusters; ``algo=star``
+    (large-star/small-star) takes O(log²) heavier rounds — right for
+    deep or unknown-diameter graphs.
     """
-    src = p.params.get("src", "id_a")
-    dst = p.params.get("dst", "id_b")
-    max_iter = int(p.params.get("max-iter", "25"))
-    algo = p.params.get("algo", "minlabel")
+    a = p.args
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
         from spark_etl_cli_spark.operators import dedup as D
 
-        if algo == "star":
-            return D.connected_components_star(df, src, dst, max_iter)
-        if algo == "minlabel":
-            return D.connected_components(df, src, dst, max_iter)
-        raise ValueError(f"unknown components algo {algo!r}")
+        cc = (D.connected_components_star if a["algo"] == "star"
+              else D.connected_components)
+        return cc(df, a["src"], a["dst"], a["max-iter"])
 
     return run
 
 
-@register_transform("sample")
+@register_transform(
+    "sample",
+    params=(
+        Param("rate", "int", 10, "percent of rows kept"),
+        _ID_COL,
+        Param("by", doc="stratum column"),
+        Param("rates", "csv", doc="stratum:rate list (needs by)"),
+    ),
+)
 def sample_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+sample://?rate=10&id-col=doc_id[&by=source&rates=src0:5,src1:10]``.
+    """Deterministic hash sampling: keep rows whose md5-bucket (of the
+    id column, mod 100) falls below the rate.
 
-    Deterministic hash sampling: keep rows whose md5-bucket (of the id
-    column, mod 100) falls below the rate. Reproducible across runs,
-    engines, and repartitioning — unlike Bernoulli ``df.sample``.
-    Optional ``by``/``rates`` give per-stratum rates (fallback
-    ``rate`` for unlisted strata).
+    Reproducible across runs, engines, and repartitioning — unlike
+    Bernoulli ``df.sample``. Optional ``by``/``rates`` give per-stratum
+    rates (fallback ``rate`` for unlisted strata).
     """
-    rate = int(p.params.get("rate", "10"))
-    id_col = p.params.get("id-col", "doc_id")
-    by = p.params.get("by")
-    rates = dict(
-        kv.split(":", 1) for kv in p.params.get("rates", "").split(",") if ":" in kv
-    )
+    a = p.args
+    rate, id_col, by = a["rate"], a["id-col"], a["by"]
+    rates = {
+        stratum: int(r)
+        for stratum, _, r in (kv.partition(":") for kv in a["rates"] if ":" in kv)
+    }
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         bucket = (
             F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
             .cast("bigint")
@@ -537,52 +891,48 @@ def sample_transform(p: ParsedUri) -> TransformFn:
         )
         limit = F.lit(rate)
         if by and rates:
-            expr = F.lit(rate)
             for stratum, r in rates.items():
-                expr = F.when(F.col(by) == stratum, F.lit(int(r))).otherwise(expr)
-            limit = expr
+                limit = F.when(F.col(by) == stratum, F.lit(r)).otherwise(limit)
         return df.filter(bucket < limit)
 
     return run
 
 
-@register_transform("quality-filter")
+@register_transform(
+    "quality-filter",
+    params=(
+        _TEXT_COL,
+        Param("min-tokens", "int", 5, "fewest tokens"),
+        Param("max-tokens", "int", 1000, "most tokens"),
+        Param("max-punct", "float", 0.3, "highest punctuation ratio"),
+        Param("min-stopword", "float", 0.01, "lowest stopword ratio"),
+    ),
+)
 def quality_filter_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+quality-filter://?text-col=text&min-tokens=5&max-tokens=1000&max-punct=0.3&min-stopword=0.01``.
-
-    Gopher/C4-style document gates (the filter twin of the q49 funnel):
-    keeps rows passing all thresholds; all gates codegen'd.
-    """
-    text_col = p.params.get("text-col", "text")
-    min_tok = int(p.params.get("min-tokens", "5"))
-    max_tok = int(p.params.get("max-tokens", "1000"))
-    max_punct = float(p.params.get("max-punct", "0.3"))
-    min_sw = float(p.params.get("min-stopword", "0.01"))
+    """Gopher/C4-style document gates (the filter twin of the q49
+    funnel): keeps rows passing all thresholds; all gates codegen'd."""
+    a = p.args
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         from spark_etl_cli_spark.functions import text as X
 
-        c = F.col(text_col)
+        c = F.col(a["text-col"])
         return df.filter(
-            X.token_count(c).between(min_tok, max_tok)
-            & (X.punct_ratio(c) <= max_punct)
-            & (X.stopword_ratio(c) >= min_sw)
+            X.token_count(c).between(a["min-tokens"], a["max-tokens"])
+            & (X.punct_ratio(c) <= a["max-punct"])
+            & (X.stopword_ratio(c) >= a["min-stopword"])
         )
 
     return run
 
 
-@register_transform("pii-scrub")
+@register_transform("pii-scrub", params=(_TEXT_COL,))
 def pii_scrub_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+pii-scrub://?text-col=text`` — replace e-mail/phone
-    patterns with [EMAIL]/[PHONE] markers in place."""
-    text_col = p.params.get("text-col", "text")
+    """Replace e-mail/phone patterns with [EMAIL]/[PHONE] markers in
+    place."""
+    text_col = p.args["text-col"]
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         from spark_etl_cli_spark.plans.corpusops import _EMAIL_RE, _PHONE_RE
 
         scrubbed = F.regexp_replace(
@@ -595,23 +945,25 @@ def pii_scrub_transform(p: ParsedUri) -> TransformFn:
     return run
 
 
-@register_transform("sessionize")
+@register_transform(
+    "sessionize",
+    params=(
+        Param("key", default="user_id", doc="session key column"),
+        _TS_COL,
+        Param("gap", "int", 600, "seconds of inactivity that end a session"),
+        _ORDER,
+    ),
+)
 def sessionize_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+sessionize://?key=user_id&ts-col=ts&gap=600[&order=event_id]``.
-
-    Gap-based batch sessionization: appends a ``session_id`` column
-    (``<key>-<n>`` per key). One window shuffle on the key.
-    """
-    key = p.params.get("key", "user_id")
-    ts_col = p.params.get("ts-col", "ts")
-    gap = int(p.params.get("gap", "600"))
-    order = [c for c in p.params.get("order", "").split(",") if c]
+    """Gap-based batch sessionization: appends a ``session_id`` column
+    (``<key>-<n>`` per key). One window shuffle on the key."""
+    a = p.args
+    key, ts_col, gap = a["key"], a["ts-col"], a["gap"]
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
-        from pyspark.sql import functions as F
 
-        ob = [F.col(ts_col), *[F.col(c) for c in order]]
+        ob = [F.col(ts_col), *[F.col(c) for c in a["order"]]]
         w = Window.partitionBy(key).orderBy(*ob)
         brk = F.when(
             F.lag(ts_col).over(w).isNull()
@@ -631,131 +983,56 @@ def sessionize_transform(p: ParsedUri) -> TransformFn:
     return run
 
 
-@register_transform("chunk")
-def chunk_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+chunk://?chunk-tokens=64&stride=48&text-col=text&id-col=doc_id``.
-
-    Overlapping context-window chunks (operators/chunking.py) — per-row
-    explode, no shuffle.
-    """
-    text_col = p.params.get("text-col", "text")
-    id_col = p.params.get("id-col", "doc_id")
-    chunk_tokens = int(p.params.get("chunk-tokens", "64"))
-    stride = int(p.params.get("stride", "48"))
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.chunking import chunk_documents
-
-        return chunk_documents(df, text_col, id_col, chunk_tokens, stride)
-
-    return run
-
-
-@register_transform("pack")
-def pack_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+pack://?seq-tokens=2048&partition-col=source&text-col=text&id-col=doc_id``.
-
-    Greedy sequence packing: appends (ntok, seq_id) so a downstream
-    groupBy(partition-col, seq_id) materializes training sequences.
-    """
-    text_col = p.params.get("text-col", "text")
-    id_col = p.params.get("id-col", "doc_id")
-    partition_col = p.params.get("partition-col", "source")
-    seq_tokens = int(p.params.get("seq-tokens", "2048"))
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.chunking import pack_sequences
-
-        return pack_sequences(df, text_col, id_col, partition_col, seq_tokens)
-
-    return run
-
-
-@register_transform("merge")
-def merge_transform(p: ParsedUri) -> TransformFn:
-    """``base+out+merge://changesView?keys=id&seq-col=ts&op-col=op&delete-op=D``.
-
-    SCD1 changelog MERGE: the input view is the snapshot, the URI path
-    names the changelog view; per key the highest-seq change wins and
-    tombstone ops delete (operators/maintenance.py — one shuffle,
-    union+window, no base-vs-changes join).
-    """
-    changes_view = p.path.lstrip("/") or p.authority
-    keys = _csv_param(p, "keys")
-    seq_cols = _csv_param(p, "seq-col", "ts")
-    op_col = p.params.get("op-col")
-    delete_op = p.params.get("delete-op", "D")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.maintenance import merge_changelog
-
-        return merge_changelog(
-            df, spark.table(changes_view), keys, seq_cols, op_col, delete_op
-        )
-
-    return run
-
-
-@register_transform("gapfill")
-def gapfill_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+gapfill://?keys=k&date-col=day&value-cols=total``.
-
-    Densify per-key daily series (sequence+explode spine) and
-    forward-fill ``<col>_filled`` values (operators/maintenance.py).
-    """
-    keys = _csv_param(p, "keys")
-    date_col = p.params.get("date-col", "day")
-    value_cols = _csv_param(p, "value-cols")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.maintenance import gap_fill
-
-        return gap_fill(df, keys, date_col, value_cols)
-
-    return run
-
-
-@register_transform("expect")
+@register_transform(
+    "expect",
+    params=(
+        Param("not-null", "csv", doc="columns that must not be NULL"),
+        Param("unique", doc="column groups that must be unique: a,b;c"),
+        Param("accepted", doc="allowed values: col:v1|v2;col2:..."),
+        Param("positive", "csv", doc="columns that must be > 0"),
+        Param("fk", doc="foreign keys: col->view.parent;..."),
+        Param("mode", "enum", "audit", "fail raises on any violation",
+              choices=("audit", "fail")),
+    ),
+)
 def expect_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+expect://?not-null=a,b&unique=a,b;c&accepted=col:v1|v2&positive=c&fk=col->view.parent&mode=audit``.
+    """Declarative data-quality checks -> (check, violations) audit
+    rows (operators/maintenance.py).
 
-    Declarative data-quality checks -> (check, violations) audit rows
-    (operators/maintenance.py). ``mode=fail`` raises if any check has
-    violations (the reference's diff ``handleDifferences=fail`` pattern,
+    ``mode=fail`` raises if any check has violations (the reference's
+    diff ``handleDifferences=fail`` pattern,
     DiffTransformerParser.scala:47-60, applied to constraints).
     """
-    not_null = _csv_param(p, "not-null")
+    a = p.args
     unique = [
         [c for c in group.split(",") if c]
-        for group in p.params.get("unique", "").split(";")
+        for group in (a["unique"] or "").split(";")
         if group
     ]
     accepted: dict[str, list[str]] = {}
-    for spec in p.params.get("accepted", "").split(";"):
+    for spec in (a["accepted"] or "").split(";"):
         if spec and ":" in spec:
             col, vals = spec.split(":", 1)
             accepted[col] = vals.split("|")
-    positive = _csv_param(p, "positive")
     fks: list[tuple[str, str, str]] = []
-    for spec in p.params.get("fk", "").split(";"):
+    for spec in (a["fk"] or "").split(";"):
         if spec and "->" in spec:
             child, parent = spec.split("->", 1)
             view, pcol = parent.rsplit(".", 1)
             fks.append((child, view, pcol))
-    mode = p.params.get("mode", "audit")
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
         from spark_etl_cli_spark.operators.maintenance import expectations
 
         audit = expectations(
             df,
-            not_null=not_null,
+            not_null=a["not-null"],
             unique=unique,
             accepted=accepted,
-            positive=positive,
+            positive=a["positive"],
             foreign_keys=[(c, spark.table(v), pc) for c, v, pc in fks],
         )
-        if mode == "fail":
+        if a["mode"] == "fail":
             bad = audit.filter("violations > 0").collect()
             if bad:
                 raise ValueError(
@@ -767,348 +1044,34 @@ def expect_transform(p: ParsedUri) -> TransformFn:
     return run
 
 
-@register_transform("bloom-prune")
-def bloom_prune_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+bloom-prune://keysView?key=o_custkey&dim-key=c_custkey
-    &fpp=0.01&expected=100000``.
-
-    Prunes the input view's rows to those whose ``key`` might appear in
-    ``keysView[dim-key]`` — explicit runtime filtering ahead of a join
-    or aggregation (operators/joins.py). Exact joins downstream are
-    unaffected (no false negatives); ``expected`` skips the sizing
-    ``count()`` on the keys view.
-    """
-    keys_view = p.path.lstrip("/") or p.authority
-    fact_key = p.params.get("key", "id")
-    dim_key = p.params.get("dim-key") or None
-    fpp = float(p.params.get("fpp", "0.01"))
-    expected = p.params.get("expected")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.joins import bloom_semi_prune
-
-        return bloom_semi_prune(
-            df,
-            spark.table(keys_view),
-            fact_key,
-            dim_key,
-            expected_items=int(expected) if expected else None,
-            fpp=fpp,
-        )
-
-    return run
-
-
-@register_transform("range-join")
-def range_join_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+range-join://intervalsView?point=ts&lo=start&hi=end
-    &bin-width=3600``.
-
-    Inner-joins the input view (point side) against an intervals view
-    on ``point BETWEEN lo AND hi`` via the binned hash-join
-    decomposition (operators/joins.py) — no nested loop even without
-    an equi key.
-    """
-    iv_view = p.path.lstrip("/") or p.authority
-    point = p.params.get("point", "ts")
-    lo = p.params.get("lo", "lo")
-    hi = p.params.get("hi", "hi")
-    bin_width = int(p.params.get("bin-width", "3600"))
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.joins import range_join_binned
-
-        return range_join_binned(df, spark.table(iv_view), point, lo, hi, bin_width)
-
-    return run
-
-
-@register_transform("assign-ids")
-def assign_ids_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+assign-ids://?order=date,id&id-col=seq_id&partitions=N``.
-
-    Dense 0-based sequential ids in ``order`` order via the two-pass
-    range-partition scheme (operators/ids.py) — never a single-partition
-    global window.
-    """
-    order = _csv_param(p, "order")
-    id_col = p.params.get("id-col", "seq_id")
-    partitions = p.params.get("partitions")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.ids import assign_sequential_ids
-
-        return assign_sequential_ids(
-            df, order, id_col, int(partitions) if partitions else None
-        )
-
-    return run
-
-
-@register_transform("zorder")
-def zorder_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+zorder://?by=a,b&bits=10&partitions=N``.
-
-    Totally orders the view by the z-value (Morton interleave) of the
-    given columns (operators/zorder.py) so a following file sink writes
-    row groups clustered in every listed dimension.
-    """
-    by = _csv_param(p, "by")
-    bits = int(p.params.get("bits", "10"))
-    partitions = p.params.get("partitions")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.zorder import zorder_sort
-
-        return zorder_sort(
-            df, by, bits, int(partitions) if partitions else None
-        )
-
-    return run
-
-
-@register_transform("rebalance")
+@register_transform(
+    "rebalance",
+    params=(dataclasses.replace(_BY, doc="hash-distribute columns"),),
+)
 def rebalance_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+rebalance://[?by=a,b]``.
+    """AQE rebalance hint: the runtime splits oversized shuffle
+    partitions and coalesces undersized ones toward
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``.
 
-    AQE rebalance hint: the runtime splits oversized shuffle partitions
-    and coalesces undersized ones toward
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` — the idiom for
-    evenly sized output files without hand-picking a repartition count
-    (and, unlike ``repartition(n)``, skew-safe: a hot key is split).
-    Optional ``by`` columns hash-distribute before balancing.
+    The idiom for evenly sized output files without hand-picking a
+    repartition count (and, unlike ``repartition(n)``, skew-safe: a
+    hot key is split). Optional ``by`` columns hash-distribute before
+    balancing.
     """
-    by = _csv_param(p, "by")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        return df.hint("rebalance", *by) if by else df.hint("rebalance")
-
-    return run
-
-
-@register_transform("checksum")
-def checksum_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+checksum://?cols=a,b,c&by=grp``.
-
-    Order-insensitive reconciliation checksum per group
-    (operators/checksum.py): run on both systems, compare the tiny
-    results, drill into mismatched groups with ``diff://``.
-    """
-    cols = _csv_param(p, "cols")
-    by = _csv_param(p, "by") or None
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.checksum import table_checksum
-
-        return table_checksum(df, cols or df.columns, by)
-
-    return run
-
-
-@register_transform("profile")
-def profile_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+profile://[?cols=a,b]``.
-
-    One-pass column profile (operators/profile.py): long-form
-    (column, n_rows, n_nonnull, n_distinct) for discovery before
-    declaring ``expect://`` rules.
-    """
-    cols = _csv_param(p, "cols") or None
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.profile import profile_columns
-
-        return profile_columns(df, cols)
-
-    return run
-
-
-@register_transform("encode")
-def encode_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+encode://vocabView?text-col=text&id-col=doc_id
-    &token-col=token&token-id-col=token_id&unk=-1``.
-
-    Vocabulary encoding (operators/encoding.py): per-document token-id
-    arrays via a broadcast vocab join; unknowns encode as ``unk``.
-    """
-    vocab_view = p.path.lstrip("/") or p.authority
-    text_col = p.params.get("text-col", "text")
-    id_col = p.params.get("id-col", "doc_id")
-    token_col = p.params.get("token-col", "token")
-    tid_col = p.params.get("token-id-col", "token_id")
-    unk = int(p.params.get("unk", "-1"))
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.encoding import vocab_encode
-
-        return vocab_encode(
-            df, spark.table(vocab_view), text_col, id_col, token_col,
-            tid_col, unk,
-        )
-
-    return run
-
-
-@register_transform("decontaminate")
-def decontaminate_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+decontaminate://benchView?n=8&min-shared=1&id-col=doc_id
-    &text-col=text[&pairs=true][&mode=substring&min-span=12
-    &action=drop|scrub|spans&key=text|hash]``.
-
-    Drops input docs sharing >= ``min-shared`` word n-grams with any doc
-    in the benchmark view (operators/retrieval.py) — the train/test
-    contamination scrub. With ``pairs=true`` it instead emits the
-    (train_doc_id, bench_doc_id, n_shared) collision report for audit.
-
-    ``mode=substring`` applies the GPT-3/PaLM-style SPAN rule instead
-    (operators/substring.py): contamination = a verbatim >= ``n``-token
-    window chain reaching ``min-span`` tokens; ``action=drop`` removes
-    contaminated docs, ``action=scrub`` deletes exactly the
-    contaminated ranges, ``action=spans`` emits the span report.
-    """
-    bench_view = p.path.lstrip("/") or p.authority
-    n = int(p.params.get("n", "8"))
-    min_shared = int(p.params.get("min-shared", "1"))
-    id_col = p.params.get("id-col", "doc_id")
-    text_col = p.params.get("text-col", "text")
-    pairs = p.params.get("pairs", "false").lower() == "true"
-    mode = p.params.get("mode", "ngram")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        bench = spark.table(bench_view)
-        if mode == "substring":
-            from spark_etl_cli_spark.operators.substring import (
-                substring_contamination_spans,
-                substring_decontaminate,
-            )
-
-            action = p.params.get("action", "drop")
-            key = p.params.get("key", "text")
-            if action == "spans" or pairs:
-                return substring_contamination_spans(
-                    df, bench, text_col, id_col, k=n, key=key
-                )
-            return substring_decontaminate(
-                df, bench, text_col, id_col,
-                k=n,
-                min_span=int(p.params.get("min-span", str(n + 4))),
-                key=key,
-                action=action,
-            )
-        from spark_etl_cli_spark.operators.retrieval import (
-            contamination_pairs,
-            decontaminate,
-        )
-
-        if pairs:
-            return contamination_pairs(
-                df, bench, n=n, id_col=id_col, text_col=text_col
-            )
-        return decontaminate(
-            df, bench, n=n, min_shared=min_shared,
-            id_col=id_col, text_col=text_col,
-        )
-
-    return run
-
-
-@register_transform("bm25")
-def bm25_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+bm25://term1,term2,...?k1=1.2&b=0.75&id-col=doc_id
-    &text-col=text[&top-k=20]``.
-
-    BM25 relevance of every doc against a fixed query-term bag
-    (operators/retrieval.py); optional ``top-k`` keeps the best k with
-    a deterministic id tie-break.
-    """
-    terms = [t for t in (p.path.lstrip("/") or p.authority).split(",") if t]
-    if not terms:
-        raise ValueError("bm25:// needs at least one query term")
-    k1 = float(p.params.get("k1", "1.2"))
-    b = float(p.params.get("b", "0.75"))
-    id_col = p.params.get("id-col", "doc_id")
-    text_col = p.params.get("text-col", "text")
-    top_k = p.params.get("top-k")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from spark_etl_cli_spark.operators.retrieval import bm25_scores
-
-        scored = bm25_scores(
-            df, terms, k1=k1, b=b, id_col=id_col, text_col=text_col
-        )
-        if top_k:
-            scored = scored.orderBy(
-                F.col("score").desc(), F.col(id_col)
-            ).limit(int(top_k))
-        return scored
-
-    return run
-
-
-@register_transform("mixture")
-def mixture_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+mixture://?weights=src0:2.5,src1:0.3&default=1
-    &source-col=source&id-col=doc_id&epoch-col=epoch``.
-
-    Epoch-weighted corpus mixing (operators/mixture.py): each row is
-    repeated floor(w) times plus a deterministic md5-bucket-gated extra
-    copy for frac(w) of rows; weight 0 drops the source.
-    """
-    raw = p.params.get("weights", "")
-    weights: dict[str, float] = {}
-    for part in raw.split(","):
-        if part:
-            src, _, w = part.partition(":")
-            weights[src] = float(w or "1")
-    default = float(p.params.get("default", "1"))
-    source_col = p.params.get("source-col", "source")
-    id_col = p.params.get("id-col", "doc_id")
-    epoch_col = p.params.get("epoch-col", "epoch")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.mixture import epoch_upsample
-
-        return epoch_upsample(
-            df, weights, default=default, source_col=source_col,
-            id_col=id_col, epoch_col=epoch_col,
-        )
-
-    return run
-
-
-@register_transform("kmeans")
-def kmeans_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+kmeans://?k=8&iters=2&id-col=vec_id&vec-col=embedding``.
-
-    Deterministic fixed-iteration Lloyd k-means
-    (operators/clustering.py); emits per-(cluster, dim) statistics of
-    the final update. Centroids are driver-resident (k x dim doubles).
-    """
-    k = int(p.params.get("k", "8"))
-    iters = int(p.params.get("iters", "2"))
-    id_col = p.params.get("id-col", "vec_id")
-    vec_col = p.params.get("vec-col", "embedding")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.clustering import kmeans_lloyd
-
-        return kmeans_lloyd(df, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
-
-    return run
+    by = p.args["by"]
+    return lambda spark, df: df.hint("rebalance", *by)
 
 
 @register_transform("watermark")
 def watermark_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+watermark://col:duration`` (e.g. ``watermark://ts:30 minutes``).
+    """``watermark://col:duration`` (e.g. ``watermark://ts:30 minutes``):
+    applies an event-time watermark mid-pipeline.
 
-    Applies an event-time watermark mid-pipeline — needed when the
-    event-time column only becomes a TIMESTAMP after a transform (e.g.
-    a cast from TIMESTAMP_NTZ or epoch), so the source-level
-    ``?watermark=`` param can't be used.
+    Needed when the event-time column only becomes a TIMESTAMP after a
+    transform (e.g. a cast from TIMESTAMP_NTZ or epoch), so the
+    source-level ``?watermark=`` param can't be used.
     """
-    spec = p.path.lstrip("/") or p.authority
+    spec = p.path_name
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
         from spark_etl_cli_spark.sources.base import apply_watermark
@@ -1118,164 +1081,63 @@ def watermark_transform(p: ParsedUri) -> TransformFn:
     return run
 
 
-@register_transform("funnel")
-def funnel_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+funnel://?steps=view,click,purchase&user-col=u&ts-col=ts``.
-
-    Ordered funnel conversion over an event view (operators/events.py):
-    one row per step with user counts and conversion rate vs step 1.
-    Step k counts a user only when their earliest step-k event falls
-    strictly after their earliest qualifying step-(k-1) event.
-    """
-    steps = _csv_param(p, "steps")
-    user_col = p.params.get("user-col", "user_id")
-    type_col = p.params.get("type-col", "event_type")
-    ts_col = p.params.get("ts-col", "ts")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.events import funnel_steps
-
-        return funnel_steps(df, steps, user_col, type_col, ts_col)
-
-    return run
-
-
-@register_transform("retention")
-def retention_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+retention://?user-col=user_id&ts-col=ts``.
-
-    Weekly retention cohort matrix (operators/events.py): cohort =
-    Monday of the user's first-event week, one row per (cohort_week,
-    week_offset) with distinct active users.
-    """
-    user_col = p.params.get("user-col", "user_id")
-    ts_col = p.params.get("ts-col", "ts")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.events import retention_cohorts
-
-        return retention_cohorts(df, user_col, ts_col)
-
-    return run
-
-
-@register_transform("transitions")
-def transitions_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+transitions://?user-col=user_id&type-col=event_type&ts-col=ts&order=event_id``.
-
-    First-order Markov transition matrix of consecutive events per user
-    (operators/events.py): (from_type, to_type, n, prob), prob
-    row-normalized per from_type. ``order`` adds tie-break columns to
-    the per-user ordering.
-    """
-    user_col = p.params.get("user-col", "user_id")
-    type_col = p.params.get("type-col", "event_type")
-    ts_col = p.params.get("ts-col", "ts")
-    order_cols = _csv_param(p, "order") or None
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.events import transition_matrix
-
-        return transition_matrix(df, user_col, type_col, ts_col, order_cols)
-
-    return run
-
-
-@register_transform("cap")
+@register_transform(
+    "cap",
+    params=(
+        Param("by", doc="group column (or cap://<column>)"),
+        Param("n", "int", 1000, "rows kept per group"),
+        dataclasses.replace(
+            _ORDER, doc="priority: col[:desc] list (default all columns)"
+        ),
+    ),
+)
 def cap_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+cap://?by=source&n=1000&order=n_chars:desc,doc_id``.
+    """Per-group row cap (operators/curation.py): keep at most ``n``
+    rows per ``by`` group, in ``order`` priority.
 
-    Per-group row cap (operators/curation.py): keep at most ``n`` rows
-    per ``by`` group, priority given by ``order`` (``col[:desc]`` list;
-    default: all columns ascending — pass a unique tie-breaker for
-    reproducible survivorship). The per-domain document cap of corpus
-    curation, as a URI stage.
+    Pass a unique tie-breaker in ``order`` for reproducible
+    survivorship. The per-domain document cap of corpus curation, as a
+    URI stage.
     """
-    by = p.params.get("by") or (p.path.lstrip("/") or p.authority)
+    by = p.args["by"] or p.path_name
     if not by:
         raise ValueError("cap:// needs ?by=<group column>")
-    n = int(p.params.get("n", "1000"))
-    order_spec = _csv_param(p, "order")
+    n = p.args["n"]
+    order_spec = []
+    for item in p.args["order"]:
+        col, _, direction = item.partition(":")
+        if direction.lower() not in ("", "asc", "desc"):
+            raise ValueError(
+                f"cap:// order direction must be asc|desc, got {direction!r}"
+            )
+        order_spec.append((col, direction.lower() == "desc"))
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         from spark_etl_cli_spark.operators.curation import cap_per_group
 
-        order = None
-        if order_spec:
-            order = []
-            for item in order_spec:
-                col, _, direction = item.partition(":")
-                d = direction.lower() or "asc"
-                if d not in ("asc", "desc"):
-                    raise ValueError(
-                        f"cap:// order direction must be asc|desc, got {direction!r}"
-                    )
-                c = F.col(col)
-                order.append(c.desc() if d == "desc" else c.asc())
-        return cap_per_group(df, by, n, order)
+        order = [
+            F.col(c).desc() if desc else F.col(c).asc()
+            for c, desc in order_spec
+        ]
+        return cap_per_group(df, by, n, order or None)
 
     return run
 
 
-@register_transform("split")
-def split_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+split://?id-col=doc_id&weights=train:80,val:10,test:10&salt=v1``.
-
-    Deterministic hash-bucket dataset split (operators/curation.py):
-    appends a ``split`` label; assignments are stable across runs,
-    appends, and engines (md5 buckets, no rand()).
-    """
-    id_col = p.params.get("id-col", "id")
-    weights_spec = _csv_param(p, "weights") or ["train:80", "val:10", "test:10"]
-    weights: dict[str, int] = {}
-    for item in weights_spec:
-        label, _, w = item.partition(":")
-        weights[label] = int(w or "1")
-    salt = p.params.get("salt", "")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.curation import dataset_split
-
-        return dataset_split(df, id_col, weights, salt)
-
-    return run
-
-
-@register_transform("compact-plan")
-def compact_plan_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+compact-plan://?partition-col=source&file-col=doc_id&size-col=n_chars&target=134217728``.
-
-    OPTIMIZE-style bin-packing plan (operators/curation.py): one row
-    per (partition, bin) with file count and byte total; execution of
-    the plan is a separate rewrite stage.
-    """
-    part = p.params.get("partition-col", "partition")
-    file_col = p.params.get("file-col", "path")
-    size_col = p.params.get("size-col", "bytes")
-    target = int(p.params.get("target", str(128 * 1024 * 1024)))
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.curation import compaction_plan
-
-        return compaction_plan(df, part, file_col, size_col, target)
-
-    return run
-
-
-@register_transform("skew-profile")
+@register_transform(
+    "skew-profile",
+    params=(Param("key", doc="join key column (or skew-profile://<column>)"),
+            Param("top", "int", 10, "heaviest keys reported")),
+)
 def skew_profile_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+skew-profile://?key=o_custkey&top=20``.
-
-    Join-key skew profile (operators/curation.py): top-k heaviest keys
-    with share-of-table and count/mean skew ratio — the pre-flight
-    check that decides broadcast vs salting vs AQE skew-join handling.
-    """
-    key = p.params.get("key") or (p.path.lstrip("/") or p.authority)
+    """Join-key skew profile (operators/curation.py): top-k heaviest
+    keys with share-of-table and count/mean skew ratio — the pre-flight
+    check that decides broadcast vs salting vs AQE skew-join
+    handling."""
+    key = p.args["key"] or p.path_name
     if not key:
         raise ValueError("skew-profile:// needs ?key=<column>")
-    top = int(p.params.get("top", "10"))
+    top = p.args["top"]
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
         from spark_etl_cli_spark.operators.curation import key_skew_profile
@@ -1285,264 +1147,114 @@ def skew_profile_transform(p: ParsedUri) -> TransformFn:
     return run
 
 
-@register_transform("pagerank")
-def pagerank_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+pagerank://?src=src&dst=dst&weight=w&iters=3&damping=0.85``.
-
-    Fixed-iteration weighted PageRank over an edge view
-    (operators/graph.py): returns (vertex, pagerank), deterministic
-    under any partitioning (sorted-fold contribution sums).
-    """
-    src = p.params.get("src", "src")
-    dst = p.params.get("dst", "dst")
-    weight = p.params.get("weight", "w")
-    iters = int(p.params.get("iters", "3"))
-    damping = float(p.params.get("damping", "0.85"))
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.graph import pagerank
-
-        return pagerank(df, iters, damping, src, dst, weight)
-
-    return run
-
-
-@register_transform("triangles")
-def triangles_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+triangles://?u=u&v=v`` over canonical undirected edges
-    (one row per edge, u < v): global (n_edges, n_wedges, n_triangles)
-    via degree orientation (operators/graph.py)."""
-    u = p.params.get("u", "u")
-    v = p.params.get("v", "v")
+@register_transform(
+    "bm25",
+    params=(
+        Param("k1", "float", 1.2, "term-frequency saturation"),
+        Param("b", "float", 0.75, "length normalization"),
+        _ID_COL, _TEXT_COL,
+        Param("top-k", "int", doc="keep the best k (ties by id)"),
+    ),
+)
+def bm25_transform(p: ParsedUri) -> TransformFn:
+    """``bm25://term1,term2,...``: BM25 relevance of every doc against a
+    fixed query-term bag (operators/retrieval.py); ``top-k`` keeps the
+    best k with a deterministic id tie-break."""
+    terms = [t for t in p.path_name.split(",") if t]
+    if not terms:
+        raise ValueError("bm25:// needs at least one query term")
+    a = p.args
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.graph import triangle_count
+        from spark_etl_cli_spark.operators.retrieval import bm25_scores
 
-        return triangle_count(df, u, v)
-
-    return run
-
-
-@register_transform("tfidf-topk")
-def tfidf_topk_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+tfidf-topk://?k=5&ngram=2&df-cap-frac=0.2&id-col=doc_id&text-col=text&query-ids=0,1,2``.
-
-    Sparse TF-IDF cosine top-k retrieval (operators/retrieval.py);
-    ``query-ids`` restricts the query side (default: all docs).
-    """
-    k = int(p.params.get("k", "5"))
-    ngram = int(p.params.get("ngram", "2"))
-    frac = float(p.params.get("df-cap-frac", "0.2"))
-    id_col = p.params.get("id-col", "doc_id")
-    text_col = p.params.get("text-col", "text")
-    qids = _csv_param(p, "query-ids")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from spark_etl_cli_spark.operators.retrieval import sparse_cosine_topk
-
-        pred = F.col("query_id").isin([int(q) for q in qids]) if qids else None
-        return sparse_cosine_topk(
-            df, k=k, df_cap_frac=frac, ngram=ngram, query_pred=pred,
-            id_col=id_col, text_col=text_col,
+        scored = bm25_scores(
+            df, terms, k1=a["k1"], b=a["b"], id_col=a["id-col"],
+            text_col=a["text-col"],
         )
+        if a["top-k"]:
+            scored = scored.orderBy(
+                F.col("score").desc(), F.col(a["id-col"])
+            ).limit(a["top-k"])
+        return scored
 
     return run
 
 
-@register_transform("attribution")
-def attribution_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+attribution://?conversion=purchase&user-col=user_id&ts-col=ts&value-col=value&order=event_id``.
-
-    Last-touch conversion attribution over an event view
-    (operators/events.py): one row per touch type with conversion
-    count and total attributed value.
-    """
-    conversion = p.params.get("conversion", "purchase")
-    user_col = p.params.get("user-col", "user_id")
-    type_col = p.params.get("type-col", "event_type")
-    ts_col = p.params.get("ts-col", "ts")
-    value_col = p.params.get("value-col", "value")
-    order_cols = _csv_param(p, "order") or None
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.events import last_touch_attribution
-
-        return last_touch_attribution(
-            df, conversion, user_col, type_col, ts_col, value_col, order_cols
-        )
-
-    return run
-
-
-@register_transform("regression")
-def regression_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+regression://?x=day&y=cents&by=priority,region``.
-
-    Closed-form per-group OLS of y on x (operators/profiling.py):
-    (groups..., n, slope, intercept, r2). Integer-encoded x/y make the
-    result partition-order independent (exact sufficient statistics).
-    """
-    x = p.params.get("x")
-    y = p.params.get("y")
-    if not x or not y:
-        raise ValueError("regression:// needs ?x=<col>&y=<col>")
-    by = _csv_param(p, "by")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.profiling import group_regression
-
-        return group_regression(df, x, y, by)
-
-    return run
-
-
-@register_transform("histogram")
+@register_transform(
+    "histogram",
+    params=(
+        Param("col", doc="value column", required=True),
+        Param("lo", "float", 0.0, "lower edge of bucket 0"),
+        Param("width", "float", 1.0, "bucket width (> 0)"),
+        Param("buckets", "int", 20, "bucket count (>= 1)"),
+    ),
+)
 def histogram_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+histogram://?col=o_totalprice&lo=0&width=25000&buckets=24``.
-
-    Equi-width histogram (operators/profiling.py): (bucket, lo, hi,
-    n_rows), clamped to [0, buckets); one scan + one tiny groupBy.
-    """
-    col = p.params.get("col")
-    if not col:
-        raise ValueError("histogram:// needs ?col=<column>")
-    lo = float(p.params.get("lo", "0"))
-    width = float(p.params.get("width", "1"))
-    buckets = int(p.params.get("buckets", "20"))
-    if width <= 0:
-        raise ValueError("histogram:// needs width > 0, got %r" % width)
-    if buckets < 1:
-        raise ValueError("histogram:// needs buckets >= 1, got %r" % buckets)
+    """Equi-width histogram (operators/profiling.py): (bucket, lo, hi,
+    n_rows), clamped to [0, buckets); one scan + one tiny groupBy."""
+    a = p.args
+    if a["width"] <= 0:
+        raise ValueError("histogram:// needs width > 0, got %r" % a["width"])
+    if a["buckets"] < 1:
+        raise ValueError(
+            "histogram:// needs buckets >= 1, got %r" % a["buckets"]
+        )
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
         from spark_etl_cli_spark.operators.profiling import equi_width_histogram
 
-        return equi_width_histogram(df, col, lo, width, buckets)
+        return equi_width_histogram(
+            df, a["col"], a["lo"], a["width"], a["buckets"]
+        )
 
     return run
 
 
-@register_transform("outliers")
-def outliers_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+outliers://?col=value&by=event_type&z=3``.
-
-    Z-score outlier filter (operators/profiling.py): keeps rows with
-    |value − μ_group| > z·σ_group and appends the ``z`` column; group
-    moments broadcast back (exact sums for integral values).
-    """
-    col = p.params.get("col")
-    if not col:
-        raise ValueError("outliers:// needs ?col=<column>")
-    by = _csv_param(p, "by")
-    z = float(p.params.get("z", "3"))
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.profiling import zscore_outliers
-
-        return zscore_outliers(df, col, by, z)
-
-    return run
-
-
-@register_transform("vocab-coverage")
-def vocab_coverage_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+vocab-coverage://?text-col=text&pct=95``.
-
-    Smallest frequency-ranked vocabulary covering pct% of token
-    occurrences (operators/profiling.py): one row (vocab_size,
-    covered_tokens, total_tokens).
-    """
-    text_col = p.params.get("text-col", "text")
-    pct = int(p.params.get("pct", "95"))
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.profiling import vocab_coverage
-
-        return vocab_coverage(df, text_col, pct)
-
-    return run
-
-
-@register_transform("bpe-train")
+@register_transform(
+    "bpe-train",
+    params=(
+        Param("merges", "int", 20, "merges to learn (>= 1)"),
+        _TEXT_COL,
+        Param("max-word-len", "int", 32, "longer words are skipped"),
+    ),
+)
 def bpe_train_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+bpe-train://?merges=20&text-col=text&max-word-len=32``.
-
-    Learn a BPE merge table from the input corpus (operators/
-    encoding.py): (merge_rank, left, right, merged, pair_count), one
-    row per merge in application order — feed it to a tokenizer, or
-    join against ``vocab-encode`` pipelines.
-    """
-    merges = int(p.params.get("merges", "20"))
-    text_col = p.params.get("text-col", "text")
-    max_word_len = int(p.params.get("max-word-len", "32"))
-    if merges < 1:
+    """Learn a BPE merge table from the input corpus
+    (operators/encoding.py): (merge_rank, left, right, merged,
+    pair_count), one row per merge in application order — feed it to a
+    tokenizer, or join against ``encode://`` pipelines."""
+    a = p.args
+    if a["merges"] < 1:
         raise ValueError("bpe-train:// needs merges >= 1")
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
         from spark_etl_cli_spark.operators.encoding import bpe_train
 
-        return bpe_train(df, merges, text_col, max_word_len)
+        return bpe_train(df, a["merges"], a["text-col"], a["max-word-len"])
 
     return run
 
 
-@register_transform("novelty")
-def novelty_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+novelty://?id-col=doc_id&text-col=text&k=3``.
-
-    Per-document first-occurrence k-gram novelty share
-    (operators/profiling.py): (id, n_shingles, n_novel, novelty) — the
-    corpus-audit memorization signal.
-    """
-    id_col = p.params.get("id-col", "doc_id")
-    text_col = p.params.get("text-col", "text")
-    k = int(p.params.get("k", "3"))
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.profiling import ngram_novelty
-
-        return ngram_novelty(df, id_col, text_col, k)
-
-    return run
-
-
-@register_transform("k-anon")
-def k_anon_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+k-anon://?by=nationkey,segment&k=5``.
-
-    k-anonymity audit (operators/profiling.py): quasi-identifier
-    groups with fewer than k members — the pre-release privacy check.
-    """
-    by = _csv_param(p, "by")
-    if not by:
-        raise ValueError("k-anon:// needs ?by=<qi-col,...>")
-    k = int(p.params.get("k", "5"))
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.profiling import k_anonymity
-
-        return k_anonymity(df, by, k)
-
-    return run
-
-
-@register_transform("media")
+@register_transform(
+    "media",
+    params=(
+        _id_col("media_id"),
+        Param("kind", default="image", doc="media kind"),
+        Param("payload-col", default="payload", doc="binary payload column"),
+    ),
+)
 def media_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+media://?id-col=path&kind=image&payload-col=content``.
+    """Normalize any frame (e.g. a ``binaryfile://`` read) into the
+    media schema (media_id, kind, payload, meta).
 
-    Normalize any frame (e.g. a ``binaryfile://`` read) into the media
-    schema (media_id, kind, payload, meta). Non-numeric id columns
-    (file paths) are hashed to a stable 64-bit media_id.
+    Non-numeric id columns (file paths) are hashed to a stable 64-bit
+    media_id.
     """
-    id_col = p.params.get("id-col", "media_id")
-    kind = p.params.get("kind", "image")
-    payload_col = p.params.get("payload-col", "payload")
+    a = p.args
+    id_col = a["id-col"]
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         from spark_etl_cli_spark.operators.multimodal import (
             attach_binary_payload,
         )
@@ -1550,27 +1262,35 @@ def media_transform(p: ParsedUri) -> TransformFn:
         dtype = dict(df.dtypes).get(id_col)
         if dtype not in ("bigint", "int", "long", "smallint", "tinyint"):
             df = df.withColumn("__media_id", F.xxhash64(F.col(id_col)))
-            return attach_binary_payload(df, "__media_id", kind, payload_col)
-        return attach_binary_payload(df, id_col, kind, payload_col)
+            return attach_binary_payload(
+                df, "__media_id", a["kind"], a["payload-col"]
+            )
+        return attach_binary_payload(df, id_col, a["kind"], a["payload-col"])
 
     return run
 
 
-@register_transform("media-features")
+@register_transform(
+    "media-features",
+    params=(
+        Param("op", "enum", "image", "feature extractor",
+              choices=("image", "audio", "frames", "resize")),
+        Param("fake", "bool", True, "digest-derived stub instead of codecs"),
+        Param("every-n", "int", 10, "frames: keep every n-th frame"),
+        Param("width", "int", 64, "resize: width"),
+        Param("height", "int", 64, "resize: height"),
+    ),
+)
 def media_features_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+media-features://?op=image|audio|frames|resize&fake=true``.
+    """Arrow-batched feature extraction over a media view
+    (operators/multimodal.py).
 
-    Arrow-batched feature extraction over a media view
-    (operators/multimodal.py). Real codecs need PIL/ffmpeg/librosa;
-    ``fake=true`` (default here — the container has no codecs) runs
-    the deterministic digest-derived stub so the batch plumbing is
-    exercised for real.
+    Real codecs need PIL/ffmpeg/librosa; ``fake=true`` (default here —
+    the container has no codecs) runs the deterministic digest-derived
+    stub so the batch plumbing is exercised for real.
     """
-    op = p.params.get("op", "image")
-    fake = p.params.get("fake", "true").lower() != "false"
-    every_n = int(p.params.get("every-n", "10"))
-    width = int(p.params.get("width", "64"))
-    height = int(p.params.get("height", "64"))
+    a = p.args
+    op, fake = a["op"], a["fake"]
 
     def run(spark: SparkSession, df: DataFrame) -> DataFrame:
         from spark_etl_cli_spark.operators import multimodal as mm
@@ -1580,44 +1300,7 @@ def media_features_transform(p: ParsedUri) -> TransformFn:
         if op == "audio":
             return mm.decode_audio_features(df, fake=fake)
         if op == "frames":
-            return mm.sample_frames(df, every_n=every_n, fake=fake)
-        if op == "resize":
-            return mm.resize_images(df, width, height, fake=fake)
-        raise ValueError(f"media-features:// unknown op {op!r}")
-
-    return run
-
-
-@register_transform("payload-dedup")
-def payload_dedup_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+payload-dedup://?id-col=media_id&payload-col=payload``:
-    content-addressable exact dedup groups over binary payloads
-    (operators/multimodal.py) — (digest, keep_id, group_size, n_bytes)
-    per duplicate group; the shuffle carries digests, not payloads."""
-    id_col = p.params.get("id-col", "media_id")
-    payload_col = p.params.get("payload-col", "payload")
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.multimodal import (
-            payload_dedup_groups,
-        )
-
-        return payload_dedup_groups(df, id_col, payload_col)
-
-    return run
-
-
-@register_transform("chunk-dedup")
-def chunk_dedup_transform(p: ParsedUri) -> TransformFn:
-    """``in+out+chunk-dedup://?payload-col=payload&chunk-bytes=256``:
-    fixed-size chunk dedup savings estimate (one row: total/unique/dup
-    chunks + ratio) over binary payloads (operators/multimodal.py)."""
-    payload_col = p.params.get("payload-col", "payload")
-    chunk_bytes = int(p.params.get("chunk-bytes", "256"))
-
-    def run(spark: SparkSession, df: DataFrame) -> DataFrame:
-        from spark_etl_cli_spark.operators.multimodal import chunk_dedup_stats
-
-        return chunk_dedup_stats(df, payload_col, chunk_bytes)
+            return mm.sample_frames(df, every_n=a["every-n"], fake=fake)
+        return mm.resize_images(df, a["width"], a["height"], fake=fake)
 
     return run

@@ -10,7 +10,7 @@ Each connector may also contribute SparkSession confs (e.g. Delta's SQL
 extension), merged at session build time — mirroring reference
 ``ETL.scala:110-117``.
 
-Sources and sinks register with ``params=``, a tuple of
+Sources, sinks and transforms register with ``params=``, a tuple of
 ``uri.Param``: the scheme's whole query-parameter surface. Resolving a
 URI types its params against that spec into ``ParsedUri.args`` (the
 reference parsed each connector's query string by hand,
@@ -21,6 +21,7 @@ before the pipeline runs anything.
 from __future__ import annotations
 
 import dataclasses
+import inspect
 from collections.abc import Callable
 from typing import TYPE_CHECKING
 
@@ -46,37 +47,32 @@ class UnknownSchemeError(KeyError):
     pass
 
 
-def register_source(
-    *schemes: str, params: tuple[Param, ...] = ()
-) -> Callable[[SourceFactory], SourceFactory]:
-    def deco(factory: SourceFactory) -> SourceFactory:
+def _register(kind: str, factories: dict, schemes, params):
+    def deco(factory):
         for s in schemes:
-            _SOURCES[s] = factory
-            _PARAMS["source", s] = tuple(params)
+            factories[s] = factory
+            _PARAMS[kind, s] = tuple(params)
         return factory
 
     return deco
+
+
+def register_source(
+    *schemes: str, params: tuple[Param, ...] = ()
+) -> Callable[[SourceFactory], SourceFactory]:
+    return _register("source", _SOURCES, schemes, params)
 
 
 def register_sink(
     *schemes: str, params: tuple[Param, ...] = ()
 ) -> Callable[[SinkFactory], SinkFactory]:
-    def deco(factory: SinkFactory) -> SinkFactory:
-        for s in schemes:
-            _SINKS[s] = factory
-            _PARAMS["sink", s] = tuple(params)
-        return factory
-
-    return deco
+    return _register("sink", _SINKS, schemes, params)
 
 
-def register_transform(*schemes: str) -> Callable[[TransformFactory], TransformFactory]:
-    def deco(factory: TransformFactory) -> TransformFactory:
-        for s in schemes:
-            _TRANSFORMS[s] = factory
-        return factory
-
-    return deco
+def register_transform(
+    *schemes: str, params: tuple[Param, ...] = ()
+) -> Callable[[TransformFactory], TransformFactory]:
+    return _register("transform", _TRANSFORMS, schemes, params)
 
 
 def contribute_spark_confs(confs: dict[str, str]) -> None:
@@ -119,15 +115,7 @@ def resolve_sink(uri: str) -> tuple[ParsedUri, "DataFrameSink"]:
 
 
 def resolve_transform(uri: str) -> tuple[ParsedUri, "TransformFn"]:
-    _ensure_builtins()
-    p = parse_uri(uri)
-    try:
-        return p, _TRANSFORMS[p.scheme](p)
-    except KeyError:
-        raise UnknownSchemeError(
-            f"no transform registered for scheme {p.scheme!r} "
-            f"(known: {sorted(_TRANSFORMS)})"
-        ) from None
+    return _resolve("transform", _TRANSFORMS, uri)
 
 
 def known_schemes() -> dict[str, list[str]]:
@@ -140,25 +128,29 @@ def known_schemes() -> dict[str, list[str]]:
 
 
 def describe_schemes() -> str:
-    """``--list-schemes`` text: each source and sink scheme with its
-    parameters (name, type, default, doc), schemes that share a spec
-    listed together; transforms by name."""
+    """``--list-schemes`` text: each scheme with its parameters (name,
+    type, default, doc), schemes that share a spec listed together;
+    a transform also with the first paragraph of its doc."""
     _ensure_builtins()
     out = []
-    for kind, factories in (("source", _SOURCES), ("sink", _SINKS)):
+    for kind, factories in (("source", _SOURCES), ("sink", _SINKS),
+                            ("transform", _TRANSFORMS)):
         out.append(f"{kind}s:")
-        groups: dict[int, tuple[list[str], tuple[Param, ...]]] = {}
+        groups: dict[tuple, tuple[list[str], tuple[Param, ...], str]] = {}
         for scheme in sorted(factories):
             spec = _PARAMS.get((kind, scheme), ())
-            groups.setdefault(id(spec), ([], spec))[0].append(scheme)
-        for schemes, spec in groups.values():
+            doc = ""
+            if kind == "transform":
+                doc = (inspect.getdoc(factories[scheme]) or "").split("\n\n")[0]
+            groups.setdefault((id(spec), doc), ([], spec, doc))[0].append(scheme)
+        for schemes, spec, doc in groups.values():
             out.append("  " + ", ".join(schemes))
+            out += ["    " + line for line in doc.splitlines()]
             # the forwarding marker last: it covers "every other key"
             ordered = sorted(spec, key=lambda prm: prm.name == "*")
             out += ["    " + _describe_param(prm) for prm in ordered]
             if not spec:
                 out.append("    (no parameters)")
-    out.append("transforms: " + ", ".join(sorted(_TRANSFORMS)))
     return "\n".join(out)
 
 
@@ -171,6 +163,7 @@ def _describe_param(p: Param) -> str:
     if p.required:
         kind += ", required"
     elif p.default not in (None, "", [], {}):
-        kind += f" = {p.default}"
+        default = p.default
+        kind += f" = {','.join(default) if isinstance(default, list) else default}"
     name = " | ".join((p.name, *p.aliases))
     return f"{name:<28} {kind:<22} {p.doc}"

@@ -22,7 +22,7 @@ class ViewSource:
     uri: ParsedUri
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.table(self.uri.path.lstrip("/") or self.uri.authority)
+        return spark.table(self.uri.path_name)
 
 
 @dataclass
@@ -30,7 +30,7 @@ class MemorySink:
     uri: ParsedUri
 
     def write(self, df: DataFrame) -> bool:
-        name = self.uri.path.lstrip("/") or self.uri.authority or "memory_out"
+        name = self.uri.path_name or "memory_out"
         if not df.isStreaming:
             df.createOrReplaceTempView(name)
             return True

@@ -14,11 +14,13 @@ Streaming variants use a ``-stream`` scheme suffix (e.g.
 ``parquet-stream://``), mirroring reference
 ``core/.../DataFrameSource.scala:33-45``.
 
-Each source/sink scheme declares its query parameters once, as a tuple
-of :class:`Param` (``registry.register_source(..., params=...)``);
-:func:`parse_params` types every value against that spec and rejects
-unknown keys, bad values and missing required ones, so a misspelled
-parameter fails when the URI resolves instead of being ignored.
+Each source, sink and transform scheme declares its query parameters
+once, as a tuple of :class:`Param` (``registry.register_*(...,
+params=...)``); :func:`parse_params` types every value against that
+spec and rejects unknown keys, bad values and missing required ones, so
+a misspelled parameter fails when the URI resolves instead of being
+ignored. ``sql://`` text is SQL, never a query string: only a leading
+``sql://?query=<encoded SQL>`` is read as a parameter.
 """
 
 from __future__ import annotations
@@ -55,13 +57,20 @@ class ParsedUri:
         parsed = urllib.parse.urlparse(self.raw)
         return parsed.netloc
 
+    @property
+    def path_name(self) -> str:
+        """The path without its leading ``/``, else the authority: the
+        name a URI carries after ``://`` (``memory://view``, the second
+        view of ``asof://view``, the terms of ``bm25://a,b``)."""
+        return self.path.lstrip("/") or self.authority
+
     def first_path_part(self) -> str:
         return self.path.lstrip("/").split("/", 1)[0]
 
 
 @dataclass(frozen=True)
 class Param:
-    """One query parameter of a source/sink scheme.
+    """One query parameter of a source, sink or transform scheme.
 
     ``type`` is ``str``, ``int``, ``float``, ``bool`` (1/0, true/false,
     yes/no), ``csv`` (comma list → ``list[str]``) or ``enum`` (one of
@@ -151,6 +160,8 @@ def parse_params(
             args[p.name] = _default(p)
             continue
         raw = given[keys[0]]
+        if p.required and raw == "":
+            raise fail(f"missing required parameter {p.name!r}")
         try:
             args[p.name] = _typed(p, raw)
         except (ValueError, KeyError):
@@ -180,9 +191,12 @@ def parse_uri(uri: str) -> ParsedUri:
     *names, scheme = head.split("+")
     canonical = scheme + "://" + _rest
     parsed = urllib.parse.urlparse(canonical)
+    query = parsed.query
+    if scheme == "sql" and not _rest.startswith("?query="):
+        query = ""  # SQL text, even with "?k=v" inside it
     params = {
         k: v[-1]
-        for k, v in urllib.parse.parse_qs(parsed.query, keep_blank_values=True).items()
+        for k, v in urllib.parse.parse_qs(query, keep_blank_values=True).items()
     }
     # netloc-style URIs (kafka://host:port/topic) keep netloc out of path
     raw_path = parsed.path

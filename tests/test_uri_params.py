@@ -1,5 +1,6 @@
-"""Per-scheme URI parameter specs: every source and sink scheme types its
-query params at resolve time and rejects keys it does not declare.
+"""Per-scheme URI parameter specs: every source, sink and transform
+scheme types its query params at resolve time and rejects keys it does
+not declare.
 
 No SparkSession: resolving a URI only builds the connector object.
 """
@@ -35,6 +36,13 @@ FORWARDING = {
         "orc", "orc-stream", "parquet", "parquet-stream", "text",
         "text-stream", "xml", "xml-stream",
     },
+    "transform": set(),  # every transform spec is closed
+}
+
+RESOLVE = {
+    "source": registry.resolve_source,
+    "sink": registry.resolve_sink,
+    "transform": registry.resolve_transform,
 }
 
 
@@ -43,7 +51,8 @@ def _registered():
     return [
         (kind, scheme)
         for kind, factories in (("source", registry._SOURCES),
-                                ("sink", registry._SINKS))
+                                ("sink", registry._SINKS),
+                                ("transform", registry._TRANSFORMS))
         for scheme in sorted(factories)
     ]
 
@@ -55,12 +64,15 @@ def _uri_with_required(kind: str, scheme: str, extra: str) -> str:
         if p.required:
             key = p.name[:-1] + "x" if p.name.endswith("*") else p.name
             query.append(f"{key}={p.choices[0] if p.choices else '1'}")
+    if kind == "transform" and scheme == "sql":
+        # sql:// text is never parsed as parameters; ?query= is
+        return "x+sql://?query=SELECT%201&" + extra
     return f"x+{scheme}:///t?" + "&".join(query + [extra])
 
 
 @pytest.mark.parametrize("kind, scheme", _registered())
 def test_scheme_rejects_or_forwards_unknown_params(kind, scheme):
-    resolve = registry.resolve_source if kind == "source" else registry.resolve_sink
+    resolve = RESOLVE[kind]
     uri = _uri_with_required(kind, scheme, "no-such-param=1")
     if scheme in FORWARDING[kind]:
         p, _ = resolve(uri)
@@ -84,19 +96,25 @@ def test_forwarding_list_matches_specs():
     assert open_specs == listed
 
 
-def test_typo_stops_pipeline_before_any_source_runs(monkeypatch, tmp_path):
-    """``deletion-vector`` (singular) used to be ignored, so the delete
-    rewrote every matched file instead of writing deletion vectors."""
-    reads = []
+@pytest.fixture
+def reads(monkeypatch):
+    """The URIs a ``test-counting://`` source has read."""
+    seen = []
 
     class CountingSource:
         def __init__(self, uri):
             self.uri = uri
 
         def read(self, spark):
-            reads.append(self.uri)
+            seen.append(self.uri)
 
     monkeypatch.setitem(registry._SOURCES, "test-counting", CountingSource)
+    return seen
+
+
+def test_typo_stops_pipeline_before_any_source_runs(reads, tmp_path):
+    """``deletion-vector`` (singular) used to be ignored, so the delete
+    rewrote every matched file instead of writing deletion vectors."""
     with pytest.raises(ValueError, match="'deletion-vector'.*deletion-vectors"):
         run_pipeline(
             None,  # never reached: resolving fails first
@@ -107,6 +125,62 @@ def test_typo_stops_pipeline_before_any_source_runs(monkeypatch, tmp_path):
             ],
         )
     assert reads == []
+
+
+def test_transform_typo_stops_pipeline_before_any_source_runs(reads):
+    """``max-punct-ratio`` used to be ignored, so the gate ran at the
+    default ``max-punct=0.3`` instead of 0.4."""
+    with pytest.raises(
+        ValueError,
+        match="quality-filter transform: unknown parameter 'max-punct-ratio'"
+        ".*max-punct",
+    ):
+        run_pipeline(
+            None,  # never reached: resolving fails first
+            sources=["c+test-counting://"],
+            transforms=["c+d+quality-filter://?max-punct-ratio=0.4"],
+        )
+    assert reads == []
+
+
+@pytest.mark.parametrize("uri, match", [
+    ("cache://?storage=MEMORY_ONLYY", "'storage' expects .*MEMORY_ONLY"),
+    ("dedup://?mode=minhsh", "'mode' expects exact|minhash"),
+    ("diff://v?id=k&handleDifferences=filtr", "'handleDifferences' expects"),
+    ("a+b+regression://?x=day", "missing required parameter 'y'"),
+    ("a+b+k-anon://?by=", "missing required parameter 'by'"),
+])
+def test_transform_bad_value_fails_at_resolve(uri, match):
+    with pytest.raises(ValueError, match=match):
+        registry.resolve_transform(uri)
+
+
+def test_transform_values_are_typed():
+    p, _ = registry.resolve_transform(
+        "dedup://?mode=incremental&first-batch=yes&validate-ids=0"
+    )
+    assert p.args["first-batch"] is True
+    assert p.args["validate-ids"] is False
+    assert p.args["require-state"] is False
+    p, _ = registry.resolve_transform("a+b+chunk://?stride=32")
+    assert (p.args["stride"], p.args["chunk-tokens"]) == (32, 64)
+
+
+def test_sql_text_is_never_parsed_as_params():
+    ran = []
+
+    class RecordingSpark:
+        def sql(self, text):
+            ran.append(text)
+
+    sql = "SELECT * FROM a WHERE u LIKE '%?id=%' AND v = 'x&mode=y'"
+    p, fn = registry.resolve_transform("a+b+sql://" + sql)
+    assert p.params == {}
+    fn(RecordingSpark(), None)
+    p, fn = registry.resolve_transform("sql://?query=SELECT%20*%20FROM%20a")
+    assert p.args["query"] == "SELECT * FROM a"
+    fn(RecordingSpark(), None)
+    assert ran == [sql, "SELECT * FROM a"]
 
 
 def test_cli_typo_fails_before_spark_starts(monkeypatch):
@@ -154,6 +228,10 @@ def test_list_schemes_prints_each_spec(capsys):
     assert "  delta-optimize\n" in out
     assert "min-files" in out and "int = 2" in out
     assert "forwarded" in out  # the file formats, jdbc, kafka, rate
+    transforms = out[out.index("transforms:\n"):]
+    assert "  chunk\n    Overlapping context-window chunks" in transforms
+    assert "chunk-tokens" in transforms and "int = 64" in transforms
+    assert "csv, required" in transforms  # cdc-apply key/sequence
 
 
 def test_importing_sources_loads_no_lakehouse_module():
@@ -169,6 +247,23 @@ def test_importing_sources_loads_no_lakehouse_module():
     assert out.strip() == "[]"
 
 
+def test_importing_transforms_loads_operators_lazily():
+    code = (
+        "import sys; import spark_etl_cli_spark.operators.transforms; "
+        "print(sorted(m for m in sys.modules "
+        "if m.startswith('spark_etl_cli_spark.operators.')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=PKG.parent, check=True,
+        capture_output=True, text=True,
+    ).stdout
+    loaded = set(ast.literal_eval(out)) - {"spark_etl_cli_spark.operators.transforms"}
+    assert loaded <= {
+        "spark_etl_cli_spark.operators.diff",
+        "spark_etl_cli_spark.operators.schema_tools",
+    }
+
+
 def _params_reads(path: Path):
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         target = (
@@ -181,12 +276,14 @@ def _params_reads(path: Path):
             yield node.lineno
 
 
-def test_sources_read_no_raw_params():
-    """Connectors read ``ParsedUri.args`` (typed by their scheme's spec);
-    a raw ``.params`` read would bypass the spec and its validation."""
+def test_package_reads_no_raw_params():
+    """Connectors and transforms read ``ParsedUri.args`` (typed by their
+    scheme's spec); a raw ``.params`` read would bypass the spec and its
+    validation. Only URI parsing itself reads the raw params."""
     found = [
         f"{path.relative_to(PKG)}:{line}"
-        for path in sorted((PKG / "sources").rglob("*.py"))
+        for path in sorted(PKG.rglob("*.py"))
+        if path.relative_to(PKG).as_posix() not in ("registry.py", "uri.py")
         for line in _params_reads(path)
     ]
     assert found == [], "raw .params read: " + ", ".join(found)
