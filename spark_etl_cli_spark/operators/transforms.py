@@ -379,43 +379,64 @@ def sql_file_transform(p: ParsedUri) -> TransformFn:
     return run
 
 
+def _dedup_mode(a: Args) -> str:
+    """``tier=substring`` without a mode means ``mode=substring``."""
+    return a["mode"] or ("substring" if a["tier"] == "substring" else "exact")
+
+
+_INCR = ("incremental",)
+_SUBSTR = ("substring",)
 _DEDUP_PARAMS = (
     Param("mode", "enum",
           doc="exact keeps one row per normalized text; the others emit "
           "candidate pairs or decisions (default exact)",
           choices=("exact", "minhash", "simhash", "jaccard", "semdedup",
-                   "incremental", "substring")),
+                   "incremental", "substring"),
+          select=_dedup_mode),
     Param("tier", "enum", "minhash",
           "incremental probe; substring without mode means mode=substring",
-          choices=("minhash", "exact", "cosine", "substring")),
-    _TEXT_COL,
+          choices=("minhash", "exact", "cosine", "substring"),
+          modes=_INCR + _SUBSTR),
+    dataclasses.replace(
+        _TEXT_COL, modes=("exact", "minhash", "simhash", "jaccard",
+                          "incremental", "substring"),
+    ),
     dataclasses.replace(
         _ID_COL, default=None,
         doc="row id column (default doc_id; vec_id for semdedup, cosine)",
     ),
-    _VEC_COL,
+    dataclasses.replace(_VEC_COL, modes=("semdedup", "incremental")),
     Param("threshold", "float",
-          doc="similarity cut (default 0.5; 0.95 semdedup; 0.3 cosine)"),
-    Param("num-hashes", "int", 32, "minhash permutations"),
-    Param("bands", "int", doc="LSH bands (default 8; 4 for cosine)"),
-    Param("shingle-k", "int", 3, "incremental minhash shingle size"),
+          doc="similarity cut (default 0.5; 0.95 semdedup; 0.3 cosine)",
+          modes=("jaccard", "semdedup", "incremental")),
+    Param("num-hashes", "int", 32, "minhash permutations",
+          modes=("minhash", "incremental")),
+    Param("bands", "int", doc="LSH bands (default 8; 4 for cosine)",
+          modes=("minhash", "incremental")),
+    Param("shingle-k", "int", 3, "incremental minhash shingle size",
+          modes=_INCR),
     Param("hash-family", "enum", "fast", "incremental minhash hash family",
-          choices=("fast", "oracle")),
-    Param("clusters", "int", 16, "semdedup k-means cells"),
-    Param("planes", "int", 16, "cosine LSH hyperplanes"),
+          choices=("fast", "oracle"), modes=_INCR),
+    Param("clusters", "int", 16, "semdedup k-means cells",
+          modes=("semdedup",)),
+    Param("planes", "int", 16, "cosine LSH hyperplanes", modes=_INCR),
     Param("state", doc="incremental: probe rows of earlier batches "
-          "(delta or parquet)"),
-    Param("first-batch", "bool", False, "a missing state is expected"),
-    Param("require-state", "bool", False, "a missing state is an error"),
+          "(delta or parquet)", modes=_INCR),
+    Param("first-batch", "bool", False, "a missing state is expected",
+          modes=_INCR),
+    Param("require-state", "bool", False, "a missing state is an error",
+          modes=_INCR),
     Param("validate-ids", "bool", True,
-          "check every state id < every batch id"),
-    Param("k", "int", 8, "substring: window tokens"),
+          "check every state id < every batch id", modes=_INCR),
+    Param("k", "int", 8, "substring: window tokens", modes=_SUBSTR),
     Param("key", "enum", "text", "substring: window keys",
-          choices=("text", "hash")),
-    Param("max-df", "int", doc="substring: skip windows in more docs"),
-    Param("min-span", "int", doc="substring: shortest span (default k+4)"),
+          choices=("text", "hash"), modes=_SUBSTR),
+    Param("max-df", "int", doc="substring: skip windows in more docs",
+          modes=_SUBSTR),
+    Param("min-span", "int", doc="substring: shortest span (default k+4)",
+          modes=_SUBSTR),
     Param("emit", "enum", "spans", "substring output",
-          choices=("spans", "decisions", "scrub")),
+          choices=("spans", "decisions", "scrub"), modes=_SUBSTR),
 )
 
 
@@ -434,7 +455,7 @@ def dedup_transform(p: ParsedUri) -> TransformFn:
     the 8-byte-hash 100 TB shuffle with span-grain verification.
     """
     a = p.args
-    mode = a["mode"] or ("substring" if a["tier"] == "substring" else "exact")
+    mode = _dedup_mode(a)
     if mode == "incremental" and a["tier"] == "substring":
         raise ValueError("dedup://?mode=incremental: tier must be "
                          "minhash|exact|cosine, got 'substring'")
@@ -640,16 +661,18 @@ def _incremental_dedup_run(
     "decontaminate",
     params=(
         Param("n", "int", 8, "word n-gram / window size"),
-        Param("min-shared", "int", 1, "ngram: shared n-grams that drop a doc"),
+        Param("min-shared", "int", 1, "ngram: shared n-grams that drop a doc",
+              modes=("ngram",)),
         _ID_COL, _TEXT_COL,
         Param("pairs", "bool", False, "emit the collision report instead"),
         Param("mode", "enum", "ngram", "contamination rule",
-              choices=("ngram", "substring")),
+              choices=("ngram", "substring"), select=lambda a: a["mode"]),
         Param("action", "enum", "drop", "substring: what to do",
-              choices=("drop", "scrub", "spans")),
+              choices=("drop", "scrub", "spans"), modes=_SUBSTR),
         Param("key", "enum", "text", "substring: window keys",
-              choices=("text", "hash")),
-        Param("min-span", "int", doc="substring: shortest span (default n+4)"),
+              choices=("text", "hash"), modes=_SUBSTR),
+        Param("min-span", "int", doc="substring: shortest span (default n+4)",
+              modes=_SUBSTR),
     ),
 )
 def decontaminate_transform(p: ParsedUri) -> TransformFn:
@@ -1274,11 +1297,13 @@ def media_transform(p: ParsedUri) -> TransformFn:
     "media-features",
     params=(
         Param("op", "enum", "image", "feature extractor",
-              choices=("image", "audio", "frames", "resize")),
+              choices=("image", "audio", "frames", "resize"),
+              select=lambda a: a["op"]),
         Param("fake", "bool", True, "digest-derived stub instead of codecs"),
-        Param("every-n", "int", 10, "frames: keep every n-th frame"),
-        Param("width", "int", 64, "resize: width"),
-        Param("height", "int", 64, "resize: height"),
+        Param("every-n", "int", 10, "frames: keep every n-th frame",
+              modes=("frames",)),
+        Param("width", "int", 64, "resize: width", modes=("resize",)),
+        Param("height", "int", 64, "resize: height", modes=("resize",)),
     ),
 )
 def media_features_transform(p: ParsedUri) -> TransformFn:

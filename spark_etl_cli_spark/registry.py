@@ -25,7 +25,13 @@ import inspect
 from collections.abc import Callable
 from typing import TYPE_CHECKING
 
-from spark_etl_cli_spark.uri import Param, ParsedUri, parse_params, parse_uri
+from spark_etl_cli_spark.uri import (
+    Param,
+    ParsedUri,
+    mode_params,
+    parse_params,
+    parse_uri,
+)
 
 if TYPE_CHECKING:
     from spark_etl_cli_spark.sources.base import DataFrameSink, DataFrameSource
@@ -130,7 +136,8 @@ def known_schemes() -> dict[str, list[str]]:
 def describe_schemes() -> str:
     """``--list-schemes`` text: each scheme with its parameters (name,
     type, default, doc), schemes that share a spec listed together;
-    a transform also with the first paragraph of its doc."""
+    a transform also with the first paragraph of its doc, and a scheme
+    with modes with the parameters each mode reads."""
     _ensure_builtins()
     out = []
     for kind, factories in (("source", _SOURCES), ("sink", _SINKS),
@@ -149,6 +156,12 @@ def describe_schemes() -> str:
             # the forwarding marker last: it covers "every other key"
             ordered = sorted(spec, key=lambda prm: prm.name == "*")
             out += ["    " + _describe_param(prm) for prm in ordered]
+            for sel in (prm for prm in spec if prm.select):
+                out += [
+                    f"    {sel.name}={m}: "
+                    + ", ".join(prm.name for prm in mode_params(spec, m))
+                    for m in sel.choices
+                ]
             if not spec:
                 out.append("    (no parameters)")
     return "\n".join(out)

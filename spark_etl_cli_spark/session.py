@@ -18,6 +18,9 @@ Defaults are tuned for correctness-at-scale first:
 
 :func:`local_frame` is how the package builds a DataFrame from rows
 it holds on the driver (reports, file lists, deletion positions).
+
+The call that launches the driver JVM starts it from a class-data-sharing
+archive when one can be used (``cds.py``; README "Cold start").
 """
 
 from __future__ import annotations
@@ -27,8 +30,11 @@ from collections.abc import Callable, Iterable
 from pathlib import Path
 from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from spark_etl_cli_spark import cds
 
 
 def default_parallelism() -> int:
@@ -134,9 +140,18 @@ def get_spark(
     if Path(root).name not in ("site-packages", "dist-packages"):
         key = "spark.executorEnv.PYTHONPATH"
         confs[key] = os.pathsep.join(p for p in (confs.get(key), root) if p)
-    for k, v in confs.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+
+    def start(confs: dict[str, str]) -> SparkSession:
+        for k, v in confs.items():
+            builder.config(k, v)
+        return builder.getOrCreate()
+
+    # Only a call that launches the driver JVM can choose its command
+    # line; an earlier session's or a PySpark shell's JVM keeps its own.
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        spark = cds.launch(confs, start)
+    else:
+        spark = start(confs)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

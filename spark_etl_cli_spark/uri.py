@@ -26,6 +26,7 @@ ignored. ``sql://`` text is SQL, never a query string: only a leading
 from __future__ import annotations
 
 import urllib.parse
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -79,6 +80,11 @@ class Param:
     ``{col: expr}``. A parameter named ``*`` alone marks a forwarding
     spec: keys it does not declare are passed on in ``Args.extra``
     (to Spark as reader/writer options) instead of being rejected.
+
+    A scheme with modes marks its mode parameter with ``select``, which
+    maps the typed args to the chosen mode, and gives each parameter
+    that only some modes read their names in ``modes``. A URI that sets
+    a parameter its mode does not read is rejected.
     """
 
     name: str
@@ -88,6 +94,8 @@ class Param:
     required: bool = False
     aliases: tuple[str, ...] = ()
     choices: tuple[str, ...] = ()
+    modes: tuple[str, ...] = ()
+    select: Callable[[Args], str] | None = None
 
 
 class Args(dict):
@@ -121,6 +129,12 @@ def _typed(p: Param, raw: str):
     return raw
 
 
+def _reads(p: Param, key: str) -> bool:
+    if p.name.endswith("*"):
+        return key.startswith(p.name[:-1])
+    return key in (p.name, *p.aliases)
+
+
 def _default(p: Param):
     return [] if p.default is None and p.type == "csv" else p.default
 
@@ -132,9 +146,10 @@ def parse_params(
 
     Raises ``ValueError`` naming ``where`` (e.g. ``"delta-delete
     source"``) and listing the spec's parameters for an unknown key in
-    a closed spec, a value its type rejects, or a missing required
-    parameter. The first of a parameter's name and aliases present in
-    ``given`` wins.
+    a closed spec, a value its type rejects or a missing required
+    parameter, and listing the mode's parameters for a key the chosen
+    mode does not read. The first of a parameter's name and aliases
+    present in ``given`` wins.
     """
     def fail(msg: str) -> ValueError:
         names = ", ".join(p.name for p in spec) or "none"
@@ -172,9 +187,25 @@ def parse_params(
     unknown = [k for k in given if k not in used]
     if unknown and not any(p.name == "*" for p in spec):
         raise fail(f"unknown parameter {', '.join(map(repr, unknown))}")
+    for sel in (p for p in spec if p.select):
+        mode = sel.select(args)
+        stray = [k for p in spec if p.modes and mode not in p.modes
+                 for k in given if _reads(p, k)]
+        if stray:
+            names = ", ".join(p.name for p in mode_params(spec, mode))
+            raise ValueError(
+                f"{where}: {', '.join(map(repr, stray))} does not "
+                f"apply to {sel.name}={mode}; valid parameters for "
+                f"{sel.name}={mode}: {names}"
+            )
     args.given = {k: given[k] for k in used}
     args.extra = {k: given[k] for k in unknown}
     return args
+
+
+def mode_params(spec: tuple[Param, ...], mode: str) -> list[Param]:
+    """The parameters of ``spec`` that ``mode`` reads."""
+    return [p for p in spec if not p.modes or mode in p.modes]
 
 
 def normalize_view_name(name: str) -> str:

@@ -1,6 +1,9 @@
 """Session construction and ``local_frame``: driver-built rows become a
 JVM LocalRelation with the same rows ``createDataFrame`` over a Python
-list gives, and the package builds no Python-RDD frames."""
+list gives, and the package builds no Python-RDD frames. Also the
+driver JVM's class-data-sharing archive (``cds.py``): its key, when it
+is skipped, built or used, and that a bad archive still starts a
+session."""
 
 from __future__ import annotations
 
@@ -225,3 +228,217 @@ def test_python_workers_find_package_from_any_cwd(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "rows 3" in out.stdout
+
+
+# --- class-data-sharing archive (cds.py), no SparkSession ---------------
+
+CONFS = {"spark.driver.memory": "1g",
+         "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g",
+         "spark.sql.shuffle.partitions": "8"}
+
+
+@pytest.fixture
+def cds_env(tmp_path, monkeypatch):
+    """A fake Spark home (two jars, a conf dir of templates), a fake JDK
+    and an empty cache; returns (home, jdk, cache)."""
+    from spark_etl_cli_spark import cds
+
+    home, jdk = tmp_path / "spark", tmp_path / "jdk"
+    (home / "jars").mkdir(parents=True)
+    (home / "conf").mkdir()
+    jdk.mkdir()
+    for name in ("spark-core.jar", "scala-library.jar"):
+        (home / "jars" / name).write_bytes(b"jar")
+    (home / "conf" / "spark-defaults.conf.template").write_text("# x\n")
+    (jdk / "release").write_text('JAVA_VERSION="17.0.20"\n')
+    monkeypatch.setattr(cds, "spark_home", lambda: home)
+    monkeypatch.setattr(cds, "java_home", lambda: jdk)
+    for v in (*cds.USER_CONFIG_ENV, "SPARK_CONF_DIR"):
+        monkeypatch.delenv(v, raising=False)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "xdg"))
+    return home, jdk, tmp_path / "xdg" / "spark_etl_cli_spark" / "cds"
+
+
+def _launch(confs=CONFS):
+    """cds.launch with a fake start: the confs and SPARK_CONF_DIR the
+    gateway would have been launched with."""
+    from spark_etl_cli_spark import cds
+
+    return cds.launch(confs, lambda c: (c, os.environ.get("SPARK_CONF_DIR")))
+
+
+def _no_build(*_a):
+    raise AssertionError("archive build started")
+
+
+def test_cds_key_follows_jdk_jars_heap_mode_and_java_options(cds_env):
+    from spark_etl_cli_spark.cds import archive_key
+
+    home, jdk, _ = cds_env
+    key = archive_key(CONFS, home, jdk)
+    assert archive_key(dict(CONFS), home, jdk) == key
+    # a conf that never reaches the JVM's command line
+    assert archive_key({**CONFS, "spark.sql.shuffle.partitions": "4"},
+                       home, jdk) == key
+    assert archive_key({**CONFS, "spark.driver.memory": "48g"}, home, jdk) != key
+    assert archive_key(
+        {**CONFS, "spark.driver.extraJavaOptions": "-Xss4m"}, home, jdk
+    ) != key
+    assert archive_key({**CONFS, "spark.jars": "/x.jar"}, home, jdk) != key
+    (jdk / "release").write_text('JAVA_VERSION="17.0.21"\n')
+    assert archive_key(CONFS, home, jdk) != key
+    (jdk / "release").write_text('JAVA_VERSION="17.0.20"\n')
+    (home / "jars" / "delta.jar").write_bytes(b"jar")
+    assert archive_key(CONFS, home, jdk) != key
+
+
+@pytest.mark.parametrize("config", [
+    "conf/spark-defaults.conf", "conf/log4j2.properties", "HADOOP_CONF_DIR",
+])
+def test_cds_user_config_skips_the_archive(cds_env, monkeypatch, config):
+    from spark_etl_cli_spark import cds
+
+    home, _, cache = cds_env
+    if config.startswith("conf/"):
+        (home / config).write_text("spark.x 1\n")
+    else:
+        monkeypatch.setenv(config, str(home / "hadoop"))
+    monkeypatch.setattr(cds, "build", _no_build)
+    env = dict(os.environ)
+    assert _launch() == (CONFS, None)
+    assert dict(os.environ) == env
+    assert not cache.exists()
+
+
+def test_cds_hit_launches_with_archive_and_restores_environ(cds_env):
+    from spark_etl_cli_spark.cds import archive_key
+
+    home, jdk, cache = cds_env
+    cache.mkdir(parents=True)
+    jsa = cache / f"{archive_key(CONFS, home, jdk)}.jsa"
+    jsa.write_bytes(b"archive")
+    env = dict(os.environ)
+    confs, conf_dir = _launch()
+    assert dict(os.environ) == env
+    assert conf_dir == str(cache / "conf")
+    assert not any((cache / "conf").iterdir())
+    assert confs == {**CONFS, "spark.driver.extraJavaOptions":
+                     f"-XX:ReservedCodeCacheSize=1g -XX:SharedArchiveFile={jsa}"}
+
+
+def test_cds_miss_builds_once_then_hits(cds_env, monkeypatch):
+    from spark_etl_cli_spark import cds
+
+    builds = []
+
+    def fake_build(confs, jsa, conf):
+        builds.append(confs)
+        jsa.write_bytes(b"archive")
+
+    monkeypatch.setattr(cds, "build", fake_build)
+    first, second = _launch(), _launch()
+    assert builds == [CONFS]
+    assert first == second and "SharedArchiveFile" in first[0][cds.JAVA_OPTS]
+
+
+def test_cds_failed_build_is_marked_and_never_retried(cds_env, monkeypatch):
+    from spark_etl_cli_spark import cds
+
+    _, _, cache = cds_env
+    monkeypatch.setattr(cds, "build", lambda *_a: "build exited with 1")
+    assert _launch() == (CONFS, None)
+    assert [p.suffix for p in cache.glob("*.failed")] == [".failed"]
+    monkeypatch.setattr(cds, "build", _no_build)
+    assert _launch() == (CONFS, None)
+
+
+def test_cds_held_lock_starts_without_archive(cds_env, monkeypatch):
+    import fcntl
+    import time
+
+    from spark_etl_cli_spark import cds
+
+    home, jdk, cache = cds_env
+    cache.mkdir(parents=True)
+    monkeypatch.setattr(cds, "build", _no_build)
+    with open(cache / f"{cds.archive_key(CONFS, home, jdk)}.lock", "w") as f:
+        fcntl.flock(f, fcntl.LOCK_EX)
+        t0 = time.monotonic()
+        assert _launch() == (CONFS, None)
+        assert time.monotonic() - t0 < 5
+
+
+def test_cds_unwritable_cache_starts_without_archive(cds_env, monkeypatch):
+    from spark_etl_cli_spark import cds
+
+    _, _, cache = cds_env
+    cache.parent.mkdir(parents=True)
+    cache.write_text("not a directory")
+    monkeypatch.setattr(cds, "build", _no_build)
+    assert _launch() == (CONFS, None)
+
+
+def test_cds_jvm_dying_on_archive_restarts_without_it(cds_env):
+    from pyspark.errors import PySparkRuntimeError
+
+    from spark_etl_cli_spark import cds
+
+    home, jdk, cache = cds_env
+    cache.mkdir(parents=True)
+    jsa = cache / f"{cds.archive_key(CONFS, home, jdk)}.jsa"
+    jsa.write_bytes(b"truncated")
+    launched = []
+
+    def start(confs):
+        launched.append(confs)
+        if "SharedArchiveFile" in confs[cds.JAVA_OPTS]:
+            raise PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED",
+                                      messageParameters={})
+        return "session"
+
+    assert cds.launch(CONFS, start) == "session"
+    assert launched[1:] == [CONFS]
+    assert not jsa.exists() and jsa.with_suffix(".failed").exists()
+
+
+def test_corrupt_archive_still_starts_a_session(tmp_path):
+    """A fresh process whose cache holds a corrupt archive under its own
+    key: the session starts, runs a job, and no build is started."""
+    from spark_etl_cli_spark.cds import java_home
+
+    base = java_home() / "lib" / "server" / "classes.jsa"
+    corrupt = base.read_bytes()[: 1 << 20] if base.is_file() else os.urandom(1 << 16)
+    (tmp_path / "corrupt.jsa").write_bytes(corrupt)
+    script = tmp_path / "start.py"
+    script.write_text(textwrap.dedent(f"""
+        import shutil, sys
+        sys.path.insert(0, {str(PKG.parent)!r})
+        from spark_etl_cli_spark import cds
+        from spark_etl_cli_spark.session import get_spark
+
+        key = cds.archive_key
+
+        def seeded(*a):
+            k = key(*a)
+            shutil.copy({str(tmp_path / "corrupt.jsa")!r},
+                        cds.cache_dir() / (k + ".jsa"))
+            return k
+
+        def no_build(*a):
+            raise SystemExit("archive build started")
+
+        cds.archive_key, cds.build = seeded, no_build
+        spark = get_spark(master="local[1]")
+        print("rows", spark.range(3).count())
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_SUBMIT_ARGS"}
+    env.update(XDG_CACHE_HOME=str(tmp_path / "xdg"),
+               SPARK_GRAFT_DRIVER_MEM="512m")
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "rows 3" in out.stdout
+    # looked up: still there if the JVM refused it, marked if it died on it
+    assert [*(tmp_path / "xdg").rglob("*.jsa"), *(tmp_path / "xdg").rglob("*.failed")]

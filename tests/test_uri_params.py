@@ -8,6 +8,7 @@ No SparkSession: resolving a URI only builds the connector object.
 from __future__ import annotations
 
 import ast
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -287,3 +288,47 @@ def test_package_reads_no_raw_params():
         for line in _params_reads(path)
     ]
     assert found == [], "raw .params read: " + ", ".join(found)
+
+
+@pytest.mark.parametrize("uri, stray, valid", [
+    ("dedup://?mode=exact&threshold=0.9&emit=scrub&state=/x",
+     "'threshold', 'state', 'emit'", "mode=exact: mode, text-col, id-col$"),
+    ("a+b+decontaminate://b?mode=ngram&action=scrub&key=hash",
+     "'action', 'key'", "mode=ngram: n, min-shared, id-col, text-col, pairs"),
+    ("media-features://?op=audio&width=64", "'width'", "op=audio: op, fake$"),
+    ("media-features://?op=resize&every-n=3", "'every-n'",
+     "op=resize: op, fake, width, height$"),
+    ("dedup://?tier=minhash", "'tier'", "mode=exact: "),
+])
+def test_parameter_of_another_mode_fails_at_resolve(uri, stray, valid):
+    with pytest.raises(ValueError) as err:
+        registry.resolve_transform(uri)
+    msg = str(err.value)
+    assert f"{stray} does not apply to" in msg
+    assert re.search(f"valid parameters for {valid}", msg), msg
+
+
+@pytest.mark.parametrize("uri, key, value", [
+    ("dedup://?mode=jaccard&threshold=0.7", "threshold", 0.7),
+    ("dedup://?mode=semdedup&threshold=0.9&clusters=2", "clusters", 2),
+    ("dedup://?mode=minhash&bands=4&num-hashes=16", "bands", 4),
+    ("dedup://?mode=incremental&tier=cosine&planes=8", "planes", 8),
+    ("a+b+dedup://?tier=substring&k=8&emit=decisions", "emit", "decisions"),
+    ("a+b+decontaminate://b?mode=substring&action=scrub", "action", "scrub"),
+    ("media-features://?op=frames&every-n=3", "every-n", 3),
+])
+def test_each_mode_accepts_its_own_parameters(uri, key, value):
+    """Guard for the mode scoping: each mode keeps every parameter it
+    reads, including ``tier=substring`` standing in for the mode."""
+    p, _ = registry.resolve_transform(uri)
+    assert p.args[key] == value
+
+
+def test_list_schemes_prints_parameters_per_mode(capsys):
+    from spark_etl_cli_spark.__main__ import main
+
+    assert main(["--list-schemes"]) == 0
+    out = capsys.readouterr().out
+    assert "    mode=substring: mode, tier, text-col, id-col, k, key, " \
+           "max-df, min-span, emit\n" in out
+    assert "    op=frames: op, fake, every-n\n" in out
