@@ -212,22 +212,47 @@ def build(confs: dict[str, str], jsa: Path, conf: Path) -> str | None:
     return f"build exited with {code}; see {log_path}"
 
 
+def _crash_logs() -> set[Path]:
+    """The JVM's fatal-error logs in the working directory, where a
+    gateway JVM that crashes writes its ``hs_err_pid<N>.log``."""
+    return set(Path.cwd().glob("hs_err_pid*.log"))
+
+
+def _remove_crash_logs(before: set[Path], opt: str) -> None:
+    """Delete the crash logs that appeared since ``before`` and whose
+    recorded ``jvm_args`` line holds ``opt``; any other log stays."""
+    for log in _crash_logs() - before:
+        try:
+            with log.open(errors="replace") as fh:
+                args = next(
+                    (ln for ln in fh if ln.startswith("jvm_args:")), ""
+                )
+        except OSError:
+            continue
+        if opt in args.split():
+            log.unlink(missing_ok=True)
+
+
 def launch(confs: dict[str, str], start: Callable[[dict[str, str]], T]) -> T:
     """``start(confs)``, which launches the gateway JVM, with the archive
     for ``confs`` when one can be used. A JVM that dies on the archive
     (a truncated file passes its header checks and then faults) is
-    started again without it, and the key is marked failed."""
+    started again without it, the key is marked failed, and the crash
+    log the dead JVM left in the working directory is removed."""
     found = lookup(confs)
     if found is None:
         return start(confs)
     jsa, conf = found
+    opt = f"-XX:SharedArchiveFile={jsa}"
+    before = _crash_logs()
     try:
         with _environ(SPARK_CONF_DIR=str(conf)):
-            return start(with_java_opt(confs, f"-XX:SharedArchiveFile={jsa}"))
+            return start(with_java_opt(confs, opt))
     except PySparkRuntimeError:
         out = start(confs)  # raises again when the archive was not the cause
         jsa.with_suffix(".failed").write_text(f"the JVM died on {jsa}\n")
         jsa.unlink(missing_ok=True)
+        _remove_crash_logs(before, opt)
         return out
 
 

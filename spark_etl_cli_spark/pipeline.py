@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from spark_etl_cli_spark import registry
+from spark_etl_cli_spark.session import observed_metrics
 from spark_etl_cli_spark.uri import (
     ParsedUri,
     sink_view_name,
@@ -74,26 +75,6 @@ class SinkStep:
         if df is None:
             df = spark.table(self.view)
         return self.sink.write(df)
-
-
-def _observed_metrics(obs) -> dict | None:
-    """Non-blocking read of an Observation's metrics.
-
-    ``Observation.get`` blocks until an action computes the observed
-    plan — which never happens for lazy sinks (``memory://`` just
-    registers a view) or row-limited ones (``console://`` shows a
-    prefix). ``getOrEmpty`` (public JVM API) returns an empty map in
-    those cases; report None instead of hanging the pipeline.
-    """
-    try:
-        # getOrEmpty returns a (scala) Map — only probe emptiness on
-        # the JVM side; once metrics exist, the public .get is
-        # non-blocking.
-        if obs._jo.getOrEmpty().isEmpty():
-            return None
-        return dict(obs.get)
-    except Exception:
-        return None
 
 
 def _await_all(queries: list, await_termination: float | bool) -> None:
@@ -216,7 +197,7 @@ class Pipeline:
                 ]
             results[key] = bool(ok)
             if observe:
-                self.metrics[key] = _observed_metrics(obs) if obs else None
+                self.metrics[key] = observed_metrics(obs) if obs else None
         if await_termination:
             _await_all(self.queries, await_termination)
         return results

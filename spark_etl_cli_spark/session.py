@@ -156,6 +156,28 @@ def get_spark(
     return spark
 
 
+def observed_metrics(obs) -> dict | None:
+    """Non-blocking read of an Observation's metrics.
+
+    ``Observation.get`` blocks until an action computes the observed
+    plan — which never happens for lazy sinks (``memory://`` just
+    registers a view) or row-limited ones (``console://`` shows a
+    prefix), nor for a join side AQE skipped once the other side came
+    back empty. ``getOrEmpty`` (public JVM API) returns an empty map in
+    those cases (or fails on the skipped side); report None instead of
+    hanging.
+    """
+    try:
+        # getOrEmpty returns a (scala) Map — only probe emptiness on
+        # the JVM side; once metrics exist, the public .get is
+        # non-blocking.
+        if obs._jo.getOrEmpty().isEmpty():
+            return None
+        return dict(obs.get)
+    except Exception:
+        return None
+
+
 def _field_values(row: Any, names: list[str]) -> Any:
     """A row's values in field order: dicts by name (a missing key is
     null), tuples and lists by position."""

@@ -32,14 +32,16 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 from typing import Any
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spark_etl_cli_spark.session import local_frame
+from spark_etl_cli_spark.session import local_frame, observed_metrics
+from spark_etl_cli_spark.sources.keygate import KeyGate, KeyStats
 
 
 def _log_dir(table_path: str) -> str:
@@ -1221,7 +1223,7 @@ def _rcv_read_expr(rcv_col: str | None, rcv_of: dict[str, int]):
 
 
 def _enforce_constraints(
-    df: DataFrame,
+    df: DataFrame | Callable[[], DataFrame],
     configuration: dict | None,
     schema: T.StructType | None = None,
 ) -> None:
@@ -1231,6 +1233,8 @@ def _enforce_constraints(
     schema fields). One distributed probe per write, short-circuited
     at the first violating row; a violation raises BEFORE any file is
     committed. SQL semantics: a CHECK passes on NULL, fails on FALSE.
+    ``df`` may be a function building the frame, called only when
+    there is something to check.
     """
     cfg = configuration or {}
     constraints = {
@@ -1241,8 +1245,13 @@ def _enforce_constraints(
     notnull = [
         f.name
         for f in (schema.fields if schema is not None else [])
-        if not f.nullable and f.name in df.columns
+        if not f.nullable
     ]
+    if not constraints and not notnull:
+        return
+    if not isinstance(df, DataFrame):
+        df = df()
+    notnull = [c for c in notnull if c in df.columns]
     if not constraints and not notnull:
         return
     viol = F.lit(False)
@@ -1408,6 +1417,7 @@ def write_delta_lite(
     properties: dict[str, str] | None = None,
     generated: dict[str, str] | None = None,
     identity: dict[str, tuple[int, int]] | None = None,
+    key_gate: KeyGate | None = None,
 ) -> None:
     """Engine-free Delta write: parquet data files + one JSON commit.
 
@@ -1431,6 +1441,10 @@ def write_delta_lite(
     data file is written). This is what makes the jar-less streaming
     sink exactly-once — a replayed micro-batch after a crash commits
     nothing the first attempt already committed.
+
+    ``key_gate`` (a MERGE creating the table) rides on the data job
+    and is checked before any file moves into the table, so bad keys
+    leave nothing behind.
     """
     import shutil
     import tempfile
@@ -1450,10 +1464,12 @@ def write_delta_lite(
             raise ValueError("delta_lite upsert needs merge_key=<column>")
         if not exists:
             # MERGE into a missing table is just CREATE — same
-            # convenience hudi_lite gives its first upsert
+            # convenience hudi_lite gives its first upsert; the key
+            # gate rides on the write
             return write_delta_lite(
                 df, table_path, mode="append", partition_by=partition_by,
                 txn_app_id=txn_app_id, txn_version=txn_version,
+                key_gate=KeyGate([merge_key], _check_upsert_keys),
             )
         return _upsert_delta_lite(
             df, table_path, merge_key,
@@ -1743,12 +1759,16 @@ def write_delta_lite(
             )
             phys_part_cols = [phys_of_m[c] for c in part_cols]
 
+    if key_gate is not None:
+        df = key_gate.windowed(df)
     tmp_dir = tempfile.mkdtemp(prefix="delta_lite_write_")
     try:
         writer = df.write.mode("overwrite")
         if phys_part_cols:
             writer = writer.partitionBy(*phys_part_cols)
         writer.parquet(tmp_dir)
+        if key_gate is not None:
+            key_gate.check()
         os.makedirs(table_path, exist_ok=True)
         adds = _collect_written_files(tmp_dir, table_path, phys_part_cols)
     finally:
@@ -3016,9 +3036,12 @@ def _rewrite_files(
     meta: dict | None = None,
     mat_col: str | None = None,
     rcv_col: str | None = None,
+    check: Callable[[], object] | None = None,
 ) -> list[dict]:
     """Write ``df`` (logical columns only) as new table data files and
-    return their add actions. One distributed job. With ``meta`` of a
+    return their add actions. One distributed job; ``check`` runs after
+    it, before the files move into the table, so a check that raises
+    leaves no file behind. With ``meta`` of a
     column-mapped table, the frame is projected to PHYSICAL names
     first (files and partitionValues keys speak physical). With
     ``mat_col`` (row tracking), a ``__row_id`` service column on ``df``
@@ -3066,6 +3089,8 @@ def _rewrite_files(
         if write_parts:
             writer = writer.partitionBy(*write_parts)
         writer.parquet(tmp_dir)
+        if check is not None:
+            check()
         return _collect_written_files(tmp_dir, table_path, write_parts)
     finally:
         shutil.rmtree(tmp_dir, ignore_errors=True)
@@ -3297,7 +3322,8 @@ def _upsert_delta_lite(
     one job: affected rows anti-joined against the keys, unioned with
     the incoming frame, written per partition. Duplicate or NULL merge
     keys in the incoming frame raise (same contract as Delta MERGE,
-    where a multi-match is an error).
+    where a multi-match is an error); the write carries that check
+    (``keygate.py``) and it runs before the files move into the table.
 
     Scale: the probe reads only ``merge_key`` + file metadata (column
     pruning reaches the parquet scan); the rewrite reads only affected
@@ -3323,19 +3349,7 @@ def _upsert_delta_lite(
         )
     if merge_key not in df.columns:
         raise ValueError(f"merge_key {merge_key!r} not in {df.columns}")
-    stats = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(merge_key).alias("nk"),
-        F.countDistinct(merge_key).alias("nd"),
-    ).head()
-    if stats["nk"] < stats["n"]:
-        raise ValueError("upsert: NULL merge keys in the incoming frame")
-    if stats["nd"] < stats["nk"]:
-        raise ValueError(
-            "upsert: duplicate merge keys in the incoming frame — a key "
-            "must match at most one incoming row (Delta MERGE contract)"
-        )
-    keys = df.select(merge_key).distinct()
+    keys = df.select(merge_key)  # semi and anti joins only
     table_cols = [f.name for f in table_schema.fields]
     now_ms = int(time.time() * 1000)
 
@@ -3360,29 +3374,35 @@ def _upsert_delta_lite(
 
     mat_col, rcv_col, rt_actions = _rt_rewrite_begin(meta)
     rid_cols = ["__row_id", "__rcv"] if mat_col is not None else []
-    incoming = df.select(*table_cols)
-    if mat_col is not None:
-        if affected:
-            # an update keeps its row id (the protocol's stability
-            # contract): matched incoming rows inherit the replaced
-            # key's id; unmatched ones stay NULL and derive a fresh id
-            # from the new file's baseRowId. The commit VERSION is NULL
-            # either way — a replacement IS an update at this commit,
-            # so both derive the new add's defaultRowCommitVersion.
-            old_ids = (
-                _snapshot_scan(
-                    spark, table_path, affected, meta, with_row_id=True
+
+    def rows(src: DataFrame) -> DataFrame:
+        """The table after the upsert of ``src``: affected files minus
+        the incoming keys, plus the incoming rows."""
+        incoming = src.select(*table_cols)
+        if mat_col is not None:
+            if affected:
+                # an update keeps its row id (the protocol's stability
+                # contract): matched incoming rows inherit the replaced
+                # key's id; unmatched ones stay NULL and derive a fresh
+                # id from the new file's baseRowId. The commit VERSION
+                # is NULL either way — a replacement IS an update at
+                # this commit, so both derive the new add's
+                # defaultRowCommitVersion.
+                old_ids = (
+                    _snapshot_scan(
+                        spark, table_path, affected, meta, with_row_id=True
+                    )
+                    .groupBy(merge_key)
+                    .agg(F.min("__row_id").alias("__row_id"))
                 )
-                .groupBy(merge_key)
-                .agg(F.min("__row_id").alias("__row_id"))
-            )
-            incoming = incoming.join(old_ids, merge_key, "left")
-        else:
-            incoming = incoming.withColumn(
-                "__row_id", F.lit(None).cast("long")
-            )
-        incoming = incoming.withColumn("__rcv", F.lit(None).cast("long"))
-    if affected:
+                incoming = incoming.join(old_ids, merge_key, "left")
+            else:
+                incoming = incoming.withColumn(
+                    "__row_id", F.lit(None).cast("long")
+                )
+            incoming = incoming.withColumn("__rcv", F.lit(None).cast("long"))
+        if not affected:
+            return incoming
         remaining = (
             _snapshot_scan(
                 spark, table_path, affected, meta,
@@ -3391,12 +3411,17 @@ def _upsert_delta_lite(
             .join(keys, merge_key, "left_anti")
             .select(*table_cols, *rid_cols)
         )
-        out = remaining.unionByName(incoming)
-    else:
-        out = incoming
-    _enforce_constraints(out, meta.get("configuration"), table_schema)
+        return remaining.unionByName(incoming)
+
+    _enforce_constraints(
+        lambda: rows(df), meta.get("configuration"), table_schema
+    )
+    # the write carries the key gate (attached after the constraint
+    # probe: an Observation keeps the metrics of the first action)
+    gate = KeyGate([merge_key], _check_upsert_keys)
     new_adds = _rewrite_files(
-        out, table_path, part_cols, meta, mat_col=mat_col, rcv_col=rcv_col
+        rows(gate.windowed(df)), table_path, part_cols, meta,
+        mat_col=mat_col, rcv_col=rcv_col, check=gate.check,
     )
     if mat_col is not None:
         rt_actions += _rt_rewrite_finish(_log_dir(table_path), new_adds)
@@ -3424,6 +3449,26 @@ def _upsert_delta_lite(
         }
     )
     _write_commit(spark, table_path, actions)
+
+
+def _check_upsert_keys(s: KeyStats) -> None:
+    if s.nulls:
+        raise ValueError("upsert: NULL merge keys in the incoming frame")
+    if s.max_per_key > 1:
+        raise ValueError(
+            "upsert: duplicate merge keys in the incoming frame — a key "
+            "must match at most one incoming row (Delta MERGE contract)"
+        )
+
+
+def _check_merge_keys(s: KeyStats) -> None:
+    if s.nulls:
+        raise ValueError("merge: NULL keys in the source frame")
+    if s.max_per_key > 1:
+        raise ValueError(
+            "merge: duplicate keys in the source frame — a target row "
+            "must match at most one source row (Delta MERGE contract)"
+        )
 
 
 def _merge_key_cond(keys: list[str]):
@@ -3480,13 +3525,17 @@ def merge_delta_lite(
     a CDC frame's ``_change_type``) — conditions can reference them;
     INSERT * takes the table's columns by name.
 
-    Copy-on-write on the shared row-op machinery: one distributed
-    probe finds the files holding ≥1 (matched AND condition-true) row
-    — only those are rewritten, via a left join against the source
-    keyed on ``on`` (fan-out impossible: source keys are unique).
-    Insert rows are the source anti-joined against ALL existing keys
-    (column-pruned key scan). The commit is remove(affected) +
-    add(new) + optional txn, so streaming merges keep exactly-once.
+    Copy-on-write on the shared row-op machinery, in two Spark jobs.
+    The probe joins the source to the column-pruned snapshot scan and
+    counts per file what each clause does: files holding ≥1 row a
+    clause touches are rewritten, files whose matches no clause touches
+    only lend their keys. The write is one outer join of those files
+    with the source keyed on ``on`` (fan-out impossible: source keys
+    are unique): it yields the rewritten rows and the inserts together.
+    Observations on it count the inserts and carry the source-key gate
+    (``keygate.py``), checked before the files move into the table.
+    The commit is remove(touched) + add(new) + optional txn, so
+    streaming merges keep exactly-once.
 
     Returns ``{"files_rewritten", "files_added", "rows_updated",
     "rows_inserted", "rows_deleted"}``.
@@ -3530,15 +3579,18 @@ def merge_delta_lite(
         )
         if insert_columns:
             new_rows = new_rows.select(*insert_columns)
+        # one job: the write carries the key gate over the rows the
+        # table is created with, and counts them
+        gate = KeyGate(keys, _check_merge_keys)
         write_delta_lite(
             new_rows, table_path, mode="append",
-            txn_app_id=txn_app_id, txn_version=txn_version,
+            txn_app_id=txn_app_id, txn_version=txn_version, key_gate=gate,
         )
         return {
             "files_rewritten": 0,
             "files_added": 1,
             "rows_updated": 0,
-            "rows_inserted": new_rows.count(),
+            "rows_inserted": gate.stats().rows,
             "rows_deleted": 0,
         }
     part_cols = meta.get("partitionColumns") or []
@@ -3594,21 +3646,7 @@ def merge_delta_lite(
                 f"{bad} (source {source.schema.simpleString()}, table "
                 f"{schema.simpleString()})"
             )
-    all_keys_set = F.lit(True)
-    for k in keys:
-        all_keys_set = all_keys_set & F.col(k).isNotNull()
-    stats_row = source.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(all_keys_set, 1)).alias("nk"),
-        F.countDistinct(*keys).alias("nd"),
-    ).head()
-    if stats_row["nk"] < stats_row["n"]:
-        raise ValueError("merge: NULL keys in the source frame")
-    if stats_row["nd"] < stats_row["nk"]:
-        raise ValueError(
-            "merge: duplicate keys in the source frame — a target row "
-            "must match at most one source row (Delta MERGE contract)"
-        )
+    gate = KeyGate(keys, _check_merge_keys)
     zero = {
         "files_rewritten": 0,
         "files_added": 0,
@@ -3635,71 +3673,116 @@ def merge_delta_lite(
     )
     # a matched row lands in exactly one clause, DELETE checked first
     upd_mask = (match_cond & ~del_cond) if update_set else F.lit(False)
-    touch_mask = del_cond | upd_mask
     nmbs_cond = (
         F.coalesce(F.expr(not_matched_by_source_condition), F.lit(False))
         if not_matched_by_source_condition
         else F.lit(True)
     )
+    # a target row is MATCHED when the join found its source row
+    # (source keys are non-NULL once the gate passes)
+    matched = F.col(f"source.{keys[0]}").isNotNull()
 
-    affected: list[dict] = []
-    seen_paths: set[str] = set()
+    # Delta's own MERGE shape: the probe finds every file holding a
+    # source key and marks those a clause TOUCHES (only they are
+    # rewritten); the write then runs ONE outer join of those files
+    # with the source, which yields the rewritten rows and the inserts
+    # together. Files whose matches no clause touches take part with
+    # their keys only, so their source rows are not inserted again.
+    touched: list[dict] = []
+    key_only: list[dict] = []
     n_updated = 0
     n_deleted = 0
-    by_path = _adds_by_abspath(table_path, adds) if adds else {}
-
-    def _take(file_path: str) -> None:
-        add = by_path.get(file_path)
-        if add is None:
-            raise RuntimeError(
-                f"delta-lite MERGE: scanned file {file_path!r} "
-                "missing from the snapshot file list"
+    if adds:
+        by_path = _adds_by_abspath(table_path, adds)
+        nmbs = (~matched & nmbs_cond) if not_matched_by_source else F.lit(False)
+        aggs = [
+            F.sum(c.cast("long")).alias(name)
+            for name, c in (
+                ("nmatch", matched),
+                ("ndel", matched & del_cond),
+                ("nupd", matched & upd_mask),
+                ("nnm", nmbs),
             )
-        if file_path not in seen_paths:
-            seen_paths.add(file_path)
-            affected.append(add)
-
-    if adds and (update_set or delete_condition):
-        scan = _snapshot_scan(spark, table_path, adds, meta)
-        probe = (
-            scan.alias("target")
-            .join(source.alias("source"), _merge_key_cond(keys))
-            .filter(touch_mask)
+        ]
+        # one job: the source joined to the column-pruned snapshot
+        # scan, counted per file. A left join keeps the source-absent
+        # rows the full-sync clause acts on. Until the write checks the
+        # key gate, duplicate keys may overcount: they fail the MERGE.
+        counts = (
+            _snapshot_scan(spark, table_path, adds, meta)
+            .alias("target")
+            .join(
+                (
+                    source
+                    if matched_condition or delete_condition
+                    else source.select(*keys)
+                ).alias("source"),
+                _merge_key_cond(keys),
+                "left" if not_matched_by_source else "inner",
+            )
+            .groupBy("__file")
+            .agg(*aggs)
+            .filter((F.col("nmatch") > 0) | (F.col("nnm") > 0))
+            .collect()
         )
-        counts = probe.groupBy("__file").agg(
-            F.sum(F.when(del_cond, 1).otherwise(0)).alias("ndel"),
-            F.sum(F.when(del_cond, 0).otherwise(1)).alias("nupd"),
-        ).collect()
         for r in counts:
-            _take(r["__file"])
-        n_updated += sum(r["nupd"] for r in counts)
-        n_deleted += sum(r["ndel"] for r in counts)
-    if adds and not_matched_by_source:
-        # probe for files holding ≥1 source-absent, condition-true
-        # target row — an anti-join on the (column-pruned) source key
-        scan = _snapshot_scan(spark, table_path, adds, meta)
-        probe_n = (
-            scan.alias("target")
-            .join(source.select(*keys).distinct(), keys, "left_anti")
-            .filter(nmbs_cond)
-        )
-        counts_n = probe_n.groupBy("__file").count().collect()
-        for r in counts_n:
-            _take(r["__file"])
-        if not_matched_by_source == "delete":
-            n_deleted += sum(r["count"] for r in counts_n)
-        else:
-            n_updated += sum(r["count"] for r in counts_n)
+            add = by_path.get(r["__file"])
+            if add is None:
+                raise RuntimeError(
+                    f"delta-lite MERGE: scanned file {r['__file']!r} "
+                    "missing from the snapshot file list"
+                )
+            if r["ndel"] or r["nupd"] or r["nnm"]:
+                touched.append(add)
+            elif insert:
+                key_only.append(add)
+            n_updated += r["nupd"]
+            n_deleted += r["ndel"]
+            if not_matched_by_source == "delete":
+                n_deleted += r["nnm"]
+            else:
+                n_updated += r["nnm"]
+    if not touched and not insert:
+        gate.check(source)  # nothing to write: the gate runs alone
+        return zero
+
+    ins_cond = (
+        F.coalesce(F.expr(insert_condition), F.lit(False))
+        if insert_condition
+        else F.lit(True)
+    )
+    src = source.withColumn("__ins", ins_cond) if insert else source
 
     mat_col, rcv_col, rt_actions = _rt_rewrite_begin(meta)
-    pieces: list[DataFrame] = []
-    if affected:
-        # one left join, one projection: every SET expression sees the
-        # ORIGINAL target row plus its (unique) source match. Matched
-        # delete-clause rows are filtered OUT of the rewrite; matched
-        # update-clause rows are projected through their SETs;
-        # everything else survives unchanged.
-        matched = F.col(f"source.{keys[0]}").isNotNull()
+    tgt = None
+    if touched or key_only:
+        if touched:
+            tgt = _snapshot_scan(
+                spark, table_path, touched, meta,
+                with_row_id=mat_col is not None,
+            ).withColumn("__t", F.lit(True))
+        if key_only:
+            keys_df = _snapshot_scan(
+                spark, table_path, key_only, meta
+            ).select(
+                *[
+                    F.col(f.name) if f.name in keys
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in schema.fields
+                ],
+                *[
+                    F.lit(None).cast("long").alias(c)
+                    for c in ("__row_id", "__rcv")
+                    if mat_col is not None
+                ],
+                F.lit(False).alias("__t"),
+            )
+            tgt = (
+                keys_df
+                if tgt is None
+                else tgt.unionByName(keys_df, allowMissingColumns=True)
+            )
+        in_target = F.col("target.__t").isNotNull()
         upd = matched & upd_mask
         nmbs_del = (
             (~matched & nmbs_cond)
@@ -3710,6 +3793,15 @@ def merge_delta_lite(
             (~matched & nmbs_cond)
             if not_matched_by_source == "update"
             else F.lit(False)
+        )
+        # a touched file's row survives unless a DELETE clause takes it;
+        # a source row no target key matched is an insert
+        keep = F.coalesce(
+            F.col("target.__t") & ~(matched & del_cond) & ~nmbs_del,
+            F.lit(False),
+        )
+        is_ins = (
+            ~in_target & F.col("source.__ins") if insert else F.lit(False)
         )
 
         def _out_col(f):
@@ -3723,6 +3815,10 @@ def merge_delta_lite(
                 col = F.when(
                     upd, F.expr(update_set[f.name]).cast(f.dataType)
                 ).otherwise(col)
+            if insert:
+                col = F.when(in_target, col).otherwise(
+                    F.col(f"source.{f.name}")
+                )
             return col.alias(f.name)
 
         out_cols = [_out_col(f) for f in schema.fields]
@@ -3730,73 +3826,74 @@ def merge_delta_lite(
             # an UPDATEd row keeps its tracked id (stability contract)
             # but its commit version becomes THIS commit (NULL
             # materialized → derives the new add's default); untouched
-            # survivors carry their old version forward
+            # survivors carry their old version forward; inserts derive
+            # both from the new file (NULL)
             out_cols = out_cols + [
                 F.col("target.__row_id").alias("__row_id"),
                 F.when(
                     upd | nmbs_upd, F.lit(None).cast("long")
                 ).otherwise(F.col("target.__rcv")).alias("__rcv"),
             ]
-        pieces.append(
-            _snapshot_scan(
-                spark, table_path, affected, meta,
-                with_row_id=mat_col is not None,
+
+    def merged(src: DataFrame) -> DataFrame:
+        """The rewritten rows and the inserts, flagged ``__is_ins``.
+        The source side is hashed (it is the small side), so the
+        target rows stream through the join unsorted."""
+        if tgt is None:
+            rid = [
+                F.lit(None).cast("long").alias(c)
+                for c in ("__row_id", "__rcv")
+                if mat_col is not None
+            ]
+            return src.filter("__ins").select(
+                *table_cols, *rid, F.lit(True).alias("__is_ins")
             )
-            .alias("target")
-            .join(source.alias("source"), _merge_key_cond(keys), "left")
-            .filter(~(matched & del_cond) & ~nmbs_del)
-            .select(*out_cols)
+        return (
+            tgt.alias("target")
+            .join(
+                src.hint("shuffle_hash").alias("source"),
+                _merge_key_cond(keys),
+                "full_outer" if insert else "left",
+            )
+            .filter(keep | is_ins)
+            .select(*out_cols, is_ins.alias("__is_ins"))
         )
 
-    n_inserted = 0
-    inserted_rows = None
-    if insert:
-        new_rows = (
-            source.filter(F.expr(insert_condition))
-            if insert_condition
-            else source
-        )
-        if adds:
-            # scale shape: never shuffle the TABLE's keys. The old
-            # `scan.select(keys).distinct()` anti-join shuffled every
-            # key in the table (measured ~table-sized shuffle at 10x);
-            # instead semi-join the scan against the SOURCE key set —
-            # AQE sizes the small side after its (cheap) shuffle and
-            # converts to broadcast, so the table side is only scanned.
-            # No forced broadcast hint: a row-count gate can't see the
-            # BYTES of a wide composite key set, and a mis-sized forced
-            # broadcast fails where AQE's byte-sized decision degrades
-            # gracefully to a shuffle of just the key columns.
-            src_keys = new_rows.select(*keys).distinct()
-            matched_keys = (
-                _snapshot_scan(spark, table_path, adds, meta)
-                .join(src_keys, keys, "left_semi")
-                .select(*keys)
-                .distinct()
-            )
-            new_rows = new_rows.join(matched_keys, keys, "left_anti")
-        n_inserted = new_rows.count()
-        if n_inserted:
-            ins = new_rows.select(*table_cols)
-            if mat_col is not None:
-                # inserts derive fresh ids from the new file's
-                # baseRowId and its defaultRowCommitVersion
-                # (both materialized NULL)
-                ins = ins.withColumn(
-                    "__row_id", F.lit(None).cast("long")
-                ).withColumn("__rcv", F.lit(None).cast("long"))
-            pieces.append(ins)
-            inserted_rows = new_rows
-
-    if not pieces:
-        return zero
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    _enforce_constraints(out, meta.get("configuration"), schema)
-    new_adds = _rewrite_files(
-        out, table_path, part_cols, meta, mat_col=mat_col, rcv_col=rcv_col
+    _enforce_constraints(
+        lambda: merged(src).drop("__is_ins"), meta.get("configuration"),
+        schema,
     )
+    # the write carries the key gate and counts the inserts (both
+    # attached after the constraint probe: an Observation keeps the
+    # metrics of the first action that runs it). The gate's window
+    # partitions the source by key, the partitioning the join needs.
+    inserted = Observation()
+    out = merged(gate.windowed(src))
+    new_adds = _rewrite_files(
+        out.observe(
+            inserted,
+            F.coalesce(F.sum(F.col("__is_ins").cast("long")), F.lit(0))
+            .alias("n"),
+        ).drop("__is_ins"),
+        table_path, part_cols, meta, mat_col=mat_col, rcv_col=rcv_col,
+        check=gate.check,
+    )
+    if not touched and not new_adds:
+        return zero
+    affected = touched
+    m = observed_metrics(inserted)
+    n_inserted = int(m["n"] if m else out.filter("__is_ins").count())
+    inserted_rows = None
+    if n_inserted:
+        inserted_rows = source.filter(ins_cond)
+        if touched or key_only:
+            inserted_rows = inserted_rows.join(
+                _snapshot_scan(
+                    spark, table_path, touched + key_only, meta
+                ).select(*keys),
+                keys,
+                "left_anti",
+            )
     if mat_col is not None:
         rt_actions += _rt_rewrite_finish(_log_dir(table_path), new_adds)
     actions = [_remove_action(a, now_ms) for a in affected]

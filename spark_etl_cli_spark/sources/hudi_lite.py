@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from spark_etl_cli_spark.session import local_frame
+from spark_etl_cli_spark.sources.keygate import KeyGate, KeyStats
 
 
 # Hudi's first bookkeeping meta column; stamped on COW base-file rows
@@ -764,44 +765,35 @@ def _read_hudi_incremental_mor(
 # untouched groups are never read past the key probe or rewritten.
 
 
-def _upsert_rewrites(
+# the write's partition directory of incoming rows (``__fid`` NULL)
+_INCOMING_DIR = "__fid=__HIVE_DEFAULT_PARTITION__"
+
+
+def _upsert_probe(
     df: DataFrame,
     table_path: str,
-    ts: str,
-    commit_uuid: str,
     record_key: str,
     live: dict[tuple[str, str], str],
-) -> dict[str, list[dict]]:
-    """New file slices for the file groups an upsert touches.
+) -> tuple[list[str], dict[str, tuple[str, str]]]:
+    """The live base files holding an incoming key, and every live
+    file's (partition, fileId) by normalized absolute path.
 
-    Location (which groups hold the incoming keys) is one distributed
-    semi-join over ``_metadata.file_path`` — the lite stand-in for
-    Hudi's bloom index; groups with no matching key are never read past
-    that probe and never rewritten. The rewrite itself is one job:
-    affected rows anti-joined against the incoming keys, repartitioned
-    by file group so each group lands as exactly ONE new base file
-    (a file slice is one base file per (fileId, instant)).
-    Returns {partition: [write stats]} with the ORIGINAL fileIds, so
-    latest-slice-wins replay hides the old slices.
+    One distributed semi-join over ``_metadata.file_path`` — the lite
+    stand-in for Hudi's bloom index; groups with no matching key are
+    never read past it and never rewritten.
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
-    if not live:
-        return {}
-    # normalized absolute path -> (partition, fileId)
     loc: dict[str, tuple[str, str]] = {}
     for (part, fid), rel in live.items():
         loc[os.path.abspath(os.path.join(table_path, rel))] = (part, fid)
-    norm_path = F.regexp_replace(
-        F.col("_metadata.file_path"), "^file:/+", "/"
-    )
-    keys = df.select(_rk_expr(record_key).alias("__k")).distinct()
+    keys = df.select(_rk_expr(record_key).alias("__k"))
     base = spark.read.parquet(*sorted(loc)).select(
-        _rk_expr(record_key).alias("__k"), norm_path.alias("__path")
+        _rk_expr(record_key).alias("__k"),
+        F.regexp_replace(
+            F.col("_metadata.file_path"), "^file:/+", "/"
+        ).alias("__path"),
     )
     affected = sorted(
         r["__path"]
@@ -810,9 +802,23 @@ def _upsert_rewrites(
         .distinct()
         .collect()
     )
-    if not affected:
-        return {}
-    fid_of = {p: loc[p][1] for p in affected}
+    return affected, loc
+
+
+def _upsert_remaining(
+    df: DataFrame, record_key: str, affected: list[str], fid_of: dict
+) -> DataFrame:
+    """The rows of the affected file groups the upsert keeps (minus the
+    incoming keys), with their group's ``__fid``, repartitioned by it
+    so each group lands as exactly ONE new base file (a file slice is
+    one base file per (fileId, instant))."""
+    from pyspark.sql import functions as F
+
+    spark = df.sparkSession
+    norm_path = F.regexp_replace(
+        F.col("_metadata.file_path"), "^file:/+", "/"
+    )
+    keys = df.select(_rk_expr(record_key).alias("__k"))
     mapping = F.create_map(
         *[F.lit(x) for p in affected for x in (p, fid_of[p])]
     )
@@ -833,55 +839,66 @@ def _upsert_rewrites(
     # uniform column order across slices: meta column first, then the
     # incoming frame's payload order
     payload = [c for c in df.columns if c != _HOODIE_TS_COL]
-    remaining = remaining.select(_HOODIE_TS_COL, *payload, "__fid")
-    tmp = tempfile.mkdtemp(prefix="hudi_lite_upsert_")
+    return remaining.select(_HOODIE_TS_COL, *payload, "__fid").repartition(
+        "__fid"
+    )
+
+
+def _place_rewrites(
+    data_dir: str,
+    table_path: str,
+    ts: str,
+    commit_uuid: str,
+    schema,
+    spark: SparkSession,
+    affected: list[str],
+    loc: dict[str, tuple[str, str]],
+) -> dict[str, list[dict]]:
+    """Move each affected group's new base file from the write's
+    ``__fid=<fileId>`` directory into its partition as the group's new
+    file slice. Returns {partition: [write stats]} with the ORIGINAL
+    fileIds, so latest-slice-wins replay hides the old slices."""
+    import shutil
+
     out: dict[str, list[dict]] = {}
-    try:
-        remaining.repartition("__fid").write.mode("overwrite").partitionBy(
-            "__fid"
-        ).parquet(tmp)
-        for p in affected:
-            part, fid = loc[p]
-            fid_dir = os.path.join(tmp, f"__fid={fid}")
-            new_name = f"{fid}_{ts}_{commit_uuid[:8]}.parquet"
-            dst_dir = (
-                os.path.join(table_path, part) if part else table_path
+    for p in affected:
+        part, fid = loc[p]
+        fid_dir = os.path.join(data_dir, f"__fid={fid}")
+        new_name = f"{fid}_{ts}_{commit_uuid[:8]}.parquet"
+        dst_dir = os.path.join(table_path, part) if part else table_path
+        os.makedirs(dst_dir, exist_ok=True)
+        dst = os.path.join(dst_dir, new_name)
+        parts = sorted(
+            f
+            for f in _glob.glob(
+                os.path.join(fid_dir, "**", "*.parquet"), recursive=True
             )
-            os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, new_name)
-            parts = (
-                sorted(
-                    f
-                    for f in os.listdir(fid_dir)
-                    if f.endswith(".parquet") and not f.startswith("_")
-                )
-                if os.path.isdir(fid_dir)
-                else []
+            if not os.path.basename(f).startswith("_")
+        )
+        if parts:
+            shutil.move(parts[0], dst)
+        else:
+            # every row of this group was upserted away: the new
+            # slice is an EMPTY base file (schema-only parquet)
+            local_frame(spark, [], schema).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(fid_dir + "_empty")
+            empty = next(
+                f
+                for f in os.listdir(fid_dir + "_empty")
+                if f.endswith(".parquet") and not f.startswith("_")
             )
-            if parts:
-                shutil.move(os.path.join(fid_dir, parts[0]), dst)
-            else:
-                # every row of this group was upserted away: the new
-                # slice is an EMPTY base file (schema-only parquet)
-                local_frame(spark, [], df.schema).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(fid_dir + "_empty")
-                empty = next(
-                    f
-                    for f in os.listdir(fid_dir + "_empty")
-                    if f.endswith(".parquet") and not f.startswith("_")
-                )
-                shutil.move(os.path.join(fid_dir + "_empty", empty), dst)
-            out.setdefault(part, []).append(
-                {
-                    "fileId": fid,
-                    "path": os.path.relpath(dst, table_path),
-                    "numWrites": None,
-                    "fileSizeInBytes": os.path.getsize(dst),
-                }
-            )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            shutil.move(os.path.join(fid_dir + "_empty", empty), dst)
+            shutil.rmtree(fid_dir + "_empty")
+        shutil.rmtree(fid_dir, ignore_errors=True)
+        out.setdefault(part, []).append(
+            {
+                "fileId": fid,
+                "path": os.path.relpath(dst, table_path),
+                "numWrites": None,
+                "fileSizeInBytes": os.path.getsize(dst),
+            }
+        )
     return out
 
 
@@ -954,29 +971,24 @@ def write_hudi_lite(
         )
     if mode == "upsert" and not record_key:
         raise ValueError("hudi_lite upsert needs record_key=<column>")
-    if mode == "upsert":
-        from pyspark.sql import functions as F
 
-        rk_fields = _rk_fields(record_key)
-        any_null = F.lit(False)
-        for f in rk_fields:
-            any_null = any_null | F.col(f).isNull()
-        bad = (
-            df.groupBy(*rk_fields)
-            .count()
-            .filter((F.col("count") > 1) | any_null)
-            .head(1)
-        )
-        if bad:
+    def bad_keys(s: KeyStats) -> None:
+        if s.nulls or s.max_per_key > 1:
             raise ValueError(
                 f"hudi_lite upsert: incoming {record_key!r} values must be "
                 "unique and non-null (no precombine field is emulated); "
-                f"first offender: {bad[0][0]!r}"
+                f"first offender: {s.offender!r}"
             )
+
+    # the key gate rides on the data write and is checked before the
+    # commit (a MOR upsert runs it on its own)
+    gate = KeyGate(_rk_fields(record_key), bad_keys) if mode == "upsert" else None
+    fresh = not os.path.exists(table_path)
     hoodie = os.path.join(table_path, ".hoodie")
     os.makedirs(hoodie, exist_ok=True)
     props = os.path.join(hoodie, "hoodie.properties")
-    if not os.path.exists(props):
+    new_props = not os.path.exists(props)
+    if new_props:
         with open(props, "w") as fh:
             fh.write(
                 "hoodie.table.name=%s\nhoodie.table.type=%s\n"
@@ -1021,9 +1033,31 @@ def write_hudi_lite(
 
     commit_uuid = _uuid.uuid4().hex
     if mode == "upsert" and prior and is_mor:
+        gate.check(df)
         return _mor_upsert_commit(
             df, table_path, ts, record_key, pcols, commit_uuid
         )
+
+    def _live_map() -> dict[tuple[str, str], str]:
+        live: dict[tuple[str, str], str] = {}
+        for pts, pact, ppath in prior:
+            with open(ppath) as fh:
+                c = json.load(fh)
+            if pact == "replacecommit":
+                for part, fids in (c.get("partitionToReplaceFileIds") or {}).items():
+                    for fid in fids:
+                        live.pop((part, fid), None)
+            for part, sts in (c.get("partitionToWriteStats") or {}).items():
+                for st in sts:
+                    live[(part, st.get("fileId") or st["path"])] = st["path"]
+        return live
+
+    # upsert into a live COW table: a probe, then ONE job writes the
+    # incoming file groups together with the rewritten ones
+    affected: list[str] = []
+    live = _live_map() if mode == "upsert" and prior else {}
+    if live:
+        affected, loc = _upsert_probe(df, table_path, record_key, live)
     if not is_mor:
         # real Hudi stamps every base-file row with its commit instant
         # (_hoodie_commit_time, first meta column); incremental reads
@@ -1037,6 +1071,21 @@ def write_hudi_lite(
             df = df.drop(_HOODIE_TS_COL)
         df = df.select(F.lit(ts).alias(_HOODIE_TS_COL), "*")
     data_dir = os.path.join(table_path, f"data_{ts}_{commit_uuid[:8]}")
+    stamped = df
+    if gate is not None:
+        df = gate.windowed(df)
+    if affected:
+        from pyspark.sql import functions as F
+
+        df = df.withColumn("__fid", F.lit(None).cast("string")).unionByName(
+            _upsert_remaining(
+                stamped, record_key, affected,
+                {p: loc[p][1] for p in affected},
+            )
+        )
+    # rewritten groups land under __fid=<fileId>, incoming rows under
+    # the NULL fileId's directory
+    fid_part = ["__fid"] if affected else []
     if pcols:
         # shadow columns drive the directory split so the REAL columns
         # stay in the data files (Hudi never strips partition columns)
@@ -1047,7 +1096,7 @@ def write_hudi_lite(
         df2 = df
         for c, s in shadow.items():
             df2 = df2.withColumn(s, F.col(c))
-        df2.write.partitionBy(*shadow.values()).parquet(data_dir)
+        df2.write.partitionBy(*fid_part, *shadow.values()).parquet(data_dir)
 
         def _part_key(path: str) -> str:
             rel = os.path.relpath(os.path.dirname(path), data_dir)
@@ -1058,10 +1107,35 @@ def write_hudi_lite(
                     raw[k.removeprefix("__hp_")] = _uq(v)
             return "/".join(f"{c}={raw.get(c)}" for c in pcols)
     else:
-        df.write.parquet(data_dir)
+        df.write.partitionBy(*fid_part).parquet(data_dir)
 
         def _part_key(path: str) -> str:
             return ""
+
+    if gate is not None:
+        try:
+            gate.check()
+        except ValueError:
+            import shutil
+
+            shutil.rmtree(table_path if fresh else data_dir)
+            if new_props and not fresh:
+                shutil.rmtree(hoodie)
+            raise
+    rewrites = {}
+    if affected:
+        rewrites = _place_rewrites(
+            data_dir, table_path, ts, commit_uuid, stamped.schema,
+            df.sparkSession, affected, loc,
+        )
+        incoming_dir = os.path.join(data_dir, _INCOMING_DIR)
+        if os.path.isdir(incoming_dir):
+            for name in os.listdir(incoming_dir):
+                os.rename(
+                    os.path.join(incoming_dir, name),
+                    os.path.join(data_dir, name),
+                )
+            os.rmdir(incoming_dir)
 
     per_part: dict[str, list[dict]] = {}
     for f in sorted(
@@ -1082,21 +1156,6 @@ def write_hudi_lite(
     # MOR inserts land in the timeline as deltacommits (the real
     # writer's shape); replacecommit below overrides for overwrite
     action = "deltacommit" if is_mor else "commit"
-
-    def _live_map() -> dict[tuple[str, str], str]:
-        live: dict[tuple[str, str], str] = {}
-        for pts, pact, ppath in prior:
-            with open(ppath) as fh:
-                c = json.load(fh)
-            if pact == "replacecommit":
-                for part, fids in (c.get("partitionToReplaceFileIds") or {}).items():
-                    for fid in fids:
-                        live.pop((part, fid), None)
-            for part, sts in (c.get("partitionToWriteStats") or {}).items():
-                for st in sts:
-                    live[(part, st.get("fileId") or st["path"])] = st["path"]
-        return live
-
     if mode == "overwrite" and prior:
         # replace every live file group as of the prior snapshot
         replaced: dict[str, list[str]] = {}
@@ -1104,12 +1163,8 @@ def write_hudi_lite(
             replaced.setdefault(part, []).append(fid)
         body["partitionToReplaceFileIds"] = replaced
         action = "replacecommit"
-    elif mode == "upsert" and prior:
-        rewrites = _upsert_rewrites(
-            df, table_path, ts, commit_uuid, record_key, _live_map()
-        )
-        for part, sts in rewrites.items():
-            body["partitionToWriteStats"].setdefault(part, []).extend(sts)
+    for part, sts in rewrites.items():
+        body["partitionToWriteStats"].setdefault(part, []).extend(sts)
     # O_EXCL commit claim: two racing writers can't both win the instant
     commit_path = os.path.join(hoodie, f"{ts}.{action}")
     fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_etl_cli_spark.session import local_frame
+from spark_etl_cli_spark.sources.keygate import KeyGate, KeyStats
 
 # spec v3 reserved field ids for the MATERIALIZED row-lineage columns
 # rewritten data files carry (name-mapping entries under these ids name
@@ -1677,8 +1678,13 @@ def write_iceberg_lite(
     branch: str | None = None,
     sort_by: list[str] | None = None,
     column_defaults: dict[str, object] | None = None,
+    key_gate: KeyGate | None = None,
 ) -> int:
     """Commit ``df`` to an Iceberg table; returns the new snapshot id.
+
+    ``key_gate`` (an upsert creating the table) rides on the data job
+    and is checked before anything commits; bad keys remove the files
+    that job wrote.
 
     ``column_defaults`` (format v3, spec "Default values"): per-column
     defaults recorded as ``initial-default`` + ``write-default`` on
@@ -1747,7 +1753,7 @@ def write_iceberg_lite(
             f"iceberg_lite writes format-version 2 or 3, got {format_version}"
         )
     meta_dir = os.path.join(table_path, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
+    fresh = not os.path.exists(table_path)
     existing = is_iceberg_table(table_path) and bool(
         _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
     )
@@ -1891,6 +1897,8 @@ def write_iceberg_lite(
         _part_avro_type(_dt)  # validate up front
 
     # 1. data files — one distributed parquet write into a fresh subdir
+    if key_gate is not None:
+        df = key_gate.windowed(df)
     if sort_by:
         # spec "Sort Orders": cluster rows inside every written file so
         # min/max column stats become selective (the same locality win
@@ -1919,6 +1927,15 @@ def write_iceberg_lite(
         if pcols:
             writer = writer.partitionBy(*pcols)
     writer.parquet(data_dir)
+    if key_gate is not None:
+        try:
+            key_gate.check()
+        except ValueError:
+            import shutil
+
+            shutil.rmtree(table_path if fresh else data_dir)
+            raise
+    os.makedirs(meta_dir, exist_ok=True)
     files = sorted(
         _glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
     )
@@ -2887,11 +2904,15 @@ def upsert_iceberg_lite(
     ADDED, affected files absent), the shape Iceberg's own
     copy-on-write MERGE produces.
 
-    Location is one distributed semi-join over the key column: only
-    files holding ≥1 matching key are rewritten (minus the matched
-    keys); unaffected files are never read past the probe. Incoming
-    keys must be unique and non-null (a target row matches at most one
-    source row). Tables with live position/equality delete files take
+    Location is one distributed join over the key column: only files
+    holding ≥1 matching key are rewritten (minus the matched keys);
+    unaffected files are never read past the probe. Incoming keys must
+    be unique and non-null (a target row matches at most one source
+    row); the write of the incoming frame carries that check
+    (``keygate.py``), and it runs before the commit. On files that
+    record no partition, one job writes the kept rows and the incoming
+    frame, so the upsert runs two Spark jobs. Tables
+    with live position/equality delete files take
     the delete-aware path (affected files re-read through the full
     reader, prior delete manifests carried for untouched files;
     identity-partitioned layouts split rewrites per partition and
@@ -2904,19 +2925,26 @@ def upsert_iceberg_lite(
     import uuid as _uuid
 
     spark = df.sparkSession
-    if not (
-        is_iceberg_table(table_path)
-        and _glob.glob(
-            os.path.join(table_path, "metadata", "*.metadata.json")
-        )
-    ):
-        # MERGE into a missing table is CREATE (hudi/delta convention)
-        write_iceberg_lite(df, table_path)
+    if on not in df.columns:
+        raise ValueError(f"upsert key {on!r} not in the table schema")
+
+    def bad_keys(s: KeyStats) -> None:
+        if s.nulls or s.max_per_key > 1:
+            raise ValueError(
+                f"iceberg upsert: incoming {on!r} values must be unique "
+                f"and non-null; first offender: {s.offender!r}"
+            )
+
+    gate = KeyGate([on], bad_keys)
+    if not is_iceberg_table(table_path):
+        # MERGE into a missing table is CREATE (hudi/delta convention);
+        # one job writes it, carrying the key gate and the row count
+        write_iceberg_lite(df, table_path, key_gate=gate)
         return {
             "files_rewritten": 0,
             "files_added": 1,
             "rows_updated": 0,
-            "rows_inserted": df.count(),
+            "rows_inserted": gate.stats().rows,
         }
     meta = _load_metadata(table_path)
     schema = _schema_to_spark(meta)
@@ -2927,19 +2955,6 @@ def upsert_iceberg_lite(
             f"iceberg upsert schema mismatch: table has "
             f"{schema.simpleString()}, frame has "
             f"{df.schema.simpleString()}"
-        )
-    if on not in df.columns:
-        raise ValueError(f"upsert key {on!r} not in the table schema")
-    bad = (
-        df.groupBy(on)
-        .count()
-        .filter((F.col("count") > 1) | F.col(on).isNull())
-        .head(1)
-    )
-    if bad:
-        raise ValueError(
-            f"iceberg upsert: incoming {on!r} values must be unique and "
-            f"non-null; first offender: {bad[0][0]!r}"
         )
     snap = _snapshot(meta, None)
     live = [
@@ -2952,6 +2967,7 @@ def upsert_iceberg_lite(
         # delete-aware path: affected files re-read through the full
         # delete-applying reader, prior delete manifests carried for
         # the untouched files (see _cow_keyed_rewrite_under_deletes)
+        gate.check(df)
         keys_df = df.select(on).distinct()
         live_keys = read_iceberg_lite(
             spark, table_path, with_provenance=True
@@ -2981,6 +2997,7 @@ def upsert_iceberg_lite(
         # non-identity spec: matched files rewrite under their raw
         # recorded tuple, the incoming frame splits by the evaluated
         # transforms (see _upsert_cow_transformed)
+        gate.check(df)
         return _upsert_cow_transformed(spark, table_path, meta, live, df, on)
     scan, grouped, union_scan = _cow_scan_tools(
         spark, table_path, meta, part_fields
@@ -2990,21 +3007,33 @@ def upsert_iceberg_lite(
     data_schema = T.StructType(
         [f for f in spark_schema.fields if f.name not in pnames]
     )
-    keys = df.select(on).distinct()
+    keys = df.select(on)
     by_path = {
         _localize(e["data_file"]["file_path"], table_path): e for e in live
     }
     affected: list[dict] = []
     n_updated = 0
+    n_matched_keys = 0
     if live:
+        # one job: the incoming keys joined to the key column of every
+        # live file. GROUPING SETS counts the matched rows per file and
+        # per matched key; only keys the target holds more than once
+        # come back, so the distinct matched keys are the matched rows
+        # minus those keys' extra rows. (Duplicate incoming keys would
+        # overcount, but they fail the key gate before the commit.)
         counts = (
             union_scan(live, with_file=True)
+            .select(on, "__file")
             .join(keys, on)
-            .groupBy("__file")
-            .count()
+            .groupingSets([["__file"], [on]], "__file", on)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("__file").isNotNull() | (F.col("n") > 1))
             .collect()
         )
         for r in counts:
+            if r["__file"] is None:
+                n_matched_keys -= r["n"] - 1
+                continue
             e = by_path.get(r["__file"])
             if e is None:
                 raise RuntimeError(
@@ -3013,21 +3042,10 @@ def upsert_iceberg_lite(
                     "commit a partial merge"
                 )
             affected.append(e)
-        n_updated = sum(r["count"] for r in counts)
+            n_updated += r["n"]
+    n_matched_keys += n_updated
     affected_ids = {id(e) for e in affected}
     untouched = [e for e in live if id(e) not in affected_ids]
-    # count inserts DIRECTLY (source keys absent from the target) —
-    # df.count() - n_updated is wrong when the target holds duplicate
-    # keys: one source row matching N target rows would make it
-    # negative. Matched keys live only in affected files, so the
-    # anti-join scans just those.
-    if affected:
-        tgt_keys = (
-            union_scan(affected, with_file=False).select(on).distinct()
-        )
-        n_inserted = df.join(tgt_keys, on, "left_anti").count()
-    else:
-        n_inserted = df.count()
 
     snapshot_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
     seq = int(meta.get("last-sequence-number") or 0) + 1
@@ -3044,7 +3062,8 @@ def upsert_iceberg_lite(
         not affected
         or _lineage_rewrite_col(affected, table_path) is not None
     )
-    df_w = df
+    # the incoming frame's write carries the key gate
+    df_w = gate.windowed(df)
     if lineage:
         if affected:
             olds = None
@@ -3058,16 +3077,26 @@ def upsert_iceberg_lite(
             old_ids = olds.groupBy(on).agg(
                 F.min("_row_id").alias("_row_id")
             )
-            df_w = df.join(old_ids, on, "left")
+            df_w = df_w.join(old_ids, on, "left")
         else:
-            df_w = df.withColumn("_row_id", F.lit(None).cast("long"))
+            df_w = df_w.withColumn("_row_id", F.lit(None).cast("long"))
         # incoming rows (replacements AND inserts) are updated at THIS
         # commit: NULL inherits the new file's sequence
         df_w = df_w.withColumn(
             "_last_updated_sequence_number", F.lit(None).cast("long")
         )
 
+    # identity-partitioned files split the incoming frame by partition
+    # and keep each rewritten group under its recorded tuple; otherwise
+    # every file is unpartitioned and ONE job writes the kept rows of
+    # all affected files together with the incoming frame
+    pcols = [src for _, src, _ in part_fields]
+    split = bool(pcols) and any(
+        (e["data_file"].get("partition") or {}) for e in live
+    )
     new_adds: list[tuple[str, dict]] = []
+    written: list[str] = []  # the data directories this upsert writes
+    kept_all: list[DataFrame] = []
     # rewrites: affected groups minus the incoming keys
     for gidx, (key, group) in enumerate(
         sorted(
@@ -3089,9 +3118,13 @@ def upsert_iceberg_lite(
                 ),
             )
         )
+        if not split:
+            kept_all.append(kept)
+            continue
         gdir = os.path.join(
             table_path, "data", f"upsert-{commit_uuid}-{gidx}"
         )
+        written.append(gdir)
         kept.write.parquet(gdir)
         pv = dict(key) if recorded else {}
         for p in sorted(_glob.glob(os.path.join(gdir, "*.parquet"))):
@@ -3101,10 +3134,8 @@ def upsert_iceberg_lite(
     # the full incoming frame lands as new files, partition-split when
     # the table records identity partitions
     in_dir = os.path.join(table_path, "data", f"upsert-in-{commit_uuid}")
-    pcols = [src for _, src, _ in part_fields]
-    if pcols and any(
-        (e["data_file"].get("partition") or {}) for e in live
-    ):
+    written.append(in_dir)
+    if split:
         writer = df_w.write.partitionBy(*pcols)
         writer.parquet(in_dir)
         for p in sorted(
@@ -3124,11 +3155,23 @@ def upsert_iceberg_lite(
             }
             new_adds.append((p, pv))
     else:
-        df_w.write.parquet(in_dir)
+        out = df_w
+        for kept in kept_all:
+            out = kept.unionByName(out)
+        out.write.parquet(in_dir)
         for p in sorted(_glob.glob(os.path.join(in_dir, "*.parquet"))):
             if _parquet_row_count(p) == 0:
                 continue
             new_adds.append((p, {}))
+    try:
+        # inserts are the incoming keys absent from the target
+        n_inserted = gate.check().rows - n_matched_keys
+    except ValueError:
+        import shutil
+
+        for d in written:
+            shutil.rmtree(d, ignore_errors=True)
+        raise
 
     _commit_rewrite_snapshot(
         table_path, meta, untouched, new_adds, part_fields,

@@ -31,3 +31,42 @@ def spark():
         },
     )
     yield spark
+
+
+@pytest.fixture
+def sql_executions(spark):
+    """``sql_executions(fn, *args, **kwargs)`` → (fn's result, the number
+    of SQL executions it ran): the growth of the last execution id in
+    the SQL status store once the listener bus has delivered every
+    event (the store keeps only the latest executions, so its size
+    stops growing in a long session)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_id():
+        bus.waitUntilEmpty()
+        n = int(store.executionsCount())
+        return int(store.executionsList(n - 1, 1).head().executionId()) if n else -1
+
+    def run(fn, *args, **kwargs):
+        before = last_id()
+        out = fn(*args, **kwargs)
+        return out, last_id() - before
+
+    return run
+
+
+@pytest.fixture
+def files_under():
+    """``files_under(path)`` → every file below ``path`` (relative
+    paths; empty when ``path`` does not exist)."""
+    import os
+
+    def files(path):
+        return {
+            os.path.relpath(os.path.join(d, f), path)
+            for d, _dirs, fs in os.walk(path)
+            for f in fs
+        }
+
+    return files

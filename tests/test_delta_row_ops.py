@@ -2996,3 +2996,95 @@ def test_with_row_id_strict_raises_on_foreign_file(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="strict"):
         src.read(spark)
+
+
+def test_merge_and_upsert_run_one_probe_and_one_write(
+    spark, tmp_path, sql_executions
+):
+    """A MERGE or upsert into a live table runs exactly two SQL
+    executions: the probe, which carries the source-key gate, and the
+    write, which yields the rewritten rows and the inserts and counts
+    them. One that creates the table runs one: the write."""
+    from spark_etl_cli_spark.sources.delta_lite import merge_delta_lite
+
+    path = str(tmp_path / "tbl")
+    _mk_table(spark, path, partitioned=False)
+    schema = "id long, part string, v double"
+    src = spark.createDataFrame(
+        [(3, "a", -3.0), (15, "b", -15.0), (40, "b", 40.0)], schema
+    )
+    stats, n = sql_executions(
+        merge_delta_lite, src, path, on="id", update_set={"v": "source.v"}
+    )
+    assert n == 2
+    assert (stats["rows_updated"], stats["rows_inserted"]) == (2, 1)
+    assert stats["files_rewritten"] == 2 and stats["rows_deleted"] == 0
+    up = spark.createDataFrame([(3, "z", 33.0), (41, "c", 41.0)], schema)
+    _, n = sql_executions(
+        write_delta_lite, up, path, mode="upsert", merge_key="id"
+    )
+    assert n == 2
+    got = {r["id"]: (r["part"], r["v"]) for r in read_delta_lite(spark, path).collect()}
+    assert len(got) == 22
+    assert got[3] == ("z", 33.0) and got[15] == ("b", -15.0)
+    assert got[40] == ("b", 40.0) and got[41] == ("c", 41.0)
+    assert got[4] == ("a", 4.0)
+
+    stats, n = sql_executions(
+        merge_delta_lite, src, str(tmp_path / "new_merge"), on="id",
+        update_set={"v": "source.v"},
+    )
+    assert n == 1 and stats["rows_inserted"] == 3
+    _, n = sql_executions(
+        write_delta_lite, up, str(tmp_path / "new_upsert"), mode="upsert",
+        merge_key="id",
+    )
+    assert n == 1
+    assert read_delta_lite(spark, str(tmp_path / "new_upsert")).count() == 2
+
+
+@pytest.mark.parametrize("op", ["merge", "upsert"])
+def test_bad_source_keys_raise_before_anything_commits(
+    spark, tmp_path, files_under, op
+):
+    """NULL or duplicate source keys (composite ones too, for MERGE)
+    raise the writer's ValueError into a live table and into a missing
+    one; the table keeps its version and gains no file, also when the
+    gate fails inside the write job."""
+    from spark_etl_cli_spark.sources.delta_lite import merge_delta_lite
+
+    live = str(tmp_path / "live")
+    _mk_table(spark, live, partitioned=False)
+    schema = "id long, part string, v double"
+    if op == "merge":
+        null, dup = (
+            "merge: NULL keys in the source frame",
+            "merge: duplicate keys in the source frame",
+        )
+        cases = [
+            ([(None, "a", 1.0)], ["id"], null),
+            ([(1, "a", 1.0), (1, "b", 2.0)], ["id"], dup),
+            ([(1, None, 1.0)], ["id", "part"], null),
+            ([(1, "a", 1.0), (1, "a", 2.0)], ["id", "part"], dup),
+        ]
+    else:
+        null, dup = (
+            "upsert: NULL merge keys in the incoming frame",
+            "upsert: duplicate merge keys in the incoming frame",
+        )
+        cases = [
+            ([(None, "a", 1.0)], ["id"], null),
+            ([(1, "a", 1.0), (1, "b", 2.0)], ["id"], dup),
+        ]
+    for path in (live, str(tmp_path / "missing")):
+        before = files_under(path)
+        for rows, on, msg in cases:
+            df = spark.createDataFrame(rows, schema)
+            with pytest.raises(ValueError, match=msg):
+                if op == "merge":
+                    merge_delta_lite(
+                        df, path, on=on, update_set={"v": "source.v"}
+                    )
+                else:
+                    write_delta_lite(df, path, mode="upsert", merge_key="id")
+            assert files_under(path) == before

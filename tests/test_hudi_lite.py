@@ -1902,3 +1902,86 @@ def test_hudi_savepoint_via_uri(spark, tmp_path):
         sinks=["s+console://"],
     )
     assert _savepointed_instants(table) == {ts1}
+
+
+def test_hudi_upsert_runs_one_probe_and_one_write(
+    spark, tmp_path, sql_executions
+):
+    """A COW upsert into a live table runs exactly two SQL executions:
+    the probe (key gate, affected file groups) and one write of the
+    incoming file group together with the rewritten ones. One that
+    creates the table runs one."""
+    from spark_etl_cli_spark.sources.hudi_lite import (
+        read_hudi_lite,
+        write_hudi_lite,
+    )
+
+    table = str(tmp_path / "hudi_budget")
+    schema = "id long, v double"
+    write_hudi_lite(
+        spark.createDataFrame([(i, float(i)) for i in range(5)], schema),
+        table, record_key="id",
+    )
+    write_hudi_lite(
+        spark.createDataFrame([(i, float(i)) for i in range(5, 10)], schema),
+        table, record_key="id",
+    )
+    src = spark.createDataFrame([(3, 30.0), (8, 80.0), (20, 2.0)], schema)
+    _, n = sql_executions(
+        write_hudi_lite, src, table, mode="upsert", record_key="id"
+    )
+    assert n == 2
+    got = {r["id"]: r["v"] for r in read_hudi_lite(spark, table).collect()}
+    assert got == {
+        **{i: float(i) for i in range(10)}, 3: 30.0, 8: 80.0, 20: 2.0
+    }
+    _, n = sql_executions(
+        write_hudi_lite, src, str(tmp_path / "hudi_new"), mode="upsert",
+        record_key="id",
+    )
+    assert n == 1
+
+
+def test_hudi_upsert_bad_keys_raise_before_anything_commits(
+    spark, tmp_path, files_under
+):
+    """NULL or duplicate incoming keys, composite ones too, raise the
+    same ValueError into a live table and into a missing one; the
+    table keeps its timeline and gains no file, also when the gate
+    fails inside the write job."""
+    import re
+
+    from spark_etl_cli_spark.sources.hudi_lite import write_hudi_lite
+
+    schema = "id long, part string, v double"
+    msg = (
+        "hudi_lite upsert: incoming {!r} values must be unique and "
+        "non-null (no precombine field is emulated); first offender: {}"
+    )
+    cases = {
+        "id": [
+            ([(None, "a", 1.0)], "None"),
+            ([(2, "a", 1.0), (2, "b", 2.0)], "2"),
+        ],
+        "id,part": [
+            ([(2, None, 1.0)], "2"),
+            ([(2, "a", 1.0), (2, "a", 2.0)], "2"),
+        ],
+    }
+    for key, key_cases in cases.items():
+        live = str(tmp_path / f"live_{key}")
+        write_hudi_lite(
+            spark.createDataFrame([(1, "a", 1.0)], schema), live,
+            record_key=key,
+        )
+        for path in (live, str(tmp_path / f"missing_{key}")):
+            before = files_under(path)
+            for rows, offender in key_cases:
+                with pytest.raises(
+                    ValueError, match=re.escape(msg.format(key, offender))
+                ):
+                    write_hudi_lite(
+                        spark.createDataFrame(rows, schema), path,
+                        mode="upsert", record_key=key,
+                    )
+                assert files_under(path) == before

@@ -2809,3 +2809,76 @@ def test_iceberg_mixed_spec_rewrite_under_deletes_keeps_full_tuple(
         for p, data in backups.items():
             with open(p, "wb") as fh:
                 fh.write(data)
+
+
+def test_iceberg_upsert_runs_one_probe_and_one_write(
+    spark, tmp_path, sql_executions
+):
+    """An upsert into a live table runs exactly two SQL executions: the
+    probe (key gate, files to rewrite, matched keys) and one write of
+    the kept and the incoming rows. One that creates the table runs
+    one."""
+    from spark_etl_cli_spark.sources.iceberg_lite import (
+        read_iceberg_lite,
+        upsert_iceberg_lite,
+        write_iceberg_lite,
+    )
+
+    table = str(tmp_path / "ice_budget")
+    schema = "id long, v double"
+    write_iceberg_lite(
+        spark.createDataFrame([(i, float(i)) for i in range(5)], schema),
+        table,
+    )
+    write_iceberg_lite(
+        spark.createDataFrame([(i, float(i)) for i in range(5, 10)], schema),
+        table, mode="append",
+    )
+    src = spark.createDataFrame([(3, 30.0), (8, 80.0), (20, 2.0)], schema)
+    stats, n = sql_executions(upsert_iceberg_lite, src, table, on="id")
+    assert n == 2
+    assert (stats["rows_updated"], stats["rows_inserted"]) == (2, 1)
+    assert stats["files_rewritten"] == 2
+    got = {r["id"]: r["v"] for r in read_iceberg_lite(spark, table).collect()}
+    assert got == {
+        **{i: float(i) for i in range(10)}, 3: 30.0, 8: 80.0, 20: 2.0
+    }
+
+    stats, n = sql_executions(
+        upsert_iceberg_lite, src, str(tmp_path / "ice_new"), on="id"
+    )
+    assert n == 1 and stats["rows_inserted"] == 3
+
+
+def test_iceberg_upsert_bad_keys_raise_before_anything_commits(
+    spark, tmp_path, files_under
+):
+    """NULL or duplicate incoming keys raise the same ValueError into a
+    live table and into a missing one; the table keeps its snapshot and
+    gains no file, also when the gate fails inside the write job."""
+    import re
+
+    from spark_etl_cli_spark.sources.iceberg_lite import (
+        upsert_iceberg_lite,
+        write_iceberg_lite,
+    )
+
+    live = str(tmp_path / "live")
+    schema = "id long, v double"
+    write_iceberg_lite(spark.createDataFrame([(1, 1.0)], schema), live)
+    msg = (
+        "iceberg upsert: incoming 'id' values must be unique and non-null; "
+        "first offender: {}"
+    )
+    cases = [
+        ([(None, 1.0)], msg.format("None")),
+        ([(2, 1.0), (2, 2.0)], msg.format("2")),
+    ]
+    for path in (live, str(tmp_path / "missing")):
+        before = files_under(path)
+        for rows, text in cases:
+            with pytest.raises(ValueError, match=re.escape(text)):
+                upsert_iceberg_lite(
+                    spark.createDataFrame(rows, schema), path, on="id"
+                )
+            assert files_under(path) == before

@@ -378,7 +378,12 @@ def test_cds_unwritable_cache_starts_without_archive(cds_env, monkeypatch):
     assert _launch() == (CONFS, None)
 
 
-def test_cds_jvm_dying_on_archive_restarts_without_it(cds_env):
+def test_cds_jvm_dying_on_archive_restarts_without_it(
+    cds_env, tmp_path, monkeypatch
+):
+    """The session starts again without the archive, and of the crash
+    logs in the working directory only the dead JVM's goes: one written
+    during the failed launch whose jvm_args name this archive."""
     from pyspark.errors import PySparkRuntimeError
 
     from spark_etl_cli_spark import cds
@@ -387,11 +392,19 @@ def test_cds_jvm_dying_on_archive_restarts_without_it(cds_env):
     cache.mkdir(parents=True)
     jsa = cache / f"{cds.archive_key(CONFS, home, jdk)}.jsa"
     jsa.write_bytes(b"truncated")
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    crash = "#\n# A fatal error has been detected\njvm_args: -Xmx1g {}\n"
+    opt = f"-XX:SharedArchiveFile={jsa}"
+    (cwd / "hs_err_pid100.log").write_text(crash.format(opt))  # earlier
     launched = []
 
     def start(confs):
         launched.append(confs)
         if "SharedArchiveFile" in confs[cds.JAVA_OPTS]:
+            (cwd / "hs_err_pid101.log").write_text(crash.format(opt))
+            (cwd / "hs_err_pid102.log").write_text(crash.format("-Xss4m"))
             raise PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED",
                                       messageParameters={})
         return "session"
@@ -399,6 +412,9 @@ def test_cds_jvm_dying_on_archive_restarts_without_it(cds_env):
     assert cds.launch(CONFS, start) == "session"
     assert launched[1:] == [CONFS]
     assert not jsa.exists() and jsa.with_suffix(".failed").exists()
+    assert sorted(p.name for p in cwd.iterdir()) == [
+        "hs_err_pid100.log", "hs_err_pid102.log"
+    ]
 
 
 def test_corrupt_archive_still_starts_a_session(tmp_path):
