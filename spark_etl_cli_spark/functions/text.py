@@ -44,42 +44,43 @@ def tokens(text: Column) -> Column:
     return F.split(F.lower(normalize_ws(text)), " ")
 
 
-def _sql(col: Column) -> str:
-    # Column → SQL text usable inside F.expr (internal helper).
-    return col._jc.toString()  # noqa: SLF001
-
-
 def word_shingles(text: Column, k: int = 3, distinct: bool = True) -> Column:
-    """Array of k-word shingles, joined with single spaces.
+    """Array of k-word shingles of ``norm = lower(normalize_ws(text))``,
+    joined with single spaces; ``[]`` for NULL text and for docs with
+    fewer than k tokens.
 
     ``distinct=True`` (the dedup-family default) returns the shingle
-    SET; ``distinct=False`` keeps one entry per position (tf counting,
-    e.g. sparse TF-IDF vectors in operators/retrieval.py).
+    SET in first-occurrence order; ``distinct=False`` keeps one entry
+    per position (tf counting, e.g. sparse TF-IDF vectors in
+    operators/retrieval.py).
 
-    Guarded for short docs: Spark's ``sequence(1, 0)`` counts *down*
-    ([1, 0]) and ``slice(_, 0, _)`` then throws, so docs with fewer than
-    k tokens return an empty array explicitly.
+    One codegen'd expression, no lambda: for k >= 2 a
+    ``regexp_extract_all`` whose zero-width pattern matches once per
+    token start and captures the k tokens ahead of it in a lookahead,
+    so matches overlap. ``norm`` is its tokens joined by single spaces
+    (``normalize_ws`` turned every Java ``\\s`` run into one space and
+    trimmed the ends), so ``\\S+`` tokens are exactly the
+    ``split(norm, ' ')`` tokens and each capture is the substring of
+    ``norm`` spanning k of them. k = 1 is that split itself, which
+    keeps ``""`` -> ``[""]``.
 
-    The token array is *let-bound* by transforming over a one-element
-    array: lambda variables are evaluated once, whereas a plain subtree
-    reference inside a ``transform`` lambda is re-evaluated per element
-    — which would re-run the whitespace-regex tokenization once per
-    shingle position (measured ~6x slowdown on real documents).
+    The lookbehind is positive (``(?<=^| )``): after a zero-width match
+    Java's ``Matcher`` advances one UTF-16 unit, so a negative form such
+    as ``(?<![^ ])`` also matched between the halves of a surrogate pair
+    and captured a shingle that starts with a lone low surrogate (an
+    emoji token). Between the halves the preceding unit is the high
+    surrogate, never a space.
     """
-    toks = tokens(text)
-    positional = F.element_at(
-        F.transform(
-            F.array(toks),
-            lambda tk: F.when(
-                F.size(tk) >= k,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(tk) - F.lit(k - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(tk, i, k)),
-                ),
-            ).otherwise(F.array().cast("array<string>")),
-        ),
-        1,
-    )
+    if k < 1:
+        raise ValueError(f"shingle size k must be >= 1, got {k}")
+    if k == 1:
+        positional = tokens(text)
+    else:
+        pattern = rf"(?<=^| )(?=(\S+(?: \S+){{{k - 1}}}))"
+        positional = F.regexp_extract_all(
+            F.lower(normalize_ws(text)), F.lit(pattern), F.lit(1)
+        )
+    positional = F.coalesce(positional, F.array().cast("array<string>"))
     return F.array_distinct(positional) if distinct else positional
 
 

@@ -1,35 +1,29 @@
 """Arrow-vectorized text map stages (guide §4.2).
 
-``word_shingles`` (functions/text.py) is a pure built-in composition,
-but its shingle loop is a higher-order ``transform`` whose body Spark
-evaluates INTERPRETED (HOF lambdas never reach whole-stage codegen), so
-every shingle position pays an interpreter dispatch plus a fresh
-``slice`` + ``concat_ws`` allocation. That is the map-side cost under
-every minhash / jaccard / containment / simhash / calibration query.
+Plain shingling needs no Python: ``word_shingles`` (functions/text.py)
+is one codegen'd ``regexp_extract_all``, and :func:`with_word_shingles`
+is its projection. It replaced a ``mapInArrow`` stage here that
+produced the same strings, because that stage started Python workers
+(about 3 s before a cold process's first batch, about 330 MB) and was
+no faster warm.
 
-:func:`with_word_shingles` computes byte-identical shingles in ONE
-``mapInArrow`` stage instead. The split of work is deliberate:
+Two stages stay in Python, each where it measured faster than its
+JVM form:
 
-- **JVM side** keeps everything with regex/locale semantics — the
-  whitespace normalization (Java ``\\s``), ``lower`` and ``trim`` run
-  as the same codegen'd built-ins as before, producing the normalized
-  string ``lower(trim(regexp_replace(text, '\\s+', ' ')))``. Python
-  regex/casefold rules differ in corners (Unicode ``\\s``, locale
-  lowering), so none of that is re-implemented here.
-- **Python side** only does offset arithmetic: the normalized string
-  IS its tokens joined by single spaces (the regex collapsed every
-  whitespace run), so token boundaries are exactly the spaces and the
-  k-shingle at position i is the SUBSTRING of the normalized string
-  from token i's start to token i+k-1's end. No join, no re-concat —
-  one slice per shingle, dedup via insertion-ordered dict, matching
-  ``array_distinct``'s keep-first-occurrence order.
+- :func:`with_shingle_md5_longs` hashes each shingle to an md5-prefix
+  long with OpenSSL's md5 in the worker, so 8 bytes per shingle return
+  to the JVM, where the JVM form runs one md5 + ``conv`` per exploded
+  shingle row (q36/q200/q202 1.41x/1.13x/1.25x A-B-A).
+- :func:`with_tagged_ngrams` emits several gram sizes from one
+  tokenization, instead of one shingle pass per size plus an
+  interpreted per-element struct ``transform`` (q182 1.17x A-B-A).
 
-Byte-exact parity with ``word_shingles`` is pinned by
-``tests/test_arrowtext.py`` over adversarial inputs (NULL, empty,
-blank, Unicode spaces, emoji, CRLF/tabs, short docs) and the real
-corpus; the shingle strings feed md5/xxhash oracles downstream, so the
-DuckDB gates re-verify the parity end-to-end on every query that
-adopts this stage.
+Both work on the JVM-normalized string
+``lower(trim(regexp_replace(text, '\\s+', ' ')))``, so Java's regex
+and lowering rules stay the only ones; Python only does offset
+arithmetic over its single-space separated tokens (:func:`_py_shingles`,
+also the reference that ``tests/test_arrowtext.py`` holds
+``word_shingles`` to, byte for byte).
 """
 
 from __future__ import annotations
@@ -37,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from spark_etl_cli_spark.functions.text import normalize_ws
+from spark_etl_cli_spark.functions.text import normalize_ws, word_shingles
 
 
 def _py_shingles(norm: str | None, k: int, distinct: bool) -> list[str]:
@@ -45,8 +39,7 @@ def _py_shingles(norm: str | None, k: int, distinct: bool) -> list[str]:
     no leading/trailing space). Twin of ``word_shingles`` given
     ``norm = lower(normalize_ws(text))``:
 
-    - ``None`` → ``[]``  (size(NULL) is NULL → the when() falls through
-      to the empty-array branch);
+    - ``None`` → ``[]`` (NULL text);
     - fewer than k tokens → ``[]`` (the short-doc guard);
     - otherwise one entry per position, each the substring spanning k
       tokens, optionally distinct with first-occurrence order.
@@ -82,49 +75,16 @@ def with_word_shingles(
     out_col: str = "shingles",
     keep: list[str | Column] | None = None,
 ) -> DataFrame:
-    """``df.select(*keep, word_shingles(text_col, k, distinct))`` as one
-    Arrow stage — byte-identical output, vectorized instead of an
-    interpreted per-position HOF.
+    """``df.select(*keep, word_shingles(text_col, k, distinct))``.
 
-    ``keep`` lists the columns to carry through the Python boundary
-    (guide §4.1: pass ONLY what downstream needs — an opaque stage
-    defeats column pruning, so the explicit projection here is the
-    pruning). Defaults to every column except ``text_col``.
-
-    Returns columns ``[*keep, out_col: array<string>]``.
+    ``keep`` defaults to every column except ``text_col``. Returns
+    columns ``[*keep, out_col: array<string>]``.
     """
     if keep is None:
         keep = [c for c in df.columns if c != text_col]
-    norm = F.lower(normalize_ws(F.col(text_col)))
-    pre = df.select(*keep, norm.alias("__norm"))
-    keep_names = pre.columns[:-1]
-    keep_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in pre.schema[:-1]
+    return df.select(
+        *keep, word_shingles(F.col(text_col), k, distinct).alias(out_col)
     )
-    out_schema = (
-        f"{keep_schema}, `{out_col}` array<string>"
-        if keep_names
-        else f"`{out_col}` array<string>"
-    )
-    n_keep = len(keep_names)
-    names = list(keep_names) + [out_col]
-
-    def _batches(it):
-        import pyarrow as pa
-
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            norms = batch.column(n_keep).to_pylist()
-            arr = pa.array(
-                [_py_shingles(s, k, distinct) for s in norms],
-                type=pa.list_(pa.string()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(n_keep)] + [arr], names
-            )
-
-    return pre.mapInArrow(_batches, out_schema)
 
 
 def with_shingle_md5_longs(

@@ -161,9 +161,6 @@ def shingle_pairs_jaccard(
             F.col(shingles_col).alias("shingles"),
         )
     else:
-        # Arrow shingle stage (guide §4.2): byte-identical to
-        # word_shingles(text, k) but vectorized — the HOF shingle loop
-        # ran interpreted per position (see operators/arrowtext.py).
         shingled = with_word_shingles(
             fan_out(df),
             text_col,
@@ -273,9 +270,6 @@ def minhash_signatures(
             F.explode(F.col(shingles_col)).alias("s"),
         )
     else:
-        # Arrow shingle stage — byte-identical shingles, vectorized
-        # (operators/arrowtext.py); the explode stays a codegen'd
-        # Generate over the returned array.
         exploded = with_word_shingles(
             fan_out(df),
             text_col,
@@ -782,9 +776,6 @@ def simhash(
             out_col="hs",
         )
     else:
-        # Arrow shingle stage — byte-identical to word_shingles
-        # (operators/arrowtext.py); only the per-shingle hash transform
-        # stays a JVM HOF (its body is one hash expression).
         shingled = with_word_shingles(
             fan_out(df),
             text_col,

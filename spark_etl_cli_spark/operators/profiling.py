@@ -235,11 +235,6 @@ def ngram_novelty(
     # shingle once into doc-grain arrays, fanned out and checkpointed:
     # `sh` feeds two branches (first-seen aggregate + the join back),
     # which otherwise re-run the tokenize+shingle subtree per branch.
-    # (Measured r11: the Arrow shingle stage is a small LOSS here —
-    # the shingle STRINGS are the join keys both branches need, so
-    # they cross the Python boundary at full width and the interpreted
-    # HOF it replaces is cheaper than the round trip; 0.88x/0.99x in
-    # two matched windows. Kept JVM-side.)
     arrays = (
         fan_out(df)
         .select(

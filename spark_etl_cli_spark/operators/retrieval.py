@@ -43,11 +43,11 @@ def _gram_hashes(
 ) -> DataFrame:
     """(doc id, 64-bit hash) per *distinct* word n-gram of each doc.
 
-    Deliberately JVM-side (r11 measurement): both the Arrow shingle
-    stage and the fused shingle+md5-hex stage measured SLOWER here in
-    matched windows (0.88x, then 0.59x/~0.75x drift-adjusted) — at
-    n=8 the gram count per doc is small, the post-explode md5+substring
-    is codegen'd, and the Python round trip has nothing to amortize.
+    Deliberately JVM-side (r11 measurement): a fused shingle+md5-hex
+    Arrow stage measured SLOWER here in matched windows (0.59x/~0.75x
+    drift-adjusted) — at n=8 the gram count per doc is small, the
+    post-explode md5+substring is codegen'd, and the Python round trip
+    has nothing to amortize.
     """
     return df.select(
         F.col(id_col).alias(out_id),
@@ -272,8 +272,7 @@ def sparse_cosine_topk(
 
     from spark_etl_cli_spark.operators.util import fan_out
 
-    # NON-distinct n-gram shingles: tf counts occurrences. Shingling
-    # is the Arrow stage (byte-identical, vectorized).
+    # NON-distinct n-gram shingles: tf counts occurrences.
     tf = (
         with_word_shingles(
             fan_out(docs),

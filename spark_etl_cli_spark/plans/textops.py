@@ -974,8 +974,7 @@ def q155_dup_span_share(spark, sf_dir):
     # Tokenize ONCE into doc-grain shingle arrays and materialize them:
     # both consumers (the dup-gram aggregate and the coverage join leg)
     # re-explode from the checkpoint instead of re-running the
-    # regex-tokenize + slice pipeline per branch (same pattern as q143).
-    # The shingle pass is the Arrow stage (byte-identical, vectorized).
+    # regex shingle pass per branch (same pattern as q143).
     docg = with_word_shingles(
         fan_out(t(spark, sf_dir, "documents")),
         "text",
@@ -1193,7 +1192,6 @@ def q159_containment_pairs(spark, sf_dir):
     # aggregation), the explode is already unique per doc (the old
     # post-explode .distinct() exchange was a no-op), and both
     # branches reuse one tokenize pass, fanned out across the cluster.
-    # Shingling is the Arrow stage (byte-identical, vectorized).
     arrays = with_word_shingles(
         fan_out(base), "text", 4, out_col="__sh", keep=["doc_id"]
     ).localCheckpoint()
@@ -1371,8 +1369,7 @@ def q168_prefix_filter_pairs(spark, sf_dir):
     # bucket min(text) must equal max(text); any collision raises
     # before a single pair is emitted, so hash-based intersection
     # counts are PROVABLY the text counts whenever the query returns.
-    # Shingling is the Arrow stage (byte-identical, vectorized);
-    # fan_out FIRST so the opaque Python stage runs cluster-wide.
+    # fan_out FIRST so the regex shingle pass runs cluster-wide.
     # EAGER checkpoint: the shingle arrays feed THREE plan branches
     # (df counts, the ordered-prefix build, and the verify stage's set
     # lookup); lazily-checkpointed RDDs can be computed concurrently
@@ -1921,8 +1918,8 @@ def q184_lsh_calibration(spark, sf_dir):
     # both calibration legs key on the SAME distinct 3-shingle sets:
     # tokenize + shingle once into a checkpointed doc-grain frame and
     # feed it to both operators (shingles_col=), instead of each leg
-    # re-running the interpreted tokenize/shingle pipeline over the
-    # corpus (guide §2.4: don't compute the same thing twice)
+    # re-running the tokenize/shingle pass over the corpus (guide
+    # §2.4: don't compute the same thing twice)
     sh = with_word_shingles(
         fan_out(docs), "text", 3, out_col="__sh", keep=["doc_id"]
     ).localCheckpoint()
@@ -2143,8 +2140,7 @@ def q193_crossdoc_ngram_dup(spark, sf_dir):
 
     d = fan_out(t(spark, sf_dir, "documents"))
     tk = tokens(F.col("text"))
-    # per-doc distinct 5-grams == word_shingles(text, 5): the Arrow
-    # shingle stage computes them byte-identically, vectorized
+    # per-doc distinct 5-grams
     gs = (
         with_word_shingles(d, "text", 5, out_col="__g", keep=["source"])
         .select("source", F.explode("__g").alias("gram"))

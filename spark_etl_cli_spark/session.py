@@ -66,6 +66,12 @@ BASE_CONFS: dict[str, str] = {
     # Let Python DataSources (the Arrow IPC connector) receive pushed
     # filters via DataSourceReader.pushFilters (Spark 4.1).
     "spark.sql.python.filterPushdown.enabled": "true",
+    # PySpark's DataFrame-debugging call-site capture wraps every
+    # functions/Column call in two py4j round trips and a stack walk,
+    # and its first call imports IPython (0.4-0.65 s). Off, q168
+    # made 963 py4j round trips instead of 1,940; errors lose only the
+    # Python call site of the failing Column.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.ui.enabled": "false",
     "spark.sql.shuffle.partitions": str(max(default_parallelism(), 8)),
     # A long-lived session serving many DISTINCT plan shapes (an app

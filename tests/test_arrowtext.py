@@ -1,9 +1,11 @@
-"""Byte-exact parity of the Arrow shingle stage with word_shingles.
+"""Byte-exact shingle parity: ``word_shingles`` against ``_py_shingles``.
 
 The shingle STRINGS feed md5/xxhash oracles in every adopting query, so
-the bar is byte equality, not similarity: for every row, the Arrow
-stage's array must equal the built-in ``word_shingles`` array element
-for element (same values, same order, same dedup behavior).
+the bar is byte equality, not similarity: for every row, the JVM
+``word_shingles`` array must equal the Python reference applied to the
+JVM-normalized text, element for element (same values, same order,
+same dedup behavior). The remaining Arrow stages (md5 longs, tagged
+n-grams) are held to ``word_shingles`` in turn.
 """
 
 from __future__ import annotations
@@ -15,7 +17,8 @@ from spark_etl_cli_spark.operators.arrowtext import (
     _py_shingles,
     with_word_shingles,
 )
-from spark_etl_cli_spark.functions.text import word_shingles
+from spark_etl_cli_spark.functions.text import normalize_ws, word_shingles
+from tests.conftest import SF_DIR
 
 # Adversarial corpus: whitespace forms Java \s does/doesn't match,
 # Unicode, dedup cases, short docs, NULL.
@@ -35,10 +38,24 @@ NASTY = [
     "ideographic　space is not java whitespace",
     "MiXeD CaSe ÉCLAIR Straße İstanbul ŉ",
     "emoji 🎉 in 🎉 the 🎉 middle 🎉 of 🎉 text",
+    "🎉🎉 🎉 x🎉 🎉y",  # surrogate pairs at token starts and ends
     "punct, punct; punct! 3.14 --- () []",
     "dup dup dup dup dup dup dup",
     "x " * 500,  # long doc
 ]
+
+
+def _assert_matches_reference(df, k, distinct):
+    rows = df.select(
+        F.lower(normalize_ws(F.col("text"))).alias("norm"),
+        word_shingles(F.col("text"), k, distinct=distinct).alias("sh"),
+    ).collect()
+    bad = [
+        (r["norm"], r["sh"])
+        for r in rows
+        if r["sh"] != _py_shingles(r["norm"], k, distinct)
+    ]
+    assert not bad
 
 
 @pytest.mark.parametrize("k", [1, 2, 3, 5])
@@ -47,34 +64,66 @@ def test_arrow_shingles_byte_equal_nasty(spark, k, distinct):
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(NASTY)], "doc_id long, text string"
     )
-    expected = {
-        r["doc_id"]: r["sh"]
-        for r in df.select(
-            "doc_id", word_shingles(F.col("text"), k, distinct=distinct).alias("sh")
-        ).collect()
-    }
-    got = {
-        r["doc_id"]: r["sh"]
-        for r in with_word_shingles(
-            df, "text", k, distinct=distinct, out_col="sh", keep=["doc_id"]
-        ).collect()
-    }
-    assert got == expected
+    _assert_matches_reference(df, k, distinct)
+
+
+def test_word_shingles_rejects_k_below_one(spark):
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        word_shingles(F.col("text"), 0)
 
 
 def test_arrow_shingles_byte_equal_real_corpus(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    joined = (
-        with_word_shingles(docs, "text", 3, out_col="a_sh", keep=["doc_id"])
-        .join(
-            docs.select(
-                "doc_id", word_shingles(F.col("text"), 3).alias("j_sh")
-            ),
-            "doc_id",
-        )
-        .filter(~(F.col("a_sh") == F.col("j_sh")))
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    for k in (3, 5):
+        _assert_matches_reference(docs, k, True)
+    _assert_matches_reference(docs, 2, False)
+
+
+# Plan nodes that evaluate in a Python worker ("MapInArrow" also
+# matches "PythonMapInArrow").
+PYTHON_NODES = ("MapInArrow", "MapInPandas", "PythonUDF",
+                "ArrowEvalPython", "BatchEvalPython")
+
+
+def _python_nodes(plan: str) -> list[str]:
+    return [n for n in PYTHON_NODES if n in plan]
+
+
+def test_with_word_shingles_plan_runs_no_python(spark):
+    df = spark.createDataFrame(
+        [(i, s) for i, s in enumerate(NASTY)], "doc_id long, text string"
     )
-    assert joined.count() == 0
+    out = with_word_shingles(df, "text", 3, keep=["doc_id"])
+    qe = out._jdf.queryExecution()
+    assert _python_nodes(qe.optimizedPlan().toString()) == []
+    assert _python_nodes(qe.executedPlan().toString()) == []
+    assert out.columns == ["doc_id", "shingles"]
+
+
+def test_q168_runs_no_python_stage(spark):
+    """Every SQL execution q168 starts, its build jobs included, has a
+    physical plan without a Python or Arrow evaluation node."""
+    from __spark_entry__ import queries
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def ids():
+        bus.waitUntilEmpty()
+        n = int(store.executionsCount())
+        it = store.executionsList(0, n).iterator()
+        out = {}
+        while it.hasNext():
+            e = it.next()
+            out[int(e.executionId())] = e.physicalPlanDescription()
+        return out
+
+    before = set(ids())
+    queries()["q168_prefix_filter_pairs"](spark, SF_DIR).collect()
+    plans = {i: p for i, p in ids().items() if i not in before}
+    assert plans
+    hits = {i: _python_nodes(p) for i, p in plans.items()}
+    assert not any(hits.values()), hits
 
 
 @pytest.mark.parametrize("hex_chars", [7, 15])

@@ -230,6 +230,30 @@ def test_python_workers_find_package_from_any_cwd(tmp_path):
     assert "rows 3" in out.stdout
 
 
+def test_column_calls_skip_dataframe_debugging(tmp_path):
+    """With the session's confs, a Column op captures no call site, so
+    the first one imports no IPython."""
+    script = tmp_path / "column_op.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(PKG.parent)!r})
+        from pyspark.sql import functions as F
+        from spark_etl_cli_spark.session import get_spark
+
+        spark = get_spark(master="local[1]")
+        spark.range(1).select((F.col("id") + 1).alias("x")).collect()
+        print("ipython", "IPython" in sys.modules)
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_SUBMIT_ARGS"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "512m"
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ipython False" in out.stdout
+
+
 # --- class-data-sharing archive (cds.py), no SparkSession ---------------
 
 CONFS = {"spark.driver.memory": "1g",
