@@ -14,7 +14,8 @@ size, the driver's Java options and extra classpath). On a miss it
 builds the archive once, in a child process that runs
 :func:`warm_up` under ``-XX:ArchiveClassesAtExit`` with the caller's
 confs (:func:`build_main`); later sessions with the
-same key start from it. Archives live in
+same key start from it. The key also hashes this module, which holds
+the warm-up, so a changed warm-up builds a new archive. Archives live in
 ``$XDG_CACHE_HOME/spark_etl_cli_spark/cds`` (``~/.cache`` when unset),
 with the build's log beside each one.
 
@@ -59,9 +60,12 @@ JAVA_OPTS = "spark.driver.extraJavaOptions"
 KEY_CONFS = ("spark.driver.memory", JAVA_OPTS, "spark.driver.extraClassPath")
 # Configuration the engine must never hide by swapping the conf dir.
 USER_CONFIG_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
-# A build takes about a minute on 4 cores: the JVM starts in ~13 s (slower
+# A build takes 45-62 s on 4 cores: the JVM starts in ~13 s (slower
 # while recording classes), the warm-up runs ~20 s, the dump ~15-20 s.
 BUILD_TIMEOUT_S = 120.0
+# The warm-up's stream ends in a few seconds; a stream still running
+# after this long is stopped, and the archive holds what it loaded.
+STREAM_BOUND_S = 60.0
 BUILD_MAIN = (
     "import sys; from spark_etl_cli_spark import cds; "
     "sys.exit(cds.build_main(sys.argv[1]))"
@@ -98,6 +102,12 @@ def _user_config(home: Path) -> bool:
     )
 
 
+def warm_up_digest() -> str:
+    """A hash of this module's source, which holds the warm-up: an
+    archive another warm-up built holds other classes."""
+    return hashlib.sha256(Path(__file__).read_bytes()).hexdigest()
+
+
 def archive_key(confs: dict[str, str], home: Path, jdk: Path) -> str:
     """A hash of everything the archive's validity depends on."""
     release = jdk / "release"
@@ -115,6 +125,7 @@ def archive_key(confs: dict[str, str], home: Path, jdk: Path) -> str:
         # spark-submit adds these to the JVM's command line too
         "env": {v: os.environ.get(v, "")
                 for v in ("SPARK_SUBMIT_OPTS", "PYSPARK_SUBMIT_ARGS")},
+        "warm_up": warm_up_digest(),
     }
     blob = json.dumps(parts, sort_keys=True).encode()
     return hashlib.sha256(blob).hexdigest()[:20]
@@ -256,12 +267,56 @@ def launch(confs: dict[str, str], start: Callable[[dict[str, str]], T]) -> T:
         return out
 
 
+def warm_up_stream(spark, root: Path) -> list:
+    """The warm-up's stream: two files of events under ``root / "ev"``
+    through ``parquet-stream://`` -> ``watermark://`` ->
+    ``session_window`` -> ``parquet-stream://`` (``root / "sessions"``)
+    with availableNow, one file an epoch, so it runs two data epochs and
+    the no-data epoch that evicts the first file's sessions. It is
+    awaited for at most ``STREAM_BOUND_S``; a query still running then
+    is stopped. Returns the queries it started."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_etl_cli_spark.pipeline import Pipeline
+
+    src, out = root / "ev", root / "sessions"
+    src.mkdir(parents=True)
+    t0 = 1_700_000_000 * 1_000_000
+    for i, minutes in enumerate([(0, 1, 2), (60, 61)]):
+        ts = [t0 + m * 60_000_000 for m in minutes for _ in (1, 2)]
+        users = [u for _ in minutes for u in (1, 2)]
+        path = src / f"part-{i}.parquet"
+        pq.write_table(pa.table({"user_id": pa.array(users, pa.int64()),
+                                 "ts": pa.array(ts, pa.timestamp("us"))}), path)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))  # file order
+    pipe = Pipeline.from_uris(
+        [f"ev+parquet-stream://{src}?schema=user_id BIGINT, ts TIMESTAMP_NTZ"
+         "&maxFilesPerTrigger=1"],
+        ["ev+evts+sql://SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM ev",
+         "evts+evwm+watermark://ts:10 minutes",
+         "evwm+sess+sql://SELECT user_id, session_window(ts, '5 minutes') AS w,"
+         " count(*) AS n FROM evwm GROUP BY 1, 2",
+         "sess+flat+sql://SELECT user_id, w.start AS session_start, "
+         "w.end AS session_end, n FROM sess"],
+        [f"flat+parquet-stream://{out}?checkpointLocation={root / 'ckpt'}"
+         "&trigger-interval=availableNow"],
+    )
+    try:
+        pipe.run(spark, await_termination=STREAM_BOUND_S)
+    finally:
+        for q in getattr(pipe, "queries", []):
+            q.stop()
+    return pipe.queries
+
+
 def warm_up(spark) -> None:
     """A fixed pipeline over the plan shapes the engine runs most: parquet
-    scan, join, aggregate, window and write, and an append, merge and
-    read on each lakehouse format. The four parts run in parallel
-    threads; a cold JVM spends their time loading classes, which its
-    class loaders do concurrently."""
+    scan, join, aggregate, window and write, an append, merge and read
+    on each lakehouse format, and a stateful stream
+    (:func:`warm_up_stream`). The five parts run in parallel threads; a
+    cold JVM spends their time loading classes, which its class loaders
+    do concurrently."""
     from concurrent.futures import ThreadPoolExecutor
 
     from spark_etl_cli_spark.pipeline import Pipeline
@@ -305,6 +360,7 @@ def warm_up(spark) -> None:
             (table, root, "iceberg", "mode=append", "mode=upsert&merge-key=id"),
             (table, root, "hudi", "mode=append&record-key=id",
              "mode=upsert&record-key=id"),
+            (warm_up_stream, spark, root / "stream"),
         ]
         with ThreadPoolExecutor(len(parts)) as pool:
             for f in [pool.submit(*p) for p in parts]:

@@ -61,27 +61,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_SHUFFLE_PARTITIONS = 8
 
 
-def _ephemeral_ckpt_root() -> str | None:
-    """RAM-backed root for THROWAWAY stream checkpoints, if one exists.
-
-    These memory-sink availableNow queries use a checkpoint only for
-    the single epoch's offsets/state commits and delete it on exit
-    (Spark's temp-checkpoint path) — measured r11
-    (scripts/stream_fixed_cost.py): the commit-file I/O is ~0.27 s of
-    a 1.7 s stateful stream run, recovered by placing the ephemeral
-    checkpoint on /dev/shm. DURABLE pipelines (the ``*-stream://``
-    sinks, examples/) keep their explicit on-disk checkpointLocation —
-    this applies ONLY where the checkpoint's lifetime is the query
-    call. ``SPARK_GRAFT_STREAM_CKPT`` overrides (a cluster would point
-    at fast local scratch or leave it unset for the tmp default)."""
-    import os
-
-    root = os.environ.get("SPARK_GRAFT_STREAM_CKPT")
-    if root:
-        return root
-    return "/dev/shm" if os.path.isdir("/dev/shm") else None
-
-
 def run_to_table(
     df: DataFrame,
     name: str,
@@ -92,35 +71,27 @@ def run_to_table(
 
     The shuffle-partition conf is scoped to the stream's lifetime (it is
     captured at ``start()``); the session value is restored afterwards so
-    batch queries keep their own sizing.
+    batch queries keep their own sizing. The checkpoint is Spark's
+    temporary one, which it deletes when the query succeeds. With
+    checkpoints written through the FileSystem API
+    (``session.BASE_CONFS``), the stateful probe of
+    ``scripts/stream_fixed_cost.py`` ran as fast with its checkpoint on
+    disk as on ``/dev/shm`` (4 vCPUs, 6 alternating runs).
     """
-    import shutil
-    import uuid
-
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    ckpt_root = _ephemeral_ckpt_root()
-    ckpt = (
-        f"{ckpt_root}/spark-graft-ckpt/{name}-{uuid.uuid4().hex}"
-        if ckpt_root
-        else None
-    )
     try:
-        w = (
+        q = (
             df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
             .trigger(availableNow=True)
+            .start()
         )
-        if ckpt:
-            w = w.option("checkpointLocation", ckpt)
-        q = w.start()
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 

@@ -295,7 +295,10 @@ def _no_build(*_a):
     raise AssertionError("archive build started")
 
 
-def test_cds_key_follows_jdk_jars_heap_mode_and_java_options(cds_env):
+def test_cds_key_follows_jdk_jars_heap_mode_and_java_options(
+    cds_env, monkeypatch
+):
+    from spark_etl_cli_spark import cds
     from spark_etl_cli_spark.cds import archive_key
 
     home, jdk, _ = cds_env
@@ -314,6 +317,37 @@ def test_cds_key_follows_jdk_jars_heap_mode_and_java_options(cds_env):
     (jdk / "release").write_text('JAVA_VERSION="17.0.20"\n')
     (home / "jars" / "delta.jar").write_bytes(b"jar")
     assert archive_key(CONFS, home, jdk) != key
+    (home / "jars" / "delta.jar").unlink()
+    assert archive_key(CONFS, home, jdk) == key
+    # an archive another warm-up built holds other classes
+    monkeypatch.setattr(cds, "warm_up_digest", lambda: "another warm-up")
+    assert archive_key(CONFS, home, jdk) != key
+
+
+def test_cds_warm_up_stream_ends_with_its_sessions(spark, tmp_path):
+    """The warm-up's stream part on the test session ends on its own
+    within its bound, emits the sessions of its first file (the second
+    file's stay open) and leaves no query running."""
+    import time
+
+    from spark_etl_cli_spark import cds
+
+    t0 = time.monotonic()
+    queries = cds.warm_up_stream(spark, tmp_path)
+    assert time.monotonic() - t0 < cds.STREAM_BOUND_S
+    assert len(queries) == 1 and queries[0].exception() is None
+    progress = queries[0].recentProgress
+    assert [p["numInputRows"] for p in progress] == [6, 4, 0]
+    active = {q.id for q in spark.streams.active}
+    assert queries[0].id not in active
+    rows = spark.read.parquet(str(tmp_path / "sessions")).selectExpr(
+        "user_id", "unix_seconds(session_start)", "unix_seconds(session_end)",
+        "n",
+    ).collect()
+    start = 1_700_000_000  # the first file's first event
+    assert sorted(tuple(r) for r in rows) == [
+        (u, start, start + 7 * 60, 3) for u in (1, 2)
+    ]
 
 
 @pytest.mark.parametrize("config", [

@@ -76,6 +76,49 @@ def test_watermark_drops_late_rows_across_restart(spark, tmp_path):
     assert len(rows2) == 1 and rows2[0]["n"] == 2  # never re-emitted/recounted
 
 
+def test_checkpoints_go_through_the_filesystem_api(spark, tmp_path):
+    """Checkpoints are written through Hadoop's FileSystem API
+    (``session.BASE_CONFS``; without libhadoop a FileContext rename on a
+    local path forks ``readlink``). The manager still refuses to replace
+    an existing file, and a restarted stateful stream's state dir still
+    holds Spark's checksum file and Hadoop's ``.crc`` of each file."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    pkg = spark._jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    existing = tmp_path / "commit"
+    existing.write_bytes(b"first")
+    path = spark._jvm.org.apache.hadoop.fs.Path(str(existing))
+    manager = pkg.CheckpointFileManager.create(path, hadoop_conf)
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    out = manager.createAtomic(path, False)
+    out.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExists"):
+        out.close()
+    assert existing.read_bytes() == b"first"
+
+    src, ckpt, out_dir = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
+    _write(spark, src, [(1, "2024-01-01 10:00:30")])
+    _write(spark, src, [(2, "2024-01-01 11:00:00")])
+    _run(spark, src, ckpt, out_dir)
+    _write(spark, src, [(3, "2024-01-01 11:30:00")])
+    _run(spark, src, ckpt, out_dir)  # restarted from the checkpoint
+    state = tmp_path / "ckpt" / "state" / "0" / "0"
+    names = set(os.listdir(state))
+    deltas = sorted(n for n in names if n.endswith(".delta"))
+    assert len(deltas) >= 3
+    for d in deltas:
+        assert {f"{d}.crc", f".{d}.crc", f".{d}.crc.crc"} <= names
+    for log in ("offsets", "commits"):
+        files = set(os.listdir(tmp_path / "ckpt" / log))
+        assert "0" in files and ".0.crc" in files
+
+
 def test_foreach_batch_sink(spark, tmp_path):
     src = str(tmp_path / "fbsrc")
     _write(spark, src, [(1, "2024-01-01 10:00:00"), (2, "2024-01-01 10:01:00")])
