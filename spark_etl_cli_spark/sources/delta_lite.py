@@ -2517,13 +2517,7 @@ def optimize_delta_lite(
             }
         }
     )
-    log_dir = _log_dir(table_path)
-    version = _next_version(log_dir)
-    commit_path = os.path.join(log_dir, f"{version:020d}.json")
-    fd = os.open(commit_path, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
-    with os.fdopen(fd, "w") as fh:
-        for action in actions:
-            fh.write(json.dumps(action) + "\n")
+    _write_commit(spark, table_path, actions)
     return stats
 
 

@@ -53,6 +53,36 @@ def _table_type(table_path: str) -> str:
     return "COPY_ON_WRITE"
 
 
+def _claim_instant(tdir: str, ts: str, action: str, body: dict) -> None:
+    """Write the timeline file ``<ts>.<action>`` under ``tdir`` with
+    ``O_CREAT|O_EXCL``: of two writers claiming one instant, the second
+    raises ``FileExistsError`` and the first's file stays intact."""
+    fd = os.open(
+        os.path.join(tdir, f"{ts}.{action}"),
+        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+    )
+    with os.fdopen(fd, "w") as fh:
+        json.dump(body, fh)
+
+
+def _marker_ts() -> str:
+    """Wall-clock instant time, to the millisecond, of a clean, restore
+    or savepoint marker."""
+    import time as _time
+
+    return _time.strftime("%Y%m%d%H%M%S") + f"{int(_time.time()*1000)%1000:03d}"
+
+
+def _claim_marker(table_path: str, action: str, body: dict) -> None:
+    """Claim a clean/restore/savepoint marker at the current wall-clock
+    instant, in ``.hoodie/timeline`` when the table has one (1.x
+    layout), else in ``.hoodie``."""
+    tdir = os.path.join(table_path, ".hoodie")
+    if os.path.isdir(os.path.join(tdir, "timeline")):
+        tdir = os.path.join(tdir, "timeline")
+    _claim_instant(tdir, _marker_ts(), action, body)
+
+
 def _completed_instants(table_path: str) -> list[tuple[str, str, str]]:
     """[(timestamp, action, path)] for completed commits, sorted by ts.
 
@@ -1166,10 +1196,7 @@ def write_hudi_lite(
     for part, sts in rewrites.items():
         body["partitionToWriteStats"].setdefault(part, []).extend(sts)
     # O_EXCL commit claim: two racing writers can't both win the instant
-    commit_path = os.path.join(hoodie, f"{ts}.{action}")
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(body, fh)
+    _claim_instant(hoodie, ts, action, body)
     return ts
 
 
@@ -1395,10 +1422,9 @@ def _mor_upsert_commit(
         })
 
     body = {"partitionToWriteStats": per_part or {"": []}}
-    commit_path = os.path.join(table_path, ".hoodie", f"{ts}.deltacommit")
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(body, fh)
+    _claim_instant(
+        os.path.join(table_path, ".hoodie"), ts, "deltacommit", body
+    )
     return ts
 
 
@@ -1502,10 +1528,9 @@ def _mor_delete_commit(
             per_part.setdefault(r["part"], []).append(ent)
         ent["numWrites"] += r["rows"]
     body = {"partitionToWriteStats": per_part}
-    commit_path = os.path.join(table_path, ".hoodie", f"{ts}.deltacommit")
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(body, fh)
+    _claim_instant(
+        os.path.join(table_path, ".hoodie"), ts, "deltacommit", body
+    )
     return {
         "files_rewritten": 0,
         "files_added": len(seen),
@@ -1702,10 +1727,7 @@ def compact_hudi_mor_lite(spark: SparkSession, table_path: str) -> dict:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     body = {"partitionToWriteStats": per_part}
-    commit_path = os.path.join(table_path, ".hoodie", f"{ts}.commit")
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(body, fh)
+    _claim_instant(os.path.join(table_path, ".hoodie"), ts, "commit", body)
     return {
         "groups_compacted": len(logged),
         "files_added": sum(len(v) for v in per_part.values()),
@@ -1897,12 +1919,9 @@ def delete_hudi_lite(
         "partitionToWriteStats": per_part or {"": []},
         "partitionToReplaceFileIds": replaced,
     }
-    commit_path = os.path.join(
-        table_path, ".hoodie", f"{ts}.replacecommit"
+    _claim_instant(
+        os.path.join(table_path, ".hoodie"), ts, "replacecommit", body
     )
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(body, fh)
     return {
         "files_rewritten": len(affected),
         "files_added": sum(len(v) for v in per_part.values()),
@@ -1929,9 +1948,6 @@ def clean_hudi_lite(
     marker never perturbs reads. Returns ``{"files_deleted": n,
     "retained_instants": [...]}``.
     """
-    import json as _json
-    import time as _time
-
     if retain_commits < 1:
         raise ValueError("retain_commits must be >= 1")
     instants = _completed_instants(table_path)
@@ -1962,20 +1978,16 @@ def clean_hudi_lite(
         if os.path.exists(p):
             os.remove(p)
             deleted.append(os.path.relpath(p, table_path))
-    ts = _time.strftime("%Y%m%d%H%M%S") + f"{int(_time.time()*1000)%1000:03d}"
-    tdir = os.path.join(table_path, ".hoodie")
-    if os.path.isdir(os.path.join(tdir, "timeline")):
-        tdir = os.path.join(tdir, "timeline")
-    with open(os.path.join(tdir, f"{ts}.clean"), "w") as fh:
-        _json.dump(
-            {
-                "policy": "KEEP_LATEST_COMMITS",
-                "retain_commits": retain_commits,
-                "earliestInstantToRetain": retained[0],
-                "deletedFiles": deleted,
-            },
-            fh,
-        )
+    _claim_marker(
+        table_path,
+        "clean",
+        {
+            "policy": "KEEP_LATEST_COMMITS",
+            "retain_commits": retain_commits,
+            "earliestInstantToRetain": retained[0],
+            "deletedFiles": deleted,
+        },
+    )
     return {"files_deleted": len(deleted), "retained_instants": retained}
 
 
@@ -1997,7 +2009,6 @@ def restore_hudi_lite(table_path: str, instant: str) -> dict:
     restoring a hole ("never a silent wrong answer").
     """
     import json as _json
-    import time as _time
 
     instants = _completed_instants(table_path)
     known = [ts for ts, _a, _p in instants]
@@ -2051,19 +2062,15 @@ def restore_hudi_lite(table_path: str, instant: str) -> dict:
             with open(p) as fh:
                 if _json.load(fh)["savepointedInstant"] > instant:
                     os.remove(p)
-    ts = _time.strftime("%Y%m%d%H%M%S") + f"{int(_time.time()*1000)%1000:03d}"
-    tdir = os.path.join(table_path, ".hoodie")
-    if os.path.isdir(os.path.join(tdir, "timeline")):
-        tdir = os.path.join(tdir, "timeline")
-    with open(os.path.join(tdir, f"{ts}.restore"), "w") as fh:
-        _json.dump(
-            {
-                "restoredTo": instant,
-                "rolledBackInstants": [t for t, _a, _p in later],
-                "deletedFiles": deleted,
-            },
-            fh,
-        )
+    _claim_marker(
+        table_path,
+        "restore",
+        {
+            "restoredTo": instant,
+            "rolledBackInstants": [t for t, _a, _p in later],
+            "deletedFiles": deleted,
+        },
+    )
     return {
         "restored_to": instant,
         "instants_rolled_back": len(later),
@@ -2081,9 +2088,6 @@ def savepoint_hudi_lite(
     its retained set, and ``restore_hudi_lite``'s materialization check
     then passes for it by construction. Defaults to the latest
     completed instant."""
-    import json as _json
-    import time as _time
-
     instants = _completed_instants(table_path)
     if not instants:
         raise ValueError(f"no completed Hudi commits under {table_path}")
@@ -2094,14 +2098,9 @@ def savepoint_hudi_lite(
             f"savepoint_hudi_lite: unknown instant {pin!r}; "
             f"timeline has {known}"
         )
-    ts = _time.strftime("%Y%m%d%H%M%S") + f"{int(_time.time()*1000)%1000:03d}"
-    tdir = os.path.join(table_path, ".hoodie")
-    if os.path.isdir(os.path.join(tdir, "timeline")):
-        tdir = os.path.join(tdir, "timeline")
-    with open(os.path.join(tdir, f"{ts}.savepoint"), "w") as fh:
-        _json.dump(
-            {"savepointedInstant": pin, "name": name or pin}, fh
-        )
+    _claim_marker(
+        table_path, "savepoint", {"savepointedInstant": pin, "name": name or pin}
+    )
     return {"savepointed": pin, "name": name or pin}
 
 

@@ -1668,6 +1668,325 @@ def _sort_order_meta(
     return {"sort-orders": orders, "default-sort-order-id": default_id}
 
 
+def _default_spec(meta: dict) -> dict:
+    """The table's default partition spec, ``{"spec-id", "fields"}``
+    (v1 metadata keeps its only spec inline as ``partition-spec``)."""
+    return next(
+        (
+            s
+            for s in meta.get("partition-specs") or []
+            if s.get("spec-id") == meta.get("default-spec-id", 0)
+        ),
+        {"spec-id": 0, "fields": meta.get("partition-spec") or []},
+    )
+
+
+# manifest-list entries written before the v2-required fields existed
+# are backfilled with these when a commit carries them forward (the
+# manifest-list schema makes them non-nullable)
+_CARRIED_DEFAULTS = {
+    "content": 0,
+    "sequence_number": 0,
+    "min_sequence_number": 0,
+    "added_files_count": 0,
+    "existing_files_count": 0,
+    "deleted_files_count": 0,
+    "added_rows_count": 0,
+    "existing_rows_count": 0,
+    "deleted_rows_count": 0,
+}
+
+
+class _SnapshotCommit:
+    """The one writer of Iceberg snapshots. Every commit that adds a
+    snapshot — appends, rewrites, row-level deletes, the v3 upgrade and
+    the UniForm exports — takes three steps:
+
+    * **begin** (the constructor): snapshot id, sequence number, commit
+      uuid and timestamp come from ``base``, the metadata the caller
+      read; the parent is ``base``'s current snapshot, or the head of
+      ``branch`` for a branch write. ``meta`` starts as a copy of
+      ``base``: the document this commit writes, which a caller edits
+      or replaces before writing manifests.
+    * :meth:`write_manifest` / :meth:`write_dvs`: one manifest under
+      ``meta``'s current schema and default spec, returning its
+      manifest-list entry with counts derived from the entry statuses.
+    * :meth:`commit`: the manifest list (carried entries backfilled,
+      then the new ones), the snapshot, and the next
+      ``vN.metadata.json`` claimed through ``_commit_iceberg_metadata``.
+
+    A commit that loses its claim removes the manifests and the
+    manifest list it wrote, then re-raises ``FileExistsError``. It never
+    removes data or delete files: UniForm exports list the source
+    table's own files as ADDED entries.
+    """
+
+    def __init__(
+        self, table_path: str, base: dict | None, branch: str | None = None
+    ) -> None:
+        import time as _time
+        import uuid as _uuid
+
+        self.table_path = table_path
+        self.meta_dir = os.path.join(table_path, "metadata")
+        self.base = base or {}
+        self.meta = dict(self.base)
+        snaps = self.base.get("snapshots") or []
+        self.snapshot_id = max((s["snapshot-id"] for s in snaps), default=0) + 1
+        # v2 commit ordering: one sequence number per commit, inherited
+        # by the snapshot, its new manifest-list entries, and (via null
+        # inheritance) the new manifests' ADDED entries
+        self.seq = int(self.base.get("last-sequence-number") or 0) + 1
+        self.uuid = _uuid.uuid4().hex
+        self.now_ms = int(_time.time() * 1000)
+        self.branch = branch
+        # -1 is the spec's "no current snapshot"
+        current = self.base.get("current-snapshot-id")
+        self.parent = current if snaps and current not in (None, -1) else None
+        if branch is not None:
+            if not snaps:
+                raise ValueError(
+                    "iceberg branch write needs an existing table (the "
+                    "branch forks from the current snapshot); create the "
+                    "table first"
+                )
+            ref = (self.base.get("refs") or {}).get(branch)
+            if ref is not None:
+                if ref.get("type") != "branch":
+                    raise ValueError(
+                        f"iceberg ref {branch!r} is a tag; tags are "
+                        "immutable — writes need a branch"
+                    )
+                self.parent = ref["snapshot-id"]
+        self._written: list[str] = []
+
+    @property
+    def fv(self) -> int:
+        return int(self.meta.get("format-version", 2))
+
+    def added(self, data_file: dict) -> dict:
+        """An ADDED manifest entry; its sequence numbers are inherited
+        from the manifest-list entry (v2 spec)."""
+        return {
+            "status": 1,
+            "snapshot_id": self.snapshot_id,
+            "sequence_number": None,
+            "file_sequence_number": None,
+            "data_file": data_file,
+        }
+
+    def parent_manifests(self) -> list[dict]:
+        """The parent snapshot's manifest-list entries, as stored."""
+        from spark_etl_cli_spark.sources.avro_lite import read_container
+
+        if self.parent is None:
+            return []
+        snap = _snapshot(self.base, self.parent)
+        with open(_localize(snap["manifest-list"], self.table_path), "rb") as fh:
+            return read_container(fh.read())[1]
+
+    def write_manifest(
+        self,
+        entries: list[dict],
+        content: str = "data",
+        part_fields: list[tuple[str, T.DataType]] = (),
+        removed: tuple[int, int] = (0, 0),
+    ) -> dict:
+        """Write one ``data`` or ``deletes`` manifest; return its
+        manifest-list entry. ``removed`` counts (files, rows) this
+        commit dropped without listing them as DELETED entries."""
+        from spark_etl_cli_spark.sources.avro_lite import write_container
+
+        spec = _default_spec(self.meta)
+        os.makedirs(self.meta_dir, exist_ok=True)
+        path = os.path.join(
+            self.meta_dir, f"manifest-{self.uuid}-{len(self._written)}.avro"
+        )
+        write_container(
+            path,
+            _manifest_schema_for(part_fields, with_lineage=self.fv == 3)
+            if content == "data"
+            else _delete_manifest_schema(),
+            iter(entries),
+            extra_meta={
+                # container-metadata keys real v2 readers require on
+                # manifest files (spec "Manifests")
+                "schema": json.dumps(_current_schema(self.meta)).encode(),
+                "schema-id": b"0",
+                "partition-spec": json.dumps(spec.get("fields", [])).encode(),
+                "partition-spec-id": str(spec.get("spec-id", 0)).encode(),
+                "format-version": str(self.fv).encode(),
+                "content": content.encode(),
+            },
+        )
+        self._written.append(path)
+
+        def files(status: int) -> int:
+            return sum(1 for e in entries if e["status"] == status)
+
+        def rows(status: int) -> int:
+            return sum(
+                e["data_file"].get("record_count") or 0
+                for e in entries
+                if e["status"] == status
+            )
+
+        return {
+            "manifest_path": path,
+            "manifest_length": os.path.getsize(path),
+            "partition_spec_id": int(spec.get("spec-id", 0)),
+            "content": 0 if content == "data" else 1,
+            "sequence_number": self.seq,
+            "min_sequence_number": min(
+                (
+                    self.seq if e["sequence_number"] is None
+                    else e["sequence_number"]
+                    for e in entries
+                ),
+                default=self.seq,
+            ),
+            "added_snapshot_id": self.snapshot_id,
+            "added_files_count": files(1),
+            "existing_files_count": files(0),
+            "deleted_files_count": files(2) + removed[0],
+            "added_rows_count": rows(1),
+            "existing_rows_count": rows(0),
+            "deleted_rows_count": rows(2) + removed[1],
+        }
+
+    def write_dvs(
+        self, dvs: list[tuple[str, list[int]]], prefix: str = "dv-"
+    ) -> dict:
+        """Write deletion vectors (spec "Deletion Vectors") — one
+        ``deletion-vector-v1`` blob per (referenced data file, sorted
+        positions) in a single Puffin file under ``data/`` — and their
+        delete manifest; return its manifest-list entry."""
+        from spark_etl_cli_spark.sources.puffin_lite import (
+            DV_BLOB_TYPE,
+            dv_blob_bytes,
+            write_puffin,
+        )
+
+        data_dir = os.path.join(self.table_path, "data")
+        os.makedirs(data_dir, exist_ok=True)
+        puffin_path = os.path.join(data_dir, f"{prefix}{self.uuid}.puffin")
+        blob_metas = write_puffin(
+            puffin_path,
+            [
+                {
+                    "type": DV_BLOB_TYPE,
+                    "data": dv_blob_bytes(positions),
+                    "snapshot-id": self.snapshot_id,
+                    "sequence-number": self.seq,
+                    "properties": {
+                        "referenced-data-file": ref,
+                        "cardinality": str(len(positions)),
+                    },
+                }
+                for ref, positions in dvs
+            ],
+        )
+        size = os.path.getsize(puffin_path)
+        return self.write_manifest(
+            [
+                self.added({
+                    "content": 1,
+                    "file_path": puffin_path,
+                    "file_format": "PUFFIN",
+                    "partition": {},
+                    "record_count": len(positions),
+                    "file_size_in_bytes": size,
+                    "referenced_data_file": ref,
+                    "content_offset": bm["offset"],
+                    "content_size_in_bytes": bm["length"],
+                })
+                for (ref, positions), bm in zip(dvs, blob_metas)
+            ],
+            content="deletes",
+        )
+
+    def commit(
+        self,
+        manifests: list[dict],
+        carried: list[dict] = (),
+        operation: str = "append",
+        summary: dict | None = None,
+        first_row_id: int | None = None,
+    ) -> int:
+        """Write the manifest list and claim the next metadata version
+        with the new snapshot; returns its id. ``first_row_id`` (v3)
+        defaults to the ``next-row-id`` the commit read."""
+        import uuid as _uuid
+
+        from spark_etl_cli_spark.sources.avro_lite import write_container
+
+        fv = self.fv
+        mlist_path = os.path.join(
+            self.meta_dir, f"snap-{self.snapshot_id}-{self.uuid}.avro"
+        )
+        write_container(
+            mlist_path,
+            _MANIFEST_LIST_SCHEMA,
+            iter(
+                [
+                    {
+                        **_CARRIED_DEFAULTS,
+                        **{k: v for k, v in c.items() if v is not None},
+                    }
+                    for c in carried
+                ]
+                + list(manifests)
+            ),
+            extra_meta={"format-version": str(fv).encode()},
+        )
+        self._written.append(mlist_path)
+        if fv == 3 and first_row_id is None:
+            first_row_id = int(self.base.get("next-row-id") or 0)
+        meta = self.meta
+        meta["snapshots"] = list(self.base.get("snapshots") or []) + [{
+            "snapshot-id": self.snapshot_id,
+            "sequence-number": self.seq,
+            "timestamp-ms": self.now_ms,
+            "manifest-list": mlist_path,
+            "summary": {"operation": operation, **(summary or {})},
+            "schema-id": 0,
+            **(
+                {"parent-snapshot-id": self.parent}
+                if self.parent is not None
+                else {}
+            ),
+            **({"first-row-id": first_row_id} if fv == 3 else {}),
+        }]
+        meta["last-sequence-number"] = self.seq
+        meta["last-updated-ms"] = self.now_ms
+        meta.setdefault(
+            "table-uuid",
+            self.base.get("table-uuid") or str(_uuid.UUID(self.uuid)),
+        )
+        if self.branch is None:
+            meta["current-snapshot-id"] = self.snapshot_id
+        else:
+            # branch commit: advance ONLY the branch ref; main stays
+            # where it was (that's the whole point of write-audit-publish)
+            meta["refs"] = {
+                **(meta.get("refs") or {}),
+                self.branch: {
+                    "snapshot-id": self.snapshot_id, "type": "branch",
+                },
+            }
+            meta["current-snapshot-id"] = self.base.get("current-snapshot-id")
+        try:
+            _commit_iceberg_metadata(self.meta_dir, meta)
+        except FileExistsError:
+            # another writer claimed this version: the manifests and
+            # list are unreachable, the files they list are not ours
+            for p in self._written:
+                if os.path.exists(p):
+                    os.remove(p)
+            raise
+        return self.snapshot_id
+
+
 def write_iceberg_lite(
     df: DataFrame,
     table_path: str,
@@ -1739,13 +2058,6 @@ def write_iceberg_lite(
     rows. Read the stage with ``?ref=<branch>``, then publish with
     :func:`fast_forward_iceberg_ref`.
     """
-    import uuid as _uuid
-
-    from spark_etl_cli_spark.sources.avro_lite import (
-        read_container,
-        write_container,
-    )
-
     if mode not in ("append", "overwrite"):
         raise ValueError(f"iceberg_lite mode must be append|overwrite, got {mode!r}")
     if format_version not in (None, 2, 3):
@@ -1908,8 +2220,8 @@ def write_iceberg_lite(
         if missing:
             raise ValueError(f"sort_by columns not in frame: {missing}")
         df = df.sortWithinPartitions(*sort_by)
-    commit_uuid = _uuid.uuid4().hex
-    data_dir = os.path.join(table_path, "data", commit_uuid)
+    txn = _SnapshotCommit(table_path, prior, branch=branch)
+    data_dir = os.path.join(table_path, "data", txn.uuid)
     if tr_spec:
         df2 = df
         for pname, tr, src, _ityp in tr_spec:
@@ -1935,7 +2247,6 @@ def write_iceberg_lite(
 
             shutil.rmtree(table_path if fresh else data_dir)
             raise
-    os.makedirs(meta_dir, exist_ok=True)
     files = sorted(
         _glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
     )
@@ -1953,44 +2264,9 @@ def write_iceberg_lite(
             out[name] = _hive_value(raw.get(name), dt)
         return out
 
-    import time as _time
-
-    snapshot_id = 1
-    if prior and prior.get("snapshots"):
-        snapshot_id = max(s["snapshot-id"] for s in prior["snapshots"]) + 1
-    # v2 commit ordering: one sequence number per commit, inherited by
-    # the snapshot, its new manifest-list entry, and (via null
-    # inheritance) the new manifest's ADDED entries
-    seq = int((prior or {}).get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-
-    # the snapshot this commit builds on: the branch head for branch
-    # commits (auto-created from current on first use), else main
-    if branch is not None and not (prior and prior.get("snapshots")):
-        raise ValueError(
-            "iceberg branch write needs an existing table (the branch "
-            "forks from the current snapshot); create the table first"
-        )
-    base_sid = None
-    if prior and prior.get("snapshots"):
-        if branch is not None:
-            prior_refs = prior.get("refs") or {}
-            if branch in prior_refs:
-                if prior_refs[branch].get("type") != "branch":
-                    raise ValueError(
-                        f"iceberg ref {branch!r} is a tag; tags are "
-                        "immutable — writes need a branch"
-                    )
-                base_sid = prior_refs[branch]["snapshot-id"]
-            else:
-                base_sid = prior.get("current-snapshot-id")
-        else:
-            base_sid = prior.get("current-snapshot-id")
-
     # 2. one manifest for the new files. Zero-row part files (Spark
     # writes one per task, empty partitions included) are dropped —
     # committing them bloats every manifest for no rows.
-    manifest_path = os.path.join(meta_dir, f"manifest-{commit_uuid}.avro")
     iceberg_schema = _spark_to_iceberg_schema(df.schema)
     if prior is not None:
         # carry persisted v3 column defaults forward — the schema is
@@ -2117,137 +2393,16 @@ def write_iceberg_lite(
                 "default-spec-id": new_id,
                 "last-partition-id": last_pid,
             }
-    eff_spec_id = (
-        int(spec_history["default-spec-id"]) if spec_history else 0
-    )
     row_counts = {p: _parquet_row_count(p) for p in files}
     files = [p for p in files if row_counts[p] > 0]
-    # v3 row lineage: each added file's rows get the id range
-    # [first_row_id, first_row_id + record_count) off the table's
-    # next-row-id counter (spec "Row Lineage" / "First Row ID
-    # Inheritance")
-    first_row_of: dict[str, int] = {}
-    lineage_start = int((prior or {}).get("next-row-id") or 0)
-    if fv == 3:
-        rid = lineage_start
-        for p in files:
-            first_row_of[p] = rid
-            rid += row_counts[p]
-    write_container(
-        manifest_path,
-        _manifest_schema_for(part_fields, with_lineage=(fv == 3)),
-        iter(
-            {
-                "status": 1,  # ADDED
-                "snapshot_id": snapshot_id,
-                "sequence_number": None,       # inherited (v2 spec)
-                "file_sequence_number": None,  # inherited
-                "data_file": {
-                    "content": 0,
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "partition": _partition_of(p),
-                    "record_count": row_counts[p],
-                    "file_size_in_bytes": os.path.getsize(p),
-                    **(
-                        {"first_row_id": first_row_of[p]}
-                        if fv == 3
-                        else {}
-                    ),
-                },
-            }
-            for p in files
-        ),
-        extra_meta={
-            # container-metadata keys real v2 readers require on
-            # manifest files (spec "Manifests")
-            "schema": json.dumps(iceberg_schema).encode(),
-            "schema-id": b"0",
-            "partition-spec": json.dumps(spec_fields).encode(),
-            "partition-spec-id": str(eff_spec_id).encode(),
-            "format-version": str(fv).encode(),
-            "content": b"data",
-        },
-    )
-
-    # 3. manifest list: append reuses the prior snapshot's manifests
-    carried: list[dict] = []
-    if mode == "append" and prior and prior.get("snapshots"):
-        cur = _snapshot(prior, base_sid)
-        ml = _localize(cur["manifest-list"], table_path)
-        with open(ml, "rb") as fh:
-            _, carried = read_container(fh.read())
-    # entries carried from pre-v2-field snapshots need the v2-required
-    # fields backfilled (the new schema makes them non-nullable)
-    carried = [
-        {
-            "content": 0,
-            "sequence_number": 0,
-            "min_sequence_number": 0,
-            "added_files_count": 0,
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": 0,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            **{k: v for k, v in c.items() if v is not None},
-        }
-        for c in carried
-    ]
-    mlist_path = os.path.join(meta_dir, f"snap-{snapshot_id}-{commit_uuid}.avro")
-    write_container(
-        mlist_path,
-        _MANIFEST_LIST_SCHEMA,
-        iter(
-            carried
-            + [
-                {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": eff_spec_id,
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(files),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(row_counts.values()),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            ]
-        ),
-        extra_meta={"format-version": str(fv).encode()},
-    )
-
-    # 4. new metadata version, O_EXCL-claimed. The field set is the
-    # spec's v2 REQUIRED list — sequence numbers, last-column-id,
-    # partition specs, sort orders, epoch-millis timestamps — so real
-    # engines accept the table, not just the lite reader.
-    snapshots = list(prior.get("snapshots") or []) if prior else []
-    snapshots.append(
-        {
-            "snapshot-id": snapshot_id,
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": mlist_path,
-            "summary": {"operation": "append" if mode == "append" else "overwrite"},
-            "schema-id": 0,
-            **({"parent-snapshot-id": base_sid} if base_sid is not None else {}),
-            **({"first-row-id": lineage_start} if fv == 3 else {}),
-        }
-    )
-    meta = {
+    # 3. new metadata document. The field set is the spec's v2 REQUIRED
+    # list — sequence numbers, last-column-id, partition specs, sort
+    # orders, epoch-millis timestamps — so real engines accept the
+    # table, not just the lite reader.
+    txn.meta = {
         "format-version": fv,
-        "table-uuid": (prior or {}).get(
-            "table-uuid", str(_uuid.UUID(int=int(commit_uuid[:32], 16)))
-        ),
         "location": table_path,
-        "last-sequence-number": seq,
-        "last-updated-ms": now_ms,
         "last-column-id": _max_field_id(iceberg_schema),
-        "current-snapshot-id": snapshot_id,
         "schemas": [iceberg_schema],
         "current-schema-id": 0,
         "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
@@ -2257,29 +2412,41 @@ def write_iceberg_lite(
         "last-partition-id": 999 + len(spec_fields),
         **spec_history,
         **_sort_order_meta(prior, sort_by, field_id_of),
-        "snapshots": snapshots,
     }
+    # table properties and named refs survive commits (the writer
+    # otherwise rebuilds the metadata document)
+    for key in ("properties", "refs"):
+        if (prior or {}).get(key):
+            txn.meta[key] = prior[key]
+    # v3 row lineage: each added file's rows get the id range
+    # [first_row_id, first_row_id + record_count) off the table's
+    # next-row-id counter (spec "Row Lineage" / "First Row ID
+    # Inheritance")
+    next_row_id = int((prior or {}).get("next-row-id") or 0)
+    entries = []
+    for p in files:
+        lineage = {}
+        if fv == 3:
+            lineage = {"first_row_id": next_row_id}
+            next_row_id += row_counts[p]
+        entries.append(txn.added({
+            "content": 0,
+            "file_path": p,
+            "file_format": "PARQUET",
+            "partition": _partition_of(p),
+            "record_count": row_counts[p],
+            "file_size_in_bytes": os.path.getsize(p),
+            **lineage,
+        }))
     if fv == 3:
-        meta["next-row-id"] = lineage_start + sum(
-            row_counts[p] for p in files
-        )
-    if prior and prior.get("properties"):
-        # table properties survive commits (the writer otherwise
-        # rebuilds the metadata document)
-        meta["properties"] = prior["properties"]
-    if prior and prior.get("refs"):
-        # named refs survive commits (the writer otherwise rebuilds
-        # the metadata document)
-        meta["refs"] = prior["refs"]
-    if branch is not None:
-        # branch commit: advance ONLY the branch ref; main stays where
-        # it was (that's the whole point of write-audit-publish)
-        refs = dict(meta.get("refs") or {})
-        refs[branch] = {"snapshot-id": snapshot_id, "type": "branch"}
-        meta["refs"] = refs
-        meta["current-snapshot-id"] = prior.get("current-snapshot-id")
-    _commit_iceberg_metadata(meta_dir, meta)
-    return snapshot_id
+        txn.meta["next-row-id"] = next_row_id
+    # 4. append reuses the parent snapshot's manifests; the snapshot
+    # claims the next metadata version
+    return txn.commit(
+        [txn.write_manifest(entries, part_fields=part_fields)],
+        txn.parent_manifests() if mode == "append" else [],
+        operation=mode,
+    )
 
 
 # --- maintenance: compaction + snapshot expiry ----------------------------
@@ -2310,8 +2477,6 @@ def _cow_keyed_rewrite_under_deletes(
     escape the old equality deletes — exactly what materializing them
     means. Returns ``{"files_rewritten", "files_added", "rows_matched"}``.
     """
-    import time as _time
-    import uuid as _uuid
 
     schema = _schema_to_spark(meta)
     part_fields = _identity_partition_fields(meta)
@@ -2391,10 +2556,7 @@ def _cow_keyed_rewrite_under_deletes(
     affected_ids = {id(e) for e in affected}
     untouched = [e for e in data_entries if id(e) not in affected_ids]
 
-    snapshot_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    commit_uuid = _uuid.uuid4().hex
+    txn = _SnapshotCommit(table_path, meta)
     partitioned = bool(pcols) and any(
         (e["data_file"].get("partition") or {}) for e in data_entries
     )
@@ -2480,7 +2642,7 @@ def _cow_keyed_rewrite_under_deletes(
                 else kept_src.join(purge_keys, on, "left_anti")
             ).select(*[f.name for f in schema.fields], *rid_cols)
             gdir = os.path.join(
-                table_path, "data", f"{prefix}-{commit_uuid}-{gidx}"
+                table_path, "data", f"{prefix}-{txn.uuid}-{gidx}"
             )
             kept.write.parquet(gdir)
             for p in sorted(_glob.glob(os.path.join(gdir, "*.parquet"))):
@@ -2499,7 +2661,7 @@ def _cow_keyed_rewrite_under_deletes(
                     gdir2 = os.path.join(
                         table_path,
                         "data",
-                        f"{prefix}-inh-{commit_uuid}-{gidx}",
+                        f"{prefix}-inh-{txn.uuid}-{gidx}",
                     )
                     land.write.parquet(gdir2)
                     for p in sorted(
@@ -2537,7 +2699,7 @@ def _cow_keyed_rewrite_under_deletes(
                 new_adds += _transformed_split_write(
                     insert_df,
                     os.path.join(
-                        table_path, "data", f"{prefix}-in-{commit_uuid}"
+                        table_path, "data", f"{prefix}-in-{txn.uuid}"
                     ),
                     tr_fields,
                 )
@@ -2554,25 +2716,22 @@ def _cow_keyed_rewrite_under_deletes(
             ).select(*[f.name for f in schema.fields], *rid_cols)
             new_adds += _write_split(
                 kept,
-                os.path.join(table_path, "data", f"{prefix}-{commit_uuid}"),
+                os.path.join(table_path, "data", f"{prefix}-{txn.uuid}"),
             )
         if insert_df is not None:
             new_adds += _write_split(
                 insert_df,
                 os.path.join(
-                    table_path, "data", f"{prefix}-in-{commit_uuid}"
+                    table_path, "data", f"{prefix}-in-{txn.uuid}"
                 ),
             )
         commit_part_fields = part_fields if partitioned else []
     _commit_rewrite_snapshot(
-        table_path, meta, untouched, new_adds,
-        commit_part_fields,
-        snapshot_id=snapshot_id, seq=seq, now_ms=now_ms,
-        commit_uuid=commit_uuid, operation=operation,
-        files_removed=len(affected), files_added=len(new_adds),
-        removed_rows=sum(
+        txn, untouched, new_adds,
+        commit_part_fields, operation,
+        removed=(len(affected), sum(
             e["data_file"].get("record_count") or 0 for e in affected
-        ),
+        )),
         carry_delete_manifests=True,
     )
     return {
@@ -2709,8 +2868,6 @@ def _upsert_cow_transformed(
     deterministic on the source columns), the incoming frame lands
     hive-split by the evaluated transforms. Same one-overwrite-snapshot
     shape as the identity path."""
-    import time as _time
-    import uuid as _uuid
 
     tr_fields = _transformed_spec_fields(meta)
     if tr_fields is None:
@@ -2761,10 +2918,7 @@ def _upsert_cow_transformed(
     else:
         n_inserted = insert_frame.count()
 
-    snapshot_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    commit_uuid = _uuid.uuid4().hex
+    txn = _SnapshotCommit(table_path, meta)
     # v3 row lineage through the transformed rewrite: survivors carry
     # their tracked ids (materialized _row_id), matched incoming keys
     # inherit the replaced id, fresh keys derive from the new block
@@ -2821,7 +2975,7 @@ def _upsert_cow_transformed(
             )
         kept = kept_all.join(keys, on, "left_anti")
         gdir = os.path.join(
-            table_path, "data", f"upsert-tr-{commit_uuid}-{gidx}"
+            table_path, "data", f"upsert-tr-{txn.uuid}-{gidx}"
         )
         kept.write.parquet(gdir)
         for p in sorted(_glob.glob(os.path.join(gdir, "*.parquet"))):
@@ -2843,7 +2997,7 @@ def _upsert_cow_transformed(
                 gdir2 = os.path.join(
                     table_path,
                     "data",
-                    f"upsert-tr-inh-{commit_uuid}-{gidx}",
+                    f"upsert-tr-inh-{txn.uuid}-{gidx}",
                 )
                 land.write.parquet(gdir2)
                 for p in sorted(
@@ -2872,18 +3026,16 @@ def _upsert_cow_transformed(
     else:
         new_adds += _transformed_split_write(
             insert_frame,
-            os.path.join(table_path, "data", f"upsert-tr-in-{commit_uuid}"),
+            os.path.join(table_path, "data", f"upsert-tr-in-{txn.uuid}"),
             tr_fields,
         )
     _commit_rewrite_snapshot(
-        table_path, meta, untouched, new_adds,
+        txn, untouched, new_adds,
         [(pname, pname, vdt) for pname, _t, _s, _i, vdt in tr_fields],
-        snapshot_id=snapshot_id, seq=seq, now_ms=now_ms,
-        commit_uuid=commit_uuid, operation="overwrite",
-        files_removed=len(affected), files_added=len(new_adds),
-        removed_rows=sum(
+        "overwrite",
+        removed=(len(affected), sum(
             e["data_file"].get("record_count") or 0 for e in affected
-        ),
+        )),
     )
     return {
         "files_rewritten": len(affected),
@@ -2921,8 +3073,6 @@ def upsert_iceberg_lite(
     Returns ``{"files_rewritten", "files_added", "rows_updated",
     "rows_inserted"}``.
     """
-    import time as _time
-    import uuid as _uuid
 
     spark = df.sparkSession
     if on not in df.columns:
@@ -2984,13 +3134,7 @@ def upsert_iceberg_lite(
             "rows_inserted": n_inserted,
         }
     part_fields = _identity_partition_fields(meta)
-    specs = meta.get("partition-specs")
-    spec_field_count = len(
-        (next(
-            (s for s in (specs or []) if s.get("spec-id") == meta.get("default-spec-id", 0)),
-            {"fields": meta.get("partition-spec") or []},
-        ) or {}).get("fields", [])
-    )
+    spec_field_count = len(_default_spec(meta).get("fields", []))
     if any((e.get("data_file") or {}).get("partition") for e in live) and (
         not part_fields or spec_field_count != len(part_fields)
     ):
@@ -3047,10 +3191,7 @@ def upsert_iceberg_lite(
     affected_ids = {id(e) for e in affected}
     untouched = [e for e in live if id(e) not in affected_ids]
 
-    snapshot_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    commit_uuid = _uuid.uuid4().hex
+    txn = _SnapshotCommit(table_path, meta)
 
     # v3 row lineage through the rewrite: survivors carry their tracked
     # ids as the materialized _row_id column, matched incoming rows
@@ -3122,7 +3263,7 @@ def upsert_iceberg_lite(
             kept_all.append(kept)
             continue
         gdir = os.path.join(
-            table_path, "data", f"upsert-{commit_uuid}-{gidx}"
+            table_path, "data", f"upsert-{txn.uuid}-{gidx}"
         )
         written.append(gdir)
         kept.write.parquet(gdir)
@@ -3133,7 +3274,7 @@ def upsert_iceberg_lite(
             new_adds.append((p, pv))
     # the full incoming frame lands as new files, partition-split when
     # the table records identity partitions
-    in_dir = os.path.join(table_path, "data", f"upsert-in-{commit_uuid}")
+    in_dir = os.path.join(table_path, "data", f"upsert-in-{txn.uuid}")
     written.append(in_dir)
     if split:
         writer = df_w.write.partitionBy(*pcols)
@@ -3174,13 +3315,11 @@ def upsert_iceberg_lite(
         raise
 
     _commit_rewrite_snapshot(
-        table_path, meta, untouched, new_adds, part_fields,
-        snapshot_id=snapshot_id, seq=seq, now_ms=now_ms,
-        commit_uuid=commit_uuid, operation="overwrite",
-        files_removed=len(affected), files_added=len(new_adds),
-        removed_rows=sum(
+        txn, untouched, new_adds,
+        part_fields, "overwrite",
+        removed=(len(affected), sum(
             e["data_file"].get("record_count") or 0 for e in affected
-        ),
+        )),
     )
     return {
         "files_rewritten": len(affected),
@@ -3267,8 +3406,6 @@ def apply_changes_iceberg_lite(
     # non-delete survivors come back. Implemented as: delete-keyed rows
     # are upserted too, then dropped — simplest is to run the COW
     # rewrite directly here.
-    import time as _time
-    import uuid as _uuid
 
     spark = changes.sparkSession
     meta = _load_metadata(table_path)
@@ -3349,10 +3486,7 @@ def apply_changes_iceberg_lite(
     affected_ids = {id(e) for e in affected}
     untouched = [e for e in live if id(e) not in affected_ids]
 
-    snapshot_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    commit_uuid = _uuid.uuid4().hex
+    txn = _SnapshotCommit(table_path, meta)
     new_adds: list[tuple[str, dict]] = []
     for gidx, (key, group) in enumerate(
         sorted(
@@ -3367,14 +3501,14 @@ def apply_changes_iceberg_lite(
             .join(all_keys, on, "left_anti")
             .select(*[f.name for f in out_schema.fields])
         )
-        gdir = os.path.join(table_path, "data", f"cdc-{commit_uuid}-{gidx}")
+        gdir = os.path.join(table_path, "data", f"cdc-{txn.uuid}-{gidx}")
         kept.write.parquet(gdir)
         pv = dict(key) if recorded else {}
         for p in sorted(_glob.glob(os.path.join(gdir, "*.parquet"))):
             if _parquet_row_count(p) == 0:
                 continue
             new_adds.append((p, pv))
-    in_dir = os.path.join(table_path, "data", f"cdc-in-{commit_uuid}")
+    in_dir = os.path.join(table_path, "data", f"cdc-in-{txn.uuid}")
     pcols = [src for _, src, _ in part_fields]
     n_upserted = 0
     if pcols and any(
@@ -3410,13 +3544,11 @@ def apply_changes_iceberg_lite(
             new_adds.append((p, {}))
 
     _commit_rewrite_snapshot(
-        table_path, meta, untouched, new_adds, part_fields,
-        snapshot_id=snapshot_id, seq=seq, now_ms=now_ms,
-        commit_uuid=commit_uuid, operation="overwrite",
-        files_removed=len(affected), files_added=len(new_adds),
-        removed_rows=sum(
+        txn, untouched, new_adds,
+        part_fields, "overwrite",
+        removed=(len(affected), sum(
             e["data_file"].get("record_count") or 0 for e in affected
-        ),
+        )),
     )
     return {
         "files_rewritten": len(affected),
@@ -3626,8 +3758,6 @@ def _compact_transformed(
     rewrite back under the same tuple (replace snapshot, streams skip
     it) — no transform evaluation needed."""
     import math
-    import time as _time
-    import uuid as _uuid
 
     tr_fields = _transformed_spec_fields(meta)
     if tr_fields is None:
@@ -3642,10 +3772,7 @@ def _compact_transformed(
         key = tuple(sorted((k, str(v)) for k, v in pv.items()))
         groups.setdefault(key, (pv, []))[1].append(e)
 
-    snapshot_id = max(sn["snapshot-id"] for sn in meta["snapshots"]) + 1
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    commit_uuid = _uuid.uuid4().hex
+    txn = _SnapshotCommit(table_path, meta)
     untouched: list[dict] = []
     new_adds: list[tuple[str, dict]] = []
     n_removed = 0
@@ -3669,7 +3796,7 @@ def _compact_transformed(
         )
         n_out = max(1, math.ceil(total / target_file_bytes))
         gdir = os.path.join(
-            table_path, "data", f"compact-tr-{commit_uuid}-{gidx}"
+            table_path, "data", f"compact-tr-{txn.uuid}-{gidx}"
         )
         # v3: materialize the group's tracked ids through the bin-pack
         rid_g = (
@@ -3696,12 +3823,10 @@ def _compact_transformed(
     if n_removed == 0:
         return {"files_removed": 0, "files_added": 0}
     _commit_rewrite_snapshot(
-        table_path, meta, untouched, new_adds,
+        txn, untouched, new_adds,
         [(pname, pname, vdt) for pname, _t, _s, _i, vdt in tr_fields],
-        snapshot_id=snapshot_id, seq=seq, now_ms=now_ms,
-        commit_uuid=commit_uuid, operation="replace",
-        files_removed=n_removed, files_added=len(new_adds),
-        removed_rows=0,
+        "replace",
+        removed=(n_removed, 0),
     )
     return {"files_removed": n_removed, "files_added": len(new_adds)}
 
@@ -3731,12 +3856,6 @@ def compact_iceberg_lite(
     distributed job; the loop over partitions is bookkeeping.
     """
     import math
-    import shutil
-    import tempfile
-    import time as _time
-    import uuid as _uuid
-
-    from spark_etl_cli_spark.sources.avro_lite import write_container
 
     meta = _load_metadata(table_path)
     snap = _snapshot(meta, None)
@@ -3777,7 +3896,7 @@ def compact_iceberg_lite(
             # transforms (full-tuple prunability preserved — the old
             # "not pf_del" gate sent mixed specs to the identity path,
             # recording partial tuples)
-            commit_uuid = _uuid.uuid4().hex
+            txn = _SnapshotCommit(table_path, meta)
             if _spec_sources_dropped(tr_fields_del):
                 # dropped spec source: transforms can't re-evaluate,
                 # but deletes never move a row across tuples — rewrite
@@ -3820,7 +3939,7 @@ def compact_iceberg_lite(
                     gdir0 = os.path.join(
                         table_path,
                         "data",
-                        f"compact-del-tr-{commit_uuid}-g{gidx}",
+                        f"compact-del-tr-{txn.uuid}-g{gidx}",
                     )
                     part.write.parquet(gdir0)
                     for p in sorted(
@@ -3832,25 +3951,18 @@ def compact_iceberg_lite(
                 new_adds = _transformed_split_write(
                     _read_for_rewrite(spark, table_path, meta),
                     os.path.join(
-                        table_path, "data", f"compact-del-tr-{commit_uuid}"
+                        table_path, "data", f"compact-del-tr-{txn.uuid}"
                     ),
                     tr_fields_del,
                 )
             _commit_rewrite_snapshot(
-                table_path, meta, [], new_adds,
+                txn, [], new_adds,
                 [
                     (pname, pname, vdt)
                     for pname, _t, _s, _i, vdt in tr_fields_del
                 ],
-                snapshot_id=max(
-                    sn["snapshot-id"] for sn in meta["snapshots"]
-                ) + 1,
-                seq=int(meta.get("last-sequence-number") or 0) + 1,
-                now_ms=int(_time.time() * 1000),
-                commit_uuid=commit_uuid, operation="replace",
-                files_removed=len(data_entries),
-                files_added=len(new_adds),
-                removed_rows=0,
+                "replace",
+                removed=(len(data_entries), 0),
             )
             return {
                 "files_removed": len(data_entries),
@@ -3873,9 +3985,9 @@ def compact_iceberg_lite(
             for e in data_entries
         )
         n_out = max(1, math.ceil(total / target_file_bytes))
-        commit_uuid = _uuid.uuid4().hex
+        txn = _SnapshotCommit(table_path, meta)
         gdir = os.path.join(
-            table_path, "data", f"compact-del-{commit_uuid}"
+            table_path, "data", f"compact-del-{txn.uuid}"
         )
         full = _read_for_rewrite(spark, table_path, meta).repartition(n_out)
         new_adds: list[tuple[str, dict]] = []
@@ -3911,17 +4023,9 @@ def compact_iceberg_lite(
                 if _parquet_row_count(p) > 0
             ]
         _commit_rewrite_snapshot(
-            table_path, meta, [], new_adds,
-            pf_del if del_partitioned else [],
-            snapshot_id=max(
-                s["snapshot-id"] for s in meta["snapshots"]
-            ) + 1,
-            seq=int(meta.get("last-sequence-number") or 0) + 1,
-            now_ms=int(_time.time() * 1000),
-            commit_uuid=commit_uuid, operation="replace",
-            files_removed=len(data_entries),
-            files_added=len(new_adds),
-            removed_rows=0,  # row set unchanged: deletes were already live
+            txn, [], new_adds,
+            pf_del if del_partitioned else [], "replace",
+            removed=(len(data_entries), 0),
         )
         return {
             "files_removed": len(data_entries),
@@ -3929,13 +4033,7 @@ def compact_iceberg_lite(
             "deletes_applied": len(entries) - len(data_entries),
         }
     part_fields = _identity_partition_fields(meta)
-    specs = meta.get("partition-specs")
-    spec_field_count = len(
-        (next(
-            (s for s in (specs or []) if s.get("spec-id") == meta.get("default-spec-id", 0)),
-            {"fields": meta.get("partition-spec") or []},
-        ) or {}).get("fields", [])
-    )
+    spec_field_count = len(_default_spec(meta).get("fields", []))
     if any((e.get("data_file") or {}).get("partition") for e in entries) and (
         not part_fields or spec_field_count != len(part_fields)
     ):
@@ -3961,10 +4059,7 @@ def compact_iceberg_lite(
         )
         groups.setdefault(key, []).append(e)
 
-    snapshot_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    commit_uuid = _uuid.uuid4().hex
+    txn = _SnapshotCommit(table_path, meta)
     untouched: list[dict] = []
     new_adds: list[tuple[str, dict]] = []  # (path, partition dict)
     for gidx, key in enumerate(
@@ -3987,7 +4082,7 @@ def compact_iceberg_lite(
         # per-GROUP-INDEX dir name: keying on len(new_adds) collided
         # when a group produced zero non-empty files
         gdir = os.path.join(
-            table_path, "data", f"compact-{commit_uuid}-{gidx}"
+            table_path, "data", f"compact-{txn.uuid}-{gidx}"
         )
         read_schema = data_schema if any(v is not None for _, v in key) else spark_schema
         # v3: carry every row's tracked id into the compacted files as
@@ -4019,11 +4114,9 @@ def compact_iceberg_lite(
         return stats
     stats["files_added"] = len(new_adds)
     _commit_rewrite_snapshot(
-        table_path, meta, untouched, new_adds, part_fields,
-        snapshot_id=snapshot_id, seq=seq, now_ms=now_ms,
-        commit_uuid=commit_uuid, operation="replace",
-        files_removed=stats["files_removed"],
-        files_added=stats["files_added"],
+        txn, untouched, new_adds,
+        part_fields, "replace",
+        removed=(stats["files_removed"], 0),
     )
     return stats
 
@@ -4114,27 +4207,21 @@ def _seq_rewrite_col(entries: list[dict], table_path: str):
 
 
 def _commit_rewrite_snapshot(
-    table_path: str,
-    meta: dict,
+    txn: _SnapshotCommit,
     untouched: list[dict],
     new_adds: list[tuple[str, dict]],
     part_fields: list[tuple[str, str, T.DataType]],
-    snapshot_id: int,
-    seq: int,
-    now_ms: int,
-    commit_uuid: str,
     operation: str,
-    files_removed: int,
-    files_added: int,
-    removed_rows: int = 0,
+    removed: tuple[int, int],
     carry_delete_manifests: bool = False,
 ) -> None:
     """Commit a file-replacing snapshot: one manifest re-listing the
-    surviving entries (EXISTING) plus the rewrite's outputs (ADDED),
-    one manifest list, one new metadata version. Shared by compaction
-    (``operation=replace`` — row set unchanged, streams skip it) and
-    DELETE (``operation=overwrite`` — row set changed, streams must
-    fail or be told to skip).
+    surviving entries (EXISTING) plus the rewrite's outputs (ADDED).
+    Shared by compaction (``operation=replace`` — row set unchanged,
+    streams skip it) and the COW DELETE / upsert / apply-changes
+    rewrites (``operation=overwrite`` — row set changed, streams must
+    fail or be told to skip). ``removed``: (files, rows) the rewrite
+    replaced — rows are 0 for compaction, which deletes none.
 
     ``carry_delete_manifests``: keep the prior snapshot's content=1
     delete manifests (with their sequence numbers) in the new manifest
@@ -4142,17 +4229,8 @@ def _commit_rewrite_snapshot(
     still need their position/equality deletes applied while rewritten
     files (new paths, new higher data seq) escape them.
     """
-    from spark_etl_cli_spark.sources.avro_lite import (
-        read_container,
-        write_container,
-    )
-
-    specs = meta.get("partition-specs")
-    fv = int(meta.get("format-version", 2))
-    stats = {"files_removed": files_removed, "files_added": files_added}
-    meta_dir = os.path.join(table_path, "metadata")
-    manifest_path = os.path.join(meta_dir, f"manifest-{commit_uuid}.avro")
-    iceberg_schema = _current_schema(meta)
+    meta = txn.meta
+    fv = txn.fv
     pf_typed = [(pname, dt) for pname, _src, dt in part_fields]
 
     expected_keys = {pname for pname, _dt in pf_typed}
@@ -4168,17 +4246,19 @@ def _commit_rewrite_snapshot(
                 "evolved table under the current spec)"
             )
 
-    def entry_row(e, status, sid):
+    def existing(e):
         d = e["data_file"]
         # EXISTING entries must carry their sequence number EXPLICITLY
         # (inheritance only applies to ADDED entries, v2 spec) — use
-        # the resolved __data_seq when the original was inherited
+        # the resolved __data_seq when the original was inherited; they
+        # keep their original snapshot ids, which the stream reader's
+        # carried-entry filter keys on
         seq_no = e.get("sequence_number")
         if seq_no is None:
             seq_no = e.get("__data_seq")
         return {
-            "status": status,
-            "snapshot_id": sid,
+            "status": 0,
+            "snapshot_id": e.get("snapshot_id"),
             "sequence_number": seq_no,
             "file_sequence_number": e.get("file_sequence_number"),
             "data_file": {
@@ -4188,10 +4268,7 @@ def _commit_rewrite_snapshot(
                 "partition": d.get("partition") or {},
                 "record_count": d.get("record_count") or 0,
                 "file_size_in_bytes": d.get("file_size_in_bytes") or 0,
-                # v3 row lineage: carried files KEEP their id range;
-                # rewritten (ADDED) files stay unassigned in this lite
-                # writer (a real engine materializes _row_id into the
-                # rewritten files) — with_row_id reads fence on them
+                # v3 row lineage: carried files KEEP their id range
                 **(
                     {"first_row_id": d.get("first_row_id")}
                     if fv == 3
@@ -4207,7 +4284,7 @@ def _commit_rewrite_snapshot(
     # a rewrite that did NOT materialize stays unassigned, so
     # with_row_id reads keep fencing loudly instead of silently
     # renumbering.
-    next_row_id = int(meta.get("next-row-id") or 0) if fv == 3 else None
+    next_row_id = int(meta.get("next-row-id") or 0)
     assign_lineage = False
     if fv == 3 and new_adds:
         import pyarrow.parquet as _pq
@@ -4217,112 +4294,29 @@ def _commit_rewrite_snapshot(
             for p, _pv in new_adds
         )
 
-    def added_row(p, pv):
-        nonlocal next_row_id
+    entries = [existing(e) for e in untouched]
+    for p, pv in new_adds:
         rc = _parquet_row_count(p)
         lineage = {}
-        if fv == 3 and assign_lineage:
+        if assign_lineage:
             lineage = {"first_row_id": next_row_id}
             next_row_id += rc
-        return {
-            "status": 1,
-            "snapshot_id": snapshot_id,
-            "sequence_number": None,
-            "file_sequence_number": None,
-            "data_file": {
-                "content": 0,
-                "file_path": p,
-                "file_format": "PARQUET",
-                "partition": pv,
-                "record_count": rc,
-                "file_size_in_bytes": os.path.getsize(p),
-                **lineage,
-            },
-        }
-
-    rows = [
-        # EXISTING: carried forward with their original snapshot ids —
-        # the stream reader's carried-entry filter keys on this
-        entry_row(e, 0, e.get("snapshot_id")) for e in untouched
-    ] + [added_row(p, pv) for p, pv in new_adds]
-    spec_json = json.dumps(
-        next(
-            (s for s in (specs or []) if s.get("spec-id") == meta.get("default-spec-id", 0)),
-            {"fields": meta.get("partition-spec") or []},
-        ).get("fields", [])
-    )
-    write_container(
-        manifest_path,
-        _manifest_schema_for(pf_typed, with_lineage=(fv == 3)),
-        iter(rows),
-        extra_meta={
-            "schema": json.dumps(iceberg_schema).encode(),
-            "schema-id": b"0",
-            "partition-spec": spec_json.encode(),
-            "partition-spec-id": b"0",
-            "format-version": str(fv).encode(),
-            "content": b"data",
-        },
-    )
-    mlist_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-{commit_uuid}.avro"
-    )
-    carried_deletes: list[dict] = []
-    if carry_delete_manifests:
-        cur = _snapshot(meta, None)
-        with open(_localize(cur["manifest-list"], table_path), "rb") as fh:
-            _, prior_entries = read_container(fh.read())
-        carried_deletes = [
-            {
-                "content": 1,
-                "sequence_number": 0,
-                "min_sequence_number": 0,
-                "added_files_count": 0,
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                **{k: v for k, v in c.items() if v is not None},
-            }
-            for c in prior_entries
-            if c.get("content") == 1
-        ]
-    added_rows = sum(r["data_file"]["record_count"] for r in rows[len(untouched):])
-    write_container(
-        mlist_path,
-        _MANIFEST_LIST_SCHEMA,
-        iter(carried_deletes + [{
-            "manifest_path": manifest_path,
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": 0,
+        entries.append(txn.added({
             "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": 0,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": stats["files_added"],
-            "existing_files_count": len(untouched),
-            "deleted_files_count": stats["files_removed"],
-            "added_rows_count": added_rows,
-            "existing_rows_count": sum(
-                e["data_file"].get("record_count") or 0 for e in untouched
-            ),
-            # rows in the REMOVED files (0 for pure compaction, which
-            # deletes no rows) — engines plan from these counts
-            "deleted_rows_count": removed_rows,
-        }]),
-        extra_meta={"format-version": str(fv).encode()},
-    )
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["current-snapshot-id"] = snapshot_id
-    if fv == 3 and assign_lineage:
-        new_meta["next-row-id"] = next_row_id
+            "file_path": p,
+            "file_format": "PARQUET",
+            "partition": pv,
+            "record_count": rc,
+            "file_size_in_bytes": os.path.getsize(p),
+            **lineage,
+        }))
+    manifest = txn.write_manifest(entries, part_fields=pf_typed, removed=removed)
+    if assign_lineage:
+        meta["next-row-id"] = next_row_id
         # register the reserved materialized-column mappings so readers
         # (ours and conforming engines) resolve the in-file _row_id and
         # _last_updated_sequence_number columns
-        props = dict(new_meta.get("properties") or {})
+        props = dict(meta.get("properties") or {})
         nm = json.loads(props.get("schema.name-mapping.default", "[]"))
         changed = False
         for fid, cname in (
@@ -4334,21 +4328,13 @@ def _commit_rewrite_snapshot(
                 changed = True
         if changed:
             props["schema.name-mapping.default"] = json.dumps(nm)
-            new_meta["properties"] = props
-    new_meta["snapshots"] = list(meta.get("snapshots") or []) + [{
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist_path,
-        "summary": {"operation": operation},
-        "schema-id": 0,
-        **(
-            {"first-row-id": int(meta.get("next-row-id") or 0)}
-            if fv == 3
-            else {}
-        ),
-    }]
-    _commit_iceberg_metadata(meta_dir, new_meta)
+            meta["properties"] = props
+    carried = (
+        [c for c in txn.parent_manifests() if c.get("content") == 1]
+        if carry_delete_manifests
+        else []
+    )
+    txn.commit([manifest], carried, operation)
 
 
 def expire_iceberg_snapshots(
@@ -4513,16 +4499,6 @@ def upgrade_iceberg_format(
     Returns ``{"upgraded": bool, "dvs_written": n, "pos_delete_files_
     converted": n}``.
     """
-    import time as _time
-    import uuid as _uuid
-
-    from spark_etl_cli_spark.sources.avro_lite import write_container
-    from spark_etl_cli_spark.sources.puffin_lite import (
-        DV_BLOB_TYPE,
-        dv_blob_bytes,
-        write_puffin,
-    )
-
     meta = _load_metadata(table_path)
     fv = int(meta.get("format-version", 1))
     if to_version != 3:
@@ -4536,23 +4512,18 @@ def upgrade_iceberg_format(
     data_entries, pos_dels, _eq, _dvs, _sch, _m = _resolve_entries(
         spark, table_path
     )
-    meta_dir = os.path.join(table_path, "metadata")
-    snapshot_id = (
-        max((s["snapshot-id"] for s in meta.get("snapshots") or []), default=0)
-        + 1
-    )
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    commit_uuid = _uuid.uuid4().hex
-
-    new_delete_ml: list[dict] = []
-    n_dvs = 0
+    txn = _SnapshotCommit(table_path, meta)
+    txn.meta["format-version"] = 3
+    # row lineage starts counting from the upgrade: pre-existing files
+    # keep UNASSIGNED lineage (with_row_id reads fence on them);
+    # post-upgrade appends assign from this counter
+    txn.meta["next-row-id"] = int(meta.get("next-row-id") or 0)
+    per_file: dict[str, set[int]] = {}
     if pos_dels:
         seq_of = {
             os.path.abspath(p): (s if s is not None else 0)
             for p, _pv, s in data_entries
         }
-        per_file: dict[str, set[int]] = {}
         for pd_path, del_seq in pos_dels:
             for r in (
                 spark.read.parquet(pd_path)
@@ -4564,116 +4535,15 @@ def upgrade_iceberg_format(
                 )
                 if fp in seq_of and del_seq >= seq_of[fp]:
                     per_file.setdefault(fp, set()).add(int(r["pos"]))
-        per_file = {fp: v for fp, v in per_file.items() if v}
-        if per_file:
-            refs = sorted(per_file)
-            del_dir = os.path.join(table_path, "data")
-            os.makedirs(del_dir, exist_ok=True)
-            puffin_path = os.path.join(del_dir, f"dv-{commit_uuid}.puffin")
-            blob_metas = write_puffin(
-                puffin_path,
-                [
-                    {
-                        "type": DV_BLOB_TYPE,
-                        "data": dv_blob_bytes(sorted(per_file[ref])),
-                        "snapshot-id": snapshot_id,
-                        "sequence-number": seq,
-                        "properties": {
-                            "referenced-data-file": ref,
-                            "cardinality": str(len(per_file[ref])),
-                        },
-                    }
-                    for ref in refs
-                ],
-            )
-            psize = os.path.getsize(puffin_path)
-            manifest_path = os.path.join(
-                meta_dir, f"manifest-dv-{commit_uuid}.avro"
-            )
-            write_container(
-                manifest_path,
-                _delete_manifest_schema(),
-                iter(
-                    {
-                        "status": 1,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": None,
-                        "file_sequence_number": None,
-                        "data_file": {
-                            "content": 1,
-                            "file_path": puffin_path,
-                            "file_format": "PUFFIN",
-                            "partition": {},
-                            "record_count": len(per_file[ref]),
-                            "file_size_in_bytes": psize,
-                            "referenced_data_file": ref,
-                            "content_offset": bm["offset"],
-                            "content_size_in_bytes": bm["length"],
-                        },
-                    }
-                    for ref, bm in zip(refs, blob_metas)
-                ),
-                extra_meta={
-                    "schema": json.dumps(_current_schema(meta)).encode(),
-                    "schema-id": b"0",
-                    "partition-spec": b"[]",
-                    "partition-spec-id": b"0",
-                    "format-version": b"3",
-                    "content": b"deletes",
-                },
-            )
-            n_dvs = len(refs)
-            new_delete_ml.append(
-                {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": 0,
-                    "content": 1,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": n_dvs,
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(
-                        len(v) for v in per_file.values()
-                    ),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            )
-
-    carried = _carry_manifests_superseding_dvs(
-        table_path, meta, set(), commit_uuid, drop_pos_deletes=True
+    dvs = [(ref, sorted(per_file[ref])) for ref in sorted(per_file)]
+    txn.commit(
+        [txn.write_dvs(dvs)] if dvs else [],
+        _carry_manifests_superseding_dvs(txn, set(), drop_pos_deletes=True),
+        "replace",
     )
-    mlist_path = os.path.join(meta_dir, f"snap-{snapshot_id}-{commit_uuid}.avro")
-    write_container(
-        mlist_path,
-        _MANIFEST_LIST_SCHEMA,
-        iter(carried + new_delete_ml),
-        extra_meta={"format-version": b"3"},
-    )
-    new_meta = dict(meta)
-    new_meta["format-version"] = 3
-    # row lineage starts counting from the upgrade: pre-existing files
-    # keep UNASSIGNED lineage (with_row_id reads fence on them);
-    # post-upgrade appends assign from this counter
-    new_meta["next-row-id"] = int(meta.get("next-row-id") or 0)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["current-snapshot-id"] = snapshot_id
-    new_meta["snapshots"] = list(meta.get("snapshots") or []) + [{
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist_path,
-        "summary": {"operation": "replace"},
-        "schema-id": 0,
-    }]
-    _commit_iceberg_metadata(meta_dir, new_meta)
     return {
         "upgraded": True,
-        "dvs_written": n_dvs,
+        "dvs_written": len(per_file),
         "pos_delete_files_converted": len(pos_dels),
     }
 
@@ -4716,13 +4586,11 @@ def _delete_manifest_schema() -> dict:
 
 
 def _carry_manifests_superseding_dvs(
-    table_path: str,
-    meta: dict,
+    txn: _SnapshotCommit,
     replaced_refs: set[str],
-    commit_uuid: str,
     drop_pos_deletes: bool = False,
 ) -> list[dict]:
-    """Manifest-list entries carrying the current snapshot's manifests
+    """Manifest-list entries carrying the parent snapshot's manifests
     forward, with delete manifests REWRITTEN to drop (a) deletion-
     vector entries whose referenced data file just received a new
     merged DV (v3 spec: "an added DV replaces all previous DVs for its
@@ -4730,30 +4598,14 @@ def _carry_manifests_superseding_dvs(
     which converts them), (b) position-delete parquet entries. Kept
     entries become EXISTING with their resolved sequence numbers
     explicit; a manifest left empty drops from the list entirely."""
-    from spark_etl_cli_spark.sources.avro_lite import (
-        read_container,
-        write_container,
-    )
+    from spark_etl_cli_spark.sources.avro_lite import read_container
 
-    fv = int(meta.get("format-version", 1))
-    cur = _snapshot(meta, None)
-    with open(_localize(cur["manifest-list"], table_path), "rb") as fh:
-        _, prior = read_container(fh.read())
-    defaults = {
-        "content": 0,
-        "sequence_number": 0,
-        "min_sequence_number": 0,
-        "added_files_count": 0,
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": 0,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    meta_dir = os.path.join(table_path, "metadata")
+    table_path = txn.table_path
     out: list[dict] = []
-    for i, ml in enumerate(prior):
-        ml = {**defaults, **{k: v for k, v in ml.items() if v is not None}}
+    for ml in txn.parent_manifests():
+        ml = {
+            **_CARRIED_DEFAULTS, **{k: v for k, v in ml.items() if v is not None}
+        }
         if ml.get("content") != 1:
             out.append(ml)
             continue
@@ -4761,7 +4613,7 @@ def _carry_manifests_superseding_dvs(
         with open(mp, "rb") as fh:
             _, recs = read_container(fh.read())
         kept: list[dict] = []
-        dropped = 0
+        dropped: list[dict] = []
         for e in recs:
             if e.get("status") == 2:
                 continue
@@ -4776,7 +4628,7 @@ def _carry_manifests_superseding_dvs(
             if drop_pos_deletes and not is_dv and (d.get("content") == 1):
                 superseded = True
             if superseded:
-                dropped += 1
+                dropped.append(d)
                 continue
             seq_no = e.get("sequence_number")
             if seq_no is None:
@@ -4792,42 +4644,15 @@ def _carry_manifests_superseding_dvs(
             )
         if not dropped:
             out.append(ml)
-            continue
-        if not kept:
-            continue  # every entry superseded — manifest drops
-        new_mp = os.path.join(
-            meta_dir, f"manifest-delcarry-{commit_uuid}-{i}.avro"
-        )
-        write_container(
-            new_mp,
-            _delete_manifest_schema(),
-            iter(kept),
-            extra_meta={
-                "schema": json.dumps(_current_schema(meta)).encode(),
-                "schema-id": b"0",
-                "partition-spec": b"[]",
-                "partition-spec-id": b"0",
-                "format-version": str(fv).encode(),
-                "content": b"deletes",
-            },
-        )
-        out.append(
-            {
-                **ml,
-                "manifest_path": new_mp,
-                "manifest_length": os.path.getsize(new_mp),
-                "added_files_count": 0,
-                "existing_files_count": len(kept),
-                "deleted_files_count": dropped,
-                "added_rows_count": 0,
-                "existing_rows_count": sum(
-                    (k["data_file"].get("record_count") or 0) for k in kept
+        elif kept:  # a manifest whose every entry is superseded drops
+            out.append(txn.write_manifest(
+                kept,
+                content="deletes",
+                removed=(
+                    len(dropped),
+                    sum(d.get("record_count") or 0 for d in dropped),
                 ),
-                "min_sequence_number": min(
-                    (k["sequence_number"] or 0) for k in kept
-                ),
-            }
-        )
+            ))
     return out
 
 
@@ -4843,16 +4668,7 @@ def _delete_iceberg_mor_dv(
     one-DV-per-file replacement rule. Only per-file index lists cross
     the driver (bounded by DV cardinality, the same order the reader
     materializes). Returns the `_delete_iceberg_mor` stats shape."""
-    import time as _time
-    import uuid as _uuid
-
-    from spark_etl_cli_spark.sources.avro_lite import write_container
-    from spark_etl_cli_spark.sources.puffin_lite import (
-        DV_BLOB_TYPE,
-        dv_blob_bytes,
-        read_dv,
-        write_puffin,
-    )
+    from spark_etl_cli_spark.sources.puffin_lite import read_dv
 
     zero = {"files_rewritten": 0, "files_added": 0, "rows_deleted": 0}
     live = read_iceberg_lite(
@@ -4866,17 +4682,7 @@ def _delete_iceberg_mor_dv(
     _data, _pos, _eq, cur_dvs, _sch, _m = _resolve_entries(spark, table_path)
     dv_by_ref = {ref: (p, off, sz) for p, off, sz, ref, _s in cur_dvs}
 
-    snapshot_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    commit_uuid = _uuid.uuid4().hex
-    meta_dir = os.path.join(table_path, "metadata")
-    del_dir = os.path.join(table_path, "data")
-    os.makedirs(del_dir, exist_ok=True)
-
-    blobs: list[dict] = []
-    refs: list[str] = []
-    cards: list[int] = []
+    dvs: list[tuple[str, list[int]]] = []
     n_rows = 0
     for row in per_file.toLocalIterator():
         ref = os.path.abspath(row["__dfile"])
@@ -4885,102 +4691,15 @@ def _delete_iceberg_mor_dv(
         old = dv_by_ref.get(ref)
         if old:
             idx = sorted(set(idx) | set(read_dv(*old)))
-        blobs.append(
-            {
-                "type": DV_BLOB_TYPE,
-                "data": dv_blob_bytes(idx),
-                "snapshot-id": snapshot_id,
-                "sequence-number": seq,
-                "properties": {
-                    "referenced-data-file": ref,
-                    "cardinality": str(len(idx)),
-                },
-            }
-        )
-        refs.append(ref)
-        cards.append(len(idx))
+        dvs.append((ref, idx))
     if n_rows == 0:
         return zero
-
-    puffin_path = os.path.join(del_dir, f"dv-{commit_uuid}.puffin")
-    blob_metas = write_puffin(puffin_path, blobs)
-    psize = os.path.getsize(puffin_path)
-    manifest_path = os.path.join(meta_dir, f"manifest-dv-{commit_uuid}.avro")
-    write_container(
-        manifest_path,
-        _delete_manifest_schema(),
-        iter(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": None,       # inherited (v2+ spec)
-                "file_sequence_number": None,  # inherited
-                "data_file": {
-                    "content": 1,
-                    "file_path": puffin_path,
-                    "file_format": "PUFFIN",
-                    "partition": {},
-                    "record_count": card,
-                    "file_size_in_bytes": psize,
-                    "referenced_data_file": ref,
-                    "content_offset": bm["offset"],
-                    "content_size_in_bytes": bm["length"],
-                },
-            }
-            for ref, card, bm in zip(refs, cards, blob_metas)
-        ),
-        extra_meta={
-            "schema": json.dumps(_current_schema(meta)).encode(),
-            "schema-id": b"0",
-            "partition-spec": b"[]",
-            "partition-spec-id": b"0",
-            "format-version": b"3",
-            "content": b"deletes",
-        },
+    txn = _SnapshotCommit(table_path, meta)
+    txn.commit(
+        [txn.write_dvs(dvs)],
+        _carry_manifests_superseding_dvs(txn, {ref for ref, _ in dvs}),
+        "delete",
     )
-    carried = _carry_manifests_superseding_dvs(
-        table_path, meta, set(refs), commit_uuid
-    )
-    mlist_path = os.path.join(meta_dir, f"snap-{snapshot_id}-{commit_uuid}.avro")
-    write_container(
-        mlist_path,
-        _MANIFEST_LIST_SCHEMA,
-        iter(
-            carried
-            + [
-                {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": 0,
-                    "content": 1,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(refs),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(cards),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            ]
-        ),
-        extra_meta={"format-version": b"3"},
-    )
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["current-snapshot-id"] = snapshot_id
-    new_meta["snapshots"] = list(meta.get("snapshots") or []) + [{
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist_path,
-        "summary": {"operation": "delete"},
-        "schema-id": 0,
-        "first-row-id": int(meta.get("next-row-id") or 0),
-    }]
-    _commit_iceberg_metadata(meta_dir, new_meta)
     return {
         "files_rewritten": 0,
         "files_added": 1,
@@ -5016,14 +4735,6 @@ def _delete_iceberg_mor(
     Returns ``{"files_rewritten": 0, "files_added": <delete files>,
     "rows_deleted": n}``.
     """
-    import time as _time
-    import uuid as _uuid
-
-    from spark_etl_cli_spark.sources.avro_lite import (
-        read_container,
-        write_container,
-    )
-
     meta = _load_metadata(table_path)
     if (
         int(meta.get("format-version", 1)) >= 3
@@ -5035,7 +4746,7 @@ def _delete_iceberg_mor(
     zero = {"files_rewritten": 0, "files_added": 0, "rows_deleted": 0}
     del_dir = os.path.join(table_path, "data")
     os.makedirs(del_dir, exist_ok=True)
-    commit_uuid = _uuid.uuid4().hex
+    txn = _SnapshotCommit(table_path, meta)
     equality_ids: list[int] | None = None
     if equality_columns:
         schema_fields = {
@@ -5049,7 +4760,7 @@ def _delete_iceberg_mor(
         equality_ids = [schema_fields[c] for c in equality_columns]
         matched = read_iceberg_lite(spark, table_path, where=where)
         keys = matched.select(*equality_columns).distinct()
-        out_dir = os.path.join(del_dir, f"eqdelete-{commit_uuid}")
+        out_dir = os.path.join(del_dir, f"eqdelete-{txn.uuid}")
         keys.write.parquet(out_dir)
         del_files = [
             p
@@ -5070,7 +4781,7 @@ def _delete_iceberg_mor(
         )
         if "__dfile" not in live.columns:
             return zero  # no data entries at all
-        out_dir = os.path.join(del_dir, f"pdelete-{commit_uuid}")
+        out_dir = os.path.join(del_dir, f"pdelete-{txn.uuid}")
         # the delete file's file_path must match the manifest entry's
         # verbatim (readers compare normalized forms); __dfile is
         # already the manifest-normalized absolute path
@@ -5088,130 +4799,24 @@ def _delete_iceberg_mor(
         if n_rows == 0:
             return zero
 
-    snapshot_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    meta_dir = os.path.join(table_path, "metadata")
-
-    manifest_path = os.path.join(
-        meta_dir, f"manifest-del-{commit_uuid}.avro"
-    )
-    mschema = _manifest_schema_for([])
-    if equality_ids:
-        # spec field 135/136: the equality columns' field ids
-        for f in mschema["fields"]:
-            if f["name"] == "data_file":
-                f["type"]["fields"].append(
-                    {
-                        "name": "equality_ids",
-                        "field-id": 135,
-                        "type": [
-                            "null",
-                            {
-                                "type": "array",
-                                "items": "int",
-                                "element-id": 136,
-                            },
-                        ],
-                    }
-                )
-    content_code = 2 if equality_ids else 1
-    write_container(
-        manifest_path,
-        mschema,
-        iter(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": None,       # inherited (v2 spec)
-                "file_sequence_number": None,  # inherited
-                "data_file": {
-                    "content": content_code,
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": _parquet_row_count(p),
-                    "file_size_in_bytes": os.path.getsize(p),
-                    **(
-                        {"equality_ids": equality_ids}
-                        if equality_ids
-                        else {}
-                    ),
-                },
-            }
+    manifest = txn.write_manifest(
+        [
+            txn.added({
+                "content": 2 if equality_ids else 1,
+                "file_path": p,
+                "file_format": "PARQUET",
+                "partition": {},
+                "record_count": _parquet_row_count(p),
+                "file_size_in_bytes": os.path.getsize(p),
+                **({"equality_ids": equality_ids} if equality_ids else {}),
+            })
             for p in del_files
-        ),
-        extra_meta={
-            "schema": json.dumps(_current_schema(meta)).encode(),
-            "schema-id": b"0",
-            "partition-spec": b"[]",
-            "partition-spec-id": b"0",
-            "format-version": b"2",
-            "content": b"deletes",
-        },
+        ],
+        content="deletes",
     )
-
-    # fast-append manifest list: prior entries carried verbatim + the
-    # new delete manifest (content=1) at the commit's sequence number
-    cur = _snapshot(meta, None)
-    with open(_localize(cur["manifest-list"], table_path), "rb") as fh:
-        _, carried = read_container(fh.read())
-    carried = [
-        {
-            "content": 0,
-            "sequence_number": 0,
-            "min_sequence_number": 0,
-            "added_files_count": 0,
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": 0,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            **{k: v for k, v in c.items() if v is not None},
-        }
-        for c in carried
-    ]
-    mlist_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-{commit_uuid}.avro"
-    )
-    write_container(
-        mlist_path,
-        _MANIFEST_LIST_SCHEMA,
-        iter(
-            carried
-            + [
-                {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": 0,
-                    "content": 1,  # delete manifest
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(del_files),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": n_rows,
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            ]
-        ),
-        extra_meta={"format-version": b"2"},
-    )
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["current-snapshot-id"] = snapshot_id
-    new_meta["snapshots"] = list(meta.get("snapshots") or []) + [{
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist_path,
-        "summary": {"operation": "delete"},
-        "schema-id": 0,
-    }]
-    _commit_iceberg_metadata(meta_dir, new_meta)
+    # fast-append: the parent's manifests carried verbatim + the new
+    # delete manifest at the commit's sequence number
+    txn.commit([manifest], txn.parent_manifests(), "delete")
     return {
         "files_rewritten": 0,
         "files_added": len(del_files),
@@ -5329,8 +4934,6 @@ def _delete_cow_transformed(
     never changes. Data files of transformed tables carry every column
     physically (external writers and this module's transformed appends
     both), so groups read under the full logical schema."""
-    import time as _time
-    import uuid as _uuid
 
     zero = {"files_rewritten": 0, "files_added": 0, "rows_deleted": 0}
     spark_schema = _schema_to_spark(meta)
@@ -5380,10 +4983,7 @@ def _delete_cow_transformed(
             _localize(e["data_file"]["file_path"], table_path)
         )
 
-    snapshot_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    commit_uuid = _uuid.uuid4().hex
+    txn = _SnapshotCommit(table_path, meta)
     new_adds: list[tuple[str, dict]] = []
     for gidx, key in enumerate(sorted(groups)):
         pv, paths = groups[key]
@@ -5391,7 +4991,7 @@ def _delete_cow_transformed(
             spark.read.schema(spark_schema).parquet(*paths).filter(~pred)
         )
         gdir = os.path.join(
-            table_path, "data", f"delete-tr-{commit_uuid}-{gidx}"
+            table_path, "data", f"delete-tr-{txn.uuid}-{gidx}"
         )
         kept.write.parquet(gdir)
         for p in sorted(_glob.glob(os.path.join(gdir, "*.parquet"))):
@@ -5422,11 +5022,9 @@ def _delete_cow_transformed(
             vdt = T.IntegerType()
         pf_triples.append((pf["name"], pf["name"], vdt))
     _commit_rewrite_snapshot(
-        table_path, meta, untouched, new_adds, pf_triples,
-        snapshot_id=snapshot_id, seq=seq, now_ms=now_ms,
-        commit_uuid=commit_uuid, operation="overwrite",
-        files_removed=len(affected), files_added=len(new_adds),
-        removed_rows=n_rows,
+        txn, untouched, new_adds,
+        pf_triples, "overwrite",
+        removed=(len(affected), n_rows),
     )
     return {
         "files_rewritten": len(affected),
@@ -5465,8 +5063,6 @@ def delete_iceberg_lite(
 
     Returns ``{"files_rewritten", "files_added", "rows_deleted"}``.
     """
-    import time as _time
-    import uuid as _uuid
 
     if mode not in ("copy-on-write", "merge-on-read"):
         raise ValueError(
@@ -5504,13 +5100,7 @@ def delete_iceberg_lite(
             "rows_deleted": stats["rows_matched"],
         }
     part_fields = _identity_partition_fields(meta)
-    specs = meta.get("partition-specs")
-    spec_field_count = len(
-        (next(
-            (s for s in (specs or []) if s.get("spec-id") == meta.get("default-spec-id", 0)),
-            {"fields": meta.get("partition-spec") or []},
-        ) or {}).get("fields", [])
-    )
+    spec_field_count = len(_default_spec(meta).get("fields", []))
     if any((e.get("data_file") or {}).get("partition") for e in live) and (
         not part_fields or spec_field_count != len(part_fields)
     ):
@@ -5569,10 +5159,7 @@ def delete_iceberg_lite(
     affected_ids = {id(e) for e in affected}
     untouched = [e for e in live if id(e) not in affected_ids]
 
-    snapshot_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    commit_uuid = _uuid.uuid4().hex
+    txn = _SnapshotCommit(table_path, meta)
 
     # rewrite per partition group so outputs land with the right
     # recorded partition tuple (and physical columns for unrecorded);
@@ -5602,7 +5189,7 @@ def delete_iceberg_lite(
                 ),
             )
         )
-        gdir = os.path.join(table_path, "data", f"delete-{commit_uuid}-{gidx}")
+        gdir = os.path.join(table_path, "data", f"delete-{txn.uuid}-{gidx}")
         kept.write.parquet(gdir)
         pv = dict(key) if recorded else {}
         for p in sorted(_glob.glob(os.path.join(gdir, "*.parquet"))):
@@ -5611,13 +5198,11 @@ def delete_iceberg_lite(
             new_adds.append((p, pv))
 
     _commit_rewrite_snapshot(
-        table_path, meta, untouched, new_adds, part_fields,
-        snapshot_id=snapshot_id, seq=seq, now_ms=now_ms,
-        commit_uuid=commit_uuid, operation="overwrite",
-        files_removed=len(affected), files_added=len(new_adds),
-        removed_rows=sum(
+        txn, untouched, new_adds,
+        part_fields, "overwrite",
+        removed=(len(affected), sum(
             e["data_file"].get("record_count") or 0 for e in affected
-        ),
+        )),
     )
     return {
         "files_rewritten": len(affected),

@@ -85,6 +85,7 @@ def export_iceberg_as_delta(spark: SparkSession, table_path: str) -> int:
         z85_encode,
     )
     from spark_etl_cli_spark.sources.iceberg_lite import (
+        _default_spec,
         _identity_partition_fields,
         _load_metadata,
         _localize,
@@ -255,17 +256,7 @@ def export_iceberg_as_delta(spark: SparkSession, table_path: str) -> int:
             fp: sorted(idx) for fp, idx in per_file.items() if idx
         }
     part_fields = _identity_partition_fields(meta)
-    specs = meta.get("partition-specs")
-    spec_field_count = len(
-        (next(
-            (
-                s
-                for s in (specs or [])
-                if s.get("spec-id") == meta.get("default-spec-id", 0)
-            ),
-            {"fields": meta.get("partition-spec") or []},
-        ) or {}).get("fields", [])
-    )
+    spec_field_count = len(_default_spec(meta).get("fields", []))
     if any(
         (e.get("data_file") or {}).get("partition") for e in entries
     ) and (not part_fields or spec_field_count != len(part_fields)):
@@ -575,120 +566,23 @@ def export_hudi_as_iceberg(spark: SparkSession, table_path: str) -> int:
     stay physically in the files and schema-on-read ignores them).
     Mirrors ``export_delta_as_iceberg`` with the hudi timeline as the
     file-list source. Returns the iceberg snapshot id."""
-    import time as _time
-    import uuid as _uuid
-
-    from spark_etl_cli_spark.sources.avro_lite import write_container
     from spark_etl_cli_spark.sources.iceberg_lite import (
-        _MANIFEST_LIST_SCHEMA,
-        _commit_iceberg_metadata,
-        _manifest_schema_for,
+        _SnapshotCommit,
+        _load_metadata,
         _max_field_id,
         _parquet_row_count,
         _spark_to_iceberg_schema,
+        is_iceberg_table,
     )
 
     files, schema = _hudi_live_files(table_path)
     iceberg_schema = _spark_to_iceberg_schema(schema)
-    meta_dir = os.path.join(table_path, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    prior_versions = _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    prior = None
-    if prior_versions:
-        from spark_etl_cli_spark.sources.iceberg_lite import _load_metadata
-
-        prior = _load_metadata(table_path)
-    snapshot_id = (
-        max(
-            (s["snapshot-id"] for s in (prior or {}).get("snapshots") or []),
-            default=0,
-        )
-        + 1
-    )
-    seq = int((prior or {}).get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    commit_uuid = _uuid.uuid4().hex
-    counts = {p: _parquet_row_count(p) for p in files}
-    manifest_path = os.path.join(
-        meta_dir, f"manifest-uniform-{commit_uuid}.avro"
-    )
-    write_container(
-        manifest_path,
-        _manifest_schema_for([]),
-        iter(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": 0,
-                    "file_path": os.path.abspath(p),
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": counts[p],
-                    "file_size_in_bytes": os.path.getsize(p),
-                },
-            }
-            for p in files
-        ),
-        extra_meta={
-            "schema": json.dumps(iceberg_schema).encode(),
-            "schema-id": b"0",
-            "partition-spec": b"[]",
-            "partition-spec-id": b"0",
-            "format-version": b"2",
-            "content": b"data",
-        },
-    )
-    mlist_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-{commit_uuid}.avro"
-    )
-    write_container(
-        mlist_path,
-        _MANIFEST_LIST_SCHEMA,
-        iter(
-            [
-                {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": 0,
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(files),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(counts.values()),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            ]
-        ),
-        extra_meta={"format-version": b"2"},
-    )
-    snapshots = list((prior or {}).get("snapshots") or [])
-    snapshots.append(
-        {
-            "snapshot-id": snapshot_id,
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": mlist_path,
-            "summary": {"operation": "overwrite", "uniform": "hudi"},
-            "schema-id": 0,
-        }
-    )
-    new_meta = {
+    prior = _load_metadata(table_path) if is_iceberg_table(table_path) else None
+    txn = _SnapshotCommit(table_path, prior)
+    txn.meta = {
         "format-version": 2,
-        "table-uuid": (prior or {}).get(
-            "table-uuid", str(_uuid.UUID(int=int(commit_uuid[:32], 16)))
-        ),
         "location": table_path,
-        "last-sequence-number": seq,
-        "last-updated-ms": now_ms,
         "last-column-id": _max_field_id(iceberg_schema),
-        "current-snapshot-id": snapshot_id,
         "schemas": [iceberg_schema],
         "current-schema-id": 0,
         "partition-specs": [{"spec-id": 0, "fields": []}],
@@ -706,10 +600,25 @@ def export_hudi_as_iceberg(spark: SparkSession, table_path: str) -> int:
                 ]
             )
         },
-        "snapshots": snapshots,
     }
-    _commit_iceberg_metadata(meta_dir, new_meta)
-    return snapshot_id
+    manifest = txn.write_manifest(
+        [
+            txn.added({
+                "content": 0,
+                "file_path": os.path.abspath(p),
+                "file_format": "PARQUET",
+                "partition": {},
+                "record_count": _parquet_row_count(p),
+                "file_size_in_bytes": os.path.getsize(p),
+            })
+            for p in files
+        ]
+    )
+    # each export REPLACES the iceberg view of the table: the
+    # snapshot's manifest list carries only its own manifest
+    return txn.commit(
+        [manifest], operation="overwrite", summary={"uniform": "hudi"}
+    )
 
 
 def export_delta_as_iceberg(spark: SparkSession, table_path: str) -> int:
@@ -718,26 +627,19 @@ def export_delta_as_iceberg(spark: SparkSession, table_path: str) -> int:
     no data file is read (record counts come from the delta adds'
     stats; a missing stat falls back to one footer read for that file).
     """
-    import time as _time
-    import uuid as _uuid
-
-    from spark_etl_cli_spark.sources.avro_lite import (
-        read_container,
-        write_container,
-    )
     from spark_etl_cli_spark.sources.delta_lite import (
         _physical_schema,
         _replay,
     )
     from spark_etl_cli_spark.sources.iceberg_lite import (
-        _MANIFEST_LIST_SCHEMA,
-        _commit_iceberg_metadata,
+        _SnapshotCommit,
         _hive_value,
-        _manifest_schema_for,
+        _load_metadata,
         _max_field_id,
         _parquet_row_count,
         _part_avro_type,
         _spark_to_iceberg_schema,
+        is_iceberg_table,
     )
 
     adds, meta = _replay(spark, table_path)
@@ -931,318 +833,8 @@ def export_delta_as_iceberg(spark: SparkSession, table_path: str) -> int:
                 {"field-id": _ROW_ID_FIELD_ID, "names": [rid_mat]}
             ]
 
-    meta_dir = os.path.join(table_path, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    prior_versions = _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    prior = None
-    if prior_versions:
-        from spark_etl_cli_spark.sources.iceberg_lite import _load_metadata
-
-        prior = _load_metadata(table_path)
-    snapshot_id = (
-        max(
-            (s["snapshot-id"] for s in (prior or {}).get("snapshots") or []),
-            default=0,
-        )
-        + 1
-    )
-    seq = int((prior or {}).get("last-sequence-number") or 0) + 1
-    now_ms = int(_time.time() * 1000)
-    commit_uuid = _uuid.uuid4().hex
-
-    abs_root = os.path.abspath(table_path)
-    entries = []
-    total_rows = 0
-    for a in adds:
-        p = os.path.join(abs_root, a["path"])
-        n = None
-        stats = a.get("stats")
-        if stats:
-            try:
-                n = int(json.loads(stats).get("numRecords"))
-            except (ValueError, TypeError):
-                n = None
-        if n is None:
-            n = _parquet_row_count(p)
-        total_rows += n
-        pv_raw = a.get("partitionValues") or {}
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": None,       # inherited (v2 spec)
-                "file_sequence_number": None,  # inherited
-                "data_file": {
-                    "content": 0,
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        name: _hive_value(pv_raw.get(name), dt)
-                        for name, dt in part_fields
-                    },
-                    "record_count": n,
-                    "file_size_in_bytes": a.get("size")
-                    or os.path.getsize(p),
-                    **(
-                        {"first_row_id": int(a["baseRowId"])}
-                        if rt_export
-                        else {}
-                    ),
-                },
-            }
-        )
-
-    # Deletion vectors → Iceberg POSITION DELETES: both formats express
-    # "these row ordinals of that file are gone", so each DV'd add
-    # contributes (file_path, pos) rows to one sorted position-delete
-    # parquet, committed as a content=1 delete manifest at the SAME
-    # sequence number as the data (the spec applies position deletes to
-    # data files of the same commit or older). The decoded index set is
-    # driver-side but cardinality-bounded — the exact bound the delta
-    # reader itself pays when applying a DV.
-    dv_adds = [a for a in adds if a.get("deletionVector")]
-    puffin_dv: tuple[str, list[str], list[dict], dict[str, int]] | None = None
-    if rt_export and dv_adds:
-        # v3 export path: delta's live DVs become iceberg deletion
-        # vectors — ``deletion-vector-v1`` blobs in one Puffin file,
-        # referenced from a content=1 delete manifest by
-        # (referenced_data_file, content_offset, content_size). The
-        # position sets are identical on both sides (row ordinals in
-        # the same parquet file), so survivors' _row_id parity holds:
-        # base + position skips the same ordinals under either reader.
-        from spark_etl_cli_spark.sources.dv_lite import (
-            read_deletion_vector,
-        )
-        from spark_etl_cli_spark.sources.puffin_lite import (
-            DV_BLOB_TYPE,
-            dv_blob_bytes,
-            write_puffin,
-        )
-
-        per_file: dict[str, list[int]] = {}
-        for a in dv_adds:
-            idx = sorted(
-                int(i)
-                for i in read_deletion_vector(
-                    table_path, a["deletionVector"]
-                )
-            )
-            if idx:
-                per_file[os.path.join(abs_root, a["path"])] = idx
-        if per_file:
-            refs = sorted(per_file)
-            dv_data_dir = os.path.join(abs_root, "data")
-            os.makedirs(dv_data_dir, exist_ok=True)
-            puffin_path = os.path.join(
-                dv_data_dir, f"uniform-dv-{commit_uuid}.puffin"
-            )
-            blob_metas = write_puffin(
-                puffin_path,
-                [
-                    {
-                        "type": DV_BLOB_TYPE,
-                        "data": dv_blob_bytes(per_file[ref]),
-                        "snapshot-id": snapshot_id,
-                        "sequence-number": seq,
-                        "properties": {
-                            "referenced-data-file": ref,
-                            "cardinality": str(len(per_file[ref])),
-                        },
-                    }
-                    for ref in refs
-                ],
-            )
-            puffin_dv = (
-                puffin_path,
-                refs,
-                blob_metas,
-                {ref: len(per_file[ref]) for ref in refs},
-            )
-    pos_del_file = None
-    n_pos_deletes = 0
-    if dv_adds and not rt_export:
-        from spark_etl_cli_spark.sources.dv_lite import read_deletion_vector
-
-        pd_rows = sorted(
-            (os.path.join(abs_root, a["path"]), int(pos))
-            for a in dv_adds
-            for pos in read_deletion_vector(
-                table_path, a["deletionVector"]
-            )
-        )
-        n_pos_deletes = len(pd_rows)
-        if n_pos_deletes:
-            pd_dir = os.path.join(
-                table_path, "data", f"uniform-pos-del-{commit_uuid}"
-            )
-            local_frame(
-                spark, pd_rows, "file_path string, pos long"
-            ).coalesce(1).sortWithinPartitions(
-                "file_path", "pos"
-            ).write.parquet(pd_dir)
-            pos_del_file = next(
-                p
-                for p in sorted(
-                    _glob.glob(os.path.join(pd_dir, "*.parquet"))
-                )
-                if _parquet_row_count(p) > 0
-            )
-
-    manifest_path = os.path.join(
-        meta_dir, f"manifest-uniform-{commit_uuid}.avro"
-    )
-    fv_exp = 3 if rt_export else 2
-    write_container(
-        manifest_path,
-        _manifest_schema_for(part_fields, with_lineage=rt_export),
-        iter(entries),
-        extra_meta={
-            "schema": json.dumps(iceberg_schema).encode(),
-            "schema-id": b"0",
-            "partition-spec": b"[]",
-            "partition-spec-id": b"0",
-            "format-version": str(fv_exp).encode(),
-            "content": b"data",
-        },
-    )
-    mlist_entries = [
-        {
-            "manifest_path": manifest_path,
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": 0,
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": total_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-    ]
-    if pos_del_file:
-        del_manifest_path = os.path.join(
-            meta_dir, f"manifest-uniform-del-{commit_uuid}.avro"
-        )
-        write_container(
-            del_manifest_path,
-            _manifest_schema_for([]),
-            iter(
-                [
-                    {
-                        "status": 1,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": None,
-                        "file_sequence_number": None,
-                        "data_file": {
-                            "content": 1,  # position deletes
-                            "file_path": os.path.abspath(pos_del_file),
-                            "file_format": "PARQUET",
-                            "partition": {},
-                            "record_count": n_pos_deletes,
-                            "file_size_in_bytes": os.path.getsize(
-                                pos_del_file
-                            ),
-                        },
-                    }
-                ]
-            ),
-            extra_meta={
-                "schema": json.dumps(iceberg_schema).encode(),
-                "schema-id": b"0",
-                "partition-spec": b"[]",
-                "partition-spec-id": b"0",
-                "format-version": b"2",
-                "content": b"deletes",
-            },
-        )
-        mlist_entries.append(
-            {
-                "manifest_path": del_manifest_path,
-                "manifest_length": os.path.getsize(del_manifest_path),
-                "partition_spec_id": 0,
-                "content": 1,  # delete manifest
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 1,
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_pos_deletes,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-    if puffin_dv is not None:
-        from spark_etl_cli_spark.sources.iceberg_lite import (
-            _delete_manifest_schema,
-        )
-
-        puffin_path, refs, blob_metas, card_of = puffin_dv
-        psize = os.path.getsize(puffin_path)
-        dv_manifest_path = os.path.join(
-            meta_dir, f"manifest-uniform-dv-{commit_uuid}.avro"
-        )
-        write_container(
-            dv_manifest_path,
-            _delete_manifest_schema(),
-            iter(
-                {
-                    "status": 1,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 1,
-                        "file_path": puffin_path,
-                        "file_format": "PUFFIN",
-                        "partition": {},
-                        "record_count": card_of[ref],
-                        "file_size_in_bytes": psize,
-                        "referenced_data_file": ref,
-                        "content_offset": bm["offset"],
-                        "content_size_in_bytes": bm["length"],
-                    },
-                }
-                for ref, bm in zip(refs, blob_metas)
-            ),
-            extra_meta={
-                "schema": json.dumps(iceberg_schema).encode(),
-                "schema-id": b"0",
-                "partition-spec": b"[]",
-                "partition-spec-id": b"0",
-                "format-version": b"3",
-                "content": b"deletes",
-            },
-        )
-        mlist_entries.append(
-            {
-                "manifest_path": dv_manifest_path,
-                "manifest_length": os.path.getsize(dv_manifest_path),
-                "partition_spec_id": 0,
-                "content": 1,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(refs),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(card_of.values()),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-    mlist_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-{commit_uuid}.avro"
-    )
-    write_container(
-        mlist_path,
-        _MANIFEST_LIST_SCHEMA,
-        iter(mlist_entries),
-        extra_meta={"format-version": b"2"},
-    )
+    prior = _load_metadata(table_path) if is_iceberg_table(table_path) else None
+    txn = _SnapshotCommit(table_path, prior)
     spec_fields = [
         {
             "name": name,
@@ -1252,30 +844,10 @@ def export_delta_as_iceberg(spark: SparkSession, table_path: str) -> int:
         }
         for i, (name, _dt) in enumerate(part_fields)
     ]
-    snapshots = list((prior or {}).get("snapshots") or [])
-    snapshots.append(
-        {
-            "snapshot-id": snapshot_id,
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": mlist_path,
-            # each export REPLACES the iceberg view of the table: the
-            # snapshot's manifest list carries only its own manifest
-            "summary": {"operation": "overwrite", "uniform": "delta"},
-            "schema-id": 0,
-            **({"first-row-id": 0} if rt_export else {}),
-        }
-    )
-    new_meta = {
-        "format-version": fv_exp,
-        "table-uuid": (prior or {}).get(
-            "table-uuid", str(_uuid.UUID(int=int(commit_uuid[:32], 16)))
-        ),
+    txn.meta = {
+        "format-version": 3 if rt_export else 2,
         "location": table_path,
-        "last-sequence-number": seq,
-        "last-updated-ms": now_ms,
         "last-column-id": _max_field_id(iceberg_schema),
-        "current-snapshot-id": snapshot_id,
         "schemas": [iceberg_schema],
         "current-schema-id": 0,
         "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
@@ -1290,10 +862,113 @@ def export_delta_as_iceberg(spark: SparkSession, table_path: str) -> int:
         "properties": {
             "schema.name-mapping.default": json.dumps(name_mapping)
         },
-        "snapshots": snapshots,
         **({"next-row-id": next_row_id} if rt_export else {}),
+        **({"refs": prior["refs"]} if prior and prior.get("refs") else {}),
     }
-    if prior and prior.get("refs"):
-        new_meta["refs"] = prior["refs"]
-    _commit_iceberg_metadata(meta_dir, new_meta)
-    return snapshot_id
+
+    abs_root = os.path.abspath(table_path)
+    entries = []
+    for a in adds:
+        p = os.path.join(abs_root, a["path"])
+        n = None
+        stats = a.get("stats")
+        if stats:
+            try:
+                n = int(json.loads(stats).get("numRecords"))
+            except (ValueError, TypeError):
+                n = None
+        if n is None:
+            n = _parquet_row_count(p)
+        pv_raw = a.get("partitionValues") or {}
+        entries.append(txn.added({
+            "content": 0,
+            "file_path": p,
+            "file_format": "PARQUET",
+            "partition": {
+                name: _hive_value(pv_raw.get(name), dt)
+                for name, dt in part_fields
+            },
+            "record_count": n,
+            "file_size_in_bytes": a.get("size") or os.path.getsize(p),
+            **({"first_row_id": int(a["baseRowId"])} if rt_export else {}),
+        }))
+    manifests = [txn.write_manifest(entries, part_fields=part_fields)]
+
+    # Deletion vectors → Iceberg POSITION DELETES: both formats express
+    # "these row ordinals of that file are gone", so each DV'd add
+    # contributes (file_path, pos) rows to one sorted position-delete
+    # parquet, committed as a content=1 delete manifest at the SAME
+    # sequence number as the data (the spec applies position deletes to
+    # data files of the same commit or older). The decoded index set is
+    # driver-side but cardinality-bounded — the exact bound the delta
+    # reader itself pays when applying a DV.
+    from spark_etl_cli_spark.sources.dv_lite import read_deletion_vector
+
+    dv_adds = [a for a in adds if a.get("deletionVector")]
+    if rt_export:
+        # v3 export path: delta's live DVs become iceberg deletion
+        # vectors — ``deletion-vector-v1`` blobs in one Puffin file,
+        # referenced from a content=1 delete manifest by
+        # (referenced_data_file, content_offset, content_size). The
+        # position sets are identical on both sides (row ordinals in
+        # the same parquet file), so survivors' _row_id parity holds:
+        # base + position skips the same ordinals under either reader.
+        per_file: dict[str, list[int]] = {}
+        for a in dv_adds:
+            idx = sorted(
+                int(i)
+                for i in read_deletion_vector(
+                    table_path, a["deletionVector"]
+                )
+            )
+            if idx:
+                per_file[os.path.join(abs_root, a["path"])] = idx
+        if per_file:
+            manifests.append(txn.write_dvs(
+                [(ref, per_file[ref]) for ref in sorted(per_file)],
+                prefix="uniform-dv-",
+            ))
+    else:
+        pd_rows = sorted(
+            (os.path.join(abs_root, a["path"]), int(pos))
+            for a in dv_adds
+            for pos in read_deletion_vector(
+                table_path, a["deletionVector"]
+            )
+        )
+        if pd_rows:
+            pd_dir = os.path.join(
+                table_path, "data", f"uniform-pos-del-{txn.uuid}"
+            )
+            local_frame(
+                spark, pd_rows, "file_path string, pos long"
+            ).coalesce(1).sortWithinPartitions(
+                "file_path", "pos"
+            ).write.parquet(pd_dir)
+            pos_del_file = next(
+                p
+                for p in sorted(
+                    _glob.glob(os.path.join(pd_dir, "*.parquet"))
+                )
+                if _parquet_row_count(p) > 0
+            )
+            manifests.append(txn.write_manifest(
+                [txn.added({
+                    "content": 1,  # position deletes
+                    "file_path": os.path.abspath(pos_del_file),
+                    "file_format": "PARQUET",
+                    "partition": {},
+                    "record_count": len(pd_rows),
+                    "file_size_in_bytes": os.path.getsize(pos_del_file),
+                })],
+                content="deletes",
+            ))
+    # each export REPLACES the iceberg view of the table: the
+    # snapshot's manifest list carries only its own manifests; delta's
+    # row ids cross verbatim, so the v3 view's first row id is 0
+    return txn.commit(
+        manifests,
+        operation="overwrite",
+        summary={"uniform": "delta"},
+        first_row_id=0,
+    )
