@@ -1681,6 +1681,15 @@ def _default_spec(meta: dict) -> dict:
     )
 
 
+def _spec_partition_types(meta: dict) -> list[tuple[str, T.DataType]]:
+    """[(partition field name, manifest value type)] for the default
+    spec's fields, the partition record its manifests carry."""
+    tr_fields = _transformed_spec_fields(meta)
+    if tr_fields is not None:
+        return [(pn, vdt) for pn, _tr, _src, _it, vdt in tr_fields]
+    return [(pn, dt) for pn, _src, dt in _identity_partition_fields(meta)]
+
+
 # manifest-list entries written before the v2-required fields existed
 # are backfilled with these when a commit carries them forward (the
 # manifest-list schema makes them non-nullable)
@@ -1806,7 +1815,7 @@ class _SnapshotCommit:
             path,
             _manifest_schema_for(part_fields, with_lineage=self.fv == 3)
             if content == "data"
-            else _delete_manifest_schema(),
+            else _delete_manifest_schema(part_fields),
             iter(entries),
             extra_meta={
                 # container-metadata keys real v2 readers require on
@@ -1855,12 +1864,14 @@ class _SnapshotCommit:
         }
 
     def write_dvs(
-        self, dvs: list[tuple[str, list[int]]], prefix: str = "dv-"
+        self, dvs: list[tuple[str, list[int], dict]], prefix: str = "dv-"
     ) -> dict:
         """Write deletion vectors (spec "Deletion Vectors") — one
         ``deletion-vector-v1`` blob per (referenced data file, sorted
-        positions) in a single Puffin file under ``data/`` — and their
-        delete manifest; return its manifest-list entry."""
+        positions, that file's partition tuple) in a single Puffin file
+        under ``data/`` — and their delete manifest, whose partition
+        record has the default spec's fields; return its manifest-list
+        entry."""
         from spark_etl_cli_spark.sources.puffin_lite import (
             DV_BLOB_TYPE,
             dv_blob_bytes,
@@ -1883,7 +1894,7 @@ class _SnapshotCommit:
                         "cardinality": str(len(positions)),
                     },
                 }
-                for ref, positions in dvs
+                for ref, positions, _part in dvs
             ],
         )
         size = os.path.getsize(puffin_path)
@@ -1893,16 +1904,17 @@ class _SnapshotCommit:
                     "content": 1,
                     "file_path": puffin_path,
                     "file_format": "PUFFIN",
-                    "partition": {},
+                    "partition": part,
                     "record_count": len(positions),
                     "file_size_in_bytes": size,
                     "referenced_data_file": ref,
                     "content_offset": bm["offset"],
                     "content_size_in_bytes": bm["length"],
                 })
-                for (ref, positions), bm in zip(dvs, blob_metas)
+                for (ref, positions, part), bm in zip(dvs, blob_metas)
             ],
             content="deletes",
+            part_fields=_spec_partition_types(self.meta),
         )
 
     def commit(
@@ -4535,7 +4547,10 @@ def upgrade_iceberg_format(
                 )
                 if fp in seq_of and del_seq >= seq_of[fp]:
                     per_file.setdefault(fp, set()).add(int(r["pos"]))
-    dvs = [(ref, sorted(per_file[ref])) for ref in sorted(per_file)]
+    part_of = {os.path.abspath(p): pv for p, pv, _s in data_entries}
+    dvs = [
+        (ref, sorted(per_file[ref]), part_of[ref]) for ref in sorted(per_file)
+    ]
     txn.commit(
         [txn.write_dvs(dvs)] if dvs else [],
         _carry_manifests_superseding_dvs(txn, set(), drop_pos_deletes=True),
@@ -4548,13 +4563,16 @@ def upgrade_iceberg_format(
     }
 
 
-def _delete_manifest_schema() -> dict:
+def _delete_manifest_schema(
+    part_fields: list[tuple[str, T.DataType]] = (),
+) -> dict:
     """Manifest schema for delete files with every optional delete
     field nullable: ``equality_ids`` (spec ids 135/136),
     ``referenced_data_file``/``content_offset``/
     ``content_size_in_bytes`` (spec ids 143/144/145 — the v3
-    deletion-vector coordinates). Entries lacking a field write null."""
-    schema = _manifest_schema_for([])
+    deletion-vector coordinates). Entries lacking a field write null.
+    ``part_fields`` types the partition record, as for data manifests."""
+    schema = _manifest_schema_for(part_fields)
     for f in schema["fields"]:
         if f["name"] == "data_file":
             f["type"]["fields"] += [
@@ -4648,6 +4666,11 @@ def _carry_manifests_superseding_dvs(
             out.append(txn.write_manifest(
                 kept,
                 content="deletes",
+                # deletion vectors record their data file's partition;
+                # position/equality delete files record none
+                part_fields=_spec_partition_types(txn.meta)
+                if any(k["data_file"].get("partition") for k in kept)
+                else (),
                 removed=(
                     len(dropped),
                     sum(d.get("record_count") or 0 for d in dropped),
@@ -4679,10 +4702,11 @@ def _delete_iceberg_mor_dv(
     per_file = live.groupBy("__dfile").agg(
         F.sort_array(F.collect_list("__dpos")).alias("idx")
     )
-    _data, _pos, _eq, cur_dvs, _sch, _m = _resolve_entries(spark, table_path)
+    data, _pos, _eq, cur_dvs, _sch, _m = _resolve_entries(spark, table_path)
     dv_by_ref = {ref: (p, off, sz) for p, off, sz, ref, _s in cur_dvs}
+    part_of = {os.path.abspath(p): pv for p, pv, _s in data}
 
-    dvs: list[tuple[str, list[int]]] = []
+    dvs: list[tuple[str, list[int], dict]] = []
     n_rows = 0
     for row in per_file.toLocalIterator():
         ref = os.path.abspath(row["__dfile"])
@@ -4691,13 +4715,13 @@ def _delete_iceberg_mor_dv(
         old = dv_by_ref.get(ref)
         if old:
             idx = sorted(set(idx) | set(read_dv(*old)))
-        dvs.append((ref, idx))
+        dvs.append((ref, idx, part_of.get(ref, {})))
     if n_rows == 0:
         return zero
     txn = _SnapshotCommit(table_path, meta)
     txn.commit(
         [txn.write_dvs(dvs)],
-        _carry_manifests_superseding_dvs(txn, {ref for ref, _ in dvs}),
+        _carry_manifests_superseding_dvs(txn, {ref for ref, *_ in dvs}),
         "delete",
     )
     return {

@@ -14,9 +14,18 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
+    import os
     import shutil
 
     from spark_etl_cli_spark.session import get_spark
+
+    # the package default heap (48g) exceeds a small box's memory, and
+    # the local-mode JVM grows into it; half of physical memory, capped
+    # at that default, unless SPARK_GRAFT_DRIVER_MEM says otherwise
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or (
+        f"{min(phys // 2 // 2**20, 48 * 1024)}m"
+    )
 
     # orphaned managed-table locations from aborted runs break saveAsTable
     shutil.rmtree("/tmp/pytest-spark-warehouse", ignore_errors=True)
@@ -28,6 +37,7 @@ def spark():
             "spark.sql.shuffle.partitions": "4",
             "spark.default.parallelism": "4",
             "spark.sql.warehouse.dir": "/tmp/pytest-spark-warehouse",
+            "spark.driver.memory": heap,
         },
     )
     yield spark

@@ -10,6 +10,7 @@ DV-bearing v3 table to delta (bitmap reused, never transcoded)."""
 
 import glob as g
 import os
+import re
 
 import pytest
 
@@ -183,6 +184,78 @@ def test_upgrade_converts_position_deletes(spark, tmp_path):
         assert os.path.exists(ref)
         total += len(read_dv(ppath, off, size))
     assert total == 3
+
+
+def _delete_manifests(table):
+    """(writer schema's partition record fields, records) of every
+    delete manifest in the HEAD snapshot's manifest list."""
+    from spark_etl_cli_spark.sources.avro_lite import read_container
+
+    snap = _snapshot(_load_metadata(table), None)
+    with open(snap["manifest-list"], "rb") as fh:
+        listed = read_container(fh.read())[1]
+    out = []
+    for m in listed:
+        if m["content"] != 1:
+            continue
+        with open(m["manifest_path"], "rb") as fh:
+            schema, recs = read_container(fh.read())
+        data_file = next(
+            f["type"] for f in schema["fields"] if f["name"] == "data_file"
+        )
+        part = next(
+            f["type"] for f in data_file["fields"] if f["name"] == "partition"
+        )
+        out.append(([f["name"] for f in part["fields"]], recs))
+    return out
+
+
+def test_v3_dvs_record_their_data_files_partition(spark, tmp_path):
+    """A DV references exactly one data file, so its delete-manifest
+    entry carries that file's partition tuple, under a manifest whose
+    partition record has the spec's fields: for the MOR delete, for a
+    carried DV when a later delete rewrites its manifest, and for the
+    DVs the v2→v3 upgrade converts position deletes into."""
+    rows = spark.createDataFrame(
+        [(i, "a" if i < 4 else "b") for i in range(8)], "id long, part string"
+    ).coalesce(1)
+
+    def norm(path):
+        return os.path.abspath(re.sub(r"^file:/+", "/", path))
+
+    def check(table, n_dvs):
+        part_of = {
+            norm(e["data_file"]["file_path"]): e["data_file"]["partition"]
+            for e in _manifest_entries(table, _snapshot(_load_metadata(table), None))
+            if e.get("status") != 2 and not e["data_file"].get("content")
+        }
+        dvs = _dv_delete_entries(table)
+        assert len(dvs) == n_dvs
+        assert {d["partition"]["part"] for d in dvs} == {"a", "b"}
+        for d in dvs:
+            assert d["partition"] == part_of[norm(d["referenced_data_file"])]
+        for fields, recs in _delete_manifests(table):
+            assert fields == ["part"]
+            assert all(r["data_file"]["partition"]["part"] for r in recs)
+
+    mor = str(tmp_path / "ice_v3_part")
+    write_iceberg_lite(rows, mor, partition_by=["part"], format_version=3)
+    delete_iceberg_lite(spark, mor, "id in (1, 5)", mode="merge-on-read")
+    check(mor, 2)
+    # the 'a' file's DV merges; the 'b' file's DV is carried into a
+    # rewritten delete manifest
+    delete_iceberg_lite(spark, mor, "id = 2", mode="merge-on-read")
+    check(mor, 2)
+    assert sorted(r.id for r in read_iceberg_lite(spark, mor).collect()) \
+        == [0, 3, 4, 6, 7]
+
+    upg = str(tmp_path / "ice_v2_part")
+    write_iceberg_lite(rows, upg, partition_by=["part"])
+    delete_iceberg_lite(spark, upg, "id in (1, 5)", mode="merge-on-read")
+    upgrade_iceberg_format(spark, upg)
+    check(upg, 2)
+    assert sorted(r.id for r in read_iceberg_lite(spark, upg).collect()) \
+        == [0, 2, 3, 4, 6, 7]
 
 
 def test_v3_dv_poisoned_sibling_positions_survive(spark, tmp_path):

@@ -257,6 +257,17 @@ def test_uniform_iceberg_to_delta_roundtrip(spark, tmp_path):
     assert _snap(read_delta_lite(spark, path)) == _snap(
         read_iceberg_lite(spark, path)
     )
+    # Spark reports file paths URI-encoded: a live delete under a path
+    # with a space, a '%' and a '+' still exports what the reader serves
+    from spark_etl_cli_spark.sources.iceberg_lite import delete_iceberg_lite
+
+    odd = str(tmp_path / "a b%20c+d" / "tbl")
+    write_iceberg_lite(spark.range(6).selectExpr("id"), odd)
+    delete_iceberg_lite(spark, odd, "id = 2", mode="merge-on-read")
+    export_iceberg_as_delta(spark, odd)
+    assert sorted(r.id for r in read_delta_lite(spark, odd).collect()) == sorted(
+        r.id for r in read_iceberg_lite(spark, odd).collect()
+    )
 
 
 def test_uniform_iceberg_to_delta_refresh_and_noop(spark, tmp_path):
@@ -311,10 +322,11 @@ def test_uniform_iceberg_to_delta_partitioned(spark, tmp_path):
 
 
 def test_uniform_iceberg_to_delta_exports_equality_deletes(spark, tmp_path):
-    """LIVE equality deletes export: the keys translate to positions
-    via a bounded content scan of the strictly-older files and ride
-    the same DV path position deletes use — both readers agree
-    row-for-row with the deletes still live (no compaction needed)."""
+    """LIVE equality deletes export: the iceberg reader locates the
+    rows they delete, and those positions ride the same DV path
+    position deletes use — both readers agree row-for-row with the
+    deletes still live (no compaction needed), also when the key column
+    carries a v3 initial-default that older files read per vintage."""
     from spark_etl_cli_spark.sources.iceberg_lite import (
         compact_iceberg_lite,
         delete_iceberg_lite,
@@ -349,6 +361,28 @@ def test_uniform_iceberg_to_delta_exports_equality_deletes(spark, tmp_path):
     assert sorted(
         r["id"] for r in read_delta_lite(spark, path).collect()
     ) == [0, 1, 2, 3]
+    # an equality delete keyed on a column with an initial-default:
+    # rows of files written before the column existed carry the
+    # default, so the key 7 deletes ids 1 and 2
+    dflt = str(tmp_path / "tbl_dflt")
+    write_iceberg_lite(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"),
+        dflt, format_version=3,
+    )
+    write_iceberg_lite(
+        spark.createDataFrame(
+            [(3, "c", 99), (4, "d", None)], "id long, v string, score long"
+        ),
+        dflt, merge_schema=True, column_defaults={"score": 7},
+    )
+    delete_iceberg_lite(
+        spark, dflt, "id = 1", mode="merge-on-read",
+        equality_columns=["score"],
+    )
+    export_iceberg_as_delta(spark, dflt)
+    ice3 = sorted(r["id"] for r in read_iceberg_lite(spark, dflt).collect())
+    dl3 = sorted(r["id"] for r in read_delta_lite(spark, dflt).collect())
+    assert ice3 == dl3 == [3, 4]
 
 
 # --- hudi exposed as delta / iceberg ------------------------------------------
@@ -430,7 +464,7 @@ def test_uniform_iceberg_position_deletes_export_as_dvs(spark, tmp_path):
     exports to delta: each affected file gets a deletion vector (the
     dv_lite codec both writes and reads it), the delta reader returns
     the post-delete rows, and a re-export after MORE deletes refreshes
-    the DV. Equality deletes still refuse toward compaction."""
+    the DV. Equality deletes stack onto the same DVs."""
     from spark_etl_cli_spark.sources.iceberg_lite import (
         delete_iceberg_lite,
         write_iceberg_lite,
